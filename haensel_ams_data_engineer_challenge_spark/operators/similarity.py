@@ -339,7 +339,7 @@ def ann_topk_lsh(
     tables agree.  Recall is pinned against brute force by
     tests/test_extensions.py (round-5 verdict #7).
     """
-    # the bucket stream feeds the query side (semi-join) and the
+    # the bucket stream feeds the query-bucket lookup and the
     # candidate side; materialize so the tables x planes dot products
     # run once (same finding as embedding_dup_pairs_lsh).  With an
     # index_cache_key the materialized stream is further reused across
@@ -373,9 +373,15 @@ def ann_topk_lsh(
             )
             if ck is not None:
                 _LSH_INDEX_CACHE[ck] = wb
-    qb = wb.join(queries.select(id_col), id_col, "left_semi").select(
-        F.col(id_col).alias("query_id"), "band", "bucket"
-    )
+    # ``queries`` is read ONCE: its vectors ride along with the query
+    # buckets into the candidate rows (the ann_topk_ivf shape) — two
+    # reads of a non-deterministic query frame (an unordered limit, a
+    # sample) would pick different queries for the bucket lookup and
+    # the scoring, and the probe would return nothing
+    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
+    qb = wb.join(
+        F.broadcast(qv), F.col(id_col) == F.col("query_id")
+    ).select("query_id", "__qvec", "band", "bucket")
     c, q = wb.alias("c"), qb.alias("q")
     cand = (
         c.join(
@@ -387,10 +393,12 @@ def ann_topk_lsh(
         .select(
             F.col("q.query_id").alias("query_id"),
             F.col(f"c.{id_col}").alias("neighbor_id"),
+            F.col("q.__qvec").alias("__qvec"),
         )
+        # one vector per query id, so this is the (query, neighbor)
+        # dedup: each pair is scored once however many tables agree
         .distinct()
     )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
     if index_path is not None and quantize:
         # self-contained artifact: candidates verify against the
         # STORED int8 vectors (asymmetric scoring — float query vs
@@ -403,10 +411,8 @@ def ann_topk_lsh(
         cv = vectors.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
         )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("cosine", cosine_expr("__qvec", "__cvec"))
+    scored = cand.join(cv, "neighbor_id").withColumn(
+        "cosine", cosine_expr("__qvec", "__cvec")
     )
     final = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -460,21 +466,13 @@ IVF_ITERS = 3
 IVF_PROBES = 3
 
 
-def _cos_cell(vec_col: str, cvec_col: str = "cvec") -> Column:
-    """Cosine between a raw vector column and a (double) centroid."""
-    dot = F.aggregate(
-        F.zip_with(_d(vec_col), F.col(cvec_col), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cnorm = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col(cvec_col), F.col(cvec_col), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return dot / (norm_expr(vec_col) * cnorm)
+def _cos_cell(vec_col: str) -> Column:
+    """Cosine between ``vec_col`` and the centroid ``cvec`` from their
+    norms, precomputed per row as ``__vnorm`` and ``__cnorm`` before the
+    rows are paired: a (vector, cell) pair pays the dot-product fold
+    alone.  Same doubles in the same order as ``cosine_expr`` /
+    ``cosine_sql``."""
+    return dot_expr(vec_col, "cvec") / (F.col("__vnorm") * F.col("__cnorm"))
 
 
 def _assign_cells(
@@ -482,13 +480,17 @@ def _assign_cells(
 ) -> DataFrame:
     """(id, cell): nearest centroid by cosine, ties -> lowest cell.
 
-    The argmax is a map-side-combinable groupBy max over a
-    (cosine, -cell) struct — not a window — so a dominant partition
-    never single-task-sorts the full crossJoin output.
+    Each vector's double cast and norm are computed once, before the
+    cross join, and each centroid's norm once, on the broadcast side;
+    every (vector, cell) pair is scored by :func:`_cos_cell`.  The
+    argmax is a map-side-combinable groupBy max over a (cosine, -cell)
+    struct — not a window — so a dominant partition never
+    single-task-sorts the full crossJoin output.
     """
     scored = (
-        vectors.select(F.col(id_col), F.col(vec_col))
-        .crossJoin(F.broadcast(cents))
+        vectors.select(F.col(id_col), _d(vec_col).alias(vec_col))
+        .withColumn("__vnorm", norm_expr(vec_col))
+        .crossJoin(F.broadcast(cents.withColumn("__cnorm", norm_expr("cvec"))))
         .withColumn("__cos", _cos_cell(vec_col))
     )
     best = scored.groupBy(id_col).agg(
@@ -551,11 +553,18 @@ def ivf_kmeans(
     """Deterministic k-means for the IVF coarse quantizer.
 
     Seeds are the ``k`` smallest ids (TakeOrdered — no global sort);
-    each Lloyd round reassigns by cosine and recomputes decimal-routed
-    per-dimension means (``ivf_centroids``); a cell that loses all
-    members keeps its previous centroid.  Every step is engine-portable
-    float math in a fixed order, so the DuckDB twin (unrolled CTE
-    chain) reproduces assignments and centroids bit-for-bit.
+    each Lloyd round reassigns by cosine (:func:`_assign_cells`) and
+    recomputes decimal-routed per-dimension means
+    (``ivf_centroids``); a cell that loses all members keeps its
+    previous centroid.  Every step is engine-portable float math in a
+    fixed order, so the DuckDB twin (``ivf_kmeans_sql_ctes``)
+    reproduces assignments and centroids bit-for-bit.
+
+    The build reads ``vectors`` once: its (id, vector) projection is
+    materialized (:func:`_ivf_build_input`) and the seeds, every Lloyd
+    round and the final assignment all read that copy, so an embedding
+    lineage such as ``hash_embed(docs)`` runs once per build, not once
+    per consumer.
 
     Returns (assignments (id, cell), centroids (cell, cvec)).
 
@@ -564,19 +573,16 @@ def ivf_kmeans(
     Spark application's lifetime and reused on repeat calls — the
     caller must guarantee the key uniquely names the input data.
 
-    ``train_sample_cap`` (round 12, r11 verdict task 3 — the
-    production-scale training path): Lloyd rounds run over a
-    DETERMINISTIC hash sample of ~cap vectors (md5 integer threshold
-    on the id — stable across partitionings and sessions) instead of
-    the full corpus; the FINAL assignment still covers every vector.
-    This is the FAISS train-on-sample discipline: k-means quality
-    needs a bounded multiple of k*dim training points (FAISS suggests
-    ~max(10^4, 50k) per k), not the corpus — at 10^10 vectors,
-    full-corpus Lloyd rounds are k full scans per iteration for no
-    recall gain (pytest pins sampled-train recall against full-train
-    on the testdata; tools/ivf_train_bench.py measures the wall-clock
-    gap).  Size ``k`` itself by :func:`ivf_suggest_cells`.  None (the
-    default, and the gate's configuration) trains on everything.
+    ``train_sample_cap``: Lloyd rounds run over a DETERMINISTIC hash
+    sample of ~cap vectors (md5 integer threshold on the id — stable
+    across partitionings and sessions) instead of the full corpus; the
+    FINAL assignment still covers every vector.  This is the FAISS
+    train-on-sample discipline: k-means quality needs a bounded
+    multiple of k*dim training points, not the corpus — at 10^10
+    vectors, full-corpus Lloyd rounds are k full scans per iteration
+    for no recall gain (tools/ivf_train_bench.py measures the
+    wall-clock gap).  Size ``k`` itself by :func:`ivf_suggest_cells`.
+    None (the default) trains on everything.
     """
     if cache_key is not None:
         full_key = (
@@ -586,16 +592,46 @@ def ivf_kmeans(
         hit = _IVF_INDEX_CACHE.get(full_key)
         if hit is not None:
             return hit
-    train = vectors
+    assign, cents = _ivf_train(
+        _ivf_build_input(vectors, id_col, vec_col),
+        k, iters, id_col, vec_col, train_sample_cap,
+    )
+    if cache_key is not None:
+        assign = materialize(assign)
+        _IVF_INDEX_CACHE[full_key] = (assign, cents)
+    return assign, cents
+
+
+def _ivf_build_input(
+    vectors: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """The one materialized (id, vector) projection an IVF build reads
+    — seeds, Lloyd rounds, final assignment, the quantized ``vectors``
+    table and the retrain sizing count all share it (the diamond rule:
+    without it the embedding lineage re-runs per consumer)."""
+    return materialize(vectors.select(id_col, vec_col))
+
+
+def _ivf_train(
+    base: DataFrame,
+    k: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    train_sample_cap: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`ivf_kmeans` over an already-materialized
+    :func:`_ivf_build_input`.  Returns the final assignment unmaterialized
+    and the centroids materialized."""
+    train = base
     if train_sample_cap is not None:
-        n = vectors.count()
+        n = base.count()
         if n > train_sample_cap:
             thresh = (_IVF_SAMPLE_MOD * int(train_sample_cap)) // n
-            train = vectors.filter(_ivf_sample_pred(id_col, thresh))
-            # the sample feeds seeds + every Lloyd round (iters+1
-            # consumers): truncate the filter's lineage once
-            train = materialize(train)
-    seeds = train.select(id_col, vec_col).orderBy(id_col).limit(k)
+            # the sample feeds seeds + every Lloyd round: apply the md5
+            # predicate once
+            train = materialize(base.filter(_ivf_sample_pred(id_col, thresh)))
+    seeds = train.orderBy(id_col).limit(k)
     w = Window.orderBy(id_col)  # k rows — single tiny partition is fine
     cents = materialize(
         seeds.select(
@@ -603,7 +639,6 @@ def ivf_kmeans(
             _d(vec_col).alias("cvec"),
         )
     )
-    assign = None
     for _ in range(iters):
         assign = _assign_cells(train, cents, id_col, vec_col)
         new_cents = ivf_centroids(
@@ -618,11 +653,7 @@ def ivf_kmeans(
                 F.coalesce(F.col("n.cvec"), F.col("p.cvec")).alias("cvec"),
             )
         )
-    final_assign = _assign_cells(vectors, cents, id_col, vec_col)
-    if cache_key is not None:
-        final_assign = materialize(final_assign)
-        _IVF_INDEX_CACHE[full_key] = (final_assign, cents)
-    return final_assign, cents
+    return _assign_cells(base, cents, id_col, vec_col), cents
 
 
 def ann_topk_ivf(
@@ -674,7 +705,11 @@ def ann_topk_ivf(
             cache_key=index_cache_key, train_sample_cap=train_sample_cap,
         )
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
-    qc = q.crossJoin(F.broadcast(cents)).withColumn("__cos_c", _cos_cell("__qvec"))
+    qc = (
+        q.withColumn("__vnorm", norm_expr("__qvec"))
+        .crossJoin(F.broadcast(cents.withColumn("__cnorm", norm_expr("cvec"))))
+        .withColumn("__cos_c", _cos_cell("__qvec"))
+    )
     w_probe = Window.partitionBy("query_id").orderBy(
         F.col("__cos_c").desc(), F.col("cell").asc()
     )
@@ -889,9 +924,9 @@ def ivf_index_persistent(
     if not _check_index_params(spark, path, params):
         from .artifact_manifest import artifact_overwrite
 
-        assign, cents = ivf_kmeans(
-            vectors, k, iters, id_col, vec_col,
-            train_sample_cap=train_sample_cap,
+        base = _ivf_build_input(vectors, id_col, vec_col)
+        assign, cents = _ivf_train(
+            base, k, iters, id_col, vec_col, train_sample_cap
         )
         # the assignments feed the occupancy profile AND the staged
         # write — truncate the training lineage once
@@ -899,7 +934,7 @@ def ivf_index_persistent(
         profile = _cell_profile(assign)
         tables = {"assignments": assign, "centroids": cents}
         if quantize:
-            tables["vectors"] = quantize_to_storage(vectors, id_col, vec_col)
+            tables["vectors"] = quantize_to_storage(base, id_col, vec_col)
         artifact_overwrite(
             spark, path, tables,
             {
@@ -1149,23 +1184,19 @@ def ivf_index_retrain(
         id_col = got.get("id_col", "vec_id")
     if vec_col is None:
         vec_col = got.get("vec_col", "embedding")
-    if quantized:
-        # assignments + int8 vectors both consume the corpus lineage
-        # (materialize BEFORE the sizing count, or the count replays
-        # a possibly-expensive lineage — e.g. a media decode — once
-        # more than needed; review fix)
-        vectors = materialize(vectors)
+    # the sizing count, training and the int8 vectors table all read
+    # one materialized copy of the corpus lineage
+    base = _ivf_build_input(vectors, id_col, vec_col)
     if k is None:
-        k = ivf_suggest_cells(vectors.count())
-    assign, cents = ivf_kmeans(
-        vectors, k, iters, id_col, vec_col,
-        train_sample_cap=train_sample_cap,
+        k = ivf_suggest_cells(base.count())
+    assign, cents = _ivf_train(
+        base, k, iters, id_col, vec_col, train_sample_cap
     )
     assign = materialize(assign)
     profile = _cell_profile(assign)
     tables = {"assignments": assign, "centroids": cents}
     if quantized:
-        tables["vectors"] = quantize_to_storage(vectors, id_col, vec_col)
+        tables["vectors"] = quantize_to_storage(base, id_col, vec_col)
     params = {
         "kind": "ivf", "k": k, "iters": iters,
         "id_col": id_col, "vec_col": vec_col,
@@ -1853,7 +1884,8 @@ def semdedup_keep(
     tagged = _semdedup_tagged(vectors, assign, id_col, vec_col)
     pairs = _semdedup_pairs_from(tagged, threshold, id_col, vec_col)
     csim = (
-        tagged.join(F.broadcast(cents), "cell")
+        tagged.withColumn("__vnorm", norm_expr(vec_col))
+        .join(F.broadcast(cents.withColumn("__cnorm", norm_expr("cvec"))), "cell")
         .select(
             F.col(id_col),
             # keep = LOWEST centroid sim -> rank by NEGATED quantized

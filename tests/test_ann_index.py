@@ -70,6 +70,23 @@ def test_lsh_persistent_index_bit_identical_across_sessions(
     assert b2 == b1
 
 
+def test_lsh_probe_reads_a_nondeterministic_query_frame_once(spark, sf_dir):
+    """Each evaluation of this query frame picks 3 different random
+    vectors.  The probe must read it once, so the bucket lookup and the
+    scoring see the same queries: every picked query gets a full
+    ranked top-k."""
+    import random
+
+    vecs = load_table(spark, sf_dir, "embeddings")
+    rnd = F.udf(lambda: random.random(), "double").asNondeterministic()
+    q = vecs.withColumn("__r", rnd()).orderBy("__r").limit(3).drop("__r")
+    ranks = {}
+    for r in S.ann_topk_lsh(vecs, q, k=3).collect():
+        ranks.setdefault(r["query_id"], []).append(r["rank"])
+    assert len(ranks) == 3
+    assert all(sorted(v) == [1, 2, 3] for v in ranks.values())
+
+
 def test_persistent_index_param_mismatch_refuses(spark, sf_dir, tmp_path):
     vecs = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf_idx")

@@ -9,7 +9,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from tools.paritycheck import TABLES, compare
+from tools.paritycheck import TABLES, compare, duckdb_memory_limit
 
 
 @pytest.fixture(scope="module")
@@ -38,3 +38,12 @@ def test_parity(name, spark, sf_dir, duck):
     oracle_pd = duck.execute(sql).fetchdf()
     problems = compare(name, spark_pd, oracle_pd)
     assert not problems, f"{name}: {problems}"
+
+
+def test_paritycheck_memory_limit_fits_host():
+    import os
+
+    limit = duckdb_memory_limit()
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    assert limit.endswith("MB") and 0 < int(limit[:-2]) < ram_mb
+    duckdb.connect().execute(f"SET memory_limit='{limit}'")

@@ -13,6 +13,7 @@ Usage: python tools/paritycheck.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import date, datetime
 from pathlib import Path
@@ -25,6 +26,14 @@ TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
+
+
+def duckdb_memory_limit() -> str:
+    """DuckDB ``memory_limit``: half of this host's physical RAM — the
+    Spark JVM and its Python workers run beside the oracle and need the
+    rest."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 2 // 2**20}MB"
 
 
 def _canon(v):
@@ -93,7 +102,7 @@ def main() -> int:
         # run, even though that query needs <4GB standalone; the
         # explicit limit + spill dir make each oracle self-contained
         c = duckdb.connect()
-        c.execute("SET memory_limit='16GB'")
+        c.execute(f"SET memory_limit='{duckdb_memory_limit()}'")
         c.execute("SET temp_directory='/tmp/paritycheck_duckdb_spill'")
         for t in TABLES:
             c.execute(
