@@ -1147,8 +1147,10 @@ def main(argv: list[str] | None = None) -> int:
             n_blocked = 0
             if args.block_hosts:
                 from .operators.blocklist import blocklist_flag
+                from .session import local_frame
 
-                bl = spark.createDataFrame(
+                bl = local_frame(
+                    spark,
                     [
                         (h.strip(),)
                         for h in open(args.block_hosts)

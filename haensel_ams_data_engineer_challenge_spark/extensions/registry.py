@@ -1904,6 +1904,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
 
     def _pii_redaction(spark: SparkSession, sf: str) -> DataFrame:
         from ..operators.blocklist import blocklist_flag
+        from ..session import local_frame
 
         docs = _docs(spark, sf).select(
             "doc_id",
@@ -1911,8 +1912,8 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             _host_synth().alias("host"),
         )
         counts = T.pii_counts("pii_text")
-        bl = spark.createDataFrame(
-            [(h,) for h in _BLOCKLIST], "blocked_host string"
+        bl = local_frame(
+            spark, [(h,) for h in _BLOCKLIST], "blocked_host string"
         )
         return blocklist_flag(docs, bl, host_col="host").select(
             "doc_id",

@@ -103,7 +103,9 @@ def artifact_table(
         )
     schema = StructType.fromJson(entry["schema"])
     if not entry["files"]:
-        return spark.createDataFrame([], schema)
+        from ..session import local_frame
+
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(
         *[f"{path}/{table}/{n}" for n in entry["files"]]
     )

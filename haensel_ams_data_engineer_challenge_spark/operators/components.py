@@ -178,10 +178,12 @@ def _local_components(rows: list, spark, u_type) -> DataFrame:
     out = [(node, find(node)) for node in parent]
     from pyspark.sql.types import StructField, StructType
 
+    from ..session import local_frame
+
     schema = StructType(
         [StructField("node", u_type, False), StructField("component", u_type, False)]
     )
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def connected_components(

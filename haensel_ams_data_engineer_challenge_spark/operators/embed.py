@@ -199,12 +199,11 @@ def encoder_model_build(
     from ..checkpoint import materialize
 
     stop = materialize(stop)
-    syn_rows = [(k, v) for k, v in sorted(syn.items())] or [(None, None)]
-    syn_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(syn_rows, 1), "term string, canon string"
-    )
-    if not syn:
-        syn_df = syn_df.filter(F.col("term").isNotNull())
+    from ..session import local_frame
+
+    syn_df = local_frame(
+        spark, sorted(syn.items()), "term string, canon string"
+    ).coalesce(1)
     # version = CONTENT hash of the trained tables (review fix: a
     # constant version made every stale-guard keyed on it a no-op —
     # the per-worker cache and the index markers' embedder pin both

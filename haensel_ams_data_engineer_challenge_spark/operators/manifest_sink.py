@@ -206,7 +206,9 @@ def read_manifest_sink(spark: SparkSession, path: str) -> DataFrame | None:
     files = man["files"]
     schema = StructType.fromJson(man["schema"])
     if not files:
-        return spark.createDataFrame([], schema)
+        from ..session import local_frame
+
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(
         *[f"{path}/{name}" for name in files]
     )

@@ -834,15 +834,14 @@ def _read_index_params(spark, path: str) -> dict:
 
 
 def _write_index_params(spark, path: str, params: dict) -> None:
-    # parallelize(rows, 1), not coalesce(1): coalescing a parallelized
-    # local relation costs ~3.5 s of plan compile per write on
-    # local[32] (measured, streaming/ingest.py note)
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(k, str(v)) for k, v in sorted(params.items())], 1
-        ),
+    """The params table, as one parquet file."""
+    from ..session import local_frame
+
+    local_frame(
+        spark,
+        [(k, str(v)) for k, v in sorted(params.items())],
         "key string, value string",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
 
 
 def _check_quantized_layout(spark, path: str, quantize: bool) -> None:

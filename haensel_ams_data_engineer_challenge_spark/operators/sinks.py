@@ -27,7 +27,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from ..session import ensure_engine_confs
+from ..session import ensure_engine_confs, local_frame
 
 #: the five attribution tables (challenge_db_create.sql:1-43).
 ATTRIBUTION_DDL: dict[str, str] = {
@@ -96,8 +96,7 @@ def create_tables(spark: SparkSession, base_path: str) -> None:
         path = f"{base_path}/{name}"
         if try_read_sink(spark, path) is not None:
             continue  # exists -> IF NOT EXISTS no-op
-        empty = spark.createDataFrame([], StructType.fromDDL(ddl))
-        empty.write.mode("overwrite").parquet(path)
+        local_frame(spark, [], ddl).write.mode("overwrite").parquet(path)
 
 
 def verify_tables(spark: SparkSession, base_path: str) -> dict[str, str]:

@@ -18,7 +18,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Confs that are runtime-settable (SQLConf) — safe to apply to an
 #: externally created session (the verify driver builds its own).
@@ -132,3 +133,31 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
             # names the nanosAsLong flag)
             continue
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``
+    order; ``schema`` is a DDL string or a StructType).
+
+    The rows travel as one Arrow table, so Spark plans a
+    ``LocalTableScan`` and no Python worker runs.  ``createDataFrame``
+    over a list or a ``parallelize`` RDD instead plans a PythonRDD,
+    which starts a Python worker per partition: 2.0 s against 0.22 s
+    to count 2,048 rows in a fresh JVM.  A ``LocalTableScan`` splits
+    its rows into up to ``defaultParallelism`` slices; ``coalesce(1)``
+    the frame before a write that must stay one file.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

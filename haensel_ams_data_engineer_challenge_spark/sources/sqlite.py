@@ -23,6 +23,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
+
 _TYPE_MAP = {
     "TEXT": "string",
     "REAL": "double",
@@ -97,7 +99,7 @@ def read_sqlite(
             ).fetchone()
             lo, hi = row if row else (None, None)
             if lo is None and rowid_ok:
-                return spark.createDataFrame([], ddl)
+                return local_frame(spark, [], ddl)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -128,8 +130,8 @@ def read_sqlite(
     # repartitionByRange on the slice start gives exactly one contiguous
     # slice per task — hash repartition could land several slices in one
     # task (and leave others empty), silently losing scan parallelism
-    ranges_df = spark.createDataFrame(
-        ranges, "lo long, hi long"
+    ranges_df = local_frame(
+        spark, ranges, "lo long, hi long"
     ).repartitionByRange(n, "lo")
     return ranges_df.mapInPandas(scan, ddl)
 

@@ -34,6 +34,7 @@ from ..operators.dedup import (
     normalize_text,
 )
 from ..operators.sinks import insert_if_absent
+from ..session import local_frame
 
 #: AnalysisException conditions meaning "no data here yet" — the only
 #: ones the sink/state probes may tolerate (round-7 advice #3).
@@ -109,29 +110,20 @@ def _write_bloom_state(
     """Bitmap first, then params carrying the bitmap's checksum: a
     crash between the two (or mid-bitmap) leaves params disagreeing
     with the bitmap content, which `_load_bloom_words` treats as torn
-    and reseeds — never a silent partial bitmap.
-
-    Single-partition layout via ``parallelize(rows, 1)``, NOT
-    ``coalesce(1)``: coalescing a parallelized local relation costs a
-    pathological ~3.5 s per write on local[32] (measured — plan
-    compile, not data), which at two writes per micro-batch would eat
-    the entire bitmap-reuse win."""
-    sc = ss.sparkContext
-    ss.createDataFrame(
-        sc.parallelize(sorted(words.items()), 1),
-        "word_idx long, bits long",
-    ).write.mode("overwrite").parquet(f"{state_dir}/bitmap")
-    ss.createDataFrame(
-        sc.parallelize(
-            [
-                ("m_bits", str(m_bits)),
-                ("k", str(k)),
-                ("checksum", str(_bloom_checksum(words))),
-            ],
-            1,
-        ),
+    and reseeds — never a silent partial bitmap.  Each table is one
+    file."""
+    local_frame(
+        ss, sorted(words.items()), "word_idx long, bits long"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{state_dir}/bitmap")
+    local_frame(
+        ss,
+        [
+            ("m_bits", str(m_bits)),
+            ("k", str(k)),
+            ("checksum", str(_bloom_checksum(words))),
+        ],
         "key string, value string",
-    ).write.mode("overwrite").parquet(f"{state_dir}/params")
+    ).coalesce(1).write.mode("overwrite").parquet(f"{state_dir}/params")
 
 
 def run_streaming_ingest(
@@ -191,12 +183,11 @@ def run_streaming_ingest(
     non-transactional parquet state.
 
     ``near_dup_index_dir``: add the NEAR-dup tier beside the exact
-    one (round-9, r8 verdict task 2).  A persisted MinHash band index
-    (operators/minhash_index.py, manifest protocol since round 12) is
-    built from
-    corpus+sink on first use; each batch's exact-tier survivors are
-    (a) near-dup-collapsed WITHIN the batch (verify_candidates pairs
-    -> dedup_survivors, min-id keep — the batch operators, reused),
+    one.  A persisted MinHash band index (operators/minhash_index.py,
+    manifest protocol) is built from corpus+sink on first use; each
+    batch's exact-tier survivors are (a) near-dup-collapsed WITHIN
+    the batch (verify_candidates pairs -> dedup_survivors, min-id
+    keep — the batch operators, reused),
     (b) probed against the index + exact-verified (near_dup_probe), and
     (c) the admitted remainder's band rows are APPENDED to the index.
     Crash ordering mirrors the Bloom tier: index append runs BEFORE
@@ -208,7 +199,7 @@ def run_streaming_ingest(
     ``near_dup_threshold``: exact-Jaccard acceptance (default
     minhash_index.NEAR_DUP_THRESHOLD).
 
-    ``semantic_index_dir``: the SEMANTIC tier (round 9, closing the
+    ``semantic_index_dir``: the SEMANTIC tier (closing the
     incremental set: exact Bloom / lexical MinHash / semantic) — a
     persisted banded-LSH bucket index over FEATURE-HASHED embeddings
     of the dedup target (hash_embed: no external model), built from
@@ -224,7 +215,7 @@ def run_streaming_ingest(
     probe's candidate semi-join against the text store is what kills
     orphans).  Runs AFTER the lexical tier: it is the loosest signal.
 
-    ``encoder_model_dir`` (round 10): run the semantic tier on the
+    ``encoder_model_dir``: run the semantic tier on the
     MODEL-INFERENCE SEAM (operators/embed.embed_with_model —
     executor-cached encoder artifact) instead of ``hash_embed``.  The
     encoder artifact is built from the current dedup target on first
@@ -237,7 +228,7 @@ def run_streaming_ingest(
     lexical tier and hash_embed both admit are caught here
     (pytest-contrast-proven).
 
-    ``lm_model_dir`` + ``max_xent`` (round 10): the PERPLEXITY gate —
+    ``lm_model_dir`` + ``max_xent``: the PERPLEXITY gate —
     the CCNet filter proper: score each batch against the persisted
     unigram LM artifact (lm.lm_model_build; feature key pins the
     tokenizer) and keep only documents whose cross-entropy is at most
@@ -249,7 +240,7 @@ def run_streaming_ingest(
     rejected, the classifier gate's argument verbatim.
 
     ``quality_model_dir`` + ``keep_pred``: the trained-classifier gate
-    (round 9, the FineWeb-Edu/CCNet shape) — score each batch with the
+    (the FineWeb-Edu/CCNet shape) — score each batch with the
     PERSISTED NB model artifact (classify.nb_model_build; the marker's
     ``feature`` key selects the tokenizer, so the gate can never score
     mismatched tokens) and keep only documents whose predicted class
@@ -259,7 +250,7 @@ def run_streaming_ingest(
     are rejected — a document the tokenizer cannot see is not
     classifiable, and admitting it unscored would bypass the gate.
 
-    ``url_dedup_col`` (round 14, r13 verdict task 5): the URL tier —
+    ``url_dedup_col``: the URL tier —
     the FIRST tier, ahead of every quality gate and content tier: a
     re-crawl of an already-admitted URL (utm/gclid-tagged, case /
     default-port / trailing-slash variants) is rejected on
@@ -271,16 +262,18 @@ def run_streaming_ingest(
     scale the same Bloom-bitmap state the exact tier uses applies
     verbatim keyed on the canonical URL (documented scale path).
 
-    ``unicode_normalize`` (round 15, r14 verdict #3, default ON): the
-    text-seam normalization — NFC, double-encoded-UTF-8 repair and
-    invisible-character strip (``functions.unicodenorm.clean_text``)
-    applied right after the URL tier and BEFORE every quality gate
-    and content tier, so an NFD / zero-width / mojibake re-save of an
-    admitted document collides at the EXACT tier instead of slipping
-    through as a byte-distinct twin.  One Arrow stage per batch,
-    row-local; ASCII corpora pass through bit-unchanged.
+    ``unicode_normalize`` (default on): the text-seam normalization
+    (NFC, double-encoded-UTF-8 repair and invisible-character strip,
+    ``functions.unicodenorm.normalize_docs``) applied right after the
+    URL tier and BEFORE every quality gate and content tier, so an
+    NFD / zero-width / mojibake re-save of an admitted document
+    collides at the EXACT tier instead of slipping through as a
+    byte-distinct twin.  Rows of plain printable ASCII pass through
+    in the JVM; only the other rows cross into Python, once per batch,
+    and every later tier reads that materialized copy.  A batch with
+    no such rows starts no Python worker.
 
-    ``url_bloom_state_dir`` (round 14): that scale path, real — a
+    ``url_bloom_state_dir``: that scale path, real — a
     persisted Bloom bitmap over the canonical URLs of the dedup
     target, maintained exactly like the text tier's
     (``bloom_state_dir``): seeded from corpus+sink on first batch,
@@ -401,8 +394,8 @@ def run_streaming_ingest(
                             target_urls, "__cu", m_bits, k
                         ).collect()
                     }
-                url_bitmap = ss.createDataFrame(
-                    sorted(url_bloom_words.items()),
+                url_bitmap = local_frame(
+                    ss, sorted(url_bloom_words.items()),
                     "word_idx long, bits long",
                 )
                 new_url_ids = incremental_new_keys(
@@ -433,12 +426,10 @@ def run_streaming_ingest(
         if unicode_normalize:
             from ..functions.unicodenorm import normalize_docs
 
-            # round 15 (r14 verdict #3): NFC + mojibake repair +
-            # invisible strip BEFORE every quality gate and content
-            # tier, so an NFD/zero-width/double-encoded re-save of an
-            # admitted document collides at the EXACT tier.  After the
-            # URL tier (URL rejects need no text work), one Arrow
-            # stage, row-local.
+            # before every quality gate and content tier, so an
+            # NFD/zero-width/double-encoded re-save of an admitted
+            # document collides at the EXACT tier; after the URL tier,
+            # whose rejects need no text work
             batch = normalize_docs(batch)
         if drop_gopher_fail:
             from ..functions.text import gopher_quality_pass
@@ -511,8 +502,8 @@ def run_streaming_ingest(
                         "text_hash", m_bits, k,
                     ).collect()
                 }
-            bitmap = ss.createDataFrame(
-                sorted(bloom_words.items()), "word_idx long, bits long"
+            bitmap = local_frame(
+                ss, sorted(bloom_words.items()), "word_idx long, bits long"
             )
         new_ids = incremental_new_docs(
             once, existing, m_bits=m_bits, k=k, bitmap=bitmap

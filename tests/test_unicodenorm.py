@@ -95,6 +95,103 @@ def test_normalize_docs_arrow(spark):
     assert normalize_docs(df).schema == df.schema
 
 
+#: normalize_docs equivalence matrix: plain printable ASCII (JVM pass-
+#: through) beside every kind of row clean_text can change
+_MATRIX = [
+    "plain ascii, tab\tLF\nCR\r and ~!",
+    unicodedata.normalize("NFD", "éclair über"),
+    "Ã©clair donâ€™t",
+    "zero​width﻿and­soft",
+    "ends in NEL\x85",
+    "ends in LS\u2028",
+    "ends in PS\u2029",
+    "del\x7fchar",
+    "c0\x01\x02\x1fcontrols",
+    "",
+    None,
+    "中文テキスト",
+    "emoji 😀 and 👩‍🔬",
+    "\x85",
+]
+
+
+def _matrix_frame(spark, n_chars_nullable: bool = True):
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    schema = StructType([
+        StructField("doc_id", LongType(), False),
+        StructField("text", StringType(), True),
+        StructField("n_chars", LongType(), n_chars_nullable),
+    ])
+    return spark.createDataFrame(
+        [(i, t, 99) for i, t in enumerate(_MATRIX)], schema
+    )
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_normalize_docs_equals_clean_text(spark):
+    """Every row equals clean_text, whether it stayed in the JVM or
+    crossed into Python; the schema is unchanged, nullability too."""
+    for nullable in (True, False):
+        df = _matrix_frame(spark, n_chars_nullable=nullable)
+        out = normalize_docs(df)
+        assert out.schema == df.schema
+        got = {r["doc_id"]: r for r in out.collect()}
+        assert len(got) == len(_MATRIX)
+        for i, t in enumerate(_MATRIX):
+            want = clean_text(t) if t is not None else None
+            assert got[i]["text"] == want, repr(t)
+            assert got[i]["n_chars"] == (len(want) if want else 0), repr(t)
+    # the trailing line terminators are stripped (C1) or kept (U+2028/9)
+    assert clean_text("x\x85") == "x"
+    assert clean_text("x\u2028") == "x\u2028"
+
+
+def test_normalize_docs_all_plain_frame_plans_no_python(spark):
+    df = _matrix_frame(spark).filter(
+        F.col("doc_id").isin(0, 9, 10)  # plain ASCII, '' and None
+    )
+    out = normalize_docs(df)
+    assert out.schema == df.schema
+    assert [r["n_chars"] for r in out.orderBy("doc_id").collect()] == [
+        len(_MATRIX[0]), 0, 0,
+    ]
+    assert "MapInPandas" not in _plan(out)
+
+
+def test_normalize_docs_runs_clean_text_once_per_non_plain_row(
+    spark, monkeypatch
+):
+    """Two actions over a mixed frame: clean_text runs once for each
+    row outside printable ASCII and never for the plain rows."""
+    from haensel_ams_data_engineer_challenge_spark.functions import (
+        unicodenorm as U,
+    )
+
+    calls = spark.sparkContext.accumulator(0)
+    real = U.clean_text
+
+    def counting(s):
+        calls.add(1)
+        return real(s)
+
+    monkeypatch.setattr(U, "clean_text", counting)
+    df = _matrix_frame(spark)
+    out = U.normalize_docs(df)
+    assert out.count() == len(_MATRIX)
+    assert len(out.collect()) == len(_MATRIX)
+    non_plain = [
+        t for t in _MATRIX
+        if t is not None and any(
+            not (" " <= c <= "~" or c in "\t\n\r") for c in t
+        )
+    ]
+    assert calls.value == len(non_plain) == 11
+
+
 def test_ingest_rejects_nfd_resave_at_exact_tier(spark, tmp_path):
     """e2e (the verdict's done gate): an NFD re-save + a zero-width-
     injected copy + a mojibaked copy of an admitted document are all
