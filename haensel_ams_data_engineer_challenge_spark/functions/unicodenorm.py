@@ -39,10 +39,12 @@ strip are idempotent by definition.
 
 :func:`normalize_docs` lifts it over a DataFrame.  ``clean_text`` is
 the identity on text made only of tab, LF, CR and printable ASCII, so
-those rows (and null text) stay in the JVM; only the other rows cross
-the Arrow boundary (unicodedata needs Python — DESIGN.md), once, into
-a materialized copy that every later action reads.  A frame with no
-such row plans no Python stage at all.  Row-local, zero shuffles;
+a frame whose text is all of that (or null) passes through in the JVM
+and plans no Python stage.  Any other frame crosses the Arrow boundary
+(unicodedata needs Python — DESIGN.md) once, whole, into a
+materialized copy that every later action reads; sending only the
+non-plain rows and unioning them back was measured no faster on a
+feed with 40% such rows (CHANGES.md).  Row-local, zero shuffles;
 ``n_chars`` is recomputed when present so the engine-schema invariant
 survives.  The streaming ingest applies it ahead of every quality
 gate and content dedup tier (streaming/ingest.py
@@ -136,22 +138,24 @@ _NON_PLAIN = r"[^\t\n\r -~]"
 
 
 def normalize_docs(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Apply :func:`clean_text` to ``text_col`` (module docstring):
-    plain rows pass through in the JVM, the rest go through one Arrow
-    stage that is materialized once.  Schema preserved; ``n_chars``
-    recomputed when the engine schema carries it (the strip can
-    shorten text).  Probes the frame once, on the driver, for rows
-    that need Python."""
+    """Apply :func:`clean_text` to ``text_col`` (module docstring).
+    Schema preserved; ``n_chars`` recomputed when the engine schema
+    carries it (the strip can shorten text).
+
+    Probes the frame once, on the driver, for a row outside printable
+    ASCII.  With none, the frame passes through in the JVM.  Otherwise
+    the whole frame goes through one Arrow stage whose output is
+    materialized once, so later actions read the copy instead of
+    re-running Python."""
     import pandas as pd
 
     from ..checkpoint import materialize
 
     has_n_chars = "n_chars" in df.columns
-    needs_python = F.coalesce(
-        F.col(text_col).rlike(_NON_PLAIN), F.lit(False)
-    )
-    plain = df.filter(~needs_python)
-    if has_n_chars:
+    needs_python = F.col(text_col).rlike(_NON_PLAIN)
+    if df.filter(needs_python).isEmpty():
+        if not has_n_chars:
+            return df
         field = df.schema["n_chars"]
         n_chars = F.coalesce(F.length(text_col), F.lit(0)).cast(
             field.dataType
@@ -161,10 +165,7 @@ def normalize_docs(df: DataFrame, text_col: str = "text") -> DataFrame:
             # the value and the declared nullable type (the analyzer
             # folds a when(lit(True), ...) wrapper away)
             n_chars = F.try_add(n_chars, F.lit(0).cast(field.dataType))
-        plain = plain.withColumn("n_chars", n_chars)
-    rest = df.filter(needs_python)
-    if rest.isEmpty():
-        return plain
+        return df.withColumn("n_chars", n_chars)
 
     def _apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -180,4 +181,4 @@ def normalize_docs(df: DataFrame, text_col: str = "text") -> DataFrame:
                 ]
             yield pdf
 
-    return plain.unionByName(materialize(rest.mapInPandas(_apply, df.schema)))
+    return materialize(df.mapInPandas(_apply, df.schema))

@@ -268,10 +268,10 @@ def run_streaming_ingest(
     URL tier and BEFORE every quality gate and content tier, so an
     NFD / zero-width / mojibake re-save of an admitted document
     collides at the EXACT tier instead of slipping through as a
-    byte-distinct twin.  Rows of plain printable ASCII pass through
-    in the JVM; only the other rows cross into Python, once per batch,
-    and every later tier reads that materialized copy.  A batch with
-    no such rows starts no Python worker.
+    byte-distinct twin.  A batch of plain printable ASCII passes
+    through in the JVM and starts no Python worker; any other batch
+    crosses into Python once, and every later tier reads that
+    materialized copy.
 
     ``url_bloom_state_dir``: that scale path, real — a
     persisted Bloom bitmap over the canonical URLs of the dedup

@@ -132,28 +132,34 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+#: the matrix rows that stay in the JVM: plain ASCII, '' and None
+_PLAIN_IDS = (0, 9, 10)
+
+
 def test_normalize_docs_equals_clean_text(spark):
-    """Every row equals clean_text, whether it stayed in the JVM or
-    crossed into Python; the schema is unchanged, nullability too."""
+    """Every row equals clean_text, whether the frame stayed in the JVM
+    (all plain) or crossed into Python (mixed); the schema is
+    unchanged, nullability too."""
     for nullable in (True, False):
-        df = _matrix_frame(spark, n_chars_nullable=nullable)
-        out = normalize_docs(df)
-        assert out.schema == df.schema
-        got = {r["doc_id"]: r for r in out.collect()}
-        assert len(got) == len(_MATRIX)
-        for i, t in enumerate(_MATRIX):
-            want = clean_text(t) if t is not None else None
-            assert got[i]["text"] == want, repr(t)
-            assert got[i]["n_chars"] == (len(want) if want else 0), repr(t)
+        mixed = _matrix_frame(spark, n_chars_nullable=nullable)
+        plain = mixed.filter(F.col("doc_id").isin(*_PLAIN_IDS))
+        for df, ids in ((mixed, range(len(_MATRIX))), (plain, _PLAIN_IDS)):
+            out = normalize_docs(df)
+            assert out.schema == df.schema
+            got = {r["doc_id"]: r for r in out.collect()}
+            assert sorted(got) == list(ids)
+            for i in ids:
+                t = _MATRIX[i]
+                want = clean_text(t) if t is not None else None
+                assert got[i]["text"] == want, repr(t)
+                assert got[i]["n_chars"] == (len(want) if want else 0), repr(t)
     # the trailing line terminators are stripped (C1) or kept (U+2028/9)
     assert clean_text("x\x85") == "x"
     assert clean_text("x\u2028") == "x\u2028"
 
 
 def test_normalize_docs_all_plain_frame_plans_no_python(spark):
-    df = _matrix_frame(spark).filter(
-        F.col("doc_id").isin(0, 9, 10)  # plain ASCII, '' and None
-    )
+    df = _matrix_frame(spark).filter(F.col("doc_id").isin(*_PLAIN_IDS))
     out = normalize_docs(df)
     assert out.schema == df.schema
     assert [r["n_chars"] for r in out.orderBy("doc_id").collect()] == [
@@ -162,11 +168,9 @@ def test_normalize_docs_all_plain_frame_plans_no_python(spark):
     assert "MapInPandas" not in _plan(out)
 
 
-def test_normalize_docs_runs_clean_text_once_per_non_plain_row(
-    spark, monkeypatch
-):
+def test_normalize_docs_runs_clean_text_once_per_row(spark, monkeypatch):
     """Two actions over a mixed frame: clean_text runs once for each
-    row outside printable ASCII and never for the plain rows."""
+    row with text, not once per action."""
     from haensel_ams_data_engineer_challenge_spark.functions import (
         unicodenorm as U,
     )
@@ -179,17 +183,11 @@ def test_normalize_docs_runs_clean_text_once_per_non_plain_row(
         return real(s)
 
     monkeypatch.setattr(U, "clean_text", counting)
-    df = _matrix_frame(spark)
-    out = U.normalize_docs(df)
+    out = U.normalize_docs(_matrix_frame(spark))
     assert out.count() == len(_MATRIX)
     assert len(out.collect()) == len(_MATRIX)
-    non_plain = [
-        t for t in _MATRIX
-        if t is not None and any(
-            not (" " <= c <= "~" or c in "\t\n\r") for c in t
-        )
-    ]
-    assert calls.value == len(non_plain) == 11
+    assert "MapInPandas" not in _plan(out)  # later actions read the copy
+    assert calls.value == sum(t is not None for t in _MATRIX)
 
 
 def test_ingest_rejects_nfd_resave_at_exact_tier(spark, tmp_path):
