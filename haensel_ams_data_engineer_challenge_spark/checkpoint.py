@@ -118,7 +118,14 @@ def build_concurrently(
 
 
 def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Truncate ``df``'s lineage, materializing it at first action.
+    """Truncate ``df``'s lineage.
+
+    Not lazy under AQE, even with ``eager=False``: the checkpoint plans
+    ``df`` adaptively, which runs its shuffle and broadcast stages
+    inside this call (tests/test_materialize.py), so a call over an
+    expensive subtree blocks the driver for that subtree's stages (see
+    :func:`build_concurrently`).  The rows are written at the first
+    action.
 
     Reliable checkpoint when ``spark.haenselams.checkpointDir`` is set
     (cluster fault tolerance), else localCheckpoint (single-machine /

@@ -379,17 +379,18 @@ def _carry_hot_hybrid(
     )
 
 
-#: the RECOMMENDED hot_threshold for bot-exposed journey data: a user
-#: timeline past this many rows (sessions+conversions) routes through
-#: the chunked hybrid.  Sized to a comfortable single-task sort (~100k
-#: rows) — below it the plain window is faster; far above it (bot/test
-#: users at 100 TB) the single partition is THE straggler, measured in
-#: tools/asof_skew_bench.py / BASELINE.md.  NOT the default: detection
-#: costs a fixed extra aggregation pass + summary joins (~1.3 s of
-#: stages locally, one reduced shuffle at scale), pure overhead on
-#: organic data (45-99 rows/user) — so the plain 1-exchange/0-join
-#: plan stays the default (test_plans pins it) and callers opt in
-#: where hot keys are possible (CLI: pipeline --hot-user-threshold).
+#: hot_threshold for journey data: a user timeline past this many rows
+#: (sessions+conversions) routes through the chunked hybrid.  Sized to
+#: a comfortable single-task sort (~100k rows) — below it the plain
+#: window is faster; far above it (bot/test users at 100 TB) the single
+#: partition is THE straggler, measured in tools/asof_skew_bench.py /
+#: BASELINE.md.  ``run_pipeline`` turns detection on with this value by
+#: default (plans/pipeline.HOT_USER_THRESHOLD_DEFAULT; pinned by
+#: test_hot_user_default_on_and_results_invariant), paying a fixed
+#: extra aggregation pass, a localCheckpoint and an isEmpty probe on
+#: organic data (45-99 rows/user); 0 or None opts out (CLI: pipeline
+#: --hot-user-threshold 0).  ``journey_asof_join`` itself defaults to
+#: the plain 1-exchange/0-join plan (test_plans pins it).
 JOURNEY_HOT_THRESHOLD = 100_000
 
 

@@ -13,11 +13,23 @@ Reference lifecycle -> engine stage:
                                                CSV export (S7)
 
 The reference runs 6 eager SQLite round-trips; here stages 3-5 are one
-logical plan (Catalyst sees scan->join->window->score end to end) and
-the whole run is exactly five actions: a fused pre-write count job
-(conversions total + scored distinct, one union-agg), the attribution
-append, the report partition overwrite, a fused post-write count job
-(A2 invariant + report rows), and the CSV export.
+logical plan (Catalyst sees scan->join->window->score end to end).  A
+fresh-sink run with the default hot-key protection and a CSV export is
+eight SQL executions (tests/test_pipeline.py pins them):
+
+1. the hot-key stats ``localCheckpoint`` (operators/asof.py);
+2. its ``isEmpty`` probe;
+3. the fused pre-write count (conversions total + scored distinct, one
+   union-agg ``first``);
+4. the attribution append;
+5. the A2 invariant count;
+6. the report partition overwrite;
+7. the report read-back count (5 runs beside 6-7 on a second driver
+   thread);
+8. the CSV export.
+
+Under AQE each execution runs its query stages as separate jobs: a warm
+run at sf0.001 is 25 jobs.
 """
 
 from __future__ import annotations
@@ -214,11 +226,10 @@ def run_pipeline(
         raise ValueError(f"unknown scorer {scorer!r} (native | external)")
     scored.persist()
     try:
-        # ONE fused count job (round-9: pipeline_e2e action-count cut,
-        # 7 -> 5 jobs): the pre-filter conversions total and the
-        # distinct scored-conversion count are independent branches of
-        # a union, aggregated together — the job also materializes the
-        # persist for the sink write below.  A plain union-agg, NOT an
+        # ONE fused count action: the pre-filter conversions total and
+        # the distinct scored-conversion count are independent branches
+        # of a union, aggregated together — the action also materializes
+        # the persist for the sink write below.  A plain union-agg, NOT an
         # Observation: riding an Observation on the scoring plan was
         # tried and reverted (on incremental re-runs with zero
         # surviving conversions the observed metrics never materialize

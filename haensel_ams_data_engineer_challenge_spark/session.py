@@ -34,6 +34,12 @@ ENGINE_CONFS: dict[str, str] = {
     # dims up to 64 MiB broadcast: at 100 TB the fact side dwarfs every
     # dimension table; broadcasting avoids shuffling the fact table.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # AQE numbers codegen stages in the order it creates query stages,
+    # which follows the order concurrent stages finish; with the number
+    # in the class name, one generated body gets a new class per
+    # ordering and an identical query recompiles (DESIGN.md,
+    # "Generated-code reuse").  Off, identical bodies share one class.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -47,8 +53,18 @@ ENGINE_CONFS: dict[str, str] = {
 #: cost scales with query-graph size, not data size, so turning it off
 #: is a production setting, not a local tune; error messages lose only
 #: the Python call-site annotation.
+#: codegen.cache.maxEntries: the JVM-wide LRU cache of compiled
+#: generated classes (default 100) must hold the engine's plan working
+#: set, or an identical operation recompiles classes it already had and
+#: they start again in the interpreter.  Distinct classes one process
+#: needs, measured with an unbounded cache and useIdInClassName off (4
+#: cores, sf0.1, perfbench seed 7): a full bench.py registry pass 1073
+#: (1329 with stage ids in class names), one perfbench ingest_search
+#: run 355, one attribution_x2 run 122.  Those two runs compiled 694
+#: and 290 classes at 100 entries, and 353 and 122 at 2000.
 STATIC_CONFS: dict[str, str] = {
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 
@@ -119,6 +135,12 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     ``__spark_entry__.entry/queries``; without ``nanosAsLong`` reading
     ``events.parquet`` raises PARQUET_TYPE_ILLEGAL, so loaders call this
     defensively before every read.
+
+    ``STATIC_CONFS`` cannot be applied here: Spark fixes them when the
+    session is built, so they hold only for sessions built by
+    :func:`get_spark`.  A session the caller built keeps Spark's
+    defaults: the 100-entry codegen class cache, and
+    ``dataFrameDebugging`` on.
     """
     for k, v in ENGINE_CONFS.items():
         try:

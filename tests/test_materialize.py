@@ -39,6 +39,23 @@ def test_materialize_default_is_local_checkpoint(spark):
     assert "localCheckpoint" in debug
 
 
+def test_materialize_runs_shuffle_stages_during_the_call(spark, sf_dir):
+    """Under AQE a lazy localCheckpoint plans its subtree adaptively,
+    which runs the subtree's shuffle stages inside the call."""
+    sc = spark.sparkContext
+    group = "materialize-call-time"
+    df = load_table(spark, sf_dir, "events").groupBy("user_id").count()
+    sc.setJobGroup(group, "materialize() call only")
+    try:
+        out = C.materialize(df)
+        started = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert started, "no job ran inside materialize()"
+    assert out.count() == df.count()
+
+
 def test_materialize_reliable_mode_same_results(spark, sf_dir, ckpt_dir):
     """With the conf set, materialize() uses reliable checkpoints and
     the dedup-family results are unchanged."""

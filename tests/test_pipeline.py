@@ -151,3 +151,45 @@ def test_hot_user_default_on_and_results_invariant(spark, sf_dir, tmp_path):
     got_d = sorted(map(tuple, spark.read.parquet(acj_d).collect()))
     got_0 = sorted(map(tuple, spark.read.parquet(acj_0).collect()))
     assert got_d == got_0
+
+
+def test_fresh_sink_run_is_eight_sql_executions(spark, sf_dir, tmp_path):
+    """A fresh-sink run fires exactly the eight executions the module
+    docstring lists, counted by a QueryExecutionListener."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    actions: list[str] = []
+
+    class Recorder:
+        def onSuccess(self, func, qe, duration_ns):
+            actions.append(func)
+
+        def onFailure(self, func, qe, exc):
+            actions.append(f"failed {func}")
+
+        class Java:
+            implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    recorder = Recorder()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    listeners = spark._jsparkSession.listenerManager()
+    listeners.register(recorder)
+    try:
+        run_pipeline(spark, sf_dir, str(tmp_path / "acj"), str(tmp_path / "rep"),
+                     report_csv_path=str(tmp_path / "rep_csv"))
+        bus.waitUntilEmpty()
+    finally:
+        listeners.unregister(recorder)
+    # the A2 count runs on a second driver thread beside the report
+    # chain, so only the multiset of actions is fixed
+    assert sorted(actions) == [
+        "collectToPython",  # the fused conversions/scored count (first)
+        "command",  # the attribution append
+        "command",  # the report partition overwrite
+        "command",  # the CSV export
+        "count",  # A2 sum violations
+        "count",  # report read-back rows
+        "isEmpty",  # hot-key probe
+        "localCheckpoint",  # hot-key stats
+    ]
