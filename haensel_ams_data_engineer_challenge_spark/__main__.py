@@ -68,26 +68,17 @@ def _parser() -> argparse.ArgumentParser:
     run.add_argument(
         "--compact-sink", action="store_true",
         help="after the run, rewrite the append-fragmented attribution "
-        "sink as one file set (writer-lease + recoverable backup swap; "
+        "sink as one file set, committed by one manifest rename "
+        "(readers of the previous manifest keep a complete row set; "
         "per-run appends otherwise accumulate small files forever)",
     )
     run.add_argument(
-        "--sink-protocol", choices=("swap", "manifest"), default="swap",
-        help="attribution sink write protocol: 'swap' = plain "
-        "lease-guarded parquet appends; 'manifest' = manifest-committed "
-        "sink (round 11) — each run's rows become visible atomically "
-        "and --compact-sink never leaves a window where readers see "
-        "the sink missing (legacy swap sinks are adopted in place; "
-        "do not switch a manifest sink back to swap)",
-    )
-    run.add_argument(
         "--retention-minutes", type=float, default=None, metavar="M",
-        help="(manifest protocol) vacuum time floor for long-running "
-        "readers: superseded manifests younger than M keep their "
-        "files, so a reader that resolved before two quick mutations "
-        "(insert + compact) still scans complete.  Default 30 (round "
-        "13 — the two-quick-commits hazard must not bite a default "
-        "deployment); 0 = pure one-generation retention, minimal disk",
+        help="vacuum time floor for long-running readers: superseded "
+        "manifests younger than M keep their files, so a reader that "
+        "resolved before two quick mutations (insert + compact) still "
+        "scans complete.  Default 30; 0 = pure one-generation "
+        "retention, minimal disk",
     )
     run.add_argument(
         "--hot-user-threshold", type=int, default=None, metavar="N",
@@ -673,26 +664,18 @@ def _parser() -> argparse.ArgumentParser:
                     "(required with --quality-model)")
     ig.add_argument("--compact-sink", action="store_true",
                     help="after the drain, rewrite the append-"
-                    "fragmented admitted store as one file set "
-                    "(writer-lease + recoverable backup swap — one "
-                    "parquet fragment lands per micro-batch otherwise)")
+                    "fragmented admitted store as one file set, "
+                    "committed by one manifest rename (one parquet "
+                    "fragment lands per writing micro-batch otherwise)")
     ig.add_argument("--compact-index", action="store_true",
                     help="after the drain, rewrite the band index's "
                     "per-batch append fragments as one compact store "
                     "(torn-safe swap; requires --near-dup)")
-    ig.add_argument("--sink-protocol", choices=("swap", "manifest"),
-                    default="swap",
-                    help="admitted-store write protocol (round 11): "
-                    "'manifest' commits each micro-batch's rows with "
-                    "one atomic manifest rename — concurrent readers "
-                    "always see a complete committed row set, and "
-                    "--compact-sink never vacates the path; do not "
-                    "switch a manifest sink back to swap")
     ig.add_argument(
         "--retention-minutes", type=float, default=None, metavar="M",
-        help="(manifest protocol) vacuum time floor — see pipeline "
-        "--retention-minutes; default 30, applies to the admitted "
-        "store's compaction and the band index's compaction",
+        help="vacuum time floor — see pipeline --retention-minutes; "
+        "default 30, applies to the admitted store's compaction and "
+        "the band index's compaction",
     )
     ig.add_argument("--semantic-dedup", action="store_true",
                     help="semantic tier: probe + grow the banded-LSH "
@@ -749,13 +732,6 @@ def _parser() -> argparse.ArgumentParser:
                     help="exact-cosine acceptance (default streaming."
                     "vectors.VECTOR_DUP_THRESHOLD)")
     iv.add_argument("--max-files-per-trigger", type=int, default=None)
-    iv.add_argument(
-        "--sink-protocol", choices=("swap", "manifest"), default="swap",
-        help="admitted-vector store commit protocol (round 12): "
-        "'manifest' makes each batch visible at one atomic manifest "
-        "rename (readers never see a partial append); 'swap' is the "
-        "pre-round-12 keyed insert",
-    )
 
     im = sub.add_parser(
         "ingest-media",
@@ -789,11 +765,6 @@ def _parser() -> argparse.ArgumentParser:
                     help="exact-cosine acceptance (default streaming."
                     "vectors.VECTOR_DUP_THRESHOLD)")
     im.add_argument("--max-files-per-trigger", type=int, default=None)
-    im.add_argument(
-        "--sink-protocol", choices=("swap", "manifest"), default="swap",
-        help="admitted-media store commit protocol: 'manifest' makes "
-        "each batch visible at one atomic manifest rename",
-    )
 
     mx = sub.add_parser(
         "mix",
@@ -891,6 +862,14 @@ def _payload_dedup_tiers(
     return surv, tier_counts
 
 
+def _admitted_total(spark, sink: str) -> int:
+    """Committed rows of an ingest sink; 0 when no batch ever wrote."""
+    from .operators.manifest_sink import read_manifest_sink
+
+    committed = read_manifest_sink(spark, sink)
+    return 0 if committed is None else committed.count()
+
+
 def main(argv: list[str] | None = None) -> int:
     args = _parser().parse_args(argv)
     from .session import get_spark
@@ -898,7 +877,8 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("haensel-ams-cli")
     try:
         if args.command == "pipeline":
-            from .plans.pipeline import HOT_USER_THRESHOLD_DEFAULT, run_pipeline
+            from .operators.asof import JOURNEY_HOT_THRESHOLD
+            from .plans.pipeline import run_pipeline
 
             scorer_call = None
             audit_path = None
@@ -936,30 +916,23 @@ def main(argv: list[str] | None = None) -> int:
                 hot_user_threshold=(
                     args.hot_user_threshold
                     if args.hot_user_threshold is not None
-                    else HOT_USER_THRESHOLD_DEFAULT
+                    else JOURNEY_HOT_THRESHOLD
                 ),
-                sink_protocol=args.sink_protocol,
             )
             if args.compact_sink:
-                sink_path = f"{args.work_dir}/attribution_customer_journey"
-                if args.sink_protocol == "manifest":
-                    from .operators.manifest_sink import (
-                        DEFAULT_RETENTION_MINUTES,
-                        manifest_compact,
-                    )
+                from .operators.manifest_sink import (
+                    DEFAULT_RETENTION_MINUTES,
+                    manifest_compact,
+                )
 
-                    n_compacted = manifest_compact(
-                        spark, sink_path,
-                        min_retention_minutes=(
-                            args.retention_minutes
-                            if args.retention_minutes is not None
-                            else DEFAULT_RETENTION_MINUTES
-                        ),
-                    )
-                else:
-                    from .operators.sinks import compact_parquet_sink
-
-                    n_compacted = compact_parquet_sink(spark, sink_path)
+                n_compacted = manifest_compact(
+                    spark, f"{args.work_dir}/attribution_customer_journey",
+                    min_retention_minutes=(
+                        args.retention_minutes
+                        if args.retention_minutes is not None
+                        else DEFAULT_RETENTION_MINUTES
+                    ),
+                )
                 print(f"compacted_rows={n_compacted}")
             print(
                 f"conversions={result.conversions_total} "
@@ -2126,7 +2099,6 @@ def main(argv: list[str] | None = None) -> int:
                 encoder_model_dir=args.encoder_model,
                 lm_model_dir=args.lm_model,
                 max_xent=args.max_xent,
-                sink_protocol=args.sink_protocol,
                 url_dedup_col=args.url_dedup_col,
                 url_bloom_state_dir=(
                     f"{args.work_dir}/url_bloom_state"
@@ -2134,7 +2106,10 @@ def main(argv: list[str] | None = None) -> int:
                 ),
                 unicode_normalize=not args.no_unicode_normalize,
             )
-            from .operators.manifest_sink import DEFAULT_RETENTION_MINUTES
+            from .operators.manifest_sink import (
+                DEFAULT_RETENTION_MINUTES,
+                manifest_compact,
+            )
 
             retention = (
                 args.retention_minutes
@@ -2150,31 +2125,11 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 print(f"compacted_bands={n_bands}")
             if args.compact_sink:
-                if args.sink_protocol == "manifest":
-                    from .operators.manifest_sink import manifest_compact
-
-                    n_rows = manifest_compact(
-                        spark, sink, min_retention_minutes=retention,
-                    )
-                else:
-                    from .operators.sinks import compact_parquet_sink
-
-                    n_rows = compact_parquet_sink(spark, sink)
-                print(f"compacted_rows={n_rows}")
-            if args.sink_protocol == "manifest":
-                from .operators.manifest_sink import read_manifest_sink
-
-                committed = read_manifest_sink(spark, sink)
-                # no manifest yet (legacy sink + no writing batch this
-                # drain): count the plain listing, as before
-                n = (
-                    committed.count()
-                    if committed is not None
-                    else spark.read.parquet(sink).count()
+                n_rows = manifest_compact(
+                    spark, sink, min_retention_minutes=retention,
                 )
-            else:
-                n = spark.read.parquet(sink).count()
-            print(f"admitted_total={n} sink={sink}")
+                print(f"compacted_rows={n_rows}")
+            print(f"admitted_total={_admitted_total(spark, sink)} sink={sink}")
             return 0
 
         if args.command == "ingest-vectors":
@@ -2196,15 +2151,8 @@ def main(argv: list[str] | None = None) -> int:
                     else VECTOR_DUP_THRESHOLD
                 ),
                 max_files_per_trigger=args.max_files_per_trigger,
-                sink_protocol=args.sink_protocol,
             )
-            if args.sink_protocol == "manifest":
-                from .operators.manifest_sink import read_manifest_sink
-
-                n = read_manifest_sink(spark, sink).count()
-            else:
-                n = spark.read.parquet(sink).count()
-            print(f"admitted_total={n} sink={sink}")
+            print(f"admitted_total={_admitted_total(spark, sink)} sink={sink}")
             return 0
 
         if args.command == "ingest-media":
@@ -2245,19 +2193,8 @@ def main(argv: list[str] | None = None) -> int:
                     else VECTOR_DUP_THRESHOLD
                 ),
                 max_files_per_trigger=args.max_files_per_trigger,
-                sink_protocol=args.sink_protocol,
             )
-            if args.sink_protocol == "manifest":
-                from .operators.manifest_sink import read_manifest_sink
-
-                committed = read_manifest_sink(spark, sink)
-            else:
-                from .streaming.ingest import _try_read
-
-                committed = _try_read(spark, sink)
-            # zero writing batches (empty feed) leaves no sink at all
-            n = committed.count() if committed is not None else 0
-            print(f"admitted_total={n} sink={sink}")
+            print(f"admitted_total={_admitted_total(spark, sink)} sink={sink}")
             return 0
 
         if args.command == "mix":

@@ -385,7 +385,7 @@ def _carry_hot_hybrid(
 #: window is faster; far above it (bot/test users at 100 TB) the single
 #: partition is THE straggler, measured in tools/asof_skew_bench.py /
 #: BASELINE.md.  ``run_pipeline`` turns detection on with this value by
-#: default (plans/pipeline.HOT_USER_THRESHOLD_DEFAULT; pinned by
+#: default (its ``hot_user_threshold`` default; pinned by
 #: test_hot_user_default_on_and_results_invariant), paying a fixed
 #: extra aggregation pass, a localCheckpoint and an isEmpty probe on
 #: organic data (45-99 rows/user); 0 or None opts out (CLI: pipeline

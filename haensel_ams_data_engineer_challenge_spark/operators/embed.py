@@ -381,12 +381,11 @@ def _load_prepared(model_path: str, version: str, dim: int) -> _PreparedEncoder:
     SparkSession; a real encoder loads its weight files the same way —
     directly from shared storage).
 
-    Paths resolve through ``pyarrow.fs.FileSystem.from_uri`` (review
-    fix: a plain glob is driver-local-filesystem-only — the exact bug
-    class try_read_sink fixed in round 9 — and would return zero files
+    Paths resolve through ``pyarrow.fs.FileSystem.from_uri`` (a plain
+    glob is driver-local-filesystem-only and would return zero files
     for hdfs:// or s3:// artifact dirs on every worker), falling back
     to the local filesystem for scheme-less paths.  Files resolve
-    through the artifact MANIFEST when present (round 12)."""
+    through the artifact MANIFEST when present."""
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 

@@ -1,23 +1,21 @@
-"""Manifest-committed parquet sink: reader-stable inserts and
-compaction (round 11, r10 verdict task 3).
+"""Manifest-committed parquet sink: the one write protocol of every
+keyed sink (the attribution sink, the admitted stores of the ingest
+streams, the media vectors side-store).
 
-The swap-based sink (:func:`.sinks.compact_parquet_sink`) is crash-safe
-and writer-exclusive, but between its two directory renames a
-concurrent READER sees the sink path missing.  This module closes that
-gap with the mini-Delta shape: data part files accumulate in the sink
-directory under unique names, and a versioned MANIFEST file — the only
-thing a reader resolves — lists exactly the committed files.  Every
-state change is ONE atomic manifest write:
+The reference commits each run's rows with one INSERT OR IGNORE into a
+SQLite table (db_utils.py:185-225); SQLite's single-file atomicity is
+what this module rebuilds on a distributed file system, in the
+mini-Delta shape: data part files accumulate in the sink directory
+under unique names, and a versioned MANIFEST file — the only thing a
+reader resolves — lists exactly the committed files.  Every state
+change is ONE atomic manifest write:
 
-- ``{path}/part-*.parquet`` — data files.  Spark's append commit
-  protocol already generates collision-free names, so concurrent-
-  looking files never clash; files NOT listed in a manifest are
-  invisible to readers (uncommitted or superseded).
+- ``{path}/part-*.parquet`` — data files.  Spark's commit protocol
+  already generates collision-free names; files NOT listed in a
+  manifest are invisible to readers (uncommitted or superseded).
 - ``{path}/_manifest_v{N}.json`` — version-numbered manifests; readers
-  resolve the highest N.  Underscore-prefixed, so a plain
-  ``spark.read.parquet(path)`` (which ignores hidden files) still sees
-  only data files — but the supported read path is
-  :func:`read_manifest_sink`.
+  resolve the highest N.  Underscore-prefixed, so Spark's own listing
+  skips them.
 - commit = write ``_manifest_v{N+1}`` beside the data via a unique tmp
   name + one atomic rename.  Readers observe either vN or vN+1, never
   an absent sink and never a partial file set.
@@ -29,43 +27,47 @@ state change is ONE atomic manifest write:
   (one-generation retention), which runs under the writer lease at the
   start of every mutating operation.
 
-One-generation retention has a documented hazard for LONG-RUNNING
-readers: a reader that resolved vN keeps a complete file set across
-ONE concurrent mutation, but two quick mutations (insert then compact)
+The supported read path is :func:`read_manifest_sink`.  A plain
+``spark.read.parquet(path)`` lists every data file in the directory,
+so it double-counts after a compaction (superseded files stay for a
+generation or the retention floor) and after a crash between the file
+moves and the commit (moved files that were never committed).  Plain
+readers of a compacted sink are unsupported.
+
+One-generation retention has a hazard for LONG-RUNNING readers: a
+reader that resolved vN keeps a complete file set across ONE
+concurrent mutation, but two quick mutations (insert then compact)
 age vN out and its superseded files become vacuum-eligible mid-scan.
 Deployments with slow readers pass ``min_retention_minutes`` (threaded
 through every mutating op): vacuum then also keeps every manifest —
 and all files it references — younger than the floor, so a reader is
-safe for at least that long after resolving (round 12, r11 advice).
-The CLI mutation paths (pipeline/ingest ``--compact-sink``, the
-minhash-index compaction) default to ``DEFAULT_RETENTION_MINUTES``
-(round 13, r12 advice): the two-quick-commits hazard must not bite a
-default-config deployment.  The trade is DISK, bounded and brief —
-superseded generations persist up to the floor, so worst case is
-(mutations within the floor) x (sink size); ``--retention-minutes 0``
-restores pure one-generation retention for scratch pipelines.
+safe for at least that long after resolving.  The CLI mutation paths
+(pipeline/ingest ``--compact-sink``, the minhash-index compaction)
+default to ``DEFAULT_RETENTION_MINUTES``.  The trade is DISK, bounded
+and brief — superseded generations persist up to the floor, so worst
+case is (mutations within the floor) x (sink size);
+``--retention-minutes 0`` restores pure one-generation retention.
 
 Appended files are recorded EXPLICITLY, never inferred: each insert
 writes its part files to a private staging directory and moves exactly
-those into the sink (round 12, r11 advice) — a stray file dropped into
-the sink dir by a process bypassing the lease is never silently
-adopted as committed content (it is vacuumed as an orphan).
+those into the sink — a stray file dropped into the sink dir by a
+process bypassing the lease is never silently adopted as committed
+content (it is vacuumed as an orphan).
 
-Crash matrix (all under the heartbeat writer lease, so no second
-writer interleaves):
+A LEGACY directory (data files, no manifest: a sink written before
+this protocol, or the empty tables of ``sinks.create_tables``) is read
+as its plain file listing and adopted in place by the first mutating
+operation, whose commit writes v1 listing those files.
+
+Crash matrix (all under the heartbeat writer lease,
+:func:`.sinks.hold_writer_lease`, so no second writer interleaves;
+readers take no lease):
 
 - die after data append, before manifest commit: readers keep vN; the
   orphan files are vacuumed by the next mutating run.
 - die mid-manifest-write: the tmp file is ignored by version
   resolution and vacuumed later.
 - die after commit: done — the commit IS the rename.
-
-Single-writer is enforced by the same lease as the swap sink
-(:func:`.sinks.hold_writer_lease`); readers take no lease.
-
-The reference analogue is still SQLite's single-file atomicity
-(db_utils.py:185-225) — this is what that guarantee costs on a
-distributed object store.
 """
 
 from __future__ import annotations
@@ -76,13 +78,13 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from .sinks import hold_writer_lease
+from .sinks import ConcurrentWriterError, hold_writer_lease
 
 _MANIFEST_RE = re.compile(r"^_manifest_v(\d{12})\.json$")
 
-#: the CLI mutation paths' retention floor (round 13, r12 advice):
-#: long enough for any sane reader scan, short enough that superseded
-#: generations never pile up (module docstring on the disk trade).
+#: the CLI mutation paths' retention floor: long enough for any sane
+#: reader scan, short enough that superseded generations never pile up
+#: (module docstring on the disk trade).
 DEFAULT_RETENTION_MINUTES = 30.0
 
 
@@ -190,28 +192,51 @@ def _resolve_latest(
     return v, _read_manifest(spark, path, v)
 
 
-def read_manifest_sink(spark: SparkSession, path: str) -> DataFrame | None:
-    """The manifest sink's read path: resolve the latest manifest and
-    read EXACTLY its files.  Returns None when no manifest was ever
-    committed (use the plain parquet reader for legacy sinks); an
-    empty committed file list returns an empty DataFrame with the
-    manifest's recorded schema.  Readers take no lease: resolution is
-    one atomic listing, and superseded files survive one further
-    generation (see module docstring), so a resolved snapshot stays
-    readable across a concurrent compaction."""
-    got = _resolve_latest(spark, path)
-    if got is None:
+def _adopt_or_latest(
+    spark: SparkSession, path: str
+) -> tuple[int, list[str], StructType | None]:
+    """(latest_version, committed_files, schema) from ONE listing.  A
+    LEGACY sink (data files but no manifest) is treated as an implicit
+    version 0 whose every data file is committed; the caller's next
+    commit writes v1 including them.  A missing or data-less path is
+    version 0 with no files."""
+    names = _list_names(spark, path)
+    versions = _manifest_versions(names)
+    if not versions:
+        return 0, sorted(_data_files(names)), None
+    v = versions[-1]
+    man = _read_manifest(spark, path, v)
+    return v, list(man["files"]), StructType.fromJson(man["schema"])
+
+
+def _read_files(
+    spark: SparkSession, path: str, files: list[str], schema: StructType | None
+) -> DataFrame:
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*[f"{path}/{name}" for name in files])
+
+
+def read_manifest_sink(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """The read path of every keyed sink: EXACTLY the files of the
+    latest manifest, or, for a legacy sink with no manifest, its plain
+    data-file listing (the set its adoption will commit).  Read with
+    ``schema`` when given, else with the manifest's recorded schema; an
+    empty committed file list reads as an empty DataFrame.  Returns
+    None when the path holds no data.  Readers take no lease:
+    resolution is one atomic listing, and superseded files survive one
+    further generation (see module docstring), so a resolved snapshot
+    stays readable across a concurrent compaction."""
+    version, files, committed_schema = _adopt_or_latest(spark, path)
+    if version == 0 and not files:
         return None
-    _, man = got
-    files = man["files"]
-    schema = StructType.fromJson(man["schema"])
+    schema = schema or committed_schema
     if not files:
         from ..session import local_frame
 
         return local_frame(spark, [], schema)
-    return spark.read.schema(schema).parquet(
-        *[f"{path}/{name}" for name in files]
-    )
+    return _read_files(spark, path, files, schema)
 
 
 def manifest_vacuum(
@@ -292,72 +317,87 @@ def _move_staged_files(spark: SparkSession, stage: str, path: str) -> list[str]:
     return staged
 
 
-def _adopt_or_latest(
-    spark: SparkSession, path: str
-) -> tuple[int, list[str], StructType | None]:
-    """(latest_version, committed_files, schema) — adopting a LEGACY
-    sink (data files but no manifest: a pre-manifest insert_if_absent
-    sink) by treating every current data file as committed content of
-    an implicit version 0.  Returns version 0 with the adopted list;
-    the caller's commit then writes v1 including them."""
-    got = _resolve_latest(spark, path)
-    if got is not None:
-        v, man = got
-        return v, list(man["files"]), StructType.fromJson(man["schema"])
-    legacy = sorted(_data_files(_list_names(spark, path)))
-    return 0, legacy, None
-
-
 def manifest_insert_if_absent(
     spark: SparkSession,
     df: DataFrame,
     path: str,
     keys: list[str],
     min_retention_minutes: float = 0.0,
+    lease_wait_ms: int = 0,
 ) -> int:
-    """INSERT OR IGNORE with a manifest commit — the exact semantics of
-    :func:`.sinks.insert_if_absent` (dedup within the batch, NULL keys
-    rejected, anti-join against committed content, Observation count)
-    but readers never observe a partial append: the new part files
-    become visible only at the single atomic manifest rename.
+    """INSERT OR IGNORE (the reference's db_utils.py:185-225): append
+    the rows of ``df`` whose key is not already committed, and return
+    how many were appended.  Duplicate keys within ``df`` keep one
+    row.  The new part files become visible only at the single atomic
+    manifest rename.
 
-    The appended part files are written to a PRIVATE staging directory
-    and moved in (round 12, r11 advice): the committed file set is the
-    explicit list of what this job wrote, never a before/after listing
-    diff — a stray data file dropped into the sink dir by a process
-    bypassing the lease is not adopted as committed content (and is
-    vacuumed as an orphan on the next mutating run).
+    - Rows with a NULL in any key column are REJECTED: the key models
+      the reference's PRIMARY KEY (challenge_db_create.sql:29-34), and
+      a NULL key never matches a left_anti condition, so keeping such
+      rows would re-append them on every run.
+    - The appended count comes from an ``Observation`` on the single
+      write action, so the plan (scan + anti-join included) runs once.
+    - A run that appends ZERO rows to a committed sink commits nothing:
+      its staging directory is deleted, so identical re-runs leave the
+      manifest version and the file list unchanged.  A fresh sink
+      still commits v1 with its one schema-bearing file, so the path is
+      readable with a stable schema after any run.
+    - The appended part files are written to a PRIVATE staging
+      directory and moved in: the committed file set is the explicit
+      list of what this job wrote, never a before/after listing diff.
+    - A legacy sink at ``path`` (data, no manifest) is ADOPTED: its
+      files become the base content of the first manifest.
 
-    A legacy swap-sink at ``path`` (data, no manifest) is ADOPTED: its
-    current files become the first manifest's base content, so
-    existing pipelines upgrade in place."""
+    The whole read->anti-join->append window runs under the writer
+    lease (:func:`.sinks.hold_writer_lease`); a concurrent second
+    writer raises :class:`.sinks.ConcurrentWriterError`.
+    ``lease_wait_ms`` is bounded patience for a held lease: retry
+    until the deadline instead of failing fast.  A concurrent writer
+    from a different pipeline is a configuration error, and failing
+    fast (the default 0) is right there; a checkpointed streaming
+    restart can race the killed run's lease release, and there a short
+    wait is the correct semantics."""
+    import time
     import uuid
+    from contextlib import ExitStack
 
     from pyspark.sql import Observation
 
     fresh = df.dropDuplicates(keys)
     for k in keys:
         fresh = fresh.filter(F.col(k).isNotNull())
-    with hold_writer_lease(spark, path):
+    lease = ExitStack()
+    deadline = time.monotonic() + lease_wait_ms / 1000.0
+    while True:
+        try:
+            lease.enter_context(hold_writer_lease(spark, path))
+            break
+        except ConcurrentWriterError:
+            if time.monotonic() >= deadline:
+                raise
+            time.sleep(0.25)
+    with lease:
         version, committed, schema = _adopt_or_latest(spark, path)
         if version > 0:
             manifest_vacuum(spark, path, min_retention_minutes)
             # vacuum never touches the latest two manifests' files, so
             # re-resolving is unnecessary: `committed` is still exact
         if committed:
-            existing = spark.read.parquet(
-                *[f"{path}/{n}" for n in committed]
-            )
+            existing = _read_files(spark, path, committed, schema)
             fresh = fresh.join(existing.select(*keys), keys, "left_anti")
         stage = f"{path}__append_{uuid.uuid4().hex}"
         obs = Observation()
-        # REBALANCE before the staged write (guide §6, same as
-        # insert_if_absent): size the appended files to AQE's advisory
-        # target instead of one fragment per upstream partition
+        # REBALANCE before the staged write (guide §6): size the
+        # appended files to AQE's advisory target instead of one
+        # fragment per upstream partition
         fresh.hint("rebalance").observe(
             obs, F.count(F.lit(1)).alias("n")
         ).write.mode("overwrite").parquet(stage)
         n = int(obs.get["n"])
+        if n == 0 and version > 0:
+            jvm, fs = _fs(spark, stage)
+            fs.delete(_jpath(jvm, stage), True)
+            return 0
         new_files = _move_staged_files(spark, stage, path)
         _commit_manifest(
             spark, path, version + 1, committed + new_files, fresh.schema
@@ -374,19 +414,19 @@ def manifest_compact(
     min_retention_minutes: float = 0.0,
 ) -> int:
     """Reader-stable compaction: rewrite the committed rows as
-    ``target_partitions`` fresh part files and commit a manifest
-    listing only them — no rename-out window, readers holding the
-    previous manifest keep a complete row set (its files stay on disk
-    for one more generation).  Returns the number of rows compacted.
+    ``target_partitions`` fresh part files (default: AQE-rebalanced to
+    advisory-sized files) and commit a manifest listing only them —
+    readers holding the previous manifest keep a complete row set (its
+    files stay on disk for one more generation).  Returns the number
+    of rows compacted.
 
     The compacted files are written to a sibling staging dir and
     MOVED (per-file rename, same filesystem) into the sink under
     their unique Spark-generated names before the commit.
 
-    A COMMITTED sink whose file list is empty (a zero-row first run)
-    is a successful no-op returning 0 (round 12, r11 advice: the
-    pipeline CLI compacts after a date-range run that may admit zero
-    rows); a path with no manifest and no data still raises."""
+    A COMMITTED sink whose file list is empty is a successful no-op
+    returning 0 (the pipeline CLI compacts after a date-range run that
+    may admit zero rows); a path with no manifest and no data raises."""
     import uuid
 
     from pyspark.sql import Observation
@@ -409,10 +449,10 @@ def manifest_compact(
                 f"nothing to compact at {path} (no committed data files)"
             )
         manifest_vacuum(spark, path, min_retention_minutes)
-        rows = spark.read.parquet(*[f"{path}/{n}" for n in committed])
-        # default layout: size-targeted REBALANCE (round 16, same as
-        # sinks.compact_parquet_sink — the fixed shuffle.partitions
-        # default would fragment an already-compact generation)
+        rows = _read_files(spark, path, committed, schema)
+        # default layout: size-targeted REBALANCE — a fixed
+        # shuffle.partitions count would fragment an already-compact
+        # generation
         if target_partitions is not None:
             rows = rows.repartition(int(target_partitions))
         else:

@@ -120,7 +120,7 @@ def minhash_index_append(
 
     Idempotent under replay: ids already present in the index are
     anti-joined away before the append, so re-running a batch after a
-    crash appends exactly the missing remainder (the insert_if_absent
+    crash appends exactly the missing remainder (the keyed-sink insert
     discipline, applied to the index artifact).  Raises if ``path``
     holds no committed index or one built with other hyperparameters —
     appending bands computed under different (k, band_size, shingle_n)

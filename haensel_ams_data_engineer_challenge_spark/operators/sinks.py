@@ -7,9 +7,12 @@ The reference's write-side contract:
 - CSV / JSON export (reporting.py:164-168, api_utils.py:215-244)   -> S7/S8
 
 Spark has no PK enforcement or row-level DELETE on plain parquet, so:
-- S5 = dropDuplicates(keys) + left_anti against the current sink
-  contents + append — exactly INSERT OR IGNORE semantics, idempotent
-  under re-runs (the reference's incremental story, main.py:332-353).
+- S5 = dropDuplicates(keys) + left_anti against the committed sink
+  contents + a manifest-committed append
+  (``manifest_sink.manifest_insert_if_absent``) — exactly INSERT OR
+  IGNORE semantics, idempotent under re-runs (the reference's
+  incremental story, main.py:332-353).  This module holds the writer
+  lease every sink mutation runs under.
 - S6 = dynamic partition overwrite (partitionOverwriteMode=dynamic is
   set by the session factory): writing a date-subset replaces exactly
   those date partitions, the reference's delete-and-replace.
@@ -43,49 +46,14 @@ ATTRIBUTION_DDL: dict[str, str] = {
 }
 
 
-#: AnalysisException conditions meaning "no data here yet" — the only
-#: ones sink-existence probes may tolerate (the streaming/ingest.py
-#: round-7 discipline; anything else re-raises).
-_MISSING_SINK = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
-
-
 def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     """Scheme-aware existence probe through the Hadoop FileSystem API
     (works on HDFS/S3/ABFS exactly like the reads do — NOT os.path,
-    which is always False off-box; round-6 ingest lesson)."""
+    which is always False off-box)."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(hpath))
-
-
-def try_read_sink(spark: SparkSession, path: str) -> DataFrame | None:
-    """Probe a sink THROUGH the Hadoop FileSystem, not os.path: on
-    HDFS/S3/ABFS a driver-local ``isdir()`` is always False, silently
-    disabling every existence-dependent behavior (round-6 ingest
-    lesson, applied to the batch sinks in round 9).  Returns the
-    DataFrame when readable, None when the path holds no data yet; an
-    existing-yet-unreadable sink re-raises.
-
-    The missing-path case is decided by ``fs.exists`` rather than by
-    catching PATH_NOT_FOUND from a speculative read: the failed read
-    costs a full listing attempt and the JVM logs its AnalysisException
-    stack trace to stderr even though Python catches it (the r15
-    bench-tail py4j trace — r15 verdict item 3).  The read+catch stays
-    for the exists-but-empty case (UNABLE_TO_INFER_SCHEMA) and as a
-    race guard."""
-    from pyspark.errors import AnalysisException
-
-    if not hadoop_path_exists(spark, path):
-        return None
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force resolution so missing paths surface here
-        return df
-    except AnalysisException as e:
-        if e.getCondition() in _MISSING_SINK:
-            return None
-        raise
 
 
 def create_tables(spark: SparkSession, base_path: str) -> None:
@@ -94,7 +62,7 @@ def create_tables(spark: SparkSession, base_path: str) -> None:
     ensure_engine_confs(spark)
     for name, ddl in ATTRIBUTION_DDL.items():
         path = f"{base_path}/{name}"
-        if try_read_sink(spark, path) is not None:
+        if hadoop_path_exists(spark, path):
             continue  # exists -> IF NOT EXISTS no-op
         local_frame(spark, [], ddl).write.mode("overwrite").parquet(path)
 
@@ -116,23 +84,7 @@ def verify_tables(spark: SparkSession, base_path: str) -> dict[str, str]:
 
 class ConcurrentWriterError(RuntimeError):
     """A second writer holds the sink's lease — refusing loudly instead
-    of racing the read->anti-join->append window (round 10)."""
-
-
-def _refuse_manifest_sink(spark: SparkSession, path: str, alt: str) -> None:
-    """Round 11: a sink that has been manifest-committed
-    (operators/manifest_sink.py) must never be written through the
-    plain swap protocol — the appended files would be invisible to
-    manifest readers and DELETED by the next manifest vacuum.  Mixing
-    protocols is a caller error; fail loudly with the right tool."""
-    from .manifest_sink import _manifest_versions, _list_names
-
-    if _manifest_versions(_list_names(spark, path)):
-        raise ValueError(
-            f"sink at {path} is manifest-committed; use {alt} "
-            "(operators/manifest_sink.py) — swap-protocol writes would "
-            "be invisible to manifest readers and vacuumed away"
-        )
+    of racing the read->anti-join->append window."""
 
 
 #: a lease older than this is presumed abandoned (crashed writer) and
@@ -140,25 +92,14 @@ def _refuse_manifest_sink(spark: SparkSession, path: str, alt: str) -> None:
 #: shorter than an operator's pager response.
 LEASE_TTL_MS = 15 * 60 * 1000
 
-#: lease file BESIDE the sink dir (``{path}__lease``), NOT inside it.
-#: Round-10 review fix: an in-dir lease would have to MOVE during the
-#: compaction swap (the sink dir itself is renamed), opening a window
-#: where the lease location is vacant and a concurrent insert could
-#: acquire a fresh lease mid-swap — appending into a directory about
-#: to be deleted.  A sibling file never moves, so the lease stays held
-#: across the entire swap; being outside the dir, readers never see it
-#: either.
+#: lease file BESIDE the sink dir (``{path}__lease``), NOT inside it:
+#: readers and the vacuum, which list the dir, never see it, and no
+#: operation on the dir can vacate it while held.
 _LEASE_SUFFIX = "__lease"
 
 
 def _lease_path(path: str) -> str:
     return path.rstrip("/") + _LEASE_SUFFIX
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p, p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
 
 
 class HadoopLeaseBackend:
@@ -255,15 +196,15 @@ def acquire_writer_lease(
 
     The reference got single-writer safety for free from SQLite's
     file lock + PRIMARY KEY (db_utils.py:201-204); plain parquet has
-    neither, and two simultaneous ``insert_if_absent`` runs could both
-    pass the anti-join and double-append.  The lease makes the
+    neither, and two simultaneous inserts could both pass the
+    anti-join and double-append.  The lease makes the
     single-writer assumption ENFORCED.  ``backend`` plugs alternative
     lease primitives (see :class:`HadoopLeaseBackend` for the contract
     and the S3 conditional-put story).
 
-    Stale-lease takeover (round-11 hardening — the old stat->delete->
-    create sequence was a TOCTOU: two racers could each observe a stale
-    lease and each delete the OTHER's freshly created lease):
+    Stale-lease takeover (a plain stat->delete->create sequence would
+    be a TOCTOU: two racers could each observe a stale lease and each
+    delete the OTHER's freshly created lease):
 
     1. a lease older than ``ttl_ms`` by mtime is presumed abandoned;
     2. the taker CLAIMS it with an atomic rename to a unique sibling
@@ -280,8 +221,7 @@ def acquire_writer_lease(
     Long-running writers should renew (:func:`renew_writer_lease`) or
     use :func:`hold_writer_lease`, whose heartbeat renews at TTL/3 —
     a LIVE writer then never looks stale no matter how long its job
-    runs (the round-11 fix for "legitimate 20-minute compaction gets
-    taken over at the fixed 15-minute TTL").
+    runs.
     """
     import uuid
     import warnings
@@ -290,7 +230,13 @@ def acquire_writer_lease(
     lease = _lease_path(path)
     token = uuid.uuid4().hex
     for attempt in (0, 1):
-        if be.create_exclusive(lease, token):
+        try:
+            created = be.create_exclusive(lease, token)
+        except Exception:
+            with _HELD_LEASES_LOCK:
+                _TORN_CREATES[lease] = token
+            raise
+        if created:
             return token
         mtime = be.stat_mtime_ms(lease)
         if mtime is None:
@@ -346,7 +292,7 @@ def acquire_writer_lease(
         raise ConcurrentWriterError(
             f"another writer holds the lease on {path} "
             f"({_lease_path(path)} exists and is fresh); concurrent "
-            "insert_if_absent/compaction would race the "
+            "insert/compaction would race the "
             "read->anti-join->append window. Retry after it "
             "finishes, or delete the lease if its writer is dead."
         )
@@ -404,12 +350,31 @@ _LEASE_HEARTBEAT_FRACTION = 3.0
 _HELD_LEASES: dict[str, tuple[str, threading.Thread]] = {}
 _HELD_LEASES_LOCK = threading.Lock()
 
+#: lease path -> token of a create in this process that raised part-way.
+#: Stopping a streaming query interrupts the JVM thread its foreachBatch
+#: callback calls through, and an interrupt inside ``fs.create`` can
+#: leave the lease file on disk before the token is written: an empty
+#: lease that no writer holds and that looks fresh for the whole TTL.
+_TORN_CREATES: dict[str, str] = {}
+
 
 def _reclaim_own_orphan(be, lease: str) -> bool:
     """Delete ``lease`` iff it carries a token registered to a DEAD
-    thread of this process; True when reclaimed."""
+    thread of this process, or it is what a failed create in this
+    process left (empty, or holding that create's token); True when
+    reclaimed."""
     import warnings
 
+    with _HELD_LEASES_LOCK:
+        torn = _TORN_CREATES.pop(lease, None)
+    if torn is not None and be.read_token(lease) in ("", torn):
+        warnings.warn(
+            f"reclaiming writer lease at {lease}: a create of it in this "
+            "process failed before it returned (interrupted mid-create)",
+            stacklevel=3,
+        )
+        be.delete(lease)
+        return True
     with _HELD_LEASES_LOCK:
         rec = _HELD_LEASES.get(lease)
     if rec is None:
@@ -505,192 +470,6 @@ def hold_writer_lease(
             if _HELD_LEASES.get(lease) == (token, owner):
                 del _HELD_LEASES[lease]
         release_writer_lease(spark, path, token, backend)
-
-
-def insert_if_absent(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    lease_wait_ms: int = 0,
-) -> int:
-    """S5: INSERT OR IGNORE — append rows whose key is not already
-    present; duplicate keys within ``df`` keep one arbitrary-but-
-    deterministic row (first by the remaining columns). Returns the
-    number of rows appended.
-
-    Rows with a NULL in any key column are REJECTED (filtered out):
-    the key models the reference's PRIMARY KEY (challenge_db_create.
-    sql:29-34), and a NULL key can never match a left_anti condition,
-    so keeping such rows would re-append them on every run — breaking
-    the idempotence this sink exists to provide.
-
-    The appended count comes from an ``Observation`` on the single
-    write action — the plan (scan + anti-join included) executes once,
-    not once for count() and again for the write.
-
-    Behavior note (changed in round 2, deliberate): the append write
-    always executes, so a run where ZERO fresh rows survive the
-    dedup/NULL-filter/anti-join still creates the sink directory (an
-    empty, schema-bearing parquet dataset) on a first run.  That is a
-    feature for downstream readers — the sink path is always readable
-    with a stable schema after any pipeline run — and the price of the
-    single-action Observation count (a pre-count to guard the write
-    would execute the plan twice).
-
-    Round 10: the whole read->anti-join->append window runs under the
-    WRITER LEASE (:func:`acquire_writer_lease`) — two simultaneous
-    runs could otherwise both pass the anti-join and double-append
-    (the race SQLite's PK closed for the reference).  A concurrent
-    second writer raises :class:`ConcurrentWriterError`; a crashed
-    writer's lease is taken over after its TTL.  The lease is released
-    in ``finally``: a failed Spark write job leaves no committed files
-    (parquet commit protocol), so releasing after a failure is safe.
-
-    ``lease_wait_ms`` (round 14): bounded patience for a FRESH lease —
-    retry acquisition until the deadline instead of failing fast.  A
-    concurrent writer from a DIFFERENT pipeline is a config error and
-    fail-fast (the default 0) is right; but a checkpointed streaming
-    RESTART can race the previous incarnation's release by
-    milliseconds (the killed query's callback is still unwinding when
-    the resumed query's first batch inserts — measured as a loaded-
-    suite flake), and there a short wait is the correct semantics.
-    """
-    import time as _time
-    from contextlib import ExitStack
-
-    from pyspark.sql import Observation
-
-    _refuse_manifest_sink(spark, path, "manifest_insert_if_absent")
-    fresh = df.dropDuplicates(keys)
-    for k in keys:
-        fresh = fresh.filter(F.col(k).isNotNull())
-    stack = ExitStack()
-    deadline = _time.monotonic() + lease_wait_ms / 1000.0
-    while True:
-        try:
-            stack.enter_context(hold_writer_lease(spark, path))
-            break
-        except ConcurrentWriterError:
-            if _time.monotonic() >= deadline:
-                raise
-            _time.sleep(0.25)
-    with stack:
-        # existence probe THROUGH Spark, not os.path (round-9 fix, the
-        # streaming/ingest.py round-6 lesson applied to the batch
-        # sink): on HDFS/S3/ABFS a driver-local isdir() is always
-        # False, which would silently skip the anti-join and append
-        # duplicates on every run.  A missing/empty sink means
-        # everything is fresh; an existing-yet-unreadable sink still
-        # raises (only the two "no data here yet" conditions are
-        # tolerated).
-        existing = try_read_sink(spark, path)
-        if existing is not None:
-            fresh = fresh.join(existing.select(*keys), keys, "left_anti")
-        obs = Observation()
-        # REBALANCE before the write (guide §6): without it the append
-        # inherits the upstream partitioning (32 x ~23 KB files per
-        # run at sf0.1 — one fragment per shuffle partition); with it
-        # AQE coalesces/splits to advisoryPartitionSizeInBytes, so a
-        # small run appends one file and a 100 TB run appends
-        # target-sized files.  Row-preserving; the Observation rides
-        # the same single write action.
-        fresh.hint("rebalance").observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).write.mode("append").parquet(path)
-        return int(obs.get["n"])
-
-
-def compact_parquet_sink(
-    spark: SparkSession, path: str, target_partitions: int | None = None
-) -> int:
-    """Rewrite an append-fragmented sink as ``target_partitions`` files
-    (default: AQE-rebalanced to advisory-sized files) — the small-files
-    remedy for a sink that grows by one parquet fragment per pipeline
-    run (round 10; the reference's single SQLite file never had this).
-    Returns the number of rows compacted.
-
-    Unlike the index artifacts (minhash_index_compact), the sink is
-    SOURCE OF TRUTH — "torn = rebuildable" is not an acceptable crash
-    state.  Swap protocol, under the writer lease (the lease is a
-    SIBLING file, so it stays held across the renames — a concurrent
-    insert_if_absent refuses for the whole swap window, review fix):
-
-    1. write the compacted copy BESIDE the sink (``{path}__compact``);
-    2. rename sink -> ``{path}__old`` (backup), rename compact -> sink,
-       delete backup.
-
-    A crash between the two renames leaves the sink path missing but
-    the backup intact; this function RECOVERS that state — under the
-    lease, so two concurrent compactors cannot race the recovery
-    renames — before doing anything else, so no crash window loses a
-    row.  Every rename/delete return code is checked — Hadoop FS
-    reports failure by returning false, not raising.
-    """
-    _refuse_manifest_sink(spark, path, "manifest_compact")
-    jvm, sink_p, fs = _hadoop_fs(spark, path)
-
-    def p(suffix: str):
-        return jvm.org.apache.hadoop.fs.Path(path + suffix)
-
-    with hold_writer_lease(spark, path):
-        # crash recovery from a previous compaction dying mid-swap
-        if not fs.exists(sink_p) and fs.exists(p("__old")):
-            if not fs.rename(p("__old"), sink_p):
-                raise IOError(
-                    f"compact: failed to restore {path} from {path}__old"
-                )
-        elif fs.exists(sink_p) and fs.exists(p("__old")):
-            # sink present + backup present = a previous swap COMPLETED
-            # but died before deleting its backup; backup is superseded
-            fs.delete(p("__old"), True)
-        # a leftover compacted copy from a crash BEFORE the first
-        # rename is stale (the sink may have grown since) — discard
-        fs.delete(p("__compact"), True)
-        rows = spark.read.parquet(path)
-        # default layout: size-targeted REBALANCE (round 16, guide §6)
-        # — the fixed repartition(shuffle.partitions) default predates
-        # the rebalanced appends and would now FRAGMENT an
-        # already-compact sink (1 file -> 32); AQE sizes the compacted
-        # files to its advisory partition target at any scale.  An
-        # explicit target_partitions keeps the exact-count form.
-        if target_partitions is not None:
-            rows = rows.repartition(int(target_partitions))
-        else:
-            rows = rows.hint("rebalance")
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        rows.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(path + "__compact")
-        n_rows = int(obs.get["n"])
-        # the lease is a sibling file: it survives the renames below
-        # untouched, so the insert_if_absent exclusion holds through
-        # the entire swap window (no hand-off, no vacancy)
-        if not fs.rename(sink_p, p("__old")):
-            raise IOError(f"compact: failed to back up {path}")
-        if not fs.rename(p("__compact"), sink_p):
-            # put the backup straight back — never leave the sink gone
-            fs.rename(p("__old"), sink_p)
-            raise IOError(f"compact: failed to swap in {path}__compact")
-        if not fs.delete(p("__old"), True):
-            # round-11 review fix: the swap already SUCCEEDED — a
-            # failed backup delete is a harmless leftover (the next
-            # run's recovery removes it), not a compaction failure.
-            # Raising here made the caller (and the CLI, which exits
-            # non-zero) report failure and lose the row count.
-            import warnings
-
-            warnings.warn(
-                f"compact: swapped OK but failed to delete {path}__old "
-                "(harmless leftover; the next compaction removes it)",
-                stacklevel=2,
-            )
-        # the path's CONTENT identity changed: drop any cached file
-        # listing so same-session readers don't chase deleted fragments
-        spark.catalog.refreshByPath(path)
-        return n_rows
 
 
 def overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:

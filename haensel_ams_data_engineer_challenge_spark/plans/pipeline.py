@@ -7,7 +7,8 @@ Reference lifecycle -> engine stage:
 3. extract + journeys    (main.py:137-192)  -> attribution.model + asof
 4. incremental skip      (main.py:331-353)  -> left_anti vs sink (J6)
 5. score                 (main.py:194-242)  -> operators.ihc (native)
-6. load + report         (main.py:244-297)  -> insert_if_absent (S5),
+6. load + report         (main.py:244-297)  -> manifest_insert_if_absent
+                                               (S5),
                                                sum check (A2),
                                                partition overwrite (S6),
                                                CSV export (S7)
@@ -41,14 +42,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..attribution import model as M
 from ..operators.asof import JOURNEY_HOT_THRESHOLD, journey_asof_join
-
-#: the pipeline's default hot-key protection (round 11, default-ON):
-#: the measured flat part of the chunk-threshold knob sweep — far
-#: above any organic per-user session count, well below the window
-#: cliff (BASELINE.md hot-key table).  0/None opts out.
-HOT_USER_THRESHOLD_DEFAULT = JOURNEY_HOT_THRESHOLD
 from ..operators.ihc import attribute_by_conv_type, attribution_sum_violations
-from ..operators.sinks import export_csv, insert_if_absent, overwrite_partitions
+from ..operators.manifest_sink import manifest_insert_if_absent, read_manifest_sink
+from ..operators.sinks import export_csv, overwrite_partitions
 from .report import channel_report, report_metrics
 
 
@@ -87,8 +83,7 @@ def run_pipeline(
     scorer_max_retries: int = 3,
     scorer_retry_delay: float = 2.0,
     audit_path: str | None = None,
-    hot_user_threshold: int | None = HOT_USER_THRESHOLD_DEFAULT,
-    sink_protocol: str = "swap",
+    hot_user_threshold: int | None = JOURNEY_HOT_THRESHOLD,
 ) -> PipelineResult:
     """Run extract -> journeys -> score -> upsert -> report.
 
@@ -96,17 +91,20 @@ def run_pipeline(
     present in the attribution sink are skipped (J6 anti-join,
     main.py:332-353); the report is rebuilt with delete-and-replace
     partition semantics for the covered dates (reporting.py:36-50).
-    Re-running the same range is a no-op on the attribution sink and
-    an identical rewrite of the report partitions.
+    Re-running the same range commits nothing to the attribution sink
+    and rewrites the report partitions identically.  The attribution
+    sink is manifest-committed (operators/manifest_sink.py): each
+    run's rows become visible at one atomic manifest rename, and a
+    legacy plain-parquet sink is adopted in place.
 
     ``conv_type_id`` selects the scoring model per run, like the
     reference API's per-request conv_type_id (api_utils.py:87) —
     every model emits its scores as ``ihc`` so the sink/report/A2
     stages are model-agnostic (operators/ihc.py:CONV_TYPE_MODELS).
 
-    ``scorer="external"`` (round-9, r8 verdict task 6): route scoring
-    through the throttled external-call operator instead of the native
-    models — the reference's remote-IHC-API mode (main.py:65-70
+    ``scorer="external"``: route scoring through the throttled
+    external-call operator instead of the native models — the
+    reference's remote-IHC-API mode (main.py:65-70
     ``--rate_limit_delay``, api_utils.py ``send_journeys_to_api``).
     ``scorer_call`` is the per-chunk callable (e.g.
     ``external.http_ihc_scorer(endpoint)``); journeys go out in the
@@ -119,31 +117,17 @@ def run_pipeline(
     api_utils.py:209-211): their conversions stay unscored, so the J6
     incremental anti-join retries exactly those on the next run.
 
-    ``hot_user_threshold`` (round 10; DEFAULT-ON since round 11):
-    route users whose merged timeline exceeds it through the as-of
-    join's chunked hybrid.  The default is asof.JOURNEY_HOT_THRESHOLD
-    (100k — the measured flat part of the knob sweep), so the
-    PRODUCTION surface is skew-safe out of the box: one bot-grade user
-    no longer single-tasks the window stage.  The price on organic
-    data is one map-side-combinable count pass + an isEmpty probe
-    (measured at sf0.1: ~0.6 s on a ~4.4 s run, BASELINE.md round-11
-    note); pass 0 or None to opt out and keep the plain 1-exchange
-    plan.
-
-    ``sink_protocol`` (round 11): ``"swap"`` writes the attribution
-    sink through the plain lease-guarded ``insert_if_absent``;
-    ``"manifest"`` routes it through the manifest-committed sink
-    (operators/manifest_sink.py) — reader-stable compaction, atomic
-    visibility of each run's appended rows, legacy sinks adopted in
-    place.  The two protocols must not be mixed on one path (both
-    sides refuse loudly).
+    ``hot_user_threshold``: route users whose merged timeline exceeds
+    it through the as-of join's chunked hybrid.  The default is
+    asof.JOURNEY_HOT_THRESHOLD (100k — the measured flat part of the
+    knob sweep), so one bot-grade user no longer single-tasks the
+    window stage.  The price on organic data is one
+    map-side-combinable count pass + an isEmpty probe (measured at
+    sf0.1: ~0.6 s on a ~4.4 s run, BASELINE.md round-11 note); pass 0
+    or None to opt out and keep the plain 1-exchange plan.
     """
     validate_date(start_date, "start_date")
     validate_date(end_date, "end_date")
-    if sink_protocol not in ("swap", "manifest"):
-        raise ValueError(
-            f"sink_protocol must be 'swap' or 'manifest', got {sink_protocol!r}"
-        )
 
     conversions = M.conversions(spark, sf_dir)
     if start_date:
@@ -152,24 +136,7 @@ def run_pipeline(
         conversions = conversions.filter(F.col("conv_date") <= end_date)
 
     # 4. incremental skip (J5/J6): only conversions not yet scored.
-    # Probe THROUGH Spark (sinks.try_read_sink, round-9 fix): a
-    # driver-local isdir() is always False on HDFS/S3/ABFS, which
-    # would silently re-score everything every run; an existing-yet-
-    # unreadable sink still raises (only the no-data-yet conditions
-    # are tolerated).
-    from ..operators.sinks import try_read_sink
-
-    if sink_protocol == "manifest":
-        from ..operators.manifest_sink import read_manifest_sink
-
-        # falls back to the plain read pre-adoption (first manifest
-        # run over a legacy sink): the plain listing sees the same
-        # committed rows the adoption will
-        sink_df = read_manifest_sink(spark, attribution_path)
-        if sink_df is None:
-            sink_df = try_read_sink(spark, attribution_path)
-    else:
-        sink_df = try_read_sink(spark, attribution_path)
+    sink_df = read_manifest_sink(spark, attribution_path)
     if sink_df is not None:
         todo = conversions.join(
             sink_df.select("conv_id").distinct(), "conv_id", "left_anti"
@@ -255,25 +222,13 @@ def run_pipeline(
         conversions_scored = int(counts["scored"])
 
         # 6a. INSERT OR IGNORE upsert (S5)
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import manifest_insert_if_absent
-
-            written = manifest_insert_if_absent(
-                spark, scored, attribution_path, ["conv_id", "session_id"]
-            )
-        else:
-            written = insert_if_absent(
-                spark, scored, attribution_path, ["conv_id", "session_id"]
-            )
+        written = manifest_insert_if_absent(
+            spark, scored, attribution_path, ["conv_id", "session_id"]
+        )
     finally:
         scored.unpersist()
 
-    if sink_protocol == "manifest":
-        from ..operators.manifest_sink import read_manifest_sink
-
-        all_attribution = read_manifest_sink(spark, attribution_path)
-    else:
-        all_attribution = spark.read.parquet(attribution_path)
+    all_attribution = read_manifest_sink(spark, attribution_path)
 
     # 6b + 6c, overlapped (round 15, guide §2.6): the A2 invariant
     # check needs only the POST-WRITE attribution sink, while the

@@ -10,9 +10,9 @@ admitted-docs store is probed without ever shuffling the corpus.
 
 foreachBatch deliberately reuses the BATCH operators (the
 streaming/journeys.py discipline — one codepath, one set of oracle
-tests) and the sink is `insert_if_absent` on doc_id, so replays of a
-partially-committed batch after a crash write exactly the missing
-remainder: Structured Streaming's at-least-once delivery composes
+tests) and the sink is `manifest_insert_if_absent` on doc_id, so
+replays of a partially-committed batch after a crash write exactly the
+missing remainder: Structured Streaming's at-least-once delivery composes
 with the idempotent sink to effectively-once admission.
 
 Cross-batch dedup soundness mirrors the attribution stream's claimed-
@@ -33,11 +33,11 @@ from ..operators.dedup import (
     incremental_new_docs,
     normalize_text,
 )
-from ..operators.sinks import insert_if_absent
+from ..operators.manifest_sink import manifest_insert_if_absent, read_manifest_sink
 from ..session import local_frame
 
 #: AnalysisException conditions meaning "no data here yet" — the only
-#: ones the sink/state probes may tolerate (round-7 advice #3).
+#: ones the Bloom state probes may tolerate.
 _MISSING = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
 
 
@@ -48,12 +48,11 @@ def dedup_batch_within(batch: DataFrame) -> DataFrame:
     return batch.join(keep, "doc_id", "left_semi")
 
 
-def _try_read(ss: SparkSession, path: str, schema=None) -> DataFrame | None:
+def _try_read(ss: SparkSession, path: str) -> DataFrame | None:
     from pyspark.errors import AnalysisException
 
     try:
-        reader = ss.read.schema(schema) if schema is not None else ss.read
-        df = reader.parquet(path)
+        df = ss.read.parquet(path)
         df.schema
         return df
     except AnalysisException as e:
@@ -147,7 +146,6 @@ def run_streaming_ingest(
     encoder_model_dir: str | None = None,
     lm_model_dir: str | None = None,
     max_xent: float | None = None,
-    sink_protocol: str = "swap",
     url_dedup_col: str | None = None,
     url_bloom_state_dir: str | None = None,
     unicode_normalize: bool = True,
@@ -300,15 +298,6 @@ def run_streaming_ingest(
             "needs both the LM artifact and its cross-entropy ceiling "
             f"(got lm_model_dir={lm_model_dir!r}, max_xent={max_xent!r})"
         )
-    # round 11: the admitted store can run on the manifest-committed
-    # protocol — each micro-batch's rows become visible to readers
-    # ATOMICALLY at one manifest rename, and compaction never leaves a
-    # window where the sink path reads empty.  Replay semantics are
-    # unchanged (manifest_insert_if_absent anti-joins committed rows).
-    if sink_protocol not in ("swap", "manifest"):
-        raise ValueError(
-            f"sink_protocol must be 'swap' or 'manifest', got {sink_protocol!r}"
-        )
     if url_bloom_state_dir is not None and url_dedup_col is None:
         raise ValueError(
             "url_bloom_state_dir needs url_dedup_col: the bitmap is "
@@ -336,24 +325,10 @@ def run_streaming_ingest(
         nonlocal bloom_words, url_bloom_words
         ss = batch.sparkSession
         existing = corpus
-        # probe the sink THROUGH Spark, not os.path: the sink may live
-        # on HDFS/S3/ABFS where a driver-local isdir() is always False
-        # and would silently exclude admitted docs from the dedup
-        # target, re-admitting cross-batch duplicates (round-6 advice
-        # #1).  A missing/empty sink raises AnalysisException
-        # (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA) at read time —
-        # exactly the "first batch" case; only those conditions are
-        # tolerated (round-7 advice #3, `_try_read`).
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import read_manifest_sink
-
-            # committed rows only; pre-adoption (first manifest run
-            # over a legacy sink) falls back to the plain listing
-            sink = read_manifest_sink(ss, sink_path)
-            if sink is None:
-                sink = _try_read(ss, sink_path, corpus.schema)
-        else:
-            sink = _try_read(ss, sink_path, corpus.schema)
+        # committed rows only (files a killed batch moved in but never
+        # committed are not admitted content); a missing sink is the
+        # "first batch" case
+        sink = read_manifest_sink(ss, sink_path, corpus.schema)
         if sink is not None:
             existing = existing.unionByName(sink)
         if url_dedup_col is not None:
@@ -727,12 +702,7 @@ def run_streaming_ingest(
             _write_bloom_state(
                 ss, url_bloom_state_dir, url_bloom_words, m_bits, k
             )
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import manifest_insert_if_absent
-
-            manifest_insert_if_absent(ss, admitted, sink_path, ["doc_id"])
-        else:
-            insert_if_absent(ss, admitted, sink_path, ["doc_id"])
+        manifest_insert_if_absent(ss, admitted, sink_path, ["doc_id"])
 
     (
         feed.writeStream.foreachBatch(admit_batch)

@@ -13,8 +13,8 @@ append-only event stream, so the engine exposes:
 - ``run_streaming_attribution`` — incremental attribution: each
   micro-batch of conversions is journey-built against the session
   store, IHC-scored, and upserted with INSERT OR IGNORE semantics
-  (operators/sinks.insert_if_absent), i.e. the reference's
-  incremental pipeline expressed as a stream.
+  (operators/manifest_sink.manifest_insert_if_absent), i.e. the
+  reference's incremental pipeline expressed as a stream.
 
 foreachBatch deliberately reuses the BATCH operators — one codepath
 for semantics, streaming only handles arrival. Exactly-once story:
@@ -33,8 +33,9 @@ from pyspark.sql.types import LongType
 
 from ..operators.asof import journey_asof_join
 from ..operators.ihc import ihc_attribute
-from ..operators.sinks import insert_if_absent
+from ..operators.manifest_sink import manifest_insert_if_absent, read_manifest_sink
 from ..session import ensure_engine_confs
+
 
 def stream_events(
     spark: SparkSession,
@@ -165,8 +166,6 @@ def run_streaming_attribution(
         )
     )
 
-    from ..operators.sinks import try_read_sink
-
     def score_batch(batch: DataFrame, batch_id: int) -> None:
         if on_batch is not None:
             on_batch(batch_id)  # foreachBatch fns run on the driver
@@ -174,11 +173,10 @@ def run_streaming_attribution(
         # F4 across batches: sessions already claimed by earlier
         # micro-batches stay claimed (the reference's
         # assigned_session_ids set, journey_builder.py:92-107,
-        # persisted in the sink instead of driver memory). Probe
-        # THROUGH Spark (round-9: a driver-local isdir() is always
-        # False on HDFS/S3/ABFS, which would let every batch re-claim
-        # other conversions' sessions).
-        sink_probe = try_read_sink(batch.sparkSession, sink_path)
+        # persisted in the sink instead of driver memory).  Committed
+        # rows only: files a killed batch moved in but never committed
+        # must not claim sessions.
+        sink_probe = read_manifest_sink(batch.sparkSession, sink_path)
         if sink_probe is not None:
             # replay soundness: rows of THIS batch's conversions that a
             # partially-visible earlier attempt already persisted must
@@ -197,11 +195,11 @@ def run_streaming_attribution(
             sess = sess.join(assigned, "session_id", "left_anti")
         journeys = journey_asof_join(sess, batch)
         scored = ihc_attribute(journeys).select("conv_id", "session_id", "ihc")
-        # lease_wait_ms (round 14): a checkpointed RESTART can race the
-        # killed incarnation's lease release by milliseconds — bounded
+        # lease_wait_ms: a checkpointed RESTART can race the killed
+        # incarnation's lease release by milliseconds — bounded
         # patience instead of a hard ConcurrentWriterError (a genuine
         # concurrent second pipeline still fails, just 30s later)
-        insert_if_absent(
+        manifest_insert_if_absent(
             batch.sparkSession, scored, sink_path,
             ["conv_id", "session_id"], lease_wait_ms=30_000,
         )
@@ -240,17 +238,17 @@ def run_streaming_attribution(
     query.awaitTermination()
     # awaitTermination returns when the STREAM thread ends, but
     # foreachBatch runs on a py4j callback thread that may still be
-    # unwinding an interrupted insert_if_absent — holding the sink's
+    # unwinding an interrupted insert — holding the sink's
     # writer lease.  A caller that immediately resumes (the
     # kill-and-resume tests) would trip ConcurrentWriterError on a
     # lease that is about to be released; wait it out (bounded — a
     # genuinely crashed holder is the stale-takeover path, not ours).
+    # An EMPTY lease is an interrupted create that no writer holds; the
+    # next acquirer in this process reclaims it, so do not wait on it.
     from ..operators.sinks import _lease_backend, _lease_path
 
     be = _lease_backend(spark, None)
     lease = _lease_path(sink_path)
     deadline = time.monotonic() + 60.0
-    while (
-        be.read_token(lease) is not None and time.monotonic() < deadline
-    ):
+    while be.read_token(lease) and time.monotonic() < deadline:
         time.sleep(0.1)

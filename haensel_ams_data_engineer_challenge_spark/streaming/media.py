@@ -59,8 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..checkpoint import materialize
 from ..operators.embed import embed_with_model
 from ..operators.similarity import _read_index_params
-from ..operators.sinks import insert_if_absent
-from .ingest import _try_read
+from ..operators.manifest_sink import manifest_insert_if_absent, read_manifest_sink
 from .vectors import (
     VECTOR_DEDUP_BANDS,
     VECTOR_DEDUP_PLANES,
@@ -84,22 +83,14 @@ def run_streaming_media_ingest(
     bands: int = VECTOR_DEDUP_BANDS,
     planes_per_band: int = VECTOR_DEDUP_PLANES,
     id_col: str = "doc_id",
-    sink_protocol: str = "swap",
 ) -> None:
     """Drain the feed with an availableNow trigger, admitting only
     media whose embedding has no near-duplicate (cosine >= threshold)
     in the corpus, the admitted store, or earlier in its own batch —
-    plus all featureless payloads (module docstring).
-
-    ``sink_protocol="manifest"``: the admitted MEDIA store commits
-    each batch at one atomic manifest rename (the vectors side-store
-    is internal dedup state, not a reader surface — it stays on the
-    keyed insert either way)."""
-    if sink_protocol not in ("swap", "manifest"):
-        raise ValueError(
-            f"sink_protocol must be 'swap' or 'manifest', got "
-            f"{sink_protocol!r}"
-        )
+    plus all featureless payloads (module docstring).  The admitted
+    media store and the vectors side-store are both manifest-committed
+    (operators/manifest_sink.py): each batch becomes visible at one
+    atomic manifest rename."""
     # driver-side validation before any task runs: a missing/foreign
     # artifact raises here, and the embedder identity pins the index
     enc = _read_index_params(spark, encoder_path)
@@ -124,9 +115,9 @@ def run_streaming_media_ingest(
         ss = batch.sparkSession
         # bootstrap the vectors side-store from the media corpus ONCE
         # (the one full-corpus decode; every later batch reads it back)
-        vecs_existing = _try_read(ss, vectors_path)
+        vecs_existing = read_manifest_sink(ss, vectors_path)
         if vecs_existing is None:
-            insert_if_absent(
+            manifest_insert_if_absent(
                 ss,
                 embed_with_model(
                     ss.read.parquet(corpus_path), encoder_path, id_col=id_col
@@ -134,7 +125,7 @@ def run_streaming_media_ingest(
                 vectors_path,
                 ["vec_id"],
             )
-            vecs_existing = ss.read.parquet(vectors_path)
+            vecs_existing = read_manifest_sink(ss, vectors_path)
         # the batch feeds the embed, the featureless split and both
         # admits — materialize the bounded set once; same for its
         # vectors (pair scan + probe + append + insert)
@@ -162,13 +153,8 @@ def run_streaming_media_ingest(
         ).unionByName(featureless)
         # write order: index (inside the core) -> media sink ->
         # vectors store (module docstring: every gap self-heals)
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import manifest_insert_if_absent
-
-            manifest_insert_if_absent(ss, admitted_media, sink_path, [id_col])
-        else:
-            insert_if_absent(ss, admitted_media, sink_path, [id_col])
-        insert_if_absent(ss, admitted_vecs, vectors_path, ["vec_id"])
+        manifest_insert_if_absent(ss, admitted_media, sink_path, [id_col])
+        manifest_insert_if_absent(ss, admitted_vecs, vectors_path, ["vec_id"])
 
     (
         feed.writeStream.foreachBatch(admit_batch)

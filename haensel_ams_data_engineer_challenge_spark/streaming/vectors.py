@@ -42,8 +42,7 @@ from ..operators.similarity import (
     lsh_index_persistent,
     vector_dup_probe,
 )
-from ..operators.sinks import insert_if_absent
-from .ingest import _try_read
+from ..operators.manifest_sink import manifest_insert_if_absent, read_manifest_sink
 
 #: default exact-cosine acceptance — the near-identical regime vector
 #: dedup targets.
@@ -141,25 +140,16 @@ def run_streaming_vector_ingest(
     planes_per_band: int = VECTOR_DEDUP_PLANES,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sink_protocol: str = "swap",
 ) -> None:
     """Drain the feed with an availableNow trigger, admitting only
     vectors with no near-duplicate (cosine >= threshold) in the
     corpus, the admitted store, or earlier in their own batch.
 
-    ``sink_protocol="manifest"`` (round 12, r11 verdict task 5 — the
-    option the document stream got in round 11): the admitted store
-    commits each batch at ONE atomic manifest rename and is read back
-    committed-rows-only, so a concurrent reader never observes a
-    partial append or a compaction window.  Admission semantics are
-    unchanged (the keyed insert anti-joins committed rows); a legacy
-    swap-protocol store is adopted in place on the first manifest
-    batch."""
-    if sink_protocol not in ("swap", "manifest"):
-        raise ValueError(
-            f"sink_protocol must be 'swap' or 'manifest', got "
-            f"{sink_protocol!r}"
-        )
+    The admitted store is manifest-committed (operators/
+    manifest_sink.py): each batch becomes visible at ONE atomic
+    manifest rename and is read back committed-rows-only, so a
+    concurrent reader never observes a partial append; a legacy
+    plain-parquet store is adopted in place by the first batch."""
     corpus = spark.read.parquet(corpus_path)
     # one driver-side probe of the corpus vector dim (round 12): raw
     # embedding feeds carry no artifact to read it from, and a
@@ -185,16 +175,7 @@ def run_streaming_vector_ingest(
     def admit_batch(batch: DataFrame, batch_id: int) -> None:
         ss = batch.sparkSession
         existing = corpus
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import read_manifest_sink
-
-            # committed rows only; pre-adoption (first manifest run
-            # over a legacy sink) falls back to the plain listing
-            sink = read_manifest_sink(ss, sink_path)
-            if sink is None:
-                sink = _try_read(ss, sink_path, corpus.schema)
-        else:
-            sink = _try_read(ss, sink_path, corpus.schema)
+        sink = read_manifest_sink(ss, sink_path, corpus.schema)
         if sink is not None:
             existing = existing.unionByName(sink)
         # the batch feeds the pair search, the survivor filter, the
@@ -218,12 +199,7 @@ def run_streaming_vector_ingest(
             threshold, bands, planes_per_band, id_col, vec_col,
             dim=batch_dim,
         )
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import manifest_insert_if_absent
-
-            manifest_insert_if_absent(ss, admitted, sink_path, [id_col])
-        else:
-            insert_if_absent(ss, admitted, sink_path, [id_col])
+        manifest_insert_if_absent(ss, admitted, sink_path, [id_col])
 
     (
         feed.writeStream.foreachBatch(admit_batch)

@@ -138,12 +138,13 @@ def test_vacuum_retention_is_two_generations(spark, tmp_path):
 
 
 def test_legacy_swap_sink_adopts_in_place(spark, tmp_path):
-    """A pre-manifest sink (plain insert_if_absent output) upgrades in
-    place: its files become the first manifest's base content and the
-    anti-join still sees them."""
+    """A pre-manifest sink (a plain parquet directory) reads as its
+    file listing and upgrades in place: its files become the first
+    manifest's base content and the anti-join still sees them."""
     path = str(tmp_path / "sink")
-    sinks.insert_if_absent(spark, _df(spark, [1, 2]), path, ["k"])
-    assert M.read_manifest_sink(spark, path) is None  # not yet adopted
+    _df(spark, [1, 2]).write.parquet(path)
+    assert M._resolve_latest(spark, path) is None  # not yet adopted
+    assert _keys(spark, path) == ["1", "2"]  # the one reader sees it
     n = M.manifest_insert_if_absent(spark, _df(spark, [2, 3]), path, ["k"])
     assert n == 1  # the legacy row '2' was seen by the anti-join
     assert _keys(spark, path) == ["1", "2", "3"]
@@ -152,13 +153,28 @@ def test_legacy_swap_sink_adopts_in_place(spark, tmp_path):
 def test_empty_sink_reads_with_schema(spark, tmp_path):
     """A first insert where nothing survives the filters still commits
     a manifest carrying the schema — the sink is readable with a
-    stable schema after any run (the swap sink's round-2 contract)."""
+    stable schema after any run."""
     path = str(tmp_path / "sink")
     nulls = spark.createDataFrame([(None, 1.0)], "k string, v double")
     assert M.manifest_insert_if_absent(spark, nulls, path, ["k"]) == 0
     df = M.read_manifest_sink(spark, path)
     assert df is not None and df.count() == 0
     assert [f.name for f in df.schema.fields] == ["k", "v"]
+
+
+def test_zero_row_insert_commits_nothing(spark, tmp_path):
+    """An insert that appends nothing to a committed sink deletes its
+    staging dir and commits no manifest: identical replays leave the
+    version, the committed file list and the directory unchanged."""
+    path = str(tmp_path / "sink")
+    M.manifest_insert_if_absent(spark, _df(spark, [1, 2]), path, ["k"])
+    v1 = M._resolve_latest(spark, path)
+    on_disk = sorted(M._list_names(spark, path))
+    assert M.manifest_insert_if_absent(spark, _df(spark, [1, 2]), path, ["k"]) == 0
+    assert M._resolve_latest(spark, path) == v1
+    assert sorted(M._list_names(spark, path)) == on_disk
+    assert [p.name for p in tmp_path.iterdir()] == ["sink"]  # no stage left
+    assert M.read_manifest_sink(spark, str(tmp_path / "missing")) is None
 
 
 def test_concurrent_writer_refused_by_lease(spark, tmp_path):

@@ -203,7 +203,6 @@ def test_cli_ingest_media_manifest(spark, tmp_path, capsys):
     rc = main([
         "ingest-media", "--corpus-parquet", corpus_path,
         "--feed-dir", feed, "--work-dir", work, "--modality", "audio",
-        "--sink-protocol", "manifest",
     ])
     assert rc == 0
     assert "admitted_total=3" in capsys.readouterr().out

@@ -90,28 +90,26 @@ def test_conv_type_id_unknown_raises(spark, sf_dir, tmp_path):
         )
 
 
-def test_manifest_sink_protocol_e2e(spark, sf_dir, tmp_path):
-    """Round 11: sink_protocol='manifest' — same pipeline results as
-    the swap protocol, plus reader-stable compaction and atomic
-    visibility; mixing protocols on one path refuses loudly."""
+def test_attribution_sink_manifest_e2e(spark, sf_dir, tmp_path):
+    """The attribution sink is manifest-committed: same pipeline
+    results, atomic visibility and reader-stable compaction."""
     from haensel_ams_data_engineer_challenge_spark.operators import (
         manifest_sink as MS,
-        sinks,
     )
 
     acj = str(tmp_path / "acj")
     rep = str(tmp_path / "report")
 
-    r1 = run_pipeline(spark, sf_dir, acj, rep, sink_protocol="manifest")
+    r1 = run_pipeline(spark, sf_dir, acj, rep)
     expected = M.scored(spark, sf_dir).count()
     assert r1.attribution_rows_written == expected
     assert r1.sum_violations == 0
     committed = MS.read_manifest_sink(spark, acj)
     assert committed is not None and committed.count() == expected
 
-    # incremental re-run: nothing new, manifest version advances but
+    # incremental re-run: nothing new, so no manifest is committed and
     # the committed row set is unchanged
-    r2 = run_pipeline(spark, sf_dir, acj, rep, sink_protocol="manifest")
+    r2 = run_pipeline(spark, sf_dir, acj, rep)
     assert r2.attribution_rows_written == 0
     assert MS.read_manifest_sink(spark, acj).count() == expected
 
@@ -119,26 +117,64 @@ def test_manifest_sink_protocol_e2e(spark, sf_dir, tmp_path):
     reader = MS.read_manifest_sink(spark, acj)
     assert MS.manifest_compact(spark, acj, target_partitions=1) == expected
     assert reader.count() == expected  # pre-compaction snapshot intact
+    assert MS.read_manifest_sink(spark, acj).count() == expected
 
-    # the swap protocol refuses a manifest-committed sink
-    with pytest.raises(ValueError, match="manifest-committed"):
-        sinks.compact_parquet_sink(spark, acj)
-    with pytest.raises(ValueError, match="unknown|swap"):
-        run_pipeline(spark, sf_dir, acj, rep, sink_protocol="nope")
+
+def test_identical_rerun_commits_nothing(spark, sf_dir, tmp_path):
+    """An identical re-run appends zero rows and so commits nothing:
+    the manifest version and the committed file list stay as the first
+    run left them (an hourly incremental run must not fragment the
+    sink with one empty file per run)."""
+    from haensel_ams_data_engineer_challenge_spark.operators import (
+        manifest_sink as MS,
+    )
+
+    acj = str(tmp_path / "acj")
+    rep = str(tmp_path / "report")
+    run_pipeline(spark, sf_dir, acj, rep)
+    first = MS._resolve_latest(spark, acj)
+    on_disk = MS._data_files(MS._list_names(spark, acj))
+    assert run_pipeline(spark, sf_dir, acj, rep).attribution_rows_written == 0
+    assert MS._resolve_latest(spark, acj) == first
+    assert MS._data_files(MS._list_names(spark, acj)) == on_disk
+    assert not list(tmp_path.glob("acj__*"))  # no staging dir left
+
+
+def test_legacy_create_db_sink_is_adopted(spark, sf_dir, tmp_path):
+    """The empty attribution table of ``create-db`` (a plain parquet
+    directory, no manifest) is read as a legacy sink and adopted by the
+    first run's commit."""
+    from haensel_ams_data_engineer_challenge_spark.operators import (
+        manifest_sink as MS,
+    )
+    from haensel_ams_data_engineer_challenge_spark.operators.sinks import (
+        create_tables,
+    )
+
+    base = str(tmp_path / "wh")
+    create_tables(spark, base)
+    acj = f"{base}/attribution_customer_journey"
+    legacy = MS._data_files(MS._list_names(spark, acj))
+    assert legacy and MS._resolve_latest(spark, acj) is None
+    r = run_pipeline(spark, sf_dir, acj, f"{base}/channel_reporting")
+    assert r.attribution_rows_written == M.scored(spark, sf_dir).count()
+    version, man = MS._resolve_latest(spark, acj)
+    assert version == 1 and legacy <= set(man["files"])
+    assert MS.read_manifest_sink(spark, acj).count() == r.attribution_rows_written
 
 
 def test_hot_user_default_on_and_results_invariant(spark, sf_dir, tmp_path):
-    """Round 11: the pipeline's hot-key protection defaults ON
+    """The pipeline's hot-key protection defaults ON
     (JOURNEY_HOT_THRESHOLD) and is results-invariant vs the plain
     plan; 0 opts out."""
+    import inspect
+
     from haensel_ams_data_engineer_challenge_spark.operators.asof import (
         JOURNEY_HOT_THRESHOLD,
     )
-    from haensel_ams_data_engineer_challenge_spark.plans.pipeline import (
-        HOT_USER_THRESHOLD_DEFAULT,
-    )
 
-    assert HOT_USER_THRESHOLD_DEFAULT == JOURNEY_HOT_THRESHOLD == 100_000
+    default = inspect.signature(run_pipeline).parameters["hot_user_threshold"]
+    assert default.default == JOURNEY_HOT_THRESHOLD == 100_000
 
     acj_d, rep_d = str(tmp_path / "acj_d"), str(tmp_path / "rep_d")
     acj_0, rep_0 = str(tmp_path / "acj_0"), str(tmp_path / "rep_0")

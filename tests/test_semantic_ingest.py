@@ -320,6 +320,9 @@ def test_cli_ingest_compact_sink(spark, tmp_path, capsys):
     from pathlib import Path as _P
 
     from haensel_ams_data_engineer_challenge_spark.__main__ import main
+    from haensel_ams_data_engineer_challenge_spark.operators.manifest_sink import (
+        read_manifest_sink,
+    )
 
     corpus_path = _write_corpus(spark, tmp_path)
     feed = str(tmp_path / "feed")
@@ -336,9 +339,9 @@ def test_cli_ingest_compact_sink(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "compacted_rows=2" in out and "admitted_total=2" in out
     sink = f"{work}/admitted"
-    assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} \
-        == {201, 202}
-    assert not _P(sink + "__old").exists()
+    rows = [r["doc_id"] for r in read_manifest_sink(spark, sink).collect()]
+    assert sorted(rows) == [201, 202]
+    assert not list(_P(work).glob("admitted__*"))  # no staging dir left
 
 
 def test_ingest_perplexity_gate(spark, tmp_path, capsys):
@@ -437,10 +440,10 @@ def test_ingest_api_validates_lm_gate_pairing(spark, tmp_path):
 
 
 def test_cli_ingest_manifest_protocol(spark, tmp_path, capsys):
-    """Round 11: ingest --sink-protocol manifest — each micro-batch
-    commits atomically (one manifest version per writing batch),
-    cross-batch duplicates still drop, compaction is reader-stable,
-    and a replayed drain is a no-op."""
+    """The ingest admitted store is manifest-committed: each
+    micro-batch commits atomically (one manifest version per writing
+    batch), cross-batch duplicates still drop, compaction is
+    reader-stable, and a replayed drain is a no-op."""
     from haensel_ams_data_engineer_challenge_spark.__main__ import main
     from haensel_ams_data_engineer_challenge_spark.operators import (
         manifest_sink as MS,
@@ -459,7 +462,7 @@ def test_cli_ingest_manifest_protocol(spark, tmp_path, capsys):
     args = [
         "ingest", "--corpus-parquet", corpus_path, "--feed-dir", feed,
         "--work-dir", work, "--max-files-per-trigger", "1",
-        "--sink-protocol", "manifest", "--compact-sink",
+        "--compact-sink",
     ]
     rc = main(args)
     assert rc == 0
@@ -468,15 +471,6 @@ def test_cli_ingest_manifest_protocol(spark, tmp_path, capsys):
     sink = f"{work}/admitted"
     committed = MS.read_manifest_sink(spark, sink)
     assert {r["doc_id"] for r in committed.collect()} == {301, 303}
-    # the swap protocol refuses this sink now
-    import pytest as _pytest
-
-    from haensel_ams_data_engineer_challenge_spark.operators.sinks import (
-        compact_parquet_sink,
-    )
-
-    with _pytest.raises(ValueError, match="manifest-committed"):
-        compact_parquet_sink(spark, sink)
     # replayed drain (same work dir, fresh checkpoint => the feed
     # re-fires): the committed-rows anti-join makes it a no-op
     import shutil
@@ -488,13 +482,10 @@ def test_cli_ingest_manifest_protocol(spark, tmp_path, capsys):
 
 
 def test_cli_ingest_manifest_empty_drain_counts_legacy(spark, tmp_path, capsys):
-    """Second review pass: --sink-protocol manifest over a LEGACY swap
-    sink with nothing to drain (no manifest ever committed) must count
-    the plain listing, not crash on None.count()."""
+    """ingest over a LEGACY plain-parquet sink with nothing to drain
+    (no manifest ever committed) counts the plain listing, not crash
+    on None.count()."""
     from haensel_ams_data_engineer_challenge_spark.__main__ import main
-    from haensel_ams_data_engineer_challenge_spark.operators.sinks import (
-        insert_if_absent,
-    )
 
     corpus_path = _write_corpus(spark, tmp_path)
     feed = str(tmp_path / "feed")
@@ -503,16 +494,13 @@ def test_cli_ingest_manifest_empty_drain_counts_legacy(spark, tmp_path, capsys):
     os.makedirs(feed, exist_ok=True)  # empty feed: no batch ever fires
     work = str(tmp_path / "wd")
     os.makedirs(work, exist_ok=True)
-    # a legacy swap-protocol admitted store
-    insert_if_absent(
-        spark,
-        spark.createDataFrame([(999, "legacy row")], "doc_id long, text string"),
-        f"{work}/admitted",
-        ["doc_id"],
-    )
+    # a legacy plain-parquet admitted store
+    spark.createDataFrame(
+        [(999, "legacy row")], "doc_id long, text string"
+    ).write.parquet(f"{work}/admitted")
     rc = main([
         "ingest", "--corpus-parquet", corpus_path, "--feed-dir", feed,
-        "--work-dir", work, "--sink-protocol", "manifest",
+        "--work-dir", work,
     ])
     assert rc == 0
     assert "admitted_total=1" in capsys.readouterr().out

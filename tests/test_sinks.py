@@ -9,6 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from haensel_ams_data_engineer_challenge_spark.operators import sinks
+from haensel_ams_data_engineer_challenge_spark.operators.manifest_sink import (
+    manifest_compact,
+    manifest_insert_if_absent,
+    read_manifest_sink,
+)
 
 
 def test_create_and_verify_tables(spark, tmp_path):
@@ -29,14 +34,17 @@ def test_insert_if_absent_is_insert_or_ignore(spark, tmp_path):
         [("c1", "s1", 0.4), ("c1", "s2", 0.6)],
         "conv_id string, session_id string, ihc double",
     )
-    assert sinks.insert_if_absent(spark, rows1, path, ["conv_id", "session_id"]) == 2
+    assert manifest_insert_if_absent(spark, rows1, path, ["conv_id", "session_id"]) == 2
     # re-run with overlap + one new row: only the new row lands
     rows2 = spark.createDataFrame(
         [("c1", "s1", 9.9), ("c2", "s3", 1.0)],
         "conv_id string, session_id string, ihc double",
     )
-    assert sinks.insert_if_absent(spark, rows2, path, ["conv_id", "session_id"]) == 1
-    got = {(r.conv_id, r.session_id): r.ihc for r in spark.read.parquet(path).collect()}
+    assert manifest_insert_if_absent(spark, rows2, path, ["conv_id", "session_id"]) == 1
+    got = {
+        (r.conv_id, r.session_id): r.ihc
+        for r in read_manifest_sink(spark, path).collect()
+    }
     assert got[("c1", "s1")] == 0.4  # original kept, duplicate ignored
     assert len(got) == 3
 
@@ -107,10 +115,10 @@ def test_insert_if_absent_rejects_null_keys(spark, tmp_path):
         [("c1", "s1", 0.4), (None, "s2", 0.6), ("c2", None, 1.0)],
         "conv_id string, session_id string, ihc double",
     )
-    assert sinks.insert_if_absent(spark, rows, path, ["conv_id", "session_id"]) == 1
+    assert manifest_insert_if_absent(spark, rows, path, ["conv_id", "session_id"]) == 1
     # replay: nothing new, NULL rows not re-appended
-    assert sinks.insert_if_absent(spark, rows, path, ["conv_id", "session_id"]) == 0
-    assert spark.read.parquet(path).count() == 1
+    assert manifest_insert_if_absent(spark, rows, path, ["conv_id", "session_id"]) == 0
+    assert read_manifest_sink(spark, path).count() == 1
 
 
 def test_export_csv_golden_cells_null_metrics_empty(spark, tmp_path):
@@ -171,8 +179,7 @@ def test_export_csv_guard_branches(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# round 10: writer lease on the idempotent sink + lease-guarded
-# compaction (r9 verdict tasks 3 and 5).
+# writer lease on the keyed sink + lease-guarded compaction
 # ---------------------------------------------------------------------------
 
 
@@ -183,23 +190,23 @@ def _df(spark, ids):
 
 
 def test_writer_lease_blocks_concurrent_insert(spark, tmp_path):
-    """Two interleaved insert_if_absent calls on one path: the second
-    refuses loudly (ConcurrentWriterError) while the first's lease is
-    held, and succeeds after release — no duplicate keys ever."""
+    """Two interleaved inserts on one path: the second refuses loudly
+    (ConcurrentWriterError) while the first's lease is held, and
+    succeeds after release — no duplicate keys ever."""
     path = str(tmp_path / "sink")
-    assert sinks.insert_if_absent(spark, _df(spark, [1, 2]), path, ["k"]) == 2
+    assert manifest_insert_if_absent(spark, _df(spark, [1, 2]), path, ["k"]) == 2
     # the lease is released after a successful insert
     assert not Path(path + "__lease").exists()
 
     # writer A holds the lease mid-window; writer B must refuse
     token = sinks.acquire_writer_lease(spark, path)
     with pytest.raises(sinks.ConcurrentWriterError, match="another writer"):
-        sinks.insert_if_absent(spark, _df(spark, [2, 3]), path, ["k"])
+        manifest_insert_if_absent(spark, _df(spark, [2, 3]), path, ["k"])
     # refusal appended nothing
-    assert spark.read.parquet(path).count() == 2
+    assert read_manifest_sink(spark, path).count() == 2
     sinks.release_writer_lease(spark, path, token)
-    assert sinks.insert_if_absent(spark, _df(spark, [2, 3]), path, ["k"]) == 1
-    got = sorted(r["k"] for r in spark.read.parquet(path).collect())
+    assert manifest_insert_if_absent(spark, _df(spark, [2, 3]), path, ["k"]) == 1
+    got = sorted(r["k"] for r in read_manifest_sink(spark, path).collect())
     assert got == ["1", "2", "3"]
 
 
@@ -215,7 +222,7 @@ def test_writer_lease_stale_takeover(spark, tmp_path):
     old = time.time() - (sinks.LEASE_TTL_MS / 1000 + 60)
     os.utime(lease, (old, old))
     with pytest.warns(UserWarning, match="stale writer lease"):
-        n = sinks.insert_if_absent(spark, _df(spark, [7]), path, ["k"])
+        n = manifest_insert_if_absent(spark, _df(spark, [7]), path, ["k"])
     assert n == 1
     assert not lease.exists()  # the takeover's own lease was released
 
@@ -232,51 +239,31 @@ def test_release_lease_verifies_token(spark, tmp_path):
 
 
 def test_compact_sink_row_invariant_and_file_count(spark, tmp_path):
-    """Compaction: identical row set, fewer files, lease released,
-    sink still insertable afterwards."""
+    """Compaction: identical row set, fewer committed files, lease
+    released, no staging dir left, sink still insertable afterwards."""
+    from haensel_ams_data_engineer_challenge_spark.operators import (
+        manifest_sink as M,
+    )
+
     path = str(tmp_path / "sink")
     for batch in ([1, 2], [3, 4], [5], [6, 7, 8]):
-        sinks.insert_if_absent(spark, _df(spark, batch), path, ["k"])
-    files_before = len(list(Path(path).glob("*.parquet")))
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
-    n = sinks.compact_parquet_sink(spark, path, target_partitions=1)
+        manifest_insert_if_absent(spark, _df(spark, batch), path, ["k"])
+    files_before = len(M._resolve_latest(spark, path)[1]["files"])
+    before = sorted(map(tuple, read_manifest_sink(spark, path).collect()))
+    n = manifest_compact(spark, path, target_partitions=1)
     assert n == 8
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
-    files_after = len(list(Path(path).glob("*.parquet")))
+    assert sorted(map(tuple, read_manifest_sink(spark, path).collect())) == before
+    files_after = len(M._resolve_latest(spark, path)[1]["files"])
     assert files_after == 1 < files_before
     assert not Path(path + "__lease").exists()
-    assert not Path(path + "__old").exists()
-    assert not Path(path + "__compact").exists()
+    assert [p.name for p in tmp_path.iterdir()] == ["sink"]
     # still a normal sink afterwards
-    assert sinks.insert_if_absent(spark, _df(spark, [8, 9]), path, ["k"]) == 1
-
-
-def test_compact_sink_recovers_crashed_swap(spark, tmp_path):
-    """Crash between the two renames leaves the sink missing and the
-    backup intact; the next compaction restores it before working."""
-    import shutil
-
-    path = str(tmp_path / "sink")
-    sinks.insert_if_absent(spark, _df(spark, [1, 2, 3]), path, ["k"])
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
-    shutil.move(path, path + "__old")  # the mid-swap crash state
-    n = sinks.compact_parquet_sink(spark, path, target_partitions=1)
-    assert n == 3
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
-
-
-def test_compact_refuses_while_insert_holds_lease(spark, tmp_path):
-    path = str(tmp_path / "sink")
-    sinks.insert_if_absent(spark, _df(spark, [1]), path, ["k"])
-    token = sinks.acquire_writer_lease(spark, path)
-    with pytest.raises(sinks.ConcurrentWriterError):
-        sinks.compact_parquet_sink(spark, path)
-    sinks.release_writer_lease(spark, path, token)
+    assert manifest_insert_if_absent(spark, _df(spark, [8, 9]), path, ["k"]) == 1
 
 
 # ---------------------------------------------------------------------------
-# round 11: lease renewal/heartbeat, TOCTOU-safe takeover, pluggable
-# conditional-put backend (judge task 7 + round-10 review items).
+# lease renewal/heartbeat, TOCTOU-safe takeover, pluggable
+# conditional-put backend
 # ---------------------------------------------------------------------------
 
 
@@ -418,48 +405,39 @@ def test_conditional_put_lease_backend(spark, tmp_path):
 
 
 def test_insert_if_absent_lease_wait(spark, tmp_path):
-    """Round 14 (kill-and-resume flake root cause): with
-    lease_wait_ms, a FRESH lease released shortly after the attempt
-    starts is waited out instead of raising; without it (default 0)
-    the fail-fast contract stands."""
+    """With lease_wait_ms, a FRESH lease released shortly after the
+    attempt starts is waited out instead of raising (the
+    kill-and-resume streaming restart); without it (default 0) the
+    fail-fast contract stands."""
     import threading
     import time
 
-    from haensel_ams_data_engineer_challenge_spark.operators.sinks import (
-        ConcurrentWriterError,
-        acquire_writer_lease,
-        insert_if_absent,
-        release_writer_lease,
-    )
-
     path = str(tmp_path / "sink")
     df = spark.createDataFrame([(1, "a")], "k long, v string")
-    token = acquire_writer_lease(spark, path)
+    token = sinks.acquire_writer_lease(spark, path)
     # default: fail fast while the lease is held
-    import pytest as _pytest
-
-    with _pytest.raises(ConcurrentWriterError):
-        insert_if_absent(spark, df, path, ["k"])
+    with pytest.raises(sinks.ConcurrentWriterError):
+        manifest_insert_if_absent(spark, df, path, ["k"])
 
     # releases 1s in: the waiting insert acquires and proceeds
     def _release_later():
         time.sleep(1.0)
-        release_writer_lease(spark, path, token)
+        sinks.release_writer_lease(spark, path, token)
 
     t = threading.Thread(target=_release_later)
     t.start()
-    n = insert_if_absent(spark, df, path, ["k"], lease_wait_ms=15_000)
+    n = manifest_insert_if_absent(spark, df, path, ["k"], lease_wait_ms=15_000)
     t.join()
     assert n == 1
-    assert spark.read.parquet(path).count() == 1
+    assert read_manifest_sink(spark, path).count() == 1
 
     # bounded: a lease that never releases still raises at deadline
-    token2 = acquire_writer_lease(spark, path)
+    token2 = sinks.acquire_writer_lease(spark, path)
     t0 = time.monotonic()
-    with _pytest.raises(ConcurrentWriterError):
-        insert_if_absent(spark, df, path, ["k"], lease_wait_ms=1_200)
+    with pytest.raises(sinks.ConcurrentWriterError):
+        manifest_insert_if_absent(spark, df, path, ["k"], lease_wait_ms=1_200)
     assert 1.0 <= time.monotonic() - t0 < 10.0
-    release_writer_lease(spark, path, token2)
+    sinks.release_writer_lease(spark, path, token2)
 
 
 def test_heartbeat_stops_when_owner_thread_dies(spark, tmp_path):
@@ -548,3 +526,30 @@ def test_dead_owner_lease_reclaimed_in_process(spark, tmp_path):
         token2 = sinks.acquire_writer_lease(spark, path)
     assert token2 is not None
     sinks.release_writer_lease(spark, path, token2)
+
+
+def test_interrupted_create_lease_reclaimed_in_process(spark, tmp_path):
+    """A create that raises after the lease file exists (stopping a
+    streaming query interrupts the callback's JVM thread mid
+    ``fs.create``) leaves an empty lease no writer holds.  The next
+    acquirer in the same process reclaims it instead of waiting out the
+    15-minute TTL; a lease from a create that succeeded stays
+    protected."""
+    path = str(tmp_path / "sink")
+
+    class TornCreate(sinks.HadoopLeaseBackend):
+        def create_exclusive(self, p, token):
+            self._fs(p).create(self._p(p), False).close()  # no token yet
+            raise RuntimeError("interrupted mid-create")
+
+    with pytest.raises(RuntimeError, match="interrupted"):
+        sinks.acquire_writer_lease(spark, path, backend=TornCreate(spark))
+    lease = Path(path + "__lease")
+    assert lease.exists() and lease.read_text() == ""
+    with pytest.warns(UserWarning, match="interrupted mid-create"):
+        token = sinks.acquire_writer_lease(spark, path)
+    assert lease.read_text() == token
+    # the record is spent: the live lease now refuses a second writer
+    with pytest.raises(sinks.ConcurrentWriterError):
+        sinks.acquire_writer_lease(spark, path)
+    sinks.release_writer_lease(spark, path, token)

@@ -7,6 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from haensel_ams_data_engineer_challenge_spark.attribution import model as M
+from haensel_ams_data_engineer_challenge_spark.operators.manifest_sink import (
+    read_manifest_sink,
+)
 from haensel_ams_data_engineer_challenge_spark.sources import load_table
 from haensel_ams_data_engineer_challenge_spark.streaming import (
     hourly_event_stats,
@@ -99,7 +102,7 @@ def test_streaming_attribution_converges_to_batch(spark, sf_dir, tmp_path):
     )
     got = {
         (r.conv_id, r.session_id): round(r.ihc, 9)
-        for r in spark.read.parquet(sink).collect()
+        for r in read_manifest_sink(spark, sink).collect()
     }
     expected = {
         (r.conv_id, r.session_id): round(r.ihc, 9)
@@ -110,7 +113,7 @@ def test_streaming_attribution_converges_to_batch(spark, sf_dir, tmp_path):
     run_streaming_attribution(
         spark, sf_dir, sink, checkpoint_dir=str(tmp_path / "ckpt3")
     )
-    assert spark.read.parquet(sink).count() == len(expected)
+    assert read_manifest_sink(spark, sink).count() == len(expected)
 
 
 def test_stateful_streaming_sessionize_matches_batch(spark, sf_dir, tmp_path):
@@ -296,7 +299,7 @@ def test_streaming_attribution_resumes_from_checkpoint(spark, sf_dir, tmp_path):
     )
     partial = {
         (r.conv_id, r.session_id): round(r.ihc, 9)
-        for r in spark.read.parquet(sink).collect()
+        for r in read_manifest_sink(spark, sink).collect()
     }
     # the partial sink is consistent with the batch truth (a subset —
     # or everything, if all 4 batches outran the stop poll)
@@ -313,7 +316,7 @@ def test_streaming_attribution_resumes_from_checkpoint(spark, sf_dir, tmp_path):
     )
     final = {
         (r.conv_id, r.session_id): round(r.ihc, 9)
-        for r in spark.read.parquet(sink).collect()
+        for r in read_manifest_sink(spark, sink).collect()
     }
     assert final == expected  # converged, and COUNT equality = no dupes
     if resumed_ids:  # empty only if the first run drained everything
@@ -380,7 +383,7 @@ def test_streaming_ingest_incremental_dedup(spark, sf_dir, tmp_path):
         spark, corpus_path, feed, sink, ckpt, max_files_per_trigger=1
     )
 
-    admitted = spark.read.parquet(sink)
+    admitted = read_manifest_sink(spark, sink)
     got_ids = {r["doc_id"] for r in admitted.select("doc_id").collect()}
     # batch A: the 10 new + ONE of the in-batch pair (min id);
     # batch B: only its 5 genuinely new (A's texts are already admitted)
@@ -400,7 +403,7 @@ def test_streaming_ingest_incremental_dedup(spark, sf_dir, tmp_path):
         max_files_per_trigger=1,
     )
     assert {
-        r["doc_id"] for r in spark.read.parquet(sink).select("doc_id").collect()
+        r["doc_id"] for r in read_manifest_sink(spark, sink).select("doc_id").collect()
     } == exp_ids
 
 
@@ -447,7 +450,7 @@ def test_streaming_ingest_quality_gate(spark, tmp_path):
         spark, corpus_path, feed, sink, str(tmp_path / "ckpt"),
         drop_gopher_fail=True,
     )
-    got = {r["doc_id"] for r in spark.read.parquet(sink).collect()}
+    got = {r["doc_id"] for r in read_manifest_sink(spark, sink).collect()}
     assert got == {1}
 
 
@@ -501,7 +504,7 @@ def test_streaming_ingest_persisted_bloom_state(spark, sf_dir, tmp_path):
         max_files_per_trigger=1, bloom_state_dir=bloom_dir,
     )
     exp_ids = {10400 + i for i in range(10)} | {60410 + i for i in range(5)}
-    got_ids = {r["doc_id"] for r in spark.read.parquet(sink).collect()}
+    got_ids = {r["doc_id"] for r in read_manifest_sink(spark, sink).collect()}
     assert got_ids == exp_ids
 
     # the persisted state exists and is committed (bitmap + params)
@@ -520,7 +523,7 @@ def test_streaming_ingest_persisted_bloom_state(spark, sf_dir, tmp_path):
         max_files_per_trigger=1, bloom_state_dir=bloom_dir,
     )
     assert {
-        r["doc_id"] for r in spark.read.parquet(sink).collect()
+        r["doc_id"] for r in read_manifest_sink(spark, sink).collect()
     } == exp_ids
 
     # a bitmap built with other m_bits must refuse, not probe (the
@@ -544,7 +547,7 @@ def test_streaming_ingest_persisted_bloom_state(spark, sf_dir, tmp_path):
         max_files_per_trigger=1, bloom_state_dir=bloom_dir,
     )
     assert {
-        r["doc_id"] for r in spark.read.parquet(sink).collect()
+        r["doc_id"] for r in read_manifest_sink(spark, sink).collect()
     } == exp_ids
 
     # torn state (no params marker) reseeds from corpus+sink instead
@@ -555,5 +558,5 @@ def test_streaming_ingest_persisted_bloom_state(spark, sf_dir, tmp_path):
         max_files_per_trigger=1, bloom_state_dir=bloom_dir,
     )
     assert {
-        r["doc_id"] for r in spark.read.parquet(sink).collect()
+        r["doc_id"] for r in read_manifest_sink(spark, sink).collect()
     } == exp_ids

@@ -182,11 +182,10 @@ def test_cli_ingest_vectors(spark, tmp_path, capsys):
 
 
 def test_vector_ingest_manifest_protocol(spark, tmp_path):
-    """round 12 (r11 verdict task 5): the vector stream takes
-    sink_protocol='manifest' — admission semantics identical to swap,
-    every batch visible at one atomic manifest rename, replay
-    idempotent, and a crash before the manifest commit leaves the
-    committed store exactly at its previous generation."""
+    """The vector stream's admitted store is manifest-committed: every
+    batch visible at one atomic manifest rename, replay idempotent,
+    and a crash before the manifest commit leaves the committed store
+    exactly at its previous generation."""
     from haensel_ams_data_engineer_challenge_spark.operators import (
         manifest_sink as MS,
     )
@@ -215,7 +214,7 @@ def test_vector_ingest_manifest_protocol(spark, tmp_path):
     idx = str(tmp_path / "vidx_m")
     run_streaming_vector_ingest(
         spark, corpus_path, feed, sink, str(tmp_path / "ckpt_m"), idx,
-        max_files_per_trigger=1, sink_protocol="manifest",
+        max_files_per_trigger=1,
     )
     committed = MS.read_manifest_sink(spark, sink)
     assert committed is not None
@@ -225,7 +224,7 @@ def test_vector_ingest_manifest_protocol(spark, tmp_path):
     # count discipline as the document stream (anti-join, no re-admit)
     run_streaming_vector_ingest(
         spark, corpus_path, feed, sink, str(tmp_path / "ckpt_m2"), idx,
-        max_files_per_trigger=1, sink_protocol="manifest",
+        max_files_per_trigger=1,
     )
     assert {
         r["vec_id"]
@@ -243,7 +242,7 @@ def test_vector_ingest_manifest_protocol(spark, tmp_path):
     _drop([(400, _axis(14))], "c.parquet")
     run_streaming_vector_ingest(
         spark, corpus_path, feed, sink, str(tmp_path / "ckpt_m3"), idx,
-        max_files_per_trigger=1, sink_protocol="manifest",
+        max_files_per_trigger=1,
     )
     assert {
         r["vec_id"]
@@ -268,7 +267,6 @@ def test_cli_ingest_vectors_manifest(spark, tmp_path, capsys):
     rc = main([
         "ingest-vectors", "--corpus-parquet", corpus_path,
         "--feed-dir", feed, "--work-dir", work,
-        "--sink-protocol", "manifest",
     ])
     assert rc == 0
     assert "admitted_total=1" in capsys.readouterr().out

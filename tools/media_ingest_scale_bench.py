@@ -87,6 +87,9 @@ def main() -> None:
     from haensel_ams_data_engineer_challenge_spark.multimodal.audioembed import (
         audio_encoder_build,
     )
+    from haensel_ams_data_engineer_challenge_spark.operators.manifest_sink import (
+        read_manifest_sink,
+    )
     from haensel_ams_data_engineer_challenge_spark.session import get_spark
     from haensel_ams_data_engineer_challenge_spark.streaming.media import (
         run_streaming_media_ingest,
@@ -176,7 +179,7 @@ def main() -> None:
             drain = time.perf_counter() - t0
             admitted = {
                 r["doc_id"]
-                for r in spark.read.parquet(f"{work}/sink{mult}").collect()
+                for r in read_manifest_sink(spark, f"{work}/sink{mult}").collect()
             }
             batch_admitted = {i for i in admitted if i >= 10_000_000}
             n_rejected_dups = sum(

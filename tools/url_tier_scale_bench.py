@@ -32,6 +32,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from haensel_ams_data_engineer_challenge_spark.operators.manifest_sink import (  # noqa: E402
+    read_manifest_sink,
+)
 from haensel_ams_data_engineer_challenge_spark.session import get_spark  # noqa: E402
 from haensel_ams_data_engineer_challenge_spark.streaming.ingest import (  # noqa: E402
     run_streaming_ingest,
@@ -98,7 +101,7 @@ def _drain(spark, corpus, feed, root, tag, bloom: bool) -> tuple[float, int]:
         url_bloom_state_dir=f"{root}/url_bloom_{tag}" if bloom else None,
     )
     wall = time.perf_counter() - t0
-    return round(wall, 2), spark.read.parquet(sink).count()
+    return round(wall, 2), read_manifest_sink(spark, sink).count()
 
 
 def main() -> None:
