@@ -306,15 +306,6 @@ def _parser() -> argparse.ArgumentParser:
         "join on Zipf head terms; an explicit approximation)",
     )
     se.add_argument(
-        "--quantize-index",
-        action="store_true",
-        help="(ann) store the persistent index's vectors int8-"
-        "quantized (tinyint + per-vector scale — ~8x smaller vector "
-        "storage, recall within a whisker; round 11) and score probes "
-        "from the artifact; the quantized artifact lives under its "
-        "own _int8-suffixed dir so the two layouts never mix",
-    )
-    se.add_argument(
         "--train-sample-cap", type=int, default=None, metavar="N",
         help="(ann) train the IVF quantizer on a deterministic hash "
         "sample of ~N vectors instead of the full corpus (the FAISS "
@@ -1328,11 +1319,6 @@ def main(argv: list[str] | None = None) -> int:
                     dvecs = hash_embed(docs)
                     qvecs = hash_embed(queries, id_col="query_id")
                     index_path = f"{args.work_dir}/ann_index"
-                if args.quantize_index:
-                    # a layout is an artifact identity: the quantized
-                    # index lives in its own dir so a plain run never
-                    # trips the marker pin on a quantized artifact
-                    index_path += "_int8"
                 from .operators.similarity import _read_index_params
 
                 def _committed():
@@ -1394,7 +1380,6 @@ def main(argv: list[str] | None = None) -> int:
                     qvecs,
                     k=args.k,
                     index_path=index_path,
-                    quantize=args.quantize_index,
                     train_sample_cap=args.train_sample_cap,
                     **ivf_shape,
                 ).select(

@@ -779,14 +779,14 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
     cos_qc = S.cosine_sql("q.embedding", "c.cvec")
     cos_qn = S.cosine_sql("p.__qvec", "n.embedding")
 
-    # round 11 adds the 'int8' arm: the SAME probed cells, but the
-    # inverted lists score from the PERSISTED quantized artifact
-    # (ivf_index_persistent(quantize=True): tinyint components +
-    # per-vector scale on disk, ~8x smaller vector storage) —
-    # asymmetric scoring, float query vs integer grid; the oracle
-    # re-derives the quantized corpus (quantize_sql) and hash-matches
-    # the stored-tinyint scores exactly (integers are integers).
-    # Artifact is mtime-keyed: build-once/probe-many across attempts.
+    # the 'int8' arm: the SAME probed cells, but the inverted lists
+    # score from the PERSISTED artifact's stored vectors
+    # (ivf_index_persistent: tinyint components + per-vector scale on
+    # disk, ~8x smaller vector storage) — asymmetric scoring, float
+    # query vs integer grid; the oracle re-derives the quantized corpus
+    # (quantize_sql) and hash-matches the stored-tinyint scores exactly
+    # (integers are integers).  Artifact is mtime-keyed:
+    # build-once/probe-many across attempts.
     def _ann_ivf_both(spark: SparkSession, sf: str) -> DataFrame:
         queries = _vecs(spark, sf).filter(F.col("vec_id") < N_QUERIES)
         float_arm = S.ann_topk_ivf(
@@ -801,7 +801,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
         )
         int8_arm = S.ann_topk_ivf(
             _vecs(spark, sf), queries, k=ANN_LSH_K,
-            index_path=qidx, quantize=True,
+            index_path=qidx,
         ).withColumn("method", F.lit("int8"))
         return float_arm.unionByName(int8_arm)
 

@@ -45,6 +45,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..session import try_read_parquet
 from .manifest_sink import (
     _commit_json,
     _data_files,
@@ -206,9 +207,7 @@ def _adopt_legacy(
         if names:
             df = spark.read.parquet(f"{path}/{t}")
             adopted[t] = {"files": names, "schema": df.schema.jsonValue()}
-    from .similarity import _try_read_parquet
-
-    pdf = _try_read_parquet(spark, f"{path}/params")
+    pdf = try_read_parquet(spark, f"{path}/params")
     legacy_params = (
         {} if pdf is None else {r["key"]: r["value"] for r in pdf.collect()}
     )

@@ -180,33 +180,39 @@ def _commit_manifest(
     )
 
 
+def _snapshot(
+    spark: SparkSession, path: str
+) -> tuple[list[str], int, dict | None]:
+    """(names, latest version, latest manifest) from ONE listing of the
+    sink dir; version 0 and None when it has no manifest."""
+    names = _list_names(spark, path)
+    versions = _manifest_versions(names)
+    if not versions:
+        return names, 0, None
+    return names, versions[-1], _read_manifest(spark, path, versions[-1])
+
+
 def _resolve_latest(
     spark: SparkSession, path: str
 ) -> tuple[int, dict] | None:
     """(version, manifest) of the highest committed manifest, or None
     when the sink has never been manifest-committed."""
-    versions = _manifest_versions(_list_names(spark, path))
-    if not versions:
-        return None
-    v = versions[-1]
-    return v, _read_manifest(spark, path, v)
+    _, version, man = _snapshot(spark, path)
+    return None if man is None else (version, man)
 
 
 def _adopt_or_latest(
-    spark: SparkSession, path: str
+    snap: tuple[list[str], int, dict | None]
 ) -> tuple[int, list[str], StructType | None]:
-    """(latest_version, committed_files, schema) from ONE listing.  A
-    LEGACY sink (data files but no manifest) is treated as an implicit
-    version 0 whose every data file is committed; the caller's next
-    commit writes v1 including them.  A missing or data-less path is
-    version 0 with no files."""
-    names = _list_names(spark, path)
-    versions = _manifest_versions(names)
-    if not versions:
+    """(latest_version, committed_files, schema) of a :func:`_snapshot`.
+    A LEGACY sink (data files but no manifest) is treated as an
+    implicit version 0 whose every data file is committed; the caller's
+    next commit writes v1 including them.  A missing or data-less path
+    is version 0 with no files."""
+    names, version, man = snap
+    if man is None:
         return 0, sorted(_data_files(names)), None
-    v = versions[-1]
-    man = _read_manifest(spark, path, v)
-    return v, list(man["files"]), StructType.fromJson(man["schema"])
+    return version, list(man["files"]), StructType.fromJson(man["schema"])
 
 
 def _read_files(
@@ -228,7 +234,7 @@ def read_manifest_sink(
     resolution is one atomic listing, and superseded files survive one
     further generation (see module docstring), so a resolved snapshot
     stays readable across a concurrent compaction."""
-    version, files, committed_schema = _adopt_or_latest(spark, path)
+    version, files, committed_schema = _adopt_or_latest(_snapshot(spark, path))
     if version == 0 and not files:
         return None
     schema = schema or committed_schema
@@ -254,7 +260,19 @@ def manifest_vacuum(
     manifest whose file modification time is within the floor is kept
     along with every file it references, regardless of how many
     generations have superseded it."""
-    names = _list_names(spark, path)
+    return _vacuum(spark, path, _snapshot(spark, path), min_retention_minutes)
+
+
+def _vacuum(
+    spark: SparkSession,
+    path: str,
+    snap: tuple[list[str], int, dict | None],
+    min_retention_minutes: float,
+) -> int:
+    """:func:`manifest_vacuum` over a :func:`_snapshot` the caller just
+    took under its lease: the mutation's own listing and latest
+    manifest, not a second round trip."""
+    names, latest, latest_man = snap
     versions = _manifest_versions(names)
     if not versions:
         return 0
@@ -270,7 +288,8 @@ def manifest_vacuum(
                 keep_versions.add(v)
     referenced: set[str] = set()
     for v in keep_versions:
-        referenced.update(_read_manifest(spark, path, v)["files"])
+        man = latest_man if v == latest else _read_manifest(spark, path, v)
+        referenced.update(man["files"])
     deleted = 0
     for n in names:
         doomed = False
@@ -377,9 +396,10 @@ def manifest_insert_if_absent(
                 raise
             time.sleep(0.25)
     with lease:
-        version, committed, schema = _adopt_or_latest(spark, path)
+        snap = _snapshot(spark, path)
+        version, committed, schema = _adopt_or_latest(snap)
         if version > 0:
-            manifest_vacuum(spark, path, min_retention_minutes)
+            _vacuum(spark, path, snap, min_retention_minutes)
             # vacuum never touches the latest two manifests' files, so
             # re-resolving is unnecessary: `committed` is still exact
         if committed:
@@ -432,7 +452,8 @@ def manifest_compact(
     from pyspark.sql import Observation
 
     with hold_writer_lease(spark, path):
-        version, committed, schema = _adopt_or_latest(spark, path)
+        snap = _snapshot(spark, path)
+        version, committed, schema = _adopt_or_latest(snap)
         if not committed:
             if version > 0:
                 # committed-but-empty: nothing to rewrite, nothing to
@@ -448,7 +469,7 @@ def manifest_compact(
             raise ValueError(
                 f"nothing to compact at {path} (no committed data files)"
             )
-        manifest_vacuum(spark, path, min_retention_minutes)
+        _vacuum(spark, path, snap, min_retention_minutes)
         rows = _read_files(spark, path, committed, schema)
         # default layout: size-targeted REBALANCE — a fixed
         # shuffle.partitions count would fragment an already-compact

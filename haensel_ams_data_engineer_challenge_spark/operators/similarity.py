@@ -323,7 +323,6 @@ def ann_topk_lsh(
     planes_per_table: int = ANN_LSH_PLANES_PER_TABLE,
     index_cache_key: str | None = None,
     index_path: str | None = None,
-    quantize: bool = False,
     dim: int = EMBEDDING_DIM,
 ) -> DataFrame:
     """Approximate top-k via MULTI-TABLE sign-LSH: a candidate is any
@@ -337,7 +336,9 @@ def ann_topk_lsh(
     and minhash LSH; the candidate set is deduped BEFORE the exact
     cosine, so each (query, candidate) is scored once however many
     tables agree.  Recall is pinned against brute force by
-    tests/test_extensions.py (round-5 verdict #7).
+    tests/test_extensions.py.  Candidates always verify against the
+    caller's ``vectors``; a persisted ``index_path`` artifact stores
+    bucket rows only.
     """
     # the bucket stream feeds the query-bucket lookup and the
     # candidate side; materialize so the tables x planes dot products
@@ -350,13 +351,7 @@ def ann_topk_lsh(
     if index_path is not None:
         wb = lsh_index_persistent(
             vectors, index_path, tables, planes_per_table, id_col, vec_col,
-            quantize=quantize, dim=dim,
-        )
-    elif quantize:
-        raise ValueError(
-            "quantize=True needs a persistent artifact (index_path): the "
-            "int8 layout IS the stored index; quantizing a session-only "
-            "index would cut recall without saving any storage"
+            dim=dim,
         )
     else:
         ck = None
@@ -399,18 +394,9 @@ def ann_topk_lsh(
         # dedup: each pair is scored once however many tables agree
         .distinct()
     )
-    if index_path is not None and quantize:
-        # self-contained artifact: candidates verify against the
-        # STORED int8 vectors (asymmetric scoring — float query vs
-        # integer-grid neighbor; the per-vector scale cancels)
-        cv = stored_vectors_as_double(
-            _index_table(vectors.sparkSession, index_path, "vectors"),
-            id_col, "__cvec",
-        ).withColumnRenamed(id_col, "neighbor_id")
-    else:
-        cv = vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
-        )
+    cv = vectors.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
+    )
     scored = cand.join(cv, "neighbor_id").withColumn(
         "cosine", cosine_expr("__qvec", "__cvec")
     )
@@ -667,7 +653,6 @@ def ann_topk_ivf(
     n_probe: int = IVF_PROBES,
     index_cache_key: str | None = None,
     index_path: str | None = None,
-    quantize: bool = False,
     train_sample_cap: int | None = None,
 ) -> DataFrame:
     """IVF ANN: k-means coarse quantizer (``ivf_kmeans``), each query
@@ -679,26 +664,34 @@ def ann_topk_ivf(
     statistics -> multi-probe coarse quantizer -> in-cell exact
     scoring; the corpus-side work is bounded by n_probe/k of the
     inverted lists per query.  Recall vs brute force is pinned by
-    tests/test_extensions.py (round-5 verdict #7).
+    tests/test_extensions.py.
 
     ``index_cache_key``: stable identity of ``vectors`` to amortize
     training across calls in one session (see ``ivf_kmeans``) — the
     production shape, where the index is built once and queried many
     times; results are identical either way (training is
     deterministic).  ``index_path`` goes further: the trained index is
-    a cross-session parquet artifact (``ivf_index_persistent``).
+    a cross-session parquet artifact (``ivf_index_persistent``) that
+    stores its vectors int8-quantized, and the inverted lists score
+    from those stored vectors — ``vectors`` is read only to build an
+    absent artifact.  A legacy artifact committed without stored
+    vectors scores from ``vectors``.
     """
+    corpus = vectors
     if index_path is not None:
         assign, cents = ivf_index_persistent(
             vectors, index_path, cells, iters, id_col, vec_col,
-            quantize=quantize, train_sample_cap=train_sample_cap,
+            train_sample_cap=train_sample_cap,
         )
-    elif quantize:
-        raise ValueError(
-            "quantize=True needs a persistent artifact (index_path): the "
-            "int8 layout IS the stored index; quantizing a session-only "
-            "index would cut recall without saving any storage"
-        )
+        spark = vectors.sparkSession
+        # the committed marker picks the scoring side: stored int8
+        # vectors (asymmetric — float query vs integer grid; the
+        # per-vector scale cancels in cosine), or the caller's corpus
+        # for a legacy artifact written without them
+        if _read_index_params(spark, index_path).get("quantized") == "true":
+            corpus = stored_vectors_as_double(
+                _index_table(spark, index_path, "vectors"), id_col, vec_col
+            )
     else:
         assign, cents = ivf_kmeans(
             vectors, cells, iters, id_col, vec_col,
@@ -718,19 +711,9 @@ def ann_topk_ivf(
         .filter(F.col("__rn") <= n_probe)
         .select("query_id", "__qvec", "cell")
     )
-    if index_path is not None and quantize:
-        # self-contained artifact: inverted lists score from the STORED
-        # int8 vectors (asymmetric — float query vs integer grid; the
-        # per-vector scale cancels in cosine), never re-reading the
-        # float corpus
-        corpus_side = stored_vectors_as_double(
-            _index_table(vectors.sparkSession, index_path, "vectors"),
-            id_col, "__cvec2",
-        ).withColumnRenamed(id_col, "neighbor_id")
-    else:
-        corpus_side = vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec2")
-        )
+    corpus_side = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec2")
+    )
     inverted = corpus_side.join(
         assign.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id"
     )
@@ -763,24 +746,6 @@ def ann_topk_ivf(
 # overwrite like any non-transactional parquet artifact); concurrent
 # READERS of a committed index are always safe.
 # ---------------------------------------------------------------------------
-
-#: AnalysisException conditions that mean "no artifact yet" (same set
-#: the streaming ingest sink probe tolerates) — anything else re-raises.
-_INDEX_MISSING = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
-
-
-def _try_read_parquet(spark, path: str) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force resolution so empty/unreadable paths surface here
-        return df
-    except AnalysisException as e:
-        if e.getCondition() in _INDEX_MISSING:
-            return None
-        raise
-
 
 def _index_table(spark, path: str, table: str):
     """Manifest-resolved read of an index artifact table (round 12 —
@@ -829,7 +794,9 @@ def _read_index_params(spark, path: str) -> dict:
     got = artifact_params(spark, path)
     if got:
         return got
-    pdf = _try_read_parquet(spark, f"{path}/params")
+    from ..session import try_read_parquet
+
+    pdf = try_read_parquet(spark, f"{path}/params")
     return {} if pdf is None else {r["key"]: r["value"] for r in pdf.collect()}
 
 
@@ -842,24 +809,6 @@ def _write_index_params(spark, path: str, params: dict) -> None:
         [(k, str(v)) for k, v in sorted(params.items())],
         "key string, value string",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
-
-
-def _check_quantized_layout(spark, path: str, quantize: bool) -> None:
-    """The round-11 storage pin: a committed artifact's vector layout
-    (float corpus vs int8-in-artifact) must match what the caller
-    expects — a float reader served quantized rows (or vice versa)
-    would silently score a different space.  Legacy artifacts carry no
-    ``quantized`` key and are float by construction."""
-    got = _read_index_params(spark, path).get("quantized", "false")
-    want = "true" if quantize else "false"
-    if got != want:
-        stored = "int8-quantized" if got == "true" else "float"
-        asked = "int8-quantized" if quantize else "float"
-        raise ValueError(
-            f"ANN index at {path} stores {stored} vectors; caller "
-            f"expects a {asked} layout — pass quantize="
-            f"{got == 'true'} or use a different path"
-        )
 
 
 def _cell_profile(assign: DataFrame) -> dict[int, int]:
@@ -880,7 +829,6 @@ def ivf_index_persistent(
     iters: int = IVF_ITERS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    quantize: bool = False,
     train_sample_cap: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Load the IVF index artifact at ``path``, training and saving it
@@ -889,28 +837,24 @@ def ivf_index_persistent(
     always the artifact itself (lineage-truncated, identical across
     sessions), never the in-memory training lineage.
 
-    ``quantize=True`` (round 11): the artifact additionally stores the
-    corpus vectors themselves in the int8 layout
+    The artifact also stores the corpus vectors int8-quantized
     (:func:`quantize_to_storage` — ``{path}/vectors``: tinyint
-    components + per-vector scale), making the index SELF-CONTAINED:
-    probes score the inverted lists from the artifact instead of
-    re-reading the float corpus — the FAISS SQ8 shape, and the 8x
-    memory lever where it matters (BASELINE.md's 10^10-vector example:
-    640 GB of index instead of 5 TB).  Training still runs on the
-    FULL-PRECISION vectors (train-full/store-compressed, the standard
-    discipline), so cell layouts are identical to the float index.
-    The layout is marker-pinned: reading a quantized artifact with
-    ``quantize=False`` (or vice versa) raises.
+    components + per-vector scale; marker ``quantized: true``), so it
+    is SELF-CONTAINED: probes score the inverted lists from the
+    artifact instead of re-reading the corpus — the FAISS SQ8 shape,
+    and an 8x cut in vector storage (at 64 dims x 10^10 vectors, 640 GB
+    instead of 5 TB).  Training runs on the FULL-PRECISION vectors
+    (train-full/store-compressed), so the centroids and assignments are
+    the ones :func:`ivf_kmeans` trains.
 
-    ``train_sample_cap`` (round 12): train the quantizer on a
-    deterministic hash sample (see :func:`ivf_kmeans`) — the
-    production path for corpora where full-corpus Lloyd rounds are
-    k full scans per iteration.  When set, it is pinned in the marker
-    (an artifact trained on a sample must not silently serve a caller
-    asserting full training).  The build also records the TRAINING
-    cell-occupancy profile in the marker — the fixed baseline the
-    append-side ``drift_stat`` compares against (see
-    :func:`ivf_index_append`)."""
+    ``train_sample_cap``: train the quantizer on a deterministic hash
+    sample (see :func:`ivf_kmeans`) — the production path for corpora
+    where full-corpus Lloyd rounds are k full scans per iteration.
+    When set, it is pinned in the marker (an artifact trained on a
+    sample must not silently serve a caller asserting full training).
+    The build also records the TRAINING cell-occupancy profile in the
+    marker — the fixed baseline the append-side ``drift_stat``
+    compares against (see :func:`ivf_index_append`)."""
     import json
 
     spark = vectors.sparkSession
@@ -931,21 +875,22 @@ def ivf_index_persistent(
         # write — truncate the training lineage once
         assign = materialize(assign)
         profile = _cell_profile(assign)
-        tables = {"assignments": assign, "centroids": cents}
-        if quantize:
-            tables["vectors"] = quantize_to_storage(base, id_col, vec_col)
         artifact_overwrite(
-            spark, path, tables,
+            spark, path,
+            {
+                "assignments": assign,
+                "centroids": cents,
+                "vectors": quantize_to_storage(base, id_col, vec_col),
+            },
             {
                 **params,
-                "quantized": str(quantize).lower(),
+                "quantized": "true",
                 "version": 1,
                 "cell_profile": json.dumps(profile, sort_keys=True),
                 "n_train_total": sum(profile.values()),
                 "drift_stat": "1.0",
             },
         )
-    _check_quantized_layout(spark, path, quantize)
     return (
         _index_table(spark, path, "assignments"),
         _index_table(spark, path, "centroids"),
@@ -960,7 +905,6 @@ def lsh_index_persistent(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     extra_params: dict | None = None,
-    quantize: bool = False,
     dim: int = EMBEDDING_DIM,
 ) -> DataFrame:
     """Load the banded (id, band, bucket) LSH index artifact at
@@ -969,16 +913,12 @@ def lsh_index_persistent(
 
     ``extra_params``: extra identity keys pinned in the marker and
     checked on reuse — the semantic-ingest tier pins the EMBEDDER
-    identity here (round 10), because bucket rows from two different
-    encoders in one artifact would silently poison every probe (a
-    vector-space change is as hard a mismatch as a layout change).
+    identity here, because bucket rows from two different encoders in
+    one artifact would silently poison every probe (a vector-space
+    change is as hard a mismatch as a layout change).
 
-    ``quantize=True`` (round 11): additionally store the vectors in
-    the int8 layout (``{path}/vectors``) so candidate verification can
-    run from the artifact — see :func:`ivf_index_persistent`.  Bucket
-    signatures are still computed from the FULL-PRECISION vectors
-    (sign flips near the hyperplane under quantization would silently
-    change candidate sets between build and append otherwise)."""
+    The artifact holds bucket rows only: every caller verifies its
+    candidates against the caller's own full-precision vectors."""
     spark = vectors.sparkSession
     params = {
         "kind": "lsh", "tables": tables,
@@ -987,39 +927,34 @@ def lsh_index_persistent(
         **(extra_params or {}),
     }
     if dim != EMBEDDING_DIM:
-        # pin non-default hyperplane dims (round 12): an artifact's
+        # pin non-default hyperplane dims: an artifact's
         # bucket rows are a function of its plane family, and mixing
         # two dims in one index silently degrades every probe.  The
         # default dim stays UNPINNED for legacy-marker compatibility
-        # (every pre-round-12 artifact is implicitly 64).
+        # (every artifact built before the pin is implicitly 64).
         params["dim"] = dim
     if not _check_index_params(spark, path, params):
         from .artifact_manifest import artifact_overwrite
 
-        art_tables = {
-            "buckets": banded_bucket_rows(
-                vectors, id_col, vec_col, tables, planes_per_table, dim
-            )
-        }
-        if quantize:
-            art_tables["vectors"] = quantize_to_storage(
-                vectors, id_col, vec_col
-            )
         artifact_overwrite(
-            spark, path, art_tables,
-            {**params, "quantized": str(quantize).lower(), "version": 1},
+            spark, path,
+            {
+                "buckets": banded_bucket_rows(
+                    vectors, id_col, vec_col, tables, planes_per_table, dim
+                )
+            },
+            {**params, "version": 1},
         )
     got = _read_index_params(spark, path)
     if got.get("dim", str(EMBEDDING_DIM)) != str(dim):
         # the subset param check is one-directional (a default-dim
         # caller omits the key): refuse serving a dim-pinned index to
         # a caller hashing probes with another plane family — the
-        # queries would collapse to bucket 0 (review fix)
+        # queries would collapse to bucket 0
         raise ValueError(
             f"LSH index at {path} was built at dim="
             f"{got.get('dim', EMBEDDING_DIM)}; caller expects dim={dim}"
         )
-    _check_quantized_layout(spark, path, quantize)
     return _index_table(spark, path, "buckets")
 
 
@@ -1031,35 +966,36 @@ def ivf_index_append(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Round-9 (r8 verdict task 7): grow a committed IVF index WITHOUT
-    retraining — assign each new vector to its nearest existing
-    centroid (the FAISS ``add()``-after-``train()`` discipline) and
-    append the assignments.  The centroids are FROZEN: queries over
-    the grown index probe the same cells, and the appended vectors are
-    exactly as findable as if they had been in the training set and
-    landed in the same cell (the probe scans whole cells).  Retrain by
-    deleting the artifact when drift warrants it — silently re-running
-    k-means here would invalidate every cached cell layout.
+    """Grow a committed IVF index WITHOUT retraining — assign each new
+    vector to its nearest existing centroid (the FAISS
+    ``add()``-after-``train()`` discipline) and append the assignments
+    and the int8 stored vectors in one manifest commit.  The centroids
+    are FROZEN: queries over the grown index probe the same cells, and
+    the appended vectors are exactly as findable as if they had been in
+    the training set and landed in the same cell (the probe scans whole
+    cells).  Retrain with :func:`ivf_index_retrain` when drift warrants
+    it — silently re-running k-means here would invalidate every cached
+    cell layout.
 
-    Replay-idempotent: already-assigned ids are anti-joined away, so a
-    crashed-and-replayed append adds exactly the missing remainder.
-    The params marker's ``version`` is bumped after the data append.
-    Raises if ``path`` holds no committed index or one built with
-    different hyperparameters.
+    Replay-idempotent: each table gets exactly the ids of
+    ``new_vectors`` it does not hold yet, so a crashed-and-replayed
+    append adds the missing remainder, and an artifact whose tables
+    diverged (a legacy two-write commit) heals.  A legacy artifact
+    without stored vectors grows its assignments only.  The params
+    marker's ``version`` is bumped.  Raises if ``path`` holds no
+    committed index or one built with different hyperparameters.
 
-    Drift accounting (round 12, r11 verdict task 3 — the "WHEN to
-    retrain" signal frozen-centroid appends were missing): after the
-    append, the marker's ``drift_stat`` is refreshed to the maximum
-    over cells of ``(current_share / training_share)`` — current and
-    training cell occupancy read from the assignments and the build's
-    ``cell_profile``.  Uniform growth keeps it at ~1.0; appends
-    concentrating in few cells push it up (a skewed cell means its
-    inverted list is outgrowing the n_probe/k cost model AND the
-    centroid no longer summarizes its members).  Operators read it
-    via ``ann --index-stats`` and retrain (delete + rebuild, possibly
-    with a larger k per ``ivf_suggest_cells``) past their threshold —
-    2x is a reasonable default.  The current-count scan rides the
-    same column-pruned assignments read the anti-join already does.
+    Drift accounting (the "WHEN to retrain" signal frozen-centroid
+    appends lack): after the append, the marker's ``drift_stat`` is
+    refreshed to the maximum over cells of ``(current_share /
+    training_share)`` — current and training cell occupancy read from
+    the assignments and the build's ``cell_profile``.  Uniform growth
+    keeps it at ~1.0; appends concentrating in few cells push it up (a
+    skewed cell means its inverted list is outgrowing the n_probe/k
+    cost model AND the centroid no longer summarizes its members).
+    Operators read it via ``search --index-stats`` and retrain past
+    their threshold (``search --retrain-if-drift``) — 2x is a
+    reasonable default.
     """
     import json
 
@@ -1075,25 +1011,23 @@ def ivf_index_append(
         )
     from .artifact_manifest import artifact_append
 
-    cents = _index_table(spark, path, "centroids")
+    got = _read_index_params(spark, path)
+    stores_vectors = got.get("quantized") == "true"
+    if stores_vectors:
+        # both staged tables consume new_vectors (a 2-consumer diamond
+        # whose lineage may carry a Python encode): compute it once
+        new_vectors = materialize(new_vectors)
     existing = _index_table(spark, path, "assignments").select(
         id_col
     ).distinct()
-    got = _read_index_params(spark, path)
-    quantized = got.get("quantized", "false") == "true"
-    if quantized:
-        # both staged tables consume new_vectors (a 2-consumer diamond
-        # whose lineage may carry a Python encode) — compute it once;
-        # the PER-TABLE anti-joins below stay separate (they self-heal
-        # a legacy artifact whose tables diverged under the old
-        # two-write protocol; under the manifest both tables commit
-        # atomically, so new divergence is impossible)
-        new_vectors = materialize(new_vectors)
     fresh = new_vectors.join(existing, id_col, "left_anti")
+    cents = _index_table(spark, path, "centroids")
     # the new assignments feed the staged append AND the drift union
     new_assign = materialize(_assign_cells(fresh, cents, id_col, vec_col))
     tables_to_append = {"assignments": new_assign}
-    if quantized:
+    if stores_vectors:
+        # its own anti-join, so a table that lacks rows the other holds
+        # gets them back
         vec_existing = _index_table(spark, path, "vectors").select(
             id_col
         ).distinct()
@@ -1135,26 +1069,26 @@ def ivf_index_retrain(
     train_sample_cap: int | None = None,
 ) -> dict:
     """Retrain a committed IVF index IN PLACE over the current corpus
-    — the operator response to a high ``drift_stat`` (round 12; closes
-    the loop :func:`ivf_index_append`'s drift accounting opened: the
-    stat said WHEN to retrain, this is the HOW).
+    — the operator response to a high ``drift_stat`` (the stat
+    :func:`ivf_index_append` maintains says WHEN to retrain; this is
+    the HOW).
 
     Fresh Lloyd rounds over ``vectors`` (every downstream list layout
     is recomputed — appends since the last training stop being
     second-class citizens assigned to frozen centroids), committed as
     one atomic manifest swap (:func:`..artifact_manifest.
     artifact_overwrite`): a reader mid-query keeps its complete old
-    generation; there is no delete-then-rebuild gap, which is exactly
-    why "retrain by deleting the artifact" stopped being the
-    documented answer.  ``k`` defaults to ``ivf_suggest_cells(N)`` —
-    drift usually means the corpus OUTGREW its cell count, so the
-    rebuild resizes by the sqrt-N rule instead of repeating the stale
-    k.  Every OTHER unspecified knob inherits the committed marker:
-    ``train_sample_cap`` (a sampled-training index stays sampled),
-    ``iters``, the id/vector columns, and the quantized layout — a
-    retrain changes the cell layout, never the artifact's pinned
-    training discipline.  The marker's ``version`` bumps so every
-    session / worker cache keyed on it refreshes.
+    generation; there is no delete-then-rebuild gap.  ``k`` defaults
+    to ``ivf_suggest_cells(N)`` — drift usually means the corpus
+    OUTGREW its cell count, so the rebuild resizes by the sqrt-N rule
+    instead of repeating the stale k.  Every OTHER unspecified knob
+    inherits the committed marker: ``train_sample_cap`` (a
+    sampled-training index stays sampled), ``iters`` and the id/vector
+    columns — a retrain changes the cell layout, never the artifact's
+    pinned training discipline.  The rebuilt artifact stores its int8
+    vectors like every build, so a legacy artifact without them is
+    rewritten in the one layout.  The marker's ``version`` bumps so
+    every session / worker cache keyed on it refreshes.
 
     Returns the new marker params (the CLI prints them).  Raises when
     ``path`` holds no committed IVF index — retraining nothing is a
@@ -1170,11 +1104,9 @@ def ivf_index_retrain(
         )
     from .artifact_manifest import artifact_overwrite
 
-    quantized = got.get("quantized", "false") == "true"
-    # every unspecified knob inherits the COMMITTED marker (review
-    # fix: iters/columns were silently reset to the session defaults,
-    # breaking callers who pinned e.g. iters=5 at build time) — only
-    # k defaults to a recompute, because resizing is retrain's job
+    # every unspecified knob inherits the COMMITTED marker (callers
+    # who pinned e.g. iters=5 at build time keep it) — only k
+    # defaults to a recompute, because resizing is retrain's job
     if train_sample_cap is None and got.get("train_sample_cap"):
         train_sample_cap = int(got["train_sample_cap"])
     if iters is None:
@@ -1193,13 +1125,15 @@ def ivf_index_retrain(
     )
     assign = materialize(assign)
     profile = _cell_profile(assign)
-    tables = {"assignments": assign, "centroids": cents}
-    if quantized:
-        tables["vectors"] = quantize_to_storage(base, id_col, vec_col)
+    tables = {
+        "assignments": assign,
+        "centroids": cents,
+        "vectors": quantize_to_storage(base, id_col, vec_col),
+    }
     params = {
         "kind": "ivf", "k": k, "iters": iters,
         "id_col": id_col, "vec_col": vec_col,
-        "quantized": str(quantized).lower(),
+        "quantized": "true",
         "version": int(got.get("version", "1")) + 1,
         "cell_profile": json.dumps(profile, sort_keys=True),
         "n_train_total": sum(profile.values()),
@@ -1254,33 +1188,20 @@ def lsh_index_append(
             f"LSH index at {path} was built at dim="
             f"{got.get('dim', EMBEDDING_DIM)}; caller appends dim={dim}"
         )
-    quantized = got.get("quantized", "false") == "true"
-    if quantized:
-        # 2-consumer diamond: compute the incoming lineage once (the
-        # per-table anti-joins stay separate — legacy-divergence
-        # self-heal; see ivf_index_append)
-        new_vectors = materialize(new_vectors)
     existing = _index_table(spark, path, "buckets").select(
         id_col
     ).distinct()
     fresh = new_vectors.join(existing, id_col, "left_anti")
-    tables_to_append = {
-        "buckets": banded_bucket_rows(
-            fresh, id_col, vec_col, tables, planes_per_table, dim
-        )
-    }
-    if quantized:
-        vec_existing = _index_table(spark, path, "vectors").select(
-            id_col
-        ).distinct()
-        tables_to_append["vectors"] = quantize_to_storage(
-            new_vectors.join(vec_existing, id_col, "left_anti"),
-            id_col, vec_col,
-        )
     got["version"] = str(int(got.get("version", "1")) + 1)
     artifact_append(
-        spark, path, tables_to_append, got,
-        adopt_tables=("buckets", "vectors"),
+        spark, path,
+        {
+            "buckets": banded_bucket_rows(
+                fresh, id_col, vec_col, tables, planes_per_table, dim
+            )
+        },
+        got,
+        adopt_tables=("buckets",),
     )
 
 

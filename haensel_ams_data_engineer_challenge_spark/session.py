@@ -183,3 +183,24 @@ def local_frame(
         schema=arrow,
     )
     return spark.createDataFrame(table, schema)
+
+
+#: AnalysisException conditions that mean "nothing written here yet";
+#: any other read failure re-raises.
+_ABSENT = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
+
+
+def try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet data at ``path``, or None when the path is absent or
+    holds no parquet yet.  The schema is resolved here, so an empty or
+    unreadable path surfaces at this call, not at the first action."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        df = spark.read.parquet(path)
+        df.schema
+        return df
+    except AnalysisException as e:
+        if e.getCondition() in _ABSENT:
+            return None
+        raise

@@ -34,11 +34,7 @@ from ..operators.dedup import (
     normalize_text,
 )
 from ..operators.manifest_sink import manifest_insert_if_absent, read_manifest_sink
-from ..session import local_frame
-
-#: AnalysisException conditions meaning "no data here yet" — the only
-#: ones the Bloom state probes may tolerate.
-_MISSING = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
+from ..session import local_frame, try_read_parquet
 
 
 def dedup_batch_within(batch: DataFrame) -> DataFrame:
@@ -46,19 +42,6 @@ def dedup_batch_within(batch: DataFrame) -> DataFrame:
     (min doc_id — dedup_exact's keep policy)."""
     keep = dedup_exact(batch).select(F.col("keep_id").alias("doc_id"))
     return batch.join(keep, "doc_id", "left_semi")
-
-
-def _try_read(ss: SparkSession, path: str) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = ss.read.parquet(path)
-        df.schema
-        return df
-    except AnalysisException as e:
-        if e.getCondition() not in _MISSING:
-            raise
-        return None
 
 
 def _bloom_checksum(words: dict[int, int]) -> int:
@@ -83,7 +66,7 @@ def _load_bloom_words(
     (<= m_bits/64 entries — size m_bits to the corpus AND the
     driver/broadcast budget together; past that, partition the
     keyspace)."""
-    params = _try_read(ss, f"{state_dir}/params")
+    params = try_read_parquet(ss, f"{state_dir}/params")
     if params is None:
         return None
     got = {r["key"]: r["value"] for r in params.collect()}
@@ -93,7 +76,7 @@ def _load_bloom_words(
             f"bloom state at {state_dir} was built with {got}; caller "
             f"expects {exp} — use a different state dir or delete it"
         )
-    bm = _try_read(ss, f"{state_dir}/bitmap")
+    bm = try_read_parquet(ss, f"{state_dir}/bitmap")
     if bm is None:
         return None
     words = {r["word_idx"]: r["bits"] for r in bm.collect()}

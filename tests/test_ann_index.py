@@ -25,9 +25,8 @@ def test_ivf_persistent_index_bit_identical_across_sessions(
     q = vecs.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "ivf_idx")
 
-    fresh = _rows(S.ann_topk_ivf(vecs, q))                  # full retrain
+    fresh = _rows(S.ann_topk_ivf(vecs, q))                  # session-only
     trained = _rows(S.ann_topk_ivf(vecs, q, index_path=path))  # train + save
-    assert trained == fresh
 
     # a FRESH session (no shared in-session cache, no lineage) loading
     # the artifact returns bit-identical top-k
@@ -35,12 +34,23 @@ def test_ivf_persistent_index_bit_identical_across_sessions(
     vecs2 = load_table(s2, sf_dir, "embeddings")
     q2 = vecs2.filter(F.col("vec_id") < 5)
     loaded = _rows(S.ann_topk_ivf(vecs2, q2, index_path=path))
-    assert loaded == fresh
+    assert loaded == trained
+
+    # training stays full-precision: the persisted quantizer is the
+    # session-trained one
+    a0, c0 = S.ivf_kmeans(vecs, S.IVF_CELLS, S.IVF_ITERS)
+    a1, c1 = S.ivf_index_persistent(vecs, path)
+    assert _rows(a1) == _rows(a0)
+    assert _rows(c1) == _rows(c0)
+    # only the scoring moves to the stored int8 vectors: the neighbour
+    # sets keep the int8 recall floor against the float session index
+    pairs = {(r[0], r[2]) for r in trained}  # (query_id, neighbor_id)
+    want = {(r[0], r[2]) for r in fresh}
+    assert len(pairs & want) / len(want) >= 0.9
 
     # the load path must come from DISK, not retraining: handing the
     # builder a corpus that would train a DIFFERENT index (5 vectors)
     # still returns the saved assignments/centroids verbatim
-    a1, c1 = S.ivf_index_persistent(vecs, path)
     a2, c2 = S.ivf_index_persistent(vecs.limit(5), path)
     assert _rows(a2) == _rows(a1)
     assert _rows(c2) == _rows(c1)
@@ -215,18 +225,18 @@ def test_append_requires_committed_matching_index(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# round 11: int8-quantized storage INSIDE the persistent artifacts
-# (r10 verdict task 2) — tinyint components + per-vector scale, the 8x
-# vector-memory lever, marker-pinned against float readers.
+# int8 storage INSIDE the persistent IVF artifact: tinyint components +
+# per-vector scale, the 8x vector-memory lever
 # ---------------------------------------------------------------------------
 
 
 def test_quantized_ivf_recall_floor_and_size(spark, sf_dir, tmp_path):
-    """The quantized index must (a) rank from the STORED int8 vectors,
-    (b) keep recall within a whisker of the float index, (c) actually
-    be small: the vectors table beats the float corpus parquet by >=4x
-    on disk (the arrays themselves are 8x — 1 byte vs 8 per component;
-    parquet headers + id/scale columns dilute the file-level ratio)."""
+    """The persisted index must (a) rank from the STORED int8 vectors,
+    (b) keep recall within a whisker of the float session index, (c)
+    actually be small: the vectors table beats the float corpus parquet
+    by >=4x on disk (the arrays themselves are 8x — 1 byte vs 8 per
+    component; parquet headers + id/scale columns dilute the
+    file-level ratio)."""
     import os
 
     # one output file for the size comparison: at the 500-row fixture
@@ -234,20 +244,18 @@ def test_quantized_ivf_recall_floor_and_size(spark, sf_dir, tmp_path):
     # vectors-table size (training math is partitioning-independent)
     vecs = load_table(spark, sf_dir, "embeddings").repartition(1)
     q = vecs.filter(F.col("vec_id") < 20)
-    fpath, qpath = str(tmp_path / "ivf_f"), str(tmp_path / "ivf_q")
+    qpath = str(tmp_path / "ivf_q")
 
     got_f = {
         (r["query_id"], r["neighbor_id"])
-        for r in S.ann_topk_ivf(vecs, q, k=5, index_path=fpath).collect()
+        for r in S.ann_topk_ivf(vecs, q, k=5).collect()
     }
     got_q = {
         (r["query_id"], r["neighbor_id"])
-        for r in S.ann_topk_ivf(
-            vecs, q, k=5, index_path=qpath, quantize=True
-        ).collect()
+        for r in S.ann_topk_ivf(vecs, q, k=5, index_path=qpath).collect()
     }
-    # recall floor vs the float index (sf0.01 measures 247/250
-    # identical pairs; the floor leaves slack for grid ties)
+    # recall floor vs the float session index (the floor leaves slack
+    # for grid ties)
     assert len(got_q & got_f) / len(got_f) >= 0.9
 
     # the stored layout is genuinely tinyint + scale
@@ -270,40 +278,37 @@ def test_quantized_ivf_recall_floor_and_size(spark, sf_dir, tmp_path):
     assert _sz(src) / _sz(f"{qpath}/vectors") >= 4.0
 
 
-def test_quantized_layout_marker_pins_readers(spark, sf_dir, tmp_path):
-    """A float reader on a quantized artifact refuses (and vice versa)
-    — the two layouts score different spaces and must never be served
-    interchangeably.  Legacy artifacts (no 'quantized' key) read as
-    float."""
-    vecs = load_table(spark, sf_dir, "embeddings")
-    qpath = str(tmp_path / "ivf_q")
-    S.ivf_index_persistent(vecs, qpath, quantize=True)
-    with pytest.raises(ValueError, match="stores int8-quantized"):
-        S.ivf_index_persistent(vecs, qpath)  # float reader refuses
-    fpath = str(tmp_path / "ivf_f")
-    S.ivf_index_persistent(vecs, fpath)
-    with pytest.raises(ValueError, match="stores float"):
-        S.ivf_index_persistent(vecs, fpath, quantize=True)
-    # legacy marker (no 'quantized' key) == float layout
-    got = S._read_index_params(spark, fpath)
-    got.pop("quantized")
-    S._write_index_params(spark, fpath, got)
-    S.ivf_index_persistent(vecs, fpath)  # still serves
-    # quantize without a persistent path is a contract error
-    q = vecs.filter(F.col("vec_id") < 3)
-    with pytest.raises(ValueError, match="needs a persistent artifact"):
-        S.ann_topk_ivf(vecs, q, quantize=True)
+def test_committed_ivf_request_scans_no_corpus(spark, sf_dir, tmp_path):
+    """Once the IVF index is committed, a request reads the artifact
+    and its own queries only: nothing in its plan scans the documents
+    the caller's ``vectors`` lineage embeds."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    qpath = str(tmp_path / "queries")
+    docs.orderBy("doc_id").limit(1).withColumnRenamed(
+        "doc_id", "query_id"
+    ).write.parquet(qpath)
+    query = S.hash_embed(spark.read.parquet(qpath), id_col="query_id")
+    index = str(tmp_path / "ann_index")
+    S.ann_topk_ivf(S.hash_embed(docs), query, k=5, index_path=index).collect()
+
+    request = S.ann_topk_ivf(S.hash_embed(docs), query, k=5, index_path=index)
+    assert len(request.collect()) == 5
+    scanned = request.inputFiles()
+    assert any(f"{index}/vectors/" in f for f in scanned), scanned
+    assert not [f for f in scanned if "documents.parquet" in f], scanned
+    executed = request._jdf.queryExecution().executedPlan().toString()
+    assert "documents.parquet" not in executed
 
 
 def test_quantized_append_grows_stored_vectors(spark, sf_dir, tmp_path):
-    """Appends to a quantized artifact extend BOTH tables (assignments
-    + stored int8 vectors), replay-idempotently; the grown index is
-    probeable and finds the appended vector."""
+    """Appends extend BOTH tables (assignments + stored int8 vectors),
+    replay-idempotently; the grown index is probeable and finds the
+    appended vector."""
     vecs = load_table(spark, sf_dir, "embeddings")
     base = vecs.filter(F.col("vec_id") % 2 == 0)
     extra = vecs.filter(F.col("vec_id") % 2 == 1)
     qpath = str(tmp_path / "ivf_q")
-    S.ivf_index_persistent(base, qpath, quantize=True)
+    S.ivf_index_persistent(base, qpath)
     n0 = spark.read.parquet(f"{qpath}/vectors").count()
     S.ivf_index_append(extra, qpath)
     n1 = spark.read.parquet(f"{qpath}/vectors").count()
@@ -314,30 +319,15 @@ def test_quantized_append_grows_stored_vectors(spark, sf_dir, tmp_path):
     assert (
         spark.read.parquet(f"{qpath}/assignments").count() == n1
     )
-    # the appended vectors are findable through the quantized probe
+    # the appended vectors are findable through the stored-vector probe
     q = extra.limit(3)
-    hits = S.ann_topk_ivf(
-        vecs, q, k=5, index_path=qpath, quantize=True
-    )
+    hits = S.ann_topk_ivf(vecs, q, k=5, index_path=qpath)
     assert hits.count() > 0
-
-    # LSH twin: same grow-both-tables contract
-    lpath = str(tmp_path / "lsh_q")
-    S.lsh_index_persistent(base, lpath, quantize=True)
-    S.lsh_index_append(extra, lpath)
-    assert spark.read.parquet(f"{lpath}/vectors").count() == vecs.count()
-    got = {
-        (r["query_id"], r["neighbor_id"])
-        for r in S.ann_topk_lsh(
-            vecs, q, k=3, index_path=lpath, quantize=True
-        ).collect()
-    }
-    assert got  # quantized LSH probe scores from the artifact
 
 
 def test_quantized_append_crash_is_atomic_and_replayable(spark, sf_dir, tmp_path, monkeypatch):
-    """Round-12 (manifest protocol): a crash mid-append can no longer
-    leave the assignments and vectors tables DIVERGED — both commit in
+    """Under the manifest protocol a crash mid-append cannot leave
+    the assignments and vectors tables DIVERGED — both commit in
     one atomic manifest rename.  A crash before the commit leaves the
     artifact exactly at its previous generation; the replay appends
     the full remainder to both tables."""
@@ -345,7 +335,7 @@ def test_quantized_append_crash_is_atomic_and_replayable(spark, sf_dir, tmp_path
     base = vecs.filter(F.col("vec_id") % 2 == 0)
     extra = vecs.filter(F.col("vec_id") % 2 == 1)
     qpath = str(tmp_path / "ivf_q")
-    S.ivf_index_persistent(base, qpath, quantize=True)
+    S.ivf_index_persistent(base, qpath)
     n_base = base.count()
 
     # inject the crash mid-append (before anything can commit)
@@ -369,13 +359,6 @@ def test_quantized_append_crash_is_atomic_and_replayable(spark, sf_dir, tmp_path
     S.ivf_index_append(extra, qpath)
     assert S._index_table(spark, qpath, "vectors").count() == n_all
     assert S._index_table(spark, qpath, "assignments").count() == n_all
-
-
-def test_lsh_quantize_without_index_path_refuses(spark, sf_dir):
-    vecs = load_table(spark, sf_dir, "embeddings")
-    q = vecs.filter(F.col("vec_id") < 3)
-    with pytest.raises(ValueError, match="needs a persistent artifact"):
-        S.ann_topk_lsh(vecs, q, quantize=True)
 
 
 # ---------------------------------------------------------------------------
@@ -562,27 +545,76 @@ def test_ivf_index_retrain_resets_drift_and_resizes(spark, sf_dir, tmp_path):
         S.ivf_index_retrain(grown, str(tmp_path / "nope"))
 
 
-def test_ivf_index_retrain_preserves_quantized_layout(spark, sf_dir, tmp_path):
-    """A quantized index retrains INTO the quantized layout: int8
-    vectors table rebuilt over the current corpus, layout pin intact,
-    sampled-training cap inherited from the marker."""
+def _legacy_float_ivf(spark, vecs, path):
+    """An IVF artifact in the float layout earlier versions wrote:
+    assignments and centroids only, under a marker with no
+    ``quantized`` key."""
+    import json
+
+    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
+        artifact_overwrite,
+    )
+
+    assign, cents = S.ivf_kmeans(vecs, S.IVF_CELLS, S.IVF_ITERS)
+    profile = S._cell_profile(assign)
+    artifact_overwrite(
+        spark, path, {"assignments": assign, "centroids": cents},
+        {
+            "kind": "ivf", "k": S.IVF_CELLS, "iters": S.IVF_ITERS,
+            "id_col": "vec_id", "vec_col": "embedding", "version": 1,
+            "cell_profile": json.dumps(profile, sort_keys=True),
+            "n_train_total": sum(profile.values()), "drift_stat": "1.0",
+        },
+    )
+
+
+def test_ivf_index_retrain_inherits_cap_and_writes_int8_layout(spark, sf_dir, tmp_path):
+    """A retrain rebuilds the int8 vectors table over the current
+    corpus and inherits the sampled-training cap from the marker.  A
+    legacy float artifact (no ``quantized`` key in its marker) is
+    served from the caller's corpus, appended to without a vectors
+    table, and rewritten by the retrain in the int8 layout."""
     vecs = load_table(spark, sf_dir, "embeddings")
+    q = vecs.filter(F.col("vec_id") < 3)
     path = str(tmp_path / "ivf_rt_q")
-    S.ivf_index_persistent(vecs, path, quantize=True, train_sample_cap=300)
+    S.ivf_index_persistent(vecs, path, train_sample_cap=300)
     p = S.ivf_index_retrain(vecs, path)
     assert p["quantized"] == "true"
     assert p["train_sample_cap"] == "300"  # inherited, still pinned
     stored = S._index_table(spark, path, "vectors")
     assert stored.count() == vecs.count()
-    q = vecs.filter(F.col("vec_id") < 3)
     hits = S.ann_topk_ivf(
-        vecs, q, index_path=path, quantize=True,
+        vecs, q, index_path=path,
         cells=int(p["k"]), iters=int(p["iters"]),
         train_sample_cap=300,
     )
     # serves a full ranked top-k per query from the rebuilt artifact
     got = {(r["query_id"], r["rank"]) for r in hits.collect()}
     assert got == {(q, r) for q in (0, 1, 2) for r in (1, 2, 3)}
+
+    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
+        artifact_resolve,
+    )
+
+    base = vecs.filter(F.col("vec_id") % 2 == 0)
+    extra = vecs.filter(F.col("vec_id") % 2 == 1)
+    lpath = str(tmp_path / "ivf_legacy")
+    _legacy_float_ivf(spark, base, lpath)
+    # served: scored from the caller's float corpus, exactly the
+    # session index trained on the same vectors
+    assert _rows(S.ann_topk_ivf(base, q, index_path=lpath)) == _rows(
+        S.ann_topk_ivf(base, q)
+    )
+    # appended: assignments grow, no vectors table appears
+    S.ivf_index_append(extra, lpath)
+    assert S._index_table(spark, lpath, "assignments").count() == vecs.count()
+    assert sorted(artifact_resolve(spark, lpath)[1]["tables"]) == [
+        "assignments", "centroids",
+    ]
+    # retrained: the one int8 layout, vectors table over the corpus
+    p = S.ivf_index_retrain(vecs, lpath)
+    assert p["quantized"] == "true"
+    assert S._index_table(spark, lpath, "vectors").count() == vecs.count()
 
 
 def test_cli_ann_retrain_if_drift(spark, sf_dir, tmp_path, capsys):

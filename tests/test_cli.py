@@ -928,10 +928,9 @@ def test_cli_pipeline_compact_sink(spark, sf_dir, tmp_path, capsys):
 
 
 def test_cli_import_wordvec_then_search(spark, sf_dir, tmp_path, capsys):
-    """Round 11: import-wordvec turns a float vector table into a
-    committed encoder artifact; search --encoder-model serves it; the
-    --quantize-index ANN path builds the int8 artifact beside the
-    float one."""
+    """import-wordvec turns a float vector table into a committed
+    encoder artifact; search --encoder-model serves it from an ANN
+    index that stores its int8 vectors."""
     from haensel_ams_data_engineer_challenge_spark.__main__ import main
 
     # a tiny "word2vec export": vectors aligned so related terms match
@@ -966,17 +965,8 @@ def test_cli_import_wordvec_then_search(spark, sf_dir, tmp_path, capsys):
     )
     assert rc == 0
     assert "method=ann" in capsys.readouterr().out
-
-    # quantized index path: separate _int8 artifact, runs end-to-end
-    rc = main(
-        ["search", "--sf-dir", sf_dir, "--work-dir", work,
-         "--queries-parquet", queries, "--method", "ann", "--k", "3",
-         "--quantize-index"]
-    )
-    assert rc == 0
-    assert "method=ann" in capsys.readouterr().out
     import os
 
-    int8_dirs = [d for d in os.listdir(work) if d.endswith("_int8")]
-    assert int8_dirs, os.listdir(work)
-    assert os.path.isdir(f"{work}/{int8_dirs[0]}/vectors")
+    index_dirs = [d for d in os.listdir(work) if d.startswith("ann_index_model_v")]
+    assert index_dirs, os.listdir(work)
+    assert os.path.isdir(f"{work}/{index_dirs[0]}/vectors")

@@ -133,7 +133,7 @@ def test_ivf_build_evaluates_input_lineage_once(spark, sf_dir, tmp_path):
         ),
     )
     path = str(tmp_path / "ivf_q")
-    S.ivf_index_persistent(tapped, path, k=5, iters=2, quantize=True)
+    S.ivf_index_persistent(tapped, path, k=5, iters=2)
     assert seen.value == n
 
     S.ivf_index_retrain(tapped, path)

@@ -42,6 +42,32 @@ def test_insert_roundtrip_and_idempotence(spark, tmp_path):
     assert M.manifest_insert_if_absent(spark, nulls, path, ["k"]) == 0
 
 
+def test_insert_lists_the_sink_once(spark, tmp_path, monkeypatch):
+    """One insert into a committed sink lists the sink directory once
+    and reads its latest manifest once: the entry vacuum reuses the
+    snapshot the insert resolved under its lease."""
+    path = str(tmp_path / "sink")
+    M.manifest_insert_if_absent(spark, _df(spark, [1]), path, ["k"])
+    M.manifest_insert_if_absent(spark, _df(spark, [2]), path, ["k"])
+    listed, read = [], []
+    real_list, real_read = M._list_names, M._read_manifest
+
+    def list_names(ss, p):
+        listed.append(p)
+        return real_list(ss, p)
+
+    def read_manifest(ss, p, v):
+        read.append((p, v))
+        return real_read(ss, p, v)
+
+    monkeypatch.setattr(M, "_list_names", list_names)
+    monkeypatch.setattr(M, "_read_manifest", read_manifest)
+    assert M.manifest_insert_if_absent(spark, _df(spark, [3]), path, ["k"]) == 1
+    assert listed.count(path) == 1
+    assert read.count((path, 2)) == 1
+    assert _keys(spark, path) == ["1", "2", "3"]
+
+
 def test_reader_mid_compaction_sees_complete_rows(spark, tmp_path):
     """The gap this protocol closes: a reader that RESOLVED the sink
     before compaction still collects a complete row set after the
