@@ -388,7 +388,7 @@ def _parser() -> argparse.ArgumentParser:
         "(fine buckets, guarantee at hamming<=3); 8 = 8-bit bands "
         "(hamming<=7 pigeonhole-GUARANTEED — covers most of the "
         "default threshold with a hard floor, at 2x band-stream rows "
-        "and coarser buckets; tools/phash_knob_bench.py prices it)",
+        "and coarser buckets; BASELINE.md prices it)",
     )
 
     ii = sub.add_parser(
@@ -1295,34 +1295,36 @@ def main(argv: list[str] | None = None) -> int:
                     # — a different/rebuilt encoder simply builds its
                     # own artifact (the stale one is an orphan dir,
                     # explicit and harmless)
+                    from .operators.artifact_manifest import artifact_open
                     from .operators.embed import (
                         embed_with_model,
                         encoder_model_ensure,
                     )
-                    from .operators.similarity import _read_index_params
 
-                    if args.media_parquet is None:
-                        # text corpora may BUILD the encoder on first
-                        # use; media needs a committed artifact (there
-                        # is no text to train from — embed_with_model
-                        # raises the clear error if it is absent)
-                        encoder_model_ensure(docs, args.encoder_model)
-                    enc_v = _read_index_params(
-                        spark, args.encoder_model
-                    ).get("version", "1")
-                    dvecs = embed_with_model(docs, args.encoder_model)
-                    qvecs = embed_with_model(
-                        queries, args.encoder_model, id_col="query_id"
+                    # text corpora may BUILD the encoder on first use;
+                    # media needs a committed artifact (there is no
+                    # text to train from — embed_with_model raises the
+                    # clear error if it is absent).  Docs and queries
+                    # encode with this one snapshot.
+                    enc = (
+                        artifact_open(spark, args.encoder_model)
+                        if args.media_parquet is not None
+                        else encoder_model_ensure(docs, args.encoder_model)
                     )
+                    model = enc if enc is not None else args.encoder_model
+                    dvecs = embed_with_model(docs, model)
+                    qvecs = embed_with_model(queries, model, id_col="query_id")
+                    enc_v = enc.params.get("version", "1")
                     index_path = f"{args.work_dir}/ann_index_model_v{enc_v}"
                 else:
                     dvecs = hash_embed(docs)
                     qvecs = hash_embed(queries, id_col="query_id")
                     index_path = f"{args.work_dir}/ann_index"
-                from .operators.similarity import _read_index_params
+                from .operators.artifact_manifest import artifact_open
 
                 def _committed():
-                    got = _read_index_params(spark, index_path)
+                    snap = artifact_open(spark, index_path)
+                    got = snap.params if snap is not None else {}
                     # absent (first run builds below) or a foreign
                     # artifact (ivf_index_persistent refuses loudly) —
                     # either way there is nothing to adopt or retrain
@@ -1389,11 +1391,7 @@ def main(argv: list[str] | None = None) -> int:
                     "rank",
                 )
                 if args.index_stats:
-                    from .operators.similarity import (
-                        _read_index_params as _rip,
-                    )
-
-                    st = _rip(spark, index_path)
+                    st = _committed()
                     print(
                         "index-stats "
                         f"path={index_path} "
@@ -1468,10 +1466,11 @@ def main(argv: list[str] | None = None) -> int:
             elif args.encoder_model is not None:
                 # a committed (possibly PROJECTED) encoder: the
                 # semantic tier runs in ITS space at ITS dim
+                from .operators.artifact_manifest import artifact_open
                 from .operators.embed import IMAGE_KIND, embed_with_model
-                from .operators.similarity import _read_index_params
 
-                enc_got = _read_index_params(spark, args.encoder_model)
+                enc = artifact_open(spark, args.encoder_model)
+                enc_got = enc.params if enc is not None else {}
                 if enc_got.get("encoder") != IMAGE_KIND:
                     # an audio/text encoder over image payloads would
                     # silently fall to the fake rung (byte-exact-only
@@ -1484,9 +1483,9 @@ def main(argv: list[str] | None = None) -> int:
                     )
                     return 2
                 enc_dim = int(enc_got.get("dim", 64))
-                vecs = embed_with_model(
-                    images, args.encoder_model
-                ).select(F.col("vec_id").alias("doc_id"), "embedding")
+                vecs = embed_with_model(images, enc).select(
+                    F.col("vec_id").alias("doc_id"), "embedding"
+                )
                 decoded = (
                     images.select("doc_id")
                     .join(vecs, "doc_id", "left")
@@ -1494,18 +1493,16 @@ def main(argv: list[str] | None = None) -> int:
                 )
             else:
                 from .multimodal.imgembed import (
+                    IMG_GRID,
                     image_encoder_build,
                     image_hash_embed,
                 )
-                from .operators.similarity import _read_index_params
 
                 # commit the feature space the semantic tier runs in
-                # (the encoder-artifact discipline: index markers and
+                # (the encoder-artifact discipline: index params and
                 # worker caches key on it)
-                enc = f"{args.work_dir}/image_encoder"
-                image_encoder_build(spark, enc)
-                grid = int(_read_index_params(spark, enc)["grid"])
-                decoded = image_hash_embed(images, grid=grid)
+                image_encoder_build(spark, f"{args.work_dir}/image_encoder")
+                decoded = image_hash_embed(images, grid=IMG_GRID)
             decoded.write.mode("overwrite").parquet(
                 f"{args.work_dir}/image_hashes"
             )
@@ -1623,14 +1620,14 @@ def main(argv: list[str] | None = None) -> int:
             # Python decode pass — the dedup-images discipline)
             enc_dim = 64
             if args.encoder_model is not None:
+                from .operators.artifact_manifest import artifact_open
                 from .operators.embed import AUDIO_KIND
-                from .operators.similarity import _read_index_params
 
-                enc = args.encoder_model
-                enc_got = _read_index_params(spark, enc)
+                enc = artifact_open(spark, args.encoder_model)
+                enc_got = enc.params if enc is not None else {}
                 if enc_got.get("encoder") != AUDIO_KIND:
                     print(
-                        f"--encoder-model at {enc} is "
+                        f"--encoder-model at {args.encoder_model} is "
                         f"{enc_got.get('encoder') or 'missing'}, not an "
                         "audio encoder",
                         file=sys.stderr,
@@ -1638,8 +1635,9 @@ def main(argv: list[str] | None = None) -> int:
                     return 2
                 enc_dim = int(enc_got.get("dim", 64))
             else:
-                enc = f"{args.work_dir}/audio_encoder"
-                audio_encoder_build(spark, enc)
+                enc = audio_encoder_build(
+                    spark, f"{args.work_dir}/audio_encoder"
+                )
             embed_with_model(clips, enc).write.mode("overwrite").parquet(
                 f"{args.work_dir}/audio_features"
             )
@@ -1670,20 +1668,20 @@ def main(argv: list[str] | None = None) -> int:
 
         if args.command == "dedup-video":
             from .multimodal.videoembed import video_encoder_build
+            from .operators.artifact_manifest import artifact_open
             from .operators.embed import VIDEO_KIND, embed_with_model
-            from .operators.similarity import _read_index_params
 
             clips = spark.read.parquet(args.videos_parquet)
             enc_dim = 64
             if args.encoder_model is not None:
-                enc = args.encoder_model
-                enc_got = _read_index_params(spark, enc)
+                enc = artifact_open(spark, args.encoder_model)
+                enc_got = enc.params if enc is not None else {}
                 if enc_got.get("encoder") != VIDEO_KIND:
                     # a non-video encoder over clip payloads would
                     # silently fall to the fake rung (byte-exact-only
                     # matching) — refuse instead
                     print(
-                        f"--encoder-model at {enc} is "
+                        f"--encoder-model at {args.encoder_model} is "
                         f"{enc_got.get('encoder') or 'missing'}, not a "
                         "video encoder",
                         file=sys.stderr,
@@ -1691,8 +1689,9 @@ def main(argv: list[str] | None = None) -> int:
                     return 2
                 enc_dim = int(enc_got.get("dim", 64))
             else:
-                enc = f"{args.work_dir}/video_encoder"
-                video_encoder_build(spark, enc)
+                enc = video_encoder_build(
+                    spark, f"{args.work_dir}/video_encoder"
+                )
             # one demux+decode pass lands as a product parquet; every
             # tier runs off the read-back (the dedup-images discipline)
             embed_with_model(clips, enc).write.mode("overwrite").parquet(
@@ -1760,7 +1759,7 @@ def main(argv: list[str] | None = None) -> int:
                 wordvec_import_vec_file,
                 wordvec_model_import,
             )
-            from .operators.similarity import _read_index_params
+            from .operators.artifact_manifest import artifact_open
 
             scale = args.scale if args.scale is not None else WORDVEC_SCALE
             extra = ""
@@ -1783,12 +1782,11 @@ def main(argv: list[str] | None = None) -> int:
             else:
                 vectors = spark.read.parquet(args.vectors_parquet)
                 wordvec_model_import(vectors, args.model_dir, scale=scale)
-            params = _read_index_params(spark, args.model_dir)
-            from .operators.similarity import _index_table
-
             # manifest-resolved: a RE-import leaves the superseded
-            # generation on disk for one more commit (round 12)
-            n = _index_table(spark, args.model_dir, "vectors").count()
+            # generation on disk for one more commit
+            model = artifact_open(spark, args.model_dir)
+            params = model.params
+            n = model.table("vectors").count()
             print(
                 f"imported terms={n} dim={params['dim']} "
                 f"scale={params['scale']} version={params['version']} "

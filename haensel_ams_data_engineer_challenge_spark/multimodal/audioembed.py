@@ -55,7 +55,12 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.artifact_manifest import artifact_overwrite
+from ..operators.artifact_manifest import (
+    ArtifactSnapshot,
+    artifact_check,
+    artifact_open,
+    artifact_overwrite,
+)
 from ..sources import load_table
 from .armconf import SAMPLE_ARM_MOD
 
@@ -397,15 +402,14 @@ def audio_encoder_build(
     path: str,
     dim: int | None = None,
     grid: int = AUDIO_GRID,
-) -> None:
+) -> ArtifactSnapshot:
     """Commit an ``audio-v1`` encoder artifact at ``path`` (no-op when
-    a matching one exists).  Stateless like ``image-v1``: the artifact
+    a matching one exists) and return the served generation.  Stateless like ``image-v1``: the artifact
     is the params marker pinning the FEATURE SPACE (kind, dim, grid)
     that index markers and worker caches key on; a learned audio
     encoder adds its weight files beside it and rides the same
     commit."""
     from ..operators.embed import AUDIO_KIND
-    from ..operators.similarity import _check_index_params
 
     if dim is None:
         dim = grid
@@ -420,9 +424,10 @@ def audio_encoder_build(
         "grid": grid,
         "ladder": AUD_LADDER,
     }
+    snap = artifact_open(spark, path)
     try:
-        if _check_index_params(spark, path, params):
-            return
+        if artifact_check(snap, params):
+            return snap
     except ValueError:
         pass  # older feature-space identity: builds rebuild in place
     # mix=sum entered the content hash when the stereo mixdown moved
@@ -433,7 +438,9 @@ def audio_encoder_build(
     content = f"audio-v1|dim={dim}|grid={grid}|mix=sum|ladder={AUD_LADDER}"
 
     version = hashlib.md5(content.encode("utf-8")).hexdigest()[:12]
-    artifact_overwrite(spark, path, {}, {**params, "version": version})
+    return artifact_overwrite(
+        spark, path, {}, {**params, "version": version}, snap
+    )
 
 
 class _PreparedAudio:
@@ -514,14 +521,15 @@ def audio_encoder_import(
         "projected": "true",
         "version": version,
     }
-    artifact_overwrite(spark, path, {"weights": rows}, params)
+    artifact_overwrite(
+        spark, path, {"weights": rows}, params, artifact_open(spark, path)
+    )
     return params
 
 
 def audio_embed_frame(
     docs: DataFrame,
-    model_path: str,
-    params: dict,
+    snap: ArtifactSnapshot,
     id_col: str = "doc_id",
     payload_col: str = "payload",
     load_log_dir: str | None = None,
@@ -532,6 +540,7 @@ def audio_embed_frame(
     kind."""
     from ..operators.embed import _worker_encoder_cache
 
+    model_path, params = snap.path, snap.params
     if params.get("ladder") != AUD_LADDER:
         # committed under an older decode surface (pre-G.711): the
         # same mu-law bytes would embed differently — refuse loudly
@@ -545,6 +554,7 @@ def audio_embed_frame(
     version = params.get("version", "1")
     projected = params.get("projected") == "true"
     proj_dim = int(params.get("dim", grid))
+    weights = snap.files("weights") if projected else []
     src = docs.select(
         F.col(id_col).alias("vec_id"), F.col(payload_col).alias("__p")
     )
@@ -559,7 +569,8 @@ def audio_embed_frame(
                 from ..operators.embed import load_projection_matrix
 
                 enc = _PreparedAudio(
-                    grid, load_projection_matrix(model_path, proj_dim, grid)
+                    grid,
+                    load_projection_matrix(model_path, weights, proj_dim, grid),
                 )
             else:
                 enc = _PreparedAudio(grid)

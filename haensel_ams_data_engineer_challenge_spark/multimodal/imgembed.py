@@ -55,12 +55,14 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.artifact_manifest import artifact_overwrite
-from ..operators.embed import IMAGE_KIND, _worker_encoder_cache
-from ..operators.similarity import (
-    EMBEDDING_DIM,
-    _check_index_params,
+from ..operators.artifact_manifest import (
+    ArtifactSnapshot,
+    artifact_check,
+    artifact_open,
+    artifact_overwrite,
 )
+from ..operators.embed import IMAGE_KIND, _worker_encoder_cache
+from ..operators.similarity import EMBEDDING_DIM
 from .phash import (
     _fake_grays,
     box_grays,
@@ -116,9 +118,10 @@ def image_encoder_build(
     path: str,
     dim: int = EMBEDDING_DIM,
     grid: int = IMG_GRID,
-) -> None:
+) -> ArtifactSnapshot:
     """Commit an ``image-v1`` encoder artifact at ``path`` (no-op when
-    a matching one exists — the encoder_model_build discipline).
+    a matching one exists — the encoder_model_build discipline) and
+    return the served generation.
 
     The reference feature extractor is stateless (no trained tables),
     so the artifact is the params marker itself: it pins the FEATURE
@@ -137,9 +140,10 @@ def image_encoder_build(
         "grid": grid,
         "ladder": IMG_LADDER,
     }
+    snap = artifact_open(spark, path)
     try:
-        if _check_index_params(spark, path, params):
-            return
+        if artifact_check(snap, params):
+            return snap
     except ValueError:
         # a committed artifact under an OLDER feature-space identity
         # (e.g. the pre-r13 png-only ladder, round 13): a BUILD call
@@ -151,7 +155,9 @@ def image_encoder_build(
     version = hashlib.md5(content.encode("utf-8")).hexdigest()[:12]
     # a zero-table manifest: the commit IS the params (round 12 —
     # unified artifact protocol; weight files would ride as tables)
-    artifact_overwrite(spark, path, {}, {**params, "version": version})
+    return artifact_overwrite(
+        spark, path, {}, {**params, "version": version}, snap
+    )
 
 
 class _PreparedImage:
@@ -239,33 +245,37 @@ def image_encoder_import(
         "projected": "true",
         "version": version,
     }
-    artifact_overwrite(spark, path, {"weights": rows}, params)
+    artifact_overwrite(
+        spark, path, {"weights": rows}, params, artifact_open(spark, path)
+    )
     return params
 
 
-def _load_prepared_image(model_path: str, grid: int, dim: int) -> _PreparedImage:
+def _load_prepared_image(
+    model_path: str, names: list[str], grid: int, dim: int
+) -> _PreparedImage:
     """Worker-side load of a projected image encoder's weight matrix
-    (shared ``load_projection_matrix``: pyarrow, manifest-resolved,
-    torn-table refusal)."""
+    from the committed ``weights`` files ``names`` (shared
+    ``load_projection_matrix``: pyarrow, torn-table refusal)."""
     from ..operators.embed import load_projection_matrix
 
     return _PreparedImage(
-        grid, load_projection_matrix(model_path, dim, grid * grid)
+        grid, load_projection_matrix(model_path, names, dim, grid * grid)
     )
 
 
 def image_embed_frame(
     docs: DataFrame,
-    model_path: str,
-    params: dict,
+    snap: ArtifactSnapshot,
     id_col: str = "doc_id",
     payload_col: str = "payload",
     load_log_dir: str | None = None,
 ) -> DataFrame:
     """The image branch of ``embed_with_model`` (which validates the
-    marker and dispatches here): (vec_id, embedding array<double>)
-    from an image-payload frame through one Arrow mapInPandas —
-    same output contract as every text encoder kind."""
+    snapshot's params and dispatches here): (vec_id, embedding
+    array<double>) from an image-payload frame through one Arrow
+    mapInPandas — same output contract as every text encoder kind."""
+    model_path, params = snap.path, snap.params
     if params.get("ladder") != IMG_LADDER:
         # an artifact committed under an older pixel ladder (png-only)
         # promises a different vector for the same JPEG bytes: serving
@@ -280,6 +290,7 @@ def image_embed_frame(
     version = params.get("version", "1")
     projected = params.get("projected") == "true"
     proj_dim = int(params.get("dim", grid * grid))
+    weights = snap.files("weights") if projected else []
     src = docs.select(
         F.col(id_col).alias("vec_id"), F.col(payload_col).alias("__p")
     )
@@ -291,7 +302,9 @@ def image_embed_frame(
         enc = cache.get(cache_key)
         if enc is None:
             if projected:
-                enc = _load_prepared_image(model_path, grid, proj_dim)
+                enc = _load_prepared_image(
+                    model_path, weights, grid, proj_dim
+                )
             else:
                 enc = _PreparedImage(grid)
             cache[cache_key] = enc

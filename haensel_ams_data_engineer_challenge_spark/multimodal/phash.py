@@ -63,8 +63,8 @@ AHASH_GRID = 8
 #: pigeonhole guarantee only covers hamming <= 3 — a pair at distance
 #: 4-10 is found iff its differing bits leave at least one band
 #: untouched, which for the re-encode/resize regime (localized bit
-#: flips) is the common case but NOT a guarantee.  tools/
-#: phash_knob_bench.py measures the actual recall knee at t=10.
+#: flips) is the common case but NOT a guarantee.  BASELINE.md (phash
+#: max_hamming knob) records the measured recall knee at t=10.
 PHASH_MAX_HAMMING = 10
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -548,7 +548,7 @@ def phash_dup_pairs(
       4..max_hamming whose differing bits spread across all four
       bands is missed.  The re-encode/resize regime flips SPATIALLY
       CLUSTERED bits, which is why measured recall at the t=10
-      default stays high (tools/phash_knob_bench.py).
+      default stays high (BASELINE.md, round-13 banding layouts).
     - 8: 8-bit bands (one hash row each) — hamming <= 7 is
       pigeonhole-GUARANTEED to collide, covering most of the t=10
       default with a hard guarantee (measured: resize recall 0.78 ->

@@ -57,7 +57,12 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.artifact_manifest import artifact_overwrite
+from ..operators.artifact_manifest import (
+    ArtifactSnapshot,
+    artifact_check,
+    artifact_open,
+    artifact_overwrite,
+)
 from ..sources import load_table
 from .armconf import SAMPLE_ARM_MOD
 from .imgembed import image_features
@@ -585,14 +590,13 @@ def video_encoder_build(
     dim: int | None = None,
     grid: int = VID_GRID,
     frames: int = VID_FRAMES,
-) -> None:
+) -> ArtifactSnapshot:
     """Commit a ``video-v1`` encoder artifact at ``path`` (no-op when
-    a matching one exists).  Stateless like image-v1/audio-v1: the
+    a matching one exists) and return the served generation.  Stateless like image-v1/audio-v1: the
     artifact is the params marker pinning the FEATURE SPACE (kind,
     dim, grid, sampled-frame budget, pooling, decode ladder) that
     index markers and worker caches key on."""
     from ..operators.embed import VIDEO_KIND
-    from ..operators.similarity import _check_index_params
 
     if dim is None:
         dim = grid * grid
@@ -610,9 +614,10 @@ def video_encoder_build(
         "frames": frames,
         "ladder": VID_LADDER,
     }
+    snap = artifact_open(spark, path)
     try:
-        if _check_index_params(spark, path, params):
-            return
+        if artifact_check(snap, params):
+            return snap
     except ValueError:
         pass  # older feature-space identity: builds rebuild in place
     content = (
@@ -620,7 +625,9 @@ def video_encoder_build(
         f"|pool=sum|ladder={VID_LADDER}"
     )
     version = hashlib.md5(content.encode("utf-8")).hexdigest()[:12]
-    artifact_overwrite(spark, path, {}, {**params, "version": version})
+    return artifact_overwrite(
+        spark, path, {}, {**params, "version": version}, snap
+    )
 
 
 class _PreparedVideo:
@@ -651,8 +658,7 @@ class _PreparedVideo:
 
 def video_embed_frame(
     docs: DataFrame,
-    model_path: str,
-    params: dict,
+    snap: ArtifactSnapshot,
     id_col: str = "doc_id",
     payload_col: str = "payload",
     load_log_dir: str | None = None,
@@ -662,6 +668,7 @@ def video_embed_frame(
     mapInPandas — the same output contract as every encoder kind."""
     from ..operators.embed import _worker_encoder_cache
 
+    model_path, params = snap.path, snap.params
     if params.get("ladder") != VID_LADDER:
         raise ValueError(
             f"video encoder at {model_path} was committed under decode "

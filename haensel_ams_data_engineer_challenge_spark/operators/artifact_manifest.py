@@ -1,115 +1,185 @@
-"""Manifest-committed MULTI-TABLE index artifacts (round 12, r11
-verdict task 4): one commit protocol for every artifact.
+"""Manifest-committed multi-table artifacts: the on-disk format of
+every persisted index (IVF, LSH, MinHash bands), encoder and model (NB,
+LM), its one reader and its mutations.
 
-Round 11 gave the attribution sink the manifest protocol
-(:mod:`.manifest_sink`) precisely to remove the reader-gap class of
-bug swap/marker commits carry; the index artifacts (ANN IVF/LSH,
-MinHash bands) kept the OLDER marker+version-bump protocol with its
-own compaction swaps — two protocols doing the same job, one of them
-retaining the bug the other was built to kill (a reader mid-compaction
-could observe a marker-less or half-swapped store).  This module ports
-the index artifacts onto manifests:
+Layout:
 
 - data files live under ``{path}/{table}/part-*.parquet`` (one subdir
   per logical table: ``bands``; ``assignments``/``centroids``/
-  ``vectors``);
-- ``{path}/_manifest_v{N}.json`` is the ONLY thing a reader resolves:
+  ``vectors``; ``terms``/``classes``; ...);
+- ``{path}/_manifest_v{N}.json`` is the commit record:
   ``{"params": {...}, "tables": {t: {"files": [...], "schema":
-  {...}}}}`` — the params marker and the file set commit together in
-  one atomic rename (no params-written-last ordering to reason about);
-- every mutation (build/overwrite, append, compact) stages its part
-  files in a private ``.stage_*`` dir, moves exactly those in, and
-  commits manifest vN+1 — a mid-compaction reader that resolved vN
-  keeps a complete table set (files survive one further generation,
-  the sink's retention rule, reclaimed by :func:`artifact_vacuum`);
-- crash matrix = the sink's: die before the move → stage orphans
-  (vacuumed); after the move, before the commit → invisible data-file
-  orphans (vacuumed); after the commit → committed.
+  {...}}}}`` — the params and the file set commit together in one
+  atomic rename.
 
-LEGACY artifacts (params parquet table + bare table dirs, rounds
-6-11) stay readable: resolution falls back to the old layout, and the
-first mutating operation ADOPTS them — current table files become the
-first manifest's content, the legacy params ride into the manifest
-body, and the legacy ``params`` dir is deleted under the same lease
-(two sources of truth would diverge).
+Reading.  :func:`artifact_open` is the one read entry point: it lists
+the artifact root once, reads the latest manifest, and returns an
+:class:`ArtifactSnapshot` — the version, the params and each table's
+committed file list.  An operation opens ONE snapshot and serves
+every table, param and hyperparameter check from it, so a request
+never pairs one generation's assignments with another's centroids.
+Worker closures (the encoder seam) receive the snapshot's file lists;
+workers never resolve a manifest themselves, so they encode with the
+generation the driver validated.  Files outside the latest manifest
+(a crashed commit's orphans, a superseded generation kept for its
+readers) are never read.
 
-Single-writer per artifact is enforced by the sink's heartbeat lease
-(:func:`.sinks.hold_writer_lease`); readers take no lease.
+Mutating.  Build/overwrite, append and compact run under the sink's
+heartbeat writer lease (:func:`.sinks.hold_writer_lease`; readers take
+no lease).  A mutation names the snapshot it was computed from; under
+the lease it lists the root once, and if another generation committed
+since, it raises :class:`.sinks.ConcurrentWriterError` and leaves the
+artifact unchanged.  Otherwise it vacuums from that same listing,
+stages its part files in a private ``.stage_*`` dir, moves exactly
+those in, and commits manifest vN+1.  A reader that resolved vN keeps
+a complete table set: files survive one further generation (or the
+retention floor), the sink's rule, reclaimed by the vacuum.  Crash
+matrix = the sink's: die before the move → stage orphans (vacuumed);
+after the move, before the commit → invisible data-file orphans
+(vacuumed); after the commit → committed.
+
+LEGACY artifacts (a ``params`` parquet table + bare table dirs) are
+resolved by the same :func:`artifact_open`: with no manifest, each
+table is its dir's data files and the params are the ``params`` table
+(read only when the listing shows one).  The first mutation ADOPTS
+such an artifact: its files become committed content, its params ride
+into the manifest body, and the ``params`` dir is deleted under the
+same lease.  No code writes the legacy layout.
 """
 
 from __future__ import annotations
 
 import re
+import time
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..session import try_read_parquet
 from .manifest_sink import (
+    _MANIFEST_RE,
     _commit_json,
     _data_files,
     _fs,
     _jpath,
     _list_names,
+    _manifest_name,
     _manifest_versions,
     _read_manifest,
 )
-from .sinks import hold_writer_lease
+from .sinks import ConcurrentWriterError, hold_writer_lease
+
+#: a legacy table dir name (hidden, underscore and file names excluded)
+_TABLE_DIR_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9_]*$")
 
 
-def artifact_resolve(
+@dataclass(frozen=True)
+class ArtifactSnapshot:
+    """One resolved generation of the artifact at ``path``.
+
+    ``version`` is the manifest version (0 for the legacy layout);
+    ``params`` the committed params (string values); ``tables`` maps
+    each table to ``{"files": [names], "schema": json}`` (schema None
+    for a legacy table, whose files carry it)."""
+
+    spark: SparkSession
+    path: str
+    version: int
+    params: dict
+    tables: dict
+
+    def files(self, table: str) -> list[str]:
+        """Committed file names of ``table``, relative to
+        ``{path}/{table}``."""
+        entry = self.tables.get(table)
+        if entry is None:
+            raise ValueError(
+                f"artifact at {self.path} has no table {table!r} "
+                f"(has: {sorted(self.tables)})"
+            )
+        return list(entry["files"])
+
+    def table(self, table: str) -> DataFrame:
+        """Exactly the committed files of ``table``; an empty committed
+        file list reads as an empty frame with the recorded schema."""
+        paths = [f"{self.path}/{table}/{n}" for n in self.files(table)]
+        raw = self.tables[table]["schema"]
+        if raw is None:
+            return self.spark.read.parquet(*paths)
+        schema = StructType.fromJson(raw)
+        if not paths:
+            from ..session import local_frame
+
+            return local_frame(self.spark, [], schema)
+        return self.spark.read.schema(schema).parquet(*paths)
+
+
+def _open(
     spark: SparkSession, path: str
-) -> tuple[int, dict] | None:
-    """(version, manifest) of the highest committed ARTIFACT manifest,
-    or None when the path has never been manifest-committed (legacy
-    layout or empty)."""
-    versions = _manifest_versions(_list_names(spark, path))
-    if not versions:
-        return None
-    v = versions[-1]
-    man = _read_manifest(spark, path, v)
-    if "tables" not in man:
-        raise ValueError(
-            f"{path} holds a SINK manifest, not an index-artifact one "
-            "— these layouts must not share a directory"
+) -> tuple[list[str], ArtifactSnapshot | None]:
+    """(root listing, snapshot) from ONE listing of the artifact root."""
+    names = _list_names(spark, path)
+    versions = _manifest_versions(names)
+    if versions:
+        man = _read_manifest(spark, path, versions[-1])
+        if "tables" not in man:
+            raise ValueError(
+                f"{path} holds a SINK manifest, not an artifact one — "
+                "these layouts must not share a directory"
+            )
+        return names, ArtifactSnapshot(
+            spark, path, versions[-1], dict(man["params"]), man["tables"]
         )
-    return v, man
-
-
-def artifact_params(spark: SparkSession, path: str) -> dict:
-    """The committed params from the latest artifact manifest ({} when
-    none) — manifest-first identity resolution; legacy fallback lives
-    in similarity._read_index_params."""
-    got = artifact_resolve(spark, path)
-    return dict(got[1]["params"]) if got is not None else {}
-
-
-def artifact_table(
-    spark: SparkSession, path: str, table: str
-) -> DataFrame | None:
-    """Manifest-resolved read of one table: EXACTLY the committed
-    files.  None when the artifact has no manifest (caller falls back
-    to the legacy layout); an empty committed file list returns an
-    empty frame with the recorded schema."""
-    got = artifact_resolve(spark, path)
-    if got is None:
-        return None
-    _, man = got
-    entry = man["tables"].get(table)
-    if entry is None:
-        raise ValueError(
-            f"artifact at {path} has no table {table!r} "
-            f"(has: {sorted(man['tables'])})"
-        )
-    schema = StructType.fromJson(entry["schema"])
-    if not entry["files"]:
-        from ..session import local_frame
-
-        return local_frame(spark, [], schema)
-    return spark.read.schema(schema).parquet(
-        *[f"{path}/{table}/{n}" for n in entry["files"]]
+    # legacy layout: the params table was written LAST, so without one
+    # the dir holds nothing committed (a torn legacy build, or a
+    # manifest build that crashed before its first commit)
+    pfiles = (
+        sorted(_data_files(_list_names(spark, f"{path}/params")))
+        if "params" in names else []
     )
+    if not pfiles:
+        return names, None
+    params = {
+        r["key"]: r["value"]
+        for r in spark.read.parquet(
+            *[f"{path}/params/{n}" for n in pfiles]
+        ).collect()
+    }
+    tables = {}
+    for t in names:
+        if t != "params" and _TABLE_DIR_RE.match(t):
+            files = sorted(_data_files(_list_names(spark, f"{path}/{t}")))
+            if files:
+                tables[t] = {"files": files, "schema": None}
+    return names, ArtifactSnapshot(spark, path, 0, params, tables)
+
+
+def artifact_open(spark: SparkSession, path: str) -> ArtifactSnapshot | None:
+    """The latest committed generation of the artifact at ``path``, or
+    None when the path is absent or holds nothing committed."""
+    return _open(spark, path)[1]
+
+
+def artifact_check(snap: ArtifactSnapshot | None, expect: dict) -> bool:
+    """True when ``snap`` holds committed params matching ``expect``;
+    False when nothing is committed; ValueError when the artifact was
+    built differently (silently serving an artifact trained with other
+    hyperparameters would change results without any visible signal).
+
+    Subset match on ``expect``'s keys: bookkeeping keys like the
+    append-bumped ``version`` ride in the same params without breaking
+    the check."""
+    got = snap.params if snap is not None else {}
+    if not got:
+        return False
+    exp = {k: str(v) for k, v in expect.items()}
+    if {k: got.get(k) for k in exp} != exp:
+        raise ValueError(
+            f"artifact at {snap.path} was built with {got}; caller "
+            f"expects {exp} — use a different path or delete the artifact"
+        )
+    return True
 
 
 def _stage_table(
@@ -138,107 +208,119 @@ def _stage_table(
     return staged, df.schema.jsonValue()
 
 
-def artifact_vacuum(
-    spark: SparkSession, path: str, min_retention_minutes: float = 0.0
+def _vacuum(
+    snap: ArtifactSnapshot, names: list[str], min_retention_minutes: float
 ) -> int:
     """Delete table files referenced by NEITHER the latest NOR the
     previous manifest, orphan staging dirs, stale manifest tmp files,
-    and manifests older than the previous.  The sink vacuum's rules
-    over the table-dir layout; MUST run under the writer lease (the
-    mutating ops call it on entry).
+    and manifests older than the previous — over the listing and
+    snapshot the caller resolved under its lease.
 
-    ``min_retention_minutes`` > 0 adds the sink vacuum's TIME floor
-    (round 13): any superseded manifest modified within the floor is
-    kept with every file it references, so a reader that resolved it
-    before two quick mutations still scans a complete artifact."""
-    names = _list_names(spark, path)
+    ``min_retention_minutes`` > 0 adds the sink vacuum's TIME floor:
+    any superseded manifest modified within the floor is kept with
+    every file it references, so a reader that resolved it before two
+    quick mutations still scans a complete artifact."""
+    spark, path = snap.spark, snap.path
     versions = _manifest_versions(names)
     if not versions:
         return 0
     keep_versions = set(versions[-2:])
+    jvm, fs = _fs(spark, path)
     if min_retention_minutes > 0:
-        import time
-
-        jvm0, fs0 = _fs(spark, path)
         floor_ms = (time.time() - min_retention_minutes * 60.0) * 1000.0
         for v in versions[:-2]:
-            st = fs0.getFileStatus(
-                _jpath(jvm0, f"{path}/_manifest_v{v:012d}.json")
-            )
+            st = fs.getFileStatus(_jpath(jvm, f"{path}/{_manifest_name(v)}"))
             if st.getModificationTime() >= floor_ms:
                 keep_versions.add(v)
     referenced: set[str] = set()  # "table/name"
     tables: set[str] = set()
     for v in keep_versions:
-        man = _read_manifest(spark, path, v)
-        for t, entry in man.get("tables", {}).items():
+        kept = (
+            snap.tables if v == snap.version
+            else _read_manifest(spark, path, v).get("tables", {})
+        )
+        for t, entry in kept.items():
             tables.add(t)
             referenced.update(f"{t}/{n}" for n in entry["files"])
-    jvm, fs = _fs(spark, path)
     deleted = 0
     for n in names:
         if n.startswith((".manifest_tmp_", ".stage_")):
             fs.delete(_jpath(jvm, f"{path}/{n}"), True)
             deleted += 1
             continue
-        mm = re.match(r"^_manifest_v(\d{12})\.json$", n)
+        mm = _MANIFEST_RE.match(n)
         if mm and int(mm.group(1)) not in keep_versions:
             fs.delete(_jpath(jvm, f"{path}/{n}"), False)
             deleted += 1
     for t in tables:
-        for n in _list_names(spark, f"{path}/{t}"):
-            if n in _data_files([n]) and f"{t}/{n}" not in referenced:
+        for n in _data_files(_list_names(spark, f"{path}/{t}")):
+            if f"{t}/{n}" not in referenced:
                 fs.delete(_jpath(jvm, f"{path}/{t}/{n}"), False)
                 deleted += 1
     return deleted
 
 
-def _adopt_legacy(
-    spark: SparkSession, path: str, tables: tuple[str, ...]
-) -> tuple[dict, dict]:
-    """(adopted_tables, legacy_params) for a pre-manifest artifact:
-    every current data file of each present legacy table dir becomes
-    committed content; the legacy params parquet (if any) rides into
-    the manifest body and its dir is DELETED by the caller's commit
-    path (one source of truth)."""
-    adopted: dict = {}
-    for t in tables:
-        names = sorted(_data_files(_list_names(spark, f"{path}/{t}")))
-        if names:
-            df = spark.read.parquet(f"{path}/{t}")
-            adopted[t] = {"files": names, "schema": df.schema.jsonValue()}
-    pdf = try_read_parquet(spark, f"{path}/params")
-    legacy_params = (
-        {} if pdf is None else {r["key"]: r["value"] for r in pdf.collect()}
-    )
-    return adopted, legacy_params
+def artifact_vacuum(
+    spark: SparkSession, path: str, min_retention_minutes: float = 0.0
+) -> int:
+    """Standalone :func:`_vacuum` over a fresh listing; MUST run under
+    the writer lease (every mutation vacuums on entry by itself)."""
+    names, snap = _open(spark, path)
+    return 0 if snap is None else _vacuum(snap, names, min_retention_minutes)
 
 
-def _drop_legacy_marker(spark: SparkSession, path: str) -> None:
-    jvm, fs = _fs(spark, path)
-    fs.delete(_jpath(jvm, f"{path}/params"), True)
-
-
-def artifact_adopt(
-    spark: SparkSession, path: str, adopt_tables: tuple[str, ...]
-) -> bool:
-    """Upgrade a LEGACY artifact in place: commit a first manifest over
-    its current table files and params, then drop the legacy marker.
-    True when a manifest exists afterwards (already-manifest or
-    adopted); False when there was nothing to adopt."""
-    with hold_writer_lease(spark, path):
-        if artifact_resolve(spark, path) is not None:
-            return True
-        base, legacy = _adopt_legacy(spark, path, adopt_tables)
-        if not base:
-            return False
-        _commit_json(
-            spark, path, 1,
-            {"version": 1, "params": legacy, "tables": base},
+def _relist(
+    spark: SparkSession, path: str, base: ArtifactSnapshot | None
+) -> tuple[list[str], ArtifactSnapshot | None]:
+    """The artifact as it stands under the lease; ConcurrentWriterError
+    when a generation other than ``base`` (None = nothing committed)
+    is latest — the mutation was computed from stale reads."""
+    names, cur = _open(spark, path)
+    want = base.version if base is not None else 0
+    have = cur.version if cur is not None else 0
+    if have != want:
+        raise ConcurrentWriterError(
+            f"artifact at {path} is at v{have}, but this mutation was "
+            f"computed from v{want}; re-open it and retry"
         )
-        _drop_legacy_marker(spark, path)
-        spark.catalog.refreshByPath(path)
-        return True
+    return names, cur
+
+
+def _entries(snap: ArtifactSnapshot) -> dict:
+    """Manifest table entries of ``snap``; a legacy table's schema is
+    read from its files (its adoption commit records it)."""
+    return {
+        t: {
+            "files": list(e["files"]),
+            "schema": e["schema"] if e["schema"] is not None
+            else snap.table(t).schema.jsonValue(),
+        }
+        for t, e in snap.tables.items()
+    }
+
+
+def _commit(
+    spark: SparkSession,
+    path: str,
+    names: list[str],
+    version: int,
+    params: dict,
+    tables: dict,
+) -> ArtifactSnapshot:
+    """Commit manifest ``version`` and drop a legacy ``params`` dir the
+    listing showed (one source of truth); returns the committed
+    generation as a snapshot."""
+    params = {k: str(v) for k, v in params.items()}
+    _commit_json(
+        spark, path, version,
+        {"version": version, "params": params, "tables": tables},
+    )
+    if "params" in names:
+        jvm, fs = _fs(spark, path)
+        fs.delete(_jpath(jvm, f"{path}/params"), True)
+    # same-session readers may hold a cached listing of the path
+    spark.catalog.refreshByPath(path)
+    return ArtifactSnapshot(spark, path, version, params, tables)
 
 
 def artifact_overwrite(
@@ -246,79 +328,50 @@ def artifact_overwrite(
     path: str,
     tables: dict[str, DataFrame],
     params: dict,
-) -> None:
+    base: ArtifactSnapshot | None,
+) -> ArtifactSnapshot:
     """Build/rebuild: stage every table, move the files in, commit a
-    manifest listing ONLY them (+ ``params``).  Supersedes any prior
-    generation atomically — a reader holding the previous manifest
-    keeps its complete file set for one more generation; there is no
-    marker-tear window (the force-rebuild dance the marker protocol
-    needed is just... a commit)."""
+    manifest listing ONLY them (+ ``params``).  ``base`` is the
+    generation the build was decided from (None: nothing committed).
+    Supersedes it atomically — a reader holding it keeps its complete
+    file set for one more generation.  Returns the new generation."""
     with hold_writer_lease(spark, path):
-        got = artifact_resolve(spark, path)
-        version = got[0] if got is not None else 0
-        if version > 0:
-            artifact_vacuum(spark, path)
-        body_tables = {}
+        names, cur = _relist(spark, path, base)
+        if cur is not None:
+            _vacuum(cur, names, 0.0)
+        body = {}
         for t, df in tables.items():
             files, schema = _stage_table(spark, df, path, t)
-            body_tables[t] = {"files": files, "schema": schema}
-        _commit_json(
-            spark, path, version + 1,
-            {
-                "version": version + 1,
-                "params": {k: str(v) for k, v in params.items()},
-                "tables": body_tables,
-            },
-        )
-        _drop_legacy_marker(spark, path)
-        spark.catalog.refreshByPath(path)
+            body[t] = {"files": files, "schema": schema}
+        version = cur.version if cur is not None else 0
+        return _commit(spark, path, names, version + 1, params, body)
 
 
 def artifact_append(
-    spark: SparkSession,
-    path: str,
+    base: ArtifactSnapshot,
     tables: dict[str, DataFrame],
     params: dict,
-    adopt_tables: tuple[str, ...] = (),
-) -> None:
-    """Append rows to some tables of a committed artifact: stage, move,
-    commit vN+1 listing old + new files with the (caller-updated)
-    ``params``.  Tables not in ``tables`` carry over unchanged.  A
-    LEGACY artifact (no manifest) is adopted first via
-    ``adopt_tables`` — its current files become base content and its
-    params table is absorbed then deleted."""
+) -> ArtifactSnapshot:
+    """Append rows to some tables of the generation ``base`` (the one
+    the rows were computed against): stage, move, commit vN+1 listing
+    old + new files with the (caller-updated) ``params``.  Tables not
+    in ``tables`` carry over unchanged; a legacy ``base`` is adopted.
+    Returns the new generation."""
+    spark, path = base.spark, base.path
     with hold_writer_lease(spark, path):
-        got = artifact_resolve(spark, path)
-        if got is not None:
-            version, man = got
-            artifact_vacuum(spark, path)
-            base = {
-                t: dict(entry) for t, entry in man["tables"].items()
-            }
-        else:
-            base, _legacy = _adopt_legacy(spark, path, adopt_tables)
-            version = 0
-            if not base:
-                raise ValueError(
-                    f"no committed artifact at {path} to append to"
-                )
+        names, cur = _relist(spark, path, base)
+        if cur is None:
+            raise ValueError(f"no committed artifact at {path} to append to")
+        _vacuum(cur, names, 0.0)
+        body = _entries(cur)
         for t, df in tables.items():
             files, schema = _stage_table(spark, df, path, t)
-            prev = base.get(t, {"files": [], "schema": schema})
-            base[t] = {
+            prev = body.get(t, {"files": [], "schema": schema})
+            body[t] = {
                 "files": sorted(prev["files"] + files),
                 "schema": prev["schema"] if prev["files"] else schema,
             }
-        _commit_json(
-            spark, path, version + 1,
-            {
-                "version": version + 1,
-                "params": {k: str(v) for k, v in params.items()},
-                "tables": base,
-            },
-        )
-        _drop_legacy_marker(spark, path)
-        spark.catalog.refreshByPath(path)
+        return _commit(spark, path, names, cur.version + 1, params, body)
 
 
 def artifact_compact(
@@ -329,40 +382,31 @@ def artifact_compact(
 ) -> int:
     """Reader-stable compaction of EVERY table: rewrite each table's
     committed rows as ``target_partitions`` fresh files, one manifest
-    commit covering all of them.  Returns total rows compacted.  No
-    marker tear, no swap window: a reader holding the previous
-    manifest keeps complete tables (files survive one generation —
-    or for ``min_retention_minutes``, whichever is longer)."""
+    commit covering all of them (a legacy artifact is adopted by the
+    same commit).  Returns total rows compacted.  Compaction moves
+    rows without interpreting them, so it resolves the artifact under
+    its own lease.  A reader holding the previous manifest keeps
+    complete tables (files survive one generation — or for
+    ``min_retention_minutes``, whichever is longer)."""
     n_parts = target_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
     total = 0
     with hold_writer_lease(spark, path):
-        got = artifact_resolve(spark, path)
-        if got is None:
-            raise ValueError(f"no committed artifact manifest at {path}")
-        version, man = got
-        artifact_vacuum(spark, path, min_retention_minutes)
-        body_tables = {}
-        for t, entry in man["tables"].items():
+        names, cur = _open(spark, path)
+        if cur is None or not cur.tables:
+            raise ValueError(f"no committed artifact at {path}")
+        _vacuum(cur, names, min_retention_minutes)
+        body = {}
+        for t, entry in _entries(cur).items():
             if not entry["files"]:
-                body_tables[t] = entry
+                body[t] = entry
                 continue
-            rows = spark.read.schema(
-                StructType.fromJson(entry["schema"])
-            ).parquet(*[f"{path}/{t}/{n}" for n in entry["files"]])
+            rows = cur.table(t)
             total += rows.count()
             files, schema = _stage_table(
                 spark, rows.repartition(int(n_parts)), path, t
             )
-            body_tables[t] = {"files": files, "schema": schema}
-        _commit_json(
-            spark, path, version + 1,
-            {
-                "version": version + 1,
-                "params": man["params"],
-                "tables": body_tables,
-            },
-        )
-        spark.catalog.refreshByPath(path)
+            body[t] = {"files": files, "schema": schema}
+        _commit(spark, path, names, cur.version + 1, cur.params, body)
     return total

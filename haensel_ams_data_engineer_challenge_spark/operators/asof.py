@@ -383,8 +383,8 @@ def _carry_hot_hybrid(
 #: (sessions+conversions) routes through the chunked hybrid.  Sized to
 #: a comfortable single-task sort (~100k rows) — below it the plain
 #: window is faster; far above it (bot/test users at 100 TB) the single
-#: partition is THE straggler, measured in tools/asof_skew_bench.py /
-#: BASELINE.md.  ``run_pipeline`` turns detection on with this value by
+#: partition is THE straggler, measured in BASELINE.md.
+#: ``run_pipeline`` turns detection on with this value by
 #: default (its ``hot_user_threshold`` default; pinned by
 #: test_hot_user_default_on_and_results_invariant), paying a fixed
 #: extra aggregation pass, a localCheckpoint and an isEmpty probe on

@@ -412,9 +412,9 @@ def nb_model_build(
     feature: str = "search_tokens",
 ) -> tuple[DataFrame, DataFrame]:
     """Round-9: the classifier as a PERSISTED ARTIFACT — train once on
-    a labeled slice, save under the commit-marker protocol
-    (similarity.py: ``{path}/terms`` + ``{path}/classes`` first,
-    ``{path}/params`` LAST), score any number of later batches with
+    a labeled slice, commit the ``terms`` and ``classes`` tables with
+    the params in one manifest (artifact_manifest.py), score any
+    number of later batches with
     :func:`nb_classify_model`.  The production shape: CCNet/DCLM train
     their quality/langid classifier once and apply it across every
     ingestion run; retraining per batch would both waste the training
@@ -429,12 +429,16 @@ def nb_model_build(
     doubles exactly, so scores are bit-identical to the training
     session's.
     """
-    from .artifact_manifest import artifact_overwrite
-    from .similarity import _check_index_params, _index_table
+    from .artifact_manifest import (
+        artifact_check,
+        artifact_open,
+        artifact_overwrite,
+    )
 
     spark = train_docs.sparkSession
     params = {"kind": "nb", "label_col": label_col, "feature": feature}
-    if not _check_index_params(spark, path, params):
+    snap = artifact_open(spark, path)
+    if not artifact_check(snap, params):
         src = (
             F.col(tokens_col) if tokens_col is not None
             else search_tokens(text_col)
@@ -453,15 +457,13 @@ def nb_model_build(
         )
         # one atomic manifest commit covers both tables + params
         # (round 12: the index artifacts' protocol, unified here too)
-        artifact_overwrite(
+        snap = artifact_overwrite(
             spark, path,
             {"terms": lnp, "classes": cls},
             {**params, "version": 1},
+            snap,
         )
-    return (
-        _index_table(spark, path, "terms"),
-        _index_table(spark, path, "classes"),
-    )
+    return snap.table("terms"), snap.table("classes")
 
 
 def nb_classify_model(

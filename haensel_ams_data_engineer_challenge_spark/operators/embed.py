@@ -24,7 +24,10 @@ tool ONLY for the model call itself):
   gate;
 - the encoder state loads from the artifact directory ONCE PER PYTHON
   WORKER (module-level cache keyed by (path, version)), never per task
-  or per Arrow batch — pytest pins this with a load log;
+  or per Arrow batch — pytest pins this with a load log.  The driver
+  opens one artifact snapshot and hands its committed file lists to
+  the workers, so every task encodes with the generation the driver
+  validated;
 - encoding runs Arrow-batched over (id, tokens) rows; per-token hash
   work is memoized per worker, so the steady-state cost is one dict
   lookup per token.
@@ -48,12 +51,14 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .retrieval import search_tokens
-from .similarity import (
-    EMBEDDING_DIM,
-    _check_index_params,
-    _read_index_params,
+from .artifact_manifest import (
+    ArtifactSnapshot,
+    artifact_check,
+    artifact_open,
+    artifact_overwrite,
 )
+from .retrieval import search_tokens
+from .similarity import EMBEDDING_DIM
 
 ENCODER_KIND = "synproj-v1"
 
@@ -151,20 +156,20 @@ def encoder_model_build(
     id_col: str = "doc_id",
     text_col: str = "text",
     tokens_col: str | None = None,
-) -> None:
+) -> ArtifactSnapshot:
     """Train and persist the reference encoder artifact (no-op when a
     committed artifact with matching hyperparameters already exists —
-    the nb_model_build discipline).
+    the nb_model_build discipline).  Returns the committed generation.
 
-    Artifact layout (commit-marker protocol, ``params`` LAST):
-    ``{path}/synonyms`` (term, canon), ``{path}/stopterms`` (term —
-    the top ``stop_top_n`` CANONICAL terms by corpus frequency, ties
-    broken on the term string so the list is a total order both
-    engines derive identically), ``{path}/params``.
+    Artifact tables (one manifest commit with the params):
+    ``synonyms`` (term, canon) and ``stopterms`` (term — the top
+    ``stop_top_n`` CANONICAL terms by corpus frequency, ties broken on
+    the term string so the list is a total order both engines derive
+    identically).
 
     The trained tables are broadcast-class by construction (|synonyms|
-    + stop_top_n rows); a real encoder's weight blobs would sit in the
-    same directory and ride the same marker.
+    + stop_top_n rows); a real encoder's weight blobs would ride the
+    same commit as further tables.
     """
     spark = train_docs.sparkSession
     syn = DEFAULT_SYNONYMS if synonyms is None else synonyms
@@ -175,10 +180,9 @@ def encoder_model_build(
         "stop_top_n": stop_top_n,
         "n_synonyms": len(syn),
     }
-    if _check_index_params(spark, path, params):
-        return
-    from .artifact_manifest import artifact_overwrite
-
+    snap = artifact_open(spark, path)
+    if artifact_check(snap, params):
+        return snap
     src = (
         F.col(tokens_col) if tokens_col is not None else search_tokens(text_col)
     )
@@ -220,11 +224,11 @@ def encoder_model_build(
     )
     version = hashlib.md5(content.encode("utf-8")).hexdigest()[:12]
     # one atomic manifest commit: trained tables + params together
-    # (round 12 — the unified artifact protocol)
-    artifact_overwrite(
+    return artifact_overwrite(
         spark, path,
         {"stopterms": stop, "synonyms": syn_df},
         {**params, "version": version},
+        snap,
     )
 
 
@@ -232,7 +236,7 @@ def encoder_model_ensure(
     train_docs: DataFrame,
     path: str,
     **build_kwargs,
-) -> None:
+) -> ArtifactSnapshot:
     """Serve ANY committed supported encoder (synproj-v1 OR
     wordvec-v1) at ``path`` as-is, else
     build one from ``train_docs`` with ``build_kwargs`` — the
@@ -242,20 +246,27 @@ def encoder_model_ensure(
     (``encoder_model_build`` pins exact hyperparameters; that is the
     right check for a caller asserting a specific configuration, the
     wrong one for "use the model at this path").  A committed artifact
-    of a DIFFERENT kind still raises."""
-    spark = train_docs.sparkSession
-    params = _read_index_params(spark, path)
-    if params:
-        if (
-            params.get("kind") == "encoder"
-            and params.get("encoder") in SUPPORTED_ENCODERS
-        ):
-            return
+    of a DIFFERENT kind still raises.  Returns the served generation."""
+    snap = artifact_open(train_docs.sparkSession, path)
+    if snap is not None and snap.params:
+        _check_encoder(snap)
+        return snap
+    return encoder_model_build(train_docs, path, **build_kwargs)
+
+
+def _check_encoder(snap: ArtifactSnapshot) -> dict:
+    """The params of a committed supported encoder; ValueError for an
+    artifact of another kind."""
+    params = snap.params
+    if (
+        params.get("kind") != "encoder"
+        or params.get("encoder") not in SUPPORTED_ENCODERS
+    ):
         raise ValueError(
-            f"artifact at {path} is not a supported encoder "
+            f"artifact at {snap.path} is not a supported encoder "
             f"({', '.join(SUPPORTED_ENCODERS)}): {params}"
         )
-    encoder_model_build(train_docs, path, **build_kwargs)
+    return params
 
 
 # --------------------------------------------------------------------------
@@ -339,74 +350,45 @@ class _PreparedEncoder:
         return [float(acc.get(i, 0)) for i in range(self.dim)]
 
 
-def _worker_table_files(fs, root: str, table: str) -> list[str]:
-    """Resolve an artifact table's data files on a WORKER (no
-    SparkSession): MANIFEST-first — exactly the committed files, so a
-    superseded generation still on disk (one-generation retention) or
-    a crashed commit's orphans are never read — with the legacy bare
-    table-dir glob as fallback for pre-round-12 artifacts."""
-    import json
-    import re
-
-    import pyarrow.fs as pafs
-
-    sel = pafs.FileSelector(root, allow_not_found=True)
-    manifests = sorted(
-        info.path
-        for info in fs.get_file_info(sel)
-        if info.is_file
-        and re.match(
-            r"^_manifest_v\d{12}\.json$", info.path.rsplit("/", 1)[-1]
-        )
-    )
-    if manifests:
-        with fs.open_input_stream(manifests[-1]) as f:
-            body = json.loads(f.read().decode("utf-8"))
-        entry = body.get("tables", {}).get(table)
-        if entry is None:
-            raise FileNotFoundError(
-                f"artifact at {root} has no committed table {table!r}"
-            )
-        return [f"{root}/{table}/{n}" for n in entry["files"]]
-    sub = pafs.FileSelector(f"{root}/{table}", allow_not_found=True)
-    return sorted(
-        info.path
-        for info in fs.get_file_info(sub)
-        if info.is_file and info.path.endswith(".parquet")
-    )
-
-
-def _load_prepared(model_path: str, version: str, dim: int) -> _PreparedEncoder:
-    """Read the artifact tables with pyarrow (the worker has no
-    SparkSession; a real encoder loads its weight files the same way —
-    directly from shared storage).
+def _worker_table(model_path: str, table: str, names: list[str]) -> pd.DataFrame:
+    """One artifact table read on a WORKER (pyarrow — workers have no
+    SparkSession; a real encoder loads its weight files the same way,
+    directly from shared storage): exactly ``names``, the committed
+    files the driver's snapshot resolved.  Workers never resolve a
+    manifest themselves, so a generation committed mid-job is never
+    cached under the version the driver read.
 
     Paths resolve through ``pyarrow.fs.FileSystem.from_uri`` (a plain
     glob is driver-local-filesystem-only and would return zero files
     for hdfs:// or s3:// artifact dirs on every worker), falling back
-    to the local filesystem for scheme-less paths.  Files resolve
-    through the artifact MANIFEST when present."""
+    to the local filesystem for scheme-less paths."""
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
+    if not names:
+        raise FileNotFoundError(
+            f"artifact table missing: {model_path}/{table}"
+        )
     if "://" in model_path:
         fs, root = pafs.FileSystem.from_uri(model_path)
     else:
         fs, root = pafs.LocalFileSystem(), model_path
+    return pd.concat(
+        [
+            pq.read_table(f"{root}/{table}/{n}", filesystem=fs).to_pandas()
+            for n in names
+        ],
+        ignore_index=True,
+    )
 
-    def read_tbl(sub: str) -> pd.DataFrame:
-        files = _worker_table_files(fs, root, sub)
-        if not files:
-            raise FileNotFoundError(
-                f"encoder artifact table missing: {model_path}/{sub}"
-            )
-        return pd.concat(
-            [pq.read_table(f, filesystem=fs).to_pandas() for f in files],
-            ignore_index=True,
-        )
 
-    syn_pdf = read_tbl("synonyms")
-    stop_pdf = read_tbl("stopterms")
+def _load_prepared(
+    model_path: str, files: dict[str, list[str]], dim: int
+) -> _PreparedEncoder:
+    """The reference encoder's synonym and stop tables, read from the
+    committed ``files`` (table -> names) of the driver's snapshot."""
+    syn_pdf = _worker_table(model_path, "synonyms", files["synonyms"])
+    stop_pdf = _worker_table(model_path, "stopterms", files["stopterms"])
     return _PreparedEncoder(
         dict(zip(syn_pdf["term"], syn_pdf["canon"])),
         set(stop_pdf["term"]),
@@ -416,7 +398,7 @@ def _load_prepared(model_path: str, version: str, dim: int) -> _PreparedEncoder:
 
 def embed_with_model(
     docs: DataFrame,
-    model_path: str,
+    model: str | ArtifactSnapshot,
     id_col: str = "doc_id",
     text_col: str = "text",
     tokens_col: str | None = None,
@@ -424,12 +406,16 @@ def embed_with_model(
     payload_col: str = "payload",
 ) -> DataFrame:
     """(vec_id, embedding array<double>) through the persisted encoder
-    artifact at ``model_path`` — the batched model-inference seam.
+    artifact ``model`` — the batched model-inference seam.  ``model``
+    is the artifact dir, or a snapshot of it the calling operation
+    already opened (:func:`.artifact_manifest.artifact_open`), so every
+    embed of one operation encodes with one generation.
 
-    The artifact marker is validated DRIVER-SIDE before any task runs
+    The artifact params are validated DRIVER-SIDE before any task runs
     (kind/encoder pinned; torn or missing artifacts raise here, not as
-    an executor stack trace), and its ``version`` rides into the worker
-    cache key so rebuilt artifacts can never serve a stale cached model.
+    an executor stack trace); the workers receive the snapshot's file
+    lists, and its ``version`` rides into the worker cache key so
+    rebuilt artifacts can never serve a stale cached model.
 
     ``load_log_dir`` (tests only): every ACTUAL artifact load appends a
     marker file there — how pytest pins one-load-per-worker.
@@ -439,19 +425,17 @@ def embed_with_model(
     ``hash_embed``'s, so every embedding consumer (LSH banding,
     SemDeDup, ANN index build, streaming probes) composes unchanged.
     """
-    spark = docs.sparkSession
-    params = _read_index_params(spark, model_path)
-    if not params:
+    snap = (
+        model if isinstance(model, ArtifactSnapshot)
+        else artifact_open(docs.sparkSession, model)
+    )
+    if snap is None or not snap.params:
         raise ValueError(
-            f"no committed encoder artifact at {model_path}; build it "
+            f"no committed encoder artifact at {model}; build it "
             "first (encoder_model_build)"
         )
-    encoder = params.get("encoder")
-    if params.get("kind") != "encoder" or encoder not in SUPPORTED_ENCODERS:
-        raise ValueError(
-            f"artifact at {model_path} is not a supported encoder "
-            f"({', '.join(SUPPORTED_ENCODERS)}): {params}"
-        )
+    params = _check_encoder(snap)
+    encoder = params["encoder"]
     if encoder == IMAGE_KIND:
         # image payloads, not text: the input column is ``payload_col``
         # (binary) and the whole pipeline is one decode+feature
@@ -459,7 +443,7 @@ def embed_with_model(
         from ..multimodal.imgembed import image_embed_frame
 
         return image_embed_frame(
-            docs, model_path, params,
+            docs, snap,
             id_col=id_col, payload_col=payload_col,
             load_log_dir=load_log_dir,
         )
@@ -469,7 +453,7 @@ def embed_with_model(
         from ..multimodal.audioembed import audio_embed_frame
 
         return audio_embed_frame(
-            docs, model_path, params,
+            docs, snap,
             id_col=id_col, payload_col=payload_col,
             load_log_dir=load_log_dir,
         )
@@ -479,7 +463,7 @@ def embed_with_model(
         from ..multimodal.videoembed import video_embed_frame
 
         return video_embed_frame(
-            docs, model_path, params,
+            docs, snap,
             id_col=id_col, payload_col=payload_col,
             load_log_dir=load_log_dir,
         )
@@ -487,6 +471,11 @@ def embed_with_model(
     scale = float(params.get("scale", WORDVEC_SCALE))
     pooling = params.get("pooling", "mean")
     version = params.get("version", "1")
+    model_path = snap.path
+    tables = ("vectors",) if encoder == WORDVEC_KIND else (
+        "synonyms", "stopterms"
+    )
+    files = {t: snap.files(t) for t in tables}
     src = (
         F.col(tokens_col) if tokens_col is not None else search_tokens(text_col)
     )
@@ -501,9 +490,11 @@ def embed_with_model(
         enc = worker_cache.get(cache_key)
         if enc is None:
             if encoder == WORDVEC_KIND:
-                enc = _load_prepared_wordvec(model_path, dim, scale, pooling)
+                enc = _load_prepared_wordvec(
+                    model_path, files, dim, scale, pooling
+                )
             else:
-                enc = _load_prepared(model_path, version, dim)
+                enc = _load_prepared(model_path, files, dim)
             worker_cache[cache_key] = enc
             if load_log_dir is not None:
                 import os
@@ -697,7 +688,8 @@ def wordvec_model_build(
     if pooling == "sif":
         params["sif_scale"] = WORDVEC_SIF_SCALE
         params["sif_a_denom"] = WORDVEC_SIF_A_DENOM
-    if _check_index_params(spark, path, params):
+    snap = artifact_open(spark, path)
+    if artifact_check(snap, params):
         return
     src = (
         F.col(tokens_col) if tokens_col is not None else search_tokens(text_col)
@@ -747,14 +739,14 @@ def wordvec_model_build(
         )
         vectors = vectors.join(freq, "term")
     from ..checkpoint import materialize
-    from .artifact_manifest import artifact_overwrite
 
     # the vector table feeds the content-version agg AND the staged
     # write — truncate the md5 lattice lineage once
     vectors = materialize(vectors)
     version = _wordvec_version(vectors, dim, WORDVEC_SCALE, pooling)
     artifact_overwrite(
-        spark, path, {"vectors": vectors}, {**params, "version": version}
+        spark, path, {"vectors": vectors}, {**params, "version": version},
+        snap,
     )
 
 
@@ -803,28 +795,16 @@ def validate_projection_matrix(
     return rows, collected, n
 
 
-def load_projection_matrix(model_path: str, dim: int, inner: int):
-    """Worker-side load of an imported projection's weight matrix
-    (pyarrow — workers have no SparkSession; manifest-resolved like
-    every artifact read); refuses a torn/partial weights table rather
-    than serving uninitialized rows."""
+def load_projection_matrix(
+    model_path: str, names: list[str], dim: int, inner: int
+):
+    """Worker-side load of an imported projection's weight matrix from
+    the committed ``weights`` files ``names`` of the driver's snapshot;
+    refuses a torn/partial weights table rather than serving
+    uninitialized rows."""
     import numpy as np
-    import pyarrow.fs as pafs
-    import pyarrow.parquet as pq
 
-    if "://" in model_path:
-        fs, root = pafs.FileSystem.from_uri(model_path)
-    else:
-        fs, root = pafs.LocalFileSystem(), model_path
-    files = _worker_table_files(fs, root, "weights")
-    if not files:
-        raise FileNotFoundError(
-            f"projected encoder weights missing: {model_path}/weights"
-        )
-    pdf = pd.concat(
-        [pq.read_table(f, filesystem=fs).to_pandas() for f in files],
-        ignore_index=True,
-    ).sort_values("row")
+    pdf = _worker_table(model_path, "weights", names).sort_values("row")
     mat = np.zeros((dim, inner), dtype=np.float64)
     seen = set()
     for j, v in zip(pdf["row"], pdf["vec"]):
@@ -877,7 +857,6 @@ def wordvec_model_import(
         lambda x: F.floor(x * F.lit(float(scale))).cast("double"),
     )
     from ..checkpoint import materialize
-    from .artifact_manifest import artifact_overwrite
 
     out = materialize(clean.select("term", quant.alias("vec")))
     version = _wordvec_version(out, dim, scale)
@@ -894,6 +873,7 @@ def wordvec_model_import(
             "source": "import",
             "version": version,
         },
+        artifact_open(spark, path),
     )
 
 
@@ -1061,29 +1041,19 @@ class _PreparedWordvec:
 
 
 def _load_prepared_wordvec(
-    model_path: str, dim: int, scale: float, pooling: str = "mean"
+    model_path: str,
+    files: dict[str, list[str]],
+    dim: int,
+    scale: float,
+    pooling: str = "mean",
 ) -> _PreparedWordvec:
-    """Load the vector table with pyarrow (workers have no
-    SparkSession) into a numpy matrix — one contiguous float64 block,
-    ~dim*8 bytes per term, the memory shape a 10^6-term vocabulary
-    needs (vs a dict of python lists at ~10x)."""
+    """Load the committed vector table (``files``: the driver
+    snapshot's table -> names) into a numpy matrix — one contiguous
+    float64 block, ~dim*8 bytes per term, the memory shape a
+    10^6-term vocabulary needs (vs a dict of python lists at ~10x)."""
     import numpy as np
-    import pyarrow.fs as pafs
-    import pyarrow.parquet as pq
 
-    if "://" in model_path:
-        fs, root = pafs.FileSystem.from_uri(model_path)
-    else:
-        fs, root = pafs.LocalFileSystem(), model_path
-    files = _worker_table_files(fs, root, "vectors")
-    if not files:
-        raise FileNotFoundError(
-            f"wordvec artifact table missing: {model_path}/vectors"
-        )
-    pdf = pd.concat(
-        [pq.read_table(f, filesystem=fs).to_pandas() for f in files],
-        ignore_index=True,
-    )
+    pdf = _worker_table(model_path, "vectors", files["vectors"])
     mat = np.empty((len(pdf), dim), dtype=np.float64)
     for j, v in enumerate(pdf["vec"]):
         mat[j, :] = v

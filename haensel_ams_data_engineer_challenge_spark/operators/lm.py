@@ -266,18 +266,22 @@ def lm_model_build(
     unseen-term log-prob ``lnp0_s = floor(ln(1/(n_tok+V)) * 1e6)`` —
     the same Laplace mass a count-0 term would get, quantized once so
     OOV contributions stay integer-valued doubles (float-parity
-    discipline).  Commit-marker protocol; tokenizer contract pinned
+    discipline).  One manifest commit; tokenizer contract pinned
     via ``feature``; zero-token training refuses BEFORE committing
     (the nb_model_build arguments, verbatim).
 
     Returns (terms, stats) READ FROM DISK.
     """
-    from .artifact_manifest import artifact_overwrite
-    from .similarity import _check_index_params, _index_table
+    from .artifact_manifest import (
+        artifact_check,
+        artifact_open,
+        artifact_overwrite,
+    )
 
     spark = train_docs.sparkSession
     params = {"kind": "lm", "order": "unigram", "feature": feature}
-    if not _check_index_params(spark, path, params):
+    snap = artifact_open(spark, path)
+    if not artifact_check(snap, params):
         toks = (
             F.col(tokens_col) if tokens_col is not None
             else search_tokens(text_col)
@@ -319,15 +323,13 @@ def lm_model_build(
         )
         # one atomic manifest commit covers both tables + params
         # (round 12: the index artifacts' protocol, unified here too)
-        artifact_overwrite(
+        snap = artifact_overwrite(
             spark, path,
             {"terms": terms_df, "stats": stats_df},
             {**params, "version": 1},
+            snap,
         )
-    return (
-        _index_table(spark, path, "terms"),
-        _index_table(spark, path, "stats"),
-    )
+    return snap.table("terms"), snap.table("stats")
 
 
 def lm_score_model(

@@ -38,17 +38,13 @@ from pyspark.sql import DataFrame, functions as F
 from ..checkpoint import materialize
 from ..functions.text import word_shingles
 from .artifact_manifest import (
-    artifact_adopt,
     artifact_append,
+    artifact_check,
     artifact_compact,
+    artifact_open,
     artifact_overwrite,
 )
 from .dedup import MAX_BAND_BUCKET, MINHASH_BAND_SIZE, MINHASH_K, minhash_bands
-from .similarity import (
-    _check_index_params,
-    _index_table,
-    _read_index_params,
-)
 
 #: default exact-Jaccard acceptance for the incremental probe — same
 #: bar as verify_candidates' full-corpus form.
@@ -94,8 +90,9 @@ def minhash_index_build(
     """
     spark = docs.sparkSession
     params = _params(k, band_size, shingle_n)
-    if force or not _check_index_params(spark, path, params):
-        artifact_overwrite(
+    snap = artifact_open(spark, path)
+    if force or not artifact_check(snap, params):
+        snap = artifact_overwrite(
             spark, path,
             {
                 "bands": minhash_bands(
@@ -103,8 +100,9 @@ def minhash_index_build(
                 )
             },
             {**params, "version": 1},
+            snap,
         )
-    return _index_table(spark, path, "bands")
+    return snap.table("bands")
 
 
 def minhash_index_append(
@@ -126,21 +124,19 @@ def minhash_index_append(
     appending bands computed under different (k, band_size, shingle_n)
     would silently poison every future probe.
     """
-    spark = new_docs.sparkSession
-    if not _check_index_params(spark, path, _params(k, band_size, shingle_n)):
+    snap = artifact_open(new_docs.sparkSession, path)
+    if not artifact_check(snap, _params(k, band_size, shingle_n)):
         raise ValueError(
             f"no committed MinHash index at {path}; build it first "
             "(minhash_index_build)"
         )
-    existing = _index_table(spark, path, "bands").select(id_col).distinct()
+    existing = snap.table("bands").select(id_col).distinct()
     fresh = minhash_bands(
         new_docs, text_col, id_col, k, band_size, shingle_n
     ).join(existing, id_col, "left_anti")
-    got = _read_index_params(spark, path)
+    got = dict(snap.params)
     got["version"] = str(int(got.get("version", "1")) + 1)
-    artifact_append(
-        spark, path, {"bands": fresh}, got, adopt_tables=("bands",)
-    )
+    artifact_append(snap, {"bands": fresh}, got)
 
 
 def minhash_index_compact(
@@ -160,13 +156,11 @@ def minhash_index_compact(
     now (the swap left the artifact momentarily uncommitted; a crashed
     compaction forced a full retrain).  A reader that resolved the
     previous manifest keeps its complete band set for one more
-    generation.  A legacy marker-protocol artifact is adopted in place
-    first.
+    generation.  A legacy marker-protocol artifact is adopted by the
+    same commit.  Compaction is hyperparameter-agnostic (it moves
+    rows, it does not interpret them): the only requirement is a
+    COMMITTED artifact.
     """
-    # compaction is hyperparameter-agnostic (it moves rows, it does
-    # not interpret them): the only requirement is a COMMITTED artifact
-    if not artifact_adopt(spark, path, ("bands",)):
-        raise ValueError(f"no committed MinHash index at {path}")
     return artifact_compact(
         spark, path, target_partitions,
         min_retention_minutes=min_retention_minutes,

@@ -26,6 +26,13 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..checkpoint import materialize
 from ..functions.scalars import dsum
+from .artifact_manifest import (
+    ArtifactSnapshot,
+    artifact_append,
+    artifact_check,
+    artifact_open,
+    artifact_overwrite,
+)
 
 EMBEDDING_DIM = 64
 LSH_PLANES = 6
@@ -566,8 +573,7 @@ def ivf_kmeans(
     train-on-sample discipline: k-means quality needs a bounded
     multiple of k*dim training points, not the corpus — at 10^10
     vectors, full-corpus Lloyd rounds are k full scans per iteration
-    for no recall gain (tools/ivf_train_bench.py measures the
-    wall-clock gap).  Size ``k`` itself by :func:`ivf_suggest_cells`.
+    for no recall gain.  Size ``k`` itself by :func:`ivf_suggest_cells`.
     None (the default) trains on everything.
     """
     if cache_key is not None:
@@ -679,18 +685,20 @@ def ann_topk_ivf(
     """
     corpus = vectors
     if index_path is not None:
-        assign, cents = ivf_index_persistent(
+        # one snapshot serves the whole request: the assignments, the
+        # centroids and the stored vectors are one generation's
+        snap = _ivf_open_or_build(
             vectors, index_path, cells, iters, id_col, vec_col,
-            train_sample_cap=train_sample_cap,
+            train_sample_cap,
         )
-        spark = vectors.sparkSession
-        # the committed marker picks the scoring side: stored int8
+        assign, cents = snap.table("assignments"), snap.table("centroids")
+        # the committed params pick the scoring side: stored int8
         # vectors (asymmetric — float query vs integer grid; the
         # per-vector scale cancels in cosine), or the caller's corpus
         # for a legacy artifact written without them
-        if _read_index_params(spark, index_path).get("quantized") == "true":
+        if snap.params.get("quantized") == "true":
             corpus = stored_vectors_as_double(
-                _index_table(spark, index_path, "vectors"), id_col, vec_col
+                snap.table("vectors"), id_col, vec_col
             )
     else:
         assign, cents = ivf_kmeans(
@@ -733,83 +741,14 @@ def ann_topk_ivf(
 
 
 # ---------------------------------------------------------------------------
-# persistent index artifacts (round-6 verdict task 5): production ANN
-# indexes are DISK artifacts reusable across jobs, not session caches.
-# Layout: {path}/assignments + {path}/centroids (IVF) or {path}/buckets
-# (LSH), plus {path}/params — a one-row key/value table written LAST as
-# the commit marker: a partial write (job killed mid-save) leaves no
-# params table, so the next builder retrains and overwrites rather than
-# serving a torn index.  Training is deterministic and parquet
-# round-trips doubles exactly, so a fresh session loading the artifact
-# returns bit-identical top-k to the training session (pytest-pinned).
-# Single BUILDER assumed per path (concurrent builders would race the
-# overwrite like any non-transactional parquet artifact); concurrent
-# READERS of a committed index are always safe.
+# persistent index artifacts: production ANN indexes are DISK artifacts
+# reusable across jobs, not session caches.  Every build, append and
+# retrain commits through artifact_manifest (tables + params in one
+# manifest rename), and every operation reads from one ArtifactSnapshot.
+# Training is deterministic and parquet round-trips doubles exactly, so
+# a fresh session loading the artifact returns bit-identical top-k to
+# the training session (pytest-pinned).
 # ---------------------------------------------------------------------------
-
-def _index_table(spark, path: str, table: str):
-    """Manifest-resolved read of an index artifact table (round 12 —
-    every mutation commits via artifact_manifest, so reads MUST
-    resolve the manifest: files moved in ahead of a crashed commit are
-    invisible orphans, and a mid-compaction reader keeps a complete
-    generation).  LEGACY artifacts (rounds 6-11: bare table dirs +
-    params parquet) fall back to the plain dir read — still readable,
-    upgraded in place by their next mutating operation."""
-    from .artifact_manifest import artifact_table
-
-    df = artifact_table(spark, path, table)
-    if df is not None:
-        return df
-    return spark.read.parquet(f"{path}/{table}")
-
-
-def _check_index_params(spark, path: str, expect: dict) -> bool:
-    """True when a committed artifact with matching params exists;
-    False when absent; ValueError when present but built differently
-    (silently serving an index trained with other hyperparameters
-    would change results without any visible signal).
-
-    Subset match on ``expect``'s keys (the bloom-state discipline,
-    streaming/ingest.py): bookkeeping keys like the append-bumped
-    ``version`` ride in the same table without breaking the
-    hyperparameter check."""
-    got = _read_index_params(spark, path)
-    if not got:
-        return False
-    exp = {k: str(v) for k, v in expect.items()}
-    if {k: got.get(k) for k in exp} != exp:
-        raise ValueError(
-            f"ANN index at {path} was built with {got}; caller expects "
-            f"{exp} — use a different path or delete the artifact"
-        )
-    return True
-
-
-def _read_index_params(spark, path: str) -> dict:
-    """Committed params, manifest-first (round 12): a manifest-
-    committed artifact's params live in the manifest body (atomic with
-    its file set); legacy artifacts' in the params parquet table."""
-    from .artifact_manifest import artifact_params
-
-    got = artifact_params(spark, path)
-    if got:
-        return got
-    from ..session import try_read_parquet
-
-    pdf = try_read_parquet(spark, f"{path}/params")
-    return {} if pdf is None else {r["key"]: r["value"] for r in pdf.collect()}
-
-
-def _write_index_params(spark, path: str, params: dict) -> None:
-    """The params table, as one parquet file."""
-    from ..session import local_frame
-
-    local_frame(
-        spark,
-        [(k, str(v)) for k, v in sorted(params.items())],
-        "key string, value string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
-
 
 def _cell_profile(assign: DataFrame) -> dict[int, int]:
     """Per-cell member counts — k rows, broadcast-class by
@@ -820,6 +759,55 @@ def _cell_profile(assign: DataFrame) -> dict[int, int]:
         .agg(F.count(F.lit(1)).alias("__c"))
         .collect()
     }
+
+
+def _ivf_open_or_build(
+    vectors: DataFrame,
+    path: str,
+    k: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    train_sample_cap: int | None,
+) -> ArtifactSnapshot:
+    """The committed IVF generation at ``path`` matching these
+    hyperparameters, trained and committed first when absent
+    (:func:`ivf_index_persistent` describes the artifact)."""
+    import json
+
+    spark = vectors.sparkSession
+    params = {
+        "kind": "ivf", "k": k, "iters": iters,
+        "id_col": id_col, "vec_col": vec_col,
+    }
+    if train_sample_cap is not None:
+        params["train_sample_cap"] = train_sample_cap
+    snap = artifact_open(spark, path)
+    if artifact_check(snap, params):
+        return snap
+    base = _ivf_build_input(vectors, id_col, vec_col)
+    assign, cents = _ivf_train(base, k, iters, id_col, vec_col, train_sample_cap)
+    # the assignments feed the occupancy profile AND the staged write —
+    # truncate the training lineage once
+    assign = materialize(assign)
+    profile = _cell_profile(assign)
+    return artifact_overwrite(
+        spark, path,
+        {
+            "assignments": assign,
+            "centroids": cents,
+            "vectors": quantize_to_storage(base, id_col, vec_col),
+        },
+        {
+            **params,
+            "quantized": "true",
+            "version": 1,
+            "cell_profile": json.dumps(profile, sort_keys=True),
+            "n_train_total": sum(profile.values()),
+            "drift_stat": "1.0",
+        },
+        snap,
+    )
 
 
 def ivf_index_persistent(
@@ -855,46 +843,10 @@ def ivf_index_persistent(
     The build also records the TRAINING cell-occupancy profile in the
     marker — the fixed baseline the append-side ``drift_stat``
     compares against (see :func:`ivf_index_append`)."""
-    import json
-
-    spark = vectors.sparkSession
-    params = {
-        "kind": "ivf", "k": k, "iters": iters,
-        "id_col": id_col, "vec_col": vec_col,
-    }
-    if train_sample_cap is not None:
-        params["train_sample_cap"] = train_sample_cap
-    if not _check_index_params(spark, path, params):
-        from .artifact_manifest import artifact_overwrite
-
-        base = _ivf_build_input(vectors, id_col, vec_col)
-        assign, cents = _ivf_train(
-            base, k, iters, id_col, vec_col, train_sample_cap
-        )
-        # the assignments feed the occupancy profile AND the staged
-        # write — truncate the training lineage once
-        assign = materialize(assign)
-        profile = _cell_profile(assign)
-        artifact_overwrite(
-            spark, path,
-            {
-                "assignments": assign,
-                "centroids": cents,
-                "vectors": quantize_to_storage(base, id_col, vec_col),
-            },
-            {
-                **params,
-                "quantized": "true",
-                "version": 1,
-                "cell_profile": json.dumps(profile, sort_keys=True),
-                "n_train_total": sum(profile.values()),
-                "drift_stat": "1.0",
-            },
-        )
-    return (
-        _index_table(spark, path, "assignments"),
-        _index_table(spark, path, "centroids"),
+    snap = _ivf_open_or_build(
+        vectors, path, k, iters, id_col, vec_col, train_sample_cap
     )
+    return snap.table("assignments"), snap.table("centroids")
 
 
 def lsh_index_persistent(
@@ -933,10 +885,9 @@ def lsh_index_persistent(
         # default dim stays UNPINNED for legacy-marker compatibility
         # (every artifact built before the pin is implicitly 64).
         params["dim"] = dim
-    if not _check_index_params(spark, path, params):
-        from .artifact_manifest import artifact_overwrite
-
-        artifact_overwrite(
+    snap = artifact_open(spark, path)
+    if not artifact_check(snap, params):
+        snap = artifact_overwrite(
             spark, path,
             {
                 "buckets": banded_bucket_rows(
@@ -944,8 +895,9 @@ def lsh_index_persistent(
                 )
             },
             {**params, "version": 1},
+            snap,
         )
-    got = _read_index_params(spark, path)
+    got = snap.params
     if got.get("dim", str(EMBEDDING_DIM)) != str(dim):
         # the subset param check is one-directional (a default-dim
         # caller omits the key): refuse serving a dim-pinned index to
@@ -955,7 +907,7 @@ def lsh_index_persistent(
             f"LSH index at {path} was built at dim="
             f"{got.get('dim', EMBEDDING_DIM)}; caller expects dim={dim}"
         )
-    return _index_table(spark, path, "buckets")
+    return snap.table("buckets")
 
 
 def ivf_index_append(
@@ -1004,33 +956,28 @@ def ivf_index_append(
         "kind": "ivf", "k": k, "iters": iters,
         "id_col": id_col, "vec_col": vec_col,
     }
-    if not _check_index_params(spark, path, params):
+    snap = artifact_open(spark, path)
+    if not artifact_check(snap, params):
         raise ValueError(
             f"no committed IVF index at {path}; build it first "
             "(ivf_index_persistent)"
         )
-    from .artifact_manifest import artifact_append
-
-    got = _read_index_params(spark, path)
+    got = dict(snap.params)
     stores_vectors = got.get("quantized") == "true"
     if stores_vectors:
         # both staged tables consume new_vectors (a 2-consumer diamond
         # whose lineage may carry a Python encode): compute it once
         new_vectors = materialize(new_vectors)
-    existing = _index_table(spark, path, "assignments").select(
-        id_col
-    ).distinct()
+    existing = snap.table("assignments").select(id_col).distinct()
     fresh = new_vectors.join(existing, id_col, "left_anti")
-    cents = _index_table(spark, path, "centroids")
+    cents = snap.table("centroids")
     # the new assignments feed the staged append AND the drift union
     new_assign = materialize(_assign_cells(fresh, cents, id_col, vec_col))
     tables_to_append = {"assignments": new_assign}
     if stores_vectors:
         # its own anti-join, so a table that lacks rows the other holds
         # gets them back
-        vec_existing = _index_table(spark, path, "vectors").select(
-            id_col
-        ).distinct()
+        vec_existing = snap.table("vectors").select(id_col).distinct()
         tables_to_append["vectors"] = quantize_to_storage(
             new_vectors.join(vec_existing, id_col, "left_anti"),
             id_col, vec_col,
@@ -1042,7 +989,7 @@ def ivf_index_append(
         }
         train_total = max(1, sum(train_profile.values()))
         current = _cell_profile(
-            _index_table(spark, path, "assignments")
+            snap.table("assignments")
             .select("cell")
             .unionByName(new_assign.select("cell"))
         )
@@ -1053,10 +1000,7 @@ def ivf_index_append(
         )
         got["drift_stat"] = f"{drift:.4f}"
     got["version"] = str(int(got.get("version", "1")) + 1)
-    artifact_append(
-        spark, path, tables_to_append, got,
-        adopt_tables=("assignments", "centroids", "vectors"),
-    )
+    artifact_append(snap, tables_to_append, got)
 
 
 def ivf_index_retrain(
@@ -1096,14 +1040,13 @@ def ivf_index_retrain(
     import json
 
     spark = vectors.sparkSession
-    got = _read_index_params(spark, path)
-    if not got or got.get("kind") != "ivf":
+    snap = artifact_open(spark, path)
+    got = snap.params if snap is not None else {}
+    if got.get("kind") != "ivf":
         raise ValueError(
             f"no committed IVF index at {path}; build it first "
             "(ivf_index_persistent)"
         )
-    from .artifact_manifest import artifact_overwrite
-
     # every unspecified knob inherits the COMMITTED marker (callers
     # who pinned e.g. iters=5 at build time keep it) — only k
     # defaults to a recompute, because resizing is retrain's job
@@ -1142,8 +1085,7 @@ def ivf_index_retrain(
     }
     if train_sample_cap is not None:
         params["train_sample_cap"] = train_sample_cap
-    artifact_overwrite(spark, path, tables, params)
-    return _read_index_params(spark, path)
+    return dict(artifact_overwrite(spark, path, tables, params, snap).params)
 
 
 def lsh_index_append(
@@ -1173,14 +1115,13 @@ def lsh_index_append(
         "id_col": id_col, "vec_col": vec_col,
         **(extra_params or {}),
     }
-    if not _check_index_params(spark, path, params):
+    snap = artifact_open(spark, path)
+    if not artifact_check(snap, params):
         raise ValueError(
             f"no committed LSH index at {path}; build it first "
             "(lsh_index_persistent)"
         )
-    from .artifact_manifest import artifact_append
-
-    got = _read_index_params(spark, path)
+    got = dict(snap.params)
     if got.get("dim", str(EMBEDDING_DIM)) != str(dim):
         # the marker's plane dim is the artifact's identity: appending
         # rows hashed at another dim would silently poison every probe
@@ -1188,20 +1129,17 @@ def lsh_index_append(
             f"LSH index at {path} was built at dim="
             f"{got.get('dim', EMBEDDING_DIM)}; caller appends dim={dim}"
         )
-    existing = _index_table(spark, path, "buckets").select(
-        id_col
-    ).distinct()
+    existing = snap.table("buckets").select(id_col).distinct()
     fresh = new_vectors.join(existing, id_col, "left_anti")
     got["version"] = str(int(got.get("version", "1")) + 1)
     artifact_append(
-        spark, path,
+        snap,
         {
             "buckets": banded_bucket_rows(
                 fresh, id_col, vec_col, tables, planes_per_table, dim
             )
         },
         got,
-        adopt_tables=("buckets",),
     )
 
 

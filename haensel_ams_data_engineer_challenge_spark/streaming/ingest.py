@@ -264,7 +264,7 @@ def run_streaming_ingest(
     ``incremental_new_keys`` contract).  The per-batch O(corpus) URL
     anti-join becomes a broadcast bitmap probe + a sliver-sized
     verify.  Requires ``url_dedup_col``.  MEASURED guidance
-    (tools/url_tier_scale_bench.py, BASELINE.md): the bitmap form
+    (BASELINE.md, URL tier at scale): the bitmap form
     carries a flat ~2.5 s/batch of state-write + probe floors on
     local[32], while the anti form's per-batch corpus projection scan
     is <0.5 s even at a 320k-URL target — leave the bitmap OFF until
@@ -394,37 +394,34 @@ def run_streaming_ingest(
 
             batch = batch.filter(gopher_quality_pass("text"))
         if lm_model_dir is not None:
+            from ..operators.artifact_manifest import artifact_open
             from ..operators.lm import lm_score_model
-            from ..operators.similarity import _read_index_params
 
-            lm_params = _read_index_params(ss, lm_model_dir)
-            if not lm_params:
+            lm = artifact_open(ss, lm_model_dir)
+            if lm is None or not lm.params:
                 raise ValueError(
                     f"no committed LM artifact at {lm_model_dir}; "
                     "train one first (lm.lm_model_build / corpus "
                     "--save-lm-model)"
                 )
-            lm_terms = ss.read.parquet(f"{lm_model_dir}/terms")
-            lm_stats = ss.read.parquet(f"{lm_model_dir}/stats")
             keep_lm = (
-                lm_score_model(batch, lm_terms, lm_stats)
+                lm_score_model(batch, lm.table("terms"), lm.table("stats"))
                 .filter(F.col("lm_xent") <= float(max_xent))
                 .select("doc_id")
             )
             batch = batch.join(keep_lm, "doc_id", "left_semi")
         if quality_model_dir is not None:
+            from ..operators.artifact_manifest import artifact_open
             from ..operators.classify import nb_classify_model
-            from ..operators.similarity import _read_index_params
 
-            params = _read_index_params(ss, quality_model_dir)
-            if not params:
+            nb = artifact_open(ss, quality_model_dir)
+            if nb is None or not nb.params:
                 raise ValueError(
                     f"no committed NB model at {quality_model_dir}; "
                     "train one first (classify CLI / nb_model_build)"
                 )
-            feature = params.get("feature", "search_tokens")
-            terms = ss.read.parquet(f"{quality_model_dir}/terms")
-            classes = ss.read.parquet(f"{quality_model_dir}/classes")
+            feature = nb.params.get("feature", "search_tokens")
+            terms, classes = nb.table("terms"), nb.table("classes")
             to_score, tokens_col = batch, None
             if feature.startswith("char_trigram"):
                 from ..operators.classify import char_ngram_tokens_col
@@ -531,21 +528,21 @@ def run_streaming_ingest(
                     embed_with_model,
                     encoder_model_ensure,
                 )
-                from ..operators.similarity import _read_index_params
 
                 # encoder artifact build-if-absent from the current
                 # dedup target (the tiers' shared discipline); its
-                # identity rides into the index marker below so two
-                # vector spaces can never mix in one bucket store
-                encoder_model_ensure(existing, encoder_model_dir)
-                enc = _read_index_params(ss, encoder_model_dir)
+                # identity rides into the index params below so two
+                # vector spaces can never mix in one bucket store, and
+                # every embed of this batch encodes with this snapshot
+                enc_snap = encoder_model_ensure(existing, encoder_model_dir)
+                enc = enc_snap.params
                 embedder = {
                     "embedder":
                         f"{enc['encoder']}@v{enc.get('version', '1')}"
                 }
 
                 def embed(d):
-                    return embed_with_model(d, encoder_model_dir)
+                    return embed_with_model(d, enc_snap)
 
                 # the artifact's dim sizes the hyperplane family: a
                 # non-64-dim imported encoder under the 64-dim default
@@ -557,22 +554,22 @@ def run_streaming_ingest(
                 embedder = {"embedder": "hash_embed"}
                 embed = hash_embed
                 enc_dim = 64
-            # one-time migration (review fix): pre-round-10 semantic
-            # indexes carry no embedder key — they were hash_embed by
-            # construction, so backfill the marker instead of failing
-            # every legacy drain.  A legacy index under a MODEL run
-            # still mismatches after the backfill (correct: it holds
-            # hash-space buckets).
-            from ..operators.similarity import (
-                _read_index_params,
-                _write_index_params,
+            # one-time migration: semantic indexes built before the
+            # embedder pin carry no embedder key — they were
+            # hash_embed by construction, so a table-less commit
+            # backfills the key (adopting a legacy dir) instead of
+            # failing every older drain.  Such an index under a MODEL
+            # run still mismatches after the backfill (correct: it
+            # holds hash-space buckets).
+            from ..operators.artifact_manifest import (
+                artifact_append,
+                artifact_open,
             )
 
-            got = _read_index_params(ss, semantic_index_dir)
-            if got and "embedder" not in got:
-                _write_index_params(
-                    ss, semantic_index_dir,
-                    {**got, "embedder": "hash_embed"},
+            sem = artifact_open(ss, semantic_index_dir)
+            if sem is not None and sem.params and "embedder" not in sem.params:
+                artifact_append(
+                    sem, {}, {**sem.params, "embedder": "hash_embed"}
                 )
             # build-if-absent over the current dedup target (one-time
             # O(corpus) embed); later batches read the committed

@@ -57,8 +57,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..checkpoint import materialize
+from ..operators.artifact_manifest import artifact_open
 from ..operators.embed import embed_with_model
-from ..operators.similarity import _read_index_params
 from ..operators.manifest_sink import manifest_insert_if_absent, read_manifest_sink
 from .vectors import (
     VECTOR_DEDUP_BANDS,
@@ -92,8 +92,10 @@ def run_streaming_media_ingest(
     (operators/manifest_sink.py): each batch becomes visible at one
     atomic manifest rename."""
     # driver-side validation before any task runs: a missing/foreign
-    # artifact raises here, and the embedder identity pins the index
-    enc = _read_index_params(spark, encoder_path)
+    # artifact raises here, the embedder identity pins the index, and
+    # every batch of the drain encodes with this one snapshot
+    enc_snap = artifact_open(spark, encoder_path)
+    enc = enc_snap.params if enc_snap is not None else {}
     if enc.get("kind") != "encoder":
         raise ValueError(
             f"no committed encoder artifact at {encoder_path}; build it "
@@ -120,7 +122,7 @@ def run_streaming_media_ingest(
             manifest_insert_if_absent(
                 ss,
                 embed_with_model(
-                    ss.read.parquet(corpus_path), encoder_path, id_col=id_col
+                    ss.read.parquet(corpus_path), enc_snap, id_col=id_col
                 ),
                 vectors_path,
                 ["vec_id"],
@@ -131,7 +133,7 @@ def run_streaming_media_ingest(
         # vectors (pair scan + probe + append + insert)
         batch_m = materialize(batch)
         bvecs = materialize(
-            embed_with_model(batch_m, encoder_path, id_col=id_col)
+            embed_with_model(batch_m, enc_snap, id_col=id_col)
         )
         # the family's shared dedup core (streaming/vectors.py):
         # within-batch collapse, probe vs the store, index append

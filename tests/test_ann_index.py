@@ -10,6 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+import haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest as AM
 import haensel_ams_data_engineer_challenge_spark.operators.similarity as S
 from haensel_ams_data_engineer_challenge_spark.sources import load_table
 
@@ -138,7 +139,7 @@ def test_persistent_index_torn_write_retrains(spark, sf_dir, tmp_path):
 # ---------------------------------------------------------------------------
 
 def _params_version(spark, path):
-    return S._read_index_params(spark, path).get("version")
+    return AM.artifact_open(spark, path).params.get("version")
 
 
 def test_lsh_append_equals_rebuild_bit_exact(spark, sf_dir, tmp_path):
@@ -352,13 +353,13 @@ def test_quantized_append_crash_is_atomic_and_replayable(spark, sf_dir, tmp_path
     # ATOMIC: neither table grew — readers stayed on the previous
     # generation through the whole failed append
     n_all = vecs.count()
-    assert S._index_table(spark, qpath, "assignments").count() == n_base
-    assert S._index_table(spark, qpath, "vectors").count() == n_base
+    assert AM.artifact_open(spark, qpath).table("assignments").count() == n_base
+    assert AM.artifact_open(spark, qpath).table("vectors").count() == n_base
 
     # replay appends the full remainder to BOTH tables in one commit
     S.ivf_index_append(extra, qpath)
-    assert S._index_table(spark, qpath, "vectors").count() == n_all
-    assert S._index_table(spark, qpath, "assignments").count() == n_all
+    assert AM.artifact_open(spark, qpath).table("vectors").count() == n_all
+    assert AM.artifact_open(spark, qpath).table("assignments").count() == n_all
 
 
 # ---------------------------------------------------------------------------
@@ -415,7 +416,7 @@ def test_sample_cap_pinned_in_marker(spark, sf_dir, tmp_path):
     vecs = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf_sampled")
     S.ivf_index_persistent(vecs, path, train_sample_cap=200)
-    params = S._read_index_params(spark, path)
+    params = AM.artifact_open(spark, path).params
     assert params["train_sample_cap"] == "200"
     assert params["drift_stat"] == "1.0"
     assert params["cell_profile"]
@@ -436,7 +437,7 @@ def test_drift_stat_moves_under_skewed_appends(spark, sf_dir, tmp_path):
     base = vecs.filter(F.col("vec_id") < 400)
     path = str(tmp_path / "ivf_drift")
     S.ivf_index_persistent(base, path)
-    p0 = S._read_index_params(spark, path)
+    p0 = AM.artifact_open(spark, path).params
     assert float(p0["drift_stat"]) == 1.0
 
     # skewed batch: many copies (new ids) of one vector — they all
@@ -450,7 +451,7 @@ def test_drift_stat_moves_under_skewed_appends(spark, sf_dir, tmp_path):
         *[c for c in base.columns if c not in ("vec_id", "embedding")],
     )
     S.ivf_index_append(skew.select(*base.columns), path)
-    p1 = S._read_index_params(spark, path)
+    p1 = AM.artifact_open(spark, path).params
     drift = float(p1["drift_stat"])
     assert drift > 1.3, p1["drift_stat"]
     # the training profile itself is FROZEN (baseline, not a ratchet)
@@ -483,7 +484,7 @@ def test_cli_ann_train_sample_cap_and_index_stats(spark, sf_dir, tmp_path, capsy
     assert "index-stats" in out
     assert "drift_stat=1.0" in out
     assert "train_sample_cap=200" in out
-    params = S._read_index_params(spark, f"{work}/ann_index")
+    params = AM.artifact_open(spark, f"{work}/ann_index").params
     assert params["train_sample_cap"] == "200"
     assert params["cell_profile"]
 
@@ -508,7 +509,7 @@ def test_ivf_index_retrain_resets_drift_and_resizes(spark, sf_dir, tmp_path):
         *[c for c in base.columns if c not in ("vec_id", "embedding")],
     ).select(*base.columns)
     S.ivf_index_append(skew, path)
-    p1 = S._read_index_params(spark, path)
+    p1 = AM.artifact_open(spark, path).params
     assert float(p1["drift_stat"]) > 1.3
 
     grown = base.unionByName(skew)
@@ -551,13 +552,9 @@ def _legacy_float_ivf(spark, vecs, path):
     ``quantized`` key."""
     import json
 
-    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
-        artifact_overwrite,
-    )
-
     assign, cents = S.ivf_kmeans(vecs, S.IVF_CELLS, S.IVF_ITERS)
     profile = S._cell_profile(assign)
-    artifact_overwrite(
+    AM.artifact_overwrite(
         spark, path, {"assignments": assign, "centroids": cents},
         {
             "kind": "ivf", "k": S.IVF_CELLS, "iters": S.IVF_ITERS,
@@ -565,6 +562,7 @@ def _legacy_float_ivf(spark, vecs, path):
             "cell_profile": json.dumps(profile, sort_keys=True),
             "n_train_total": sum(profile.values()), "drift_stat": "1.0",
         },
+        None,
     )
 
 
@@ -581,7 +579,7 @@ def test_ivf_index_retrain_inherits_cap_and_writes_int8_layout(spark, sf_dir, tm
     p = S.ivf_index_retrain(vecs, path)
     assert p["quantized"] == "true"
     assert p["train_sample_cap"] == "300"  # inherited, still pinned
-    stored = S._index_table(spark, path, "vectors")
+    stored = AM.artifact_open(spark, path).table("vectors")
     assert stored.count() == vecs.count()
     hits = S.ann_topk_ivf(
         vecs, q, index_path=path,
@@ -591,10 +589,6 @@ def test_ivf_index_retrain_inherits_cap_and_writes_int8_layout(spark, sf_dir, tm
     # serves a full ranked top-k per query from the rebuilt artifact
     got = {(r["query_id"], r["rank"]) for r in hits.collect()}
     assert got == {(q, r) for q in (0, 1, 2) for r in (1, 2, 3)}
-
-    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
-        artifact_resolve,
-    )
 
     base = vecs.filter(F.col("vec_id") % 2 == 0)
     extra = vecs.filter(F.col("vec_id") % 2 == 1)
@@ -607,14 +601,14 @@ def test_ivf_index_retrain_inherits_cap_and_writes_int8_layout(spark, sf_dir, tm
     )
     # appended: assignments grow, no vectors table appears
     S.ivf_index_append(extra, lpath)
-    assert S._index_table(spark, lpath, "assignments").count() == vecs.count()
-    assert sorted(artifact_resolve(spark, lpath)[1]["tables"]) == [
+    assert AM.artifact_open(spark, lpath).table("assignments").count() == vecs.count()
+    assert sorted(AM.artifact_open(spark, lpath).tables) == [
         "assignments", "centroids",
     ]
     # retrained: the one int8 layout, vectors table over the corpus
     p = S.ivf_index_retrain(vecs, lpath)
     assert p["quantized"] == "true"
-    assert S._index_table(spark, lpath, "vectors").count() == vecs.count()
+    assert AM.artifact_open(spark, lpath).table("vectors").count() == vecs.count()
 
 
 def test_cli_ann_retrain_if_drift(spark, sf_dir, tmp_path, capsys):
@@ -648,19 +642,19 @@ def test_cli_ann_retrain_if_drift(spark, sf_dir, tmp_path, capsys):
         (F.col("new_id") + 500000).alias("vec_id"), F.col("embedding")
     )
     S.ivf_index_append(skew, path)
-    drifted = float(S._read_index_params(spark, path)["drift_stat"])
+    drifted = float(AM.artifact_open(spark, path).params["drift_stat"])
     assert drifted > 1.1
 
     # below-threshold: no retrain happens
     assert main(base_cli + ["--retrain-if-drift", str(drifted + 1)]) == 0
     assert "retrained:" not in capsys.readouterr().out
-    assert S._read_index_params(spark, path)["drift_stat"] != "1.0"
+    assert AM.artifact_open(spark, path).params["drift_stat"] != "1.0"
 
     # above-threshold: retrain over the CURRENT corpus + adopt new k
     assert main(base_cli + ["--retrain-if-drift", "1.1", "--index-stats"]) == 0
     out = capsys.readouterr().out
     assert "retrained: drift_stat=" in out
-    p = S._read_index_params(spark, path)
+    p = AM.artifact_open(spark, path).params
     assert p["drift_stat"] == "1.0"
     assert int(p["k"]) == S.ivf_suggest_cells(docs.count())
     assert "drift_stat=1.0" in out  # --index-stats sees the new marker
@@ -671,8 +665,8 @@ def test_cli_ann_retrain_if_drift(spark, sf_dir, tmp_path, capsys):
     # instead of silently swallowing the hyperparameter refusal
     # (review fix): the append bumps the marker version even when the
     # corpus holds nothing new
-    v_before = int(S._read_index_params(spark, path)["version"])
+    v_before = int(AM.artifact_open(spark, path).params["version"])
     assert main(base_cli + ["--refresh-index"]) == 0
-    p2 = S._read_index_params(spark, path)
+    p2 = AM.artifact_open(spark, path).params
     assert int(p2["version"]) == v_before + 1
     assert p2["k"] == p["k"]  # shape untouched by the append

@@ -16,6 +16,7 @@ import struct
 import pytest
 
 from haensel_ams_data_engineer_challenge_spark.multimodal import audioembed as A
+from haensel_ams_data_engineer_challenge_spark.operators import artifact_manifest as AM
 from haensel_ams_data_engineer_challenge_spark.operators import embed as E
 from haensel_ams_data_engineer_challenge_spark.operators import similarity as S
 
@@ -144,7 +145,7 @@ def audio_model(spark, tmp_path_factory):
 
 
 def test_artifact_contract(spark, audio_model, tmp_path):
-    params = S._read_index_params(spark, audio_model)
+    params = AM.artifact_open(spark, audio_model).params
     assert params["kind"] == "encoder"
     assert params["encoder"] == E.AUDIO_KIND
     assert int(params["dim"]) == S.EMBEDDING_DIM
@@ -153,7 +154,7 @@ def test_artifact_contract(spark, audio_model, tmp_path):
         A.audio_encoder_build(spark, str(tmp_path / "bad"), dim=32, grid=64)
     docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     E.encoder_model_ensure(docs, audio_model)
-    assert S._read_index_params(spark, audio_model)["encoder"] == E.AUDIO_KIND
+    assert AM.artifact_open(spark, audio_model).params["encoder"] == E.AUDIO_KIND
 
 
 def test_gain_copy_cosine_one_trim_degrades(spark, audio_model):
@@ -580,6 +581,7 @@ def test_audio_ladder_refusal(spark, tmp_path):
         spark, old, {},
         {"kind": "encoder", "encoder": "audio-v1", "dim": 64, "grid": 64,
          "version": "feed00000000"},
+        None,
     )
     df = spark.createDataFrame(
         [(1, bytearray(_wav(_clip(500))))], "doc_id long, payload binary"

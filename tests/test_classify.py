@@ -318,8 +318,8 @@ def test_nb_model_build_empty_training_refuses_without_commit(spark, tmp_path):
     )  # 2 chars < trigram -> zero tokens
     with pytest.raises(ValueError, match="zero classes"):
         nb_model_build(staged, path, tokens_col="__cg")
-    from haensel_ams_data_engineer_challenge_spark.operators import (
-        similarity as _S,
+    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
+        artifact_open,
     )
 
-    assert _S._read_index_params(spark, path) == {}
+    assert artifact_open(spark, path) is None

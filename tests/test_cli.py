@@ -571,11 +571,11 @@ def test_cli_search_ann_with_persistent_index(spark, sf_dir, tmp_path, capsys):
     assert top == {9001: src[0]["doc_id"], 9002: src[1]["doc_id"]}
     # the persistent index was created and the rerun reuses it
     # (round 12: params live in the artifact manifest, not a parquet)
-    from haensel_ams_data_engineer_challenge_spark.operators import (
-        similarity as S,
+    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
+        artifact_open,
     )
 
-    assert S._read_index_params(spark, f"{work}/ann_index")
+    assert artifact_open(spark, f"{work}/ann_index").params
     assert main(argv) == 0
     capsys.readouterr()
     spark.catalog.refreshByPath(f"{work}/search_hits")
@@ -870,16 +870,16 @@ def test_cli_search_ann_encoder_model(spark, sf_dir, tmp_path, capsys):
 
     idx_dirs = _glob.glob(f"{work}/ann_index_model_v*")
     assert len(idx_dirs) == 1 and os.path.isdir(idx_dirs[0])
-    from haensel_ams_data_engineer_challenge_spark.operators.similarity import (
-        _read_index_params,
+    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
+        artifact_open,
     )
-    assert _read_index_params(spark, idx_dirs[0]).get("kind") == "ivf"
+    assert artifact_open(spark, idx_dirs[0]).params.get("kind") == "ivf"
     # the dir is keyed by the encoder's CONTENT version: the index can
     # never be probed by a differently-trained encoder's vectors
     from haensel_ams_data_engineer_challenge_spark.operators.embed import (
         ENCODER_KIND,
     )
-    enc = _read_index_params(spark, f"{work}/encoder")
+    enc = artifact_open(spark, f"{work}/encoder").params
     assert enc["encoder"] == ENCODER_KIND
     assert idx_dirs[0].endswith(f"_v{enc['version']}")
 

@@ -22,6 +22,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from haensel_ams_data_engineer_challenge_spark.operators import artifact_manifest as AM
 from haensel_ams_data_engineer_challenge_spark.operators import embed as E
 from haensel_ams_data_engineer_challenge_spark.operators import similarity as S
 
@@ -117,6 +118,14 @@ def test_encoder_loads_once_per_worker_not_per_task(spark, tmp_path):
     assert len(loads) == len(pids), loads
 
 
+def _legacy_params(spark, path: str, params: dict) -> None:
+    """A legacy-layout artifact: a one-file ``params`` parquet table."""
+    spark.createDataFrame(
+        [(k, str(v)) for k, v in sorted(params.items())],
+        "key string, value string",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
+
+
 def test_encoder_artifact_guards(spark, tmp_path):
     docs = spark.createDataFrame(
         [(1, "alpha beta")], "doc_id long, text string"
@@ -136,13 +145,14 @@ def test_encoder_artifact_guards(spark, tmp_path):
     # defaults (bring-your-own-artifact contract)...
     E.encoder_model_ensure(docs, path)
     assert E.embed_with_model(docs, path).count() == 1
-    # ...but still refuses a committed artifact of another kind
-    from haensel_ams_data_engineer_challenge_spark.operators.similarity import (
-        _write_index_params,
-    )
-
+    # ...but still refuses a committed artifact of another kind, in
+    # either layout
     other = str(tmp_path / "notenc")
-    _write_index_params(spark, other, {"kind": "lsh"})
+    _legacy_params(spark, other, {"kind": "lsh"})
+    with pytest.raises(ValueError, match="not a supported encoder"):
+        E.encoder_model_ensure(docs, other)
+    other = str(tmp_path / "notenc_manifest")
+    AM.artifact_overwrite(spark, other, {}, {"kind": "lsh"}, None)
     with pytest.raises(ValueError, match="not a supported encoder"):
         E.encoder_model_ensure(docs, other)
 
@@ -193,16 +203,43 @@ def test_paraphrase_pair_model_catches_hash_embed_misses(spark, tmp_path):
     assert (1, 2) not in lsh_pairs(S.hash_embed(docs))
 
 
+def test_frame_encodes_with_the_generation_its_driver_read(spark, tmp_path):
+    """An embed_with_model frame built before a new encoder generation
+    commits encodes with the generation its driver validated: the
+    workers read that snapshot's files, not whatever manifest is latest
+    when the task runs.  A fresh path, so no worker cache is warm."""
+    d1 = spark.createDataFrame(
+        [(1, "aaa aaa bbb ccc")], "doc_id long, text string"
+    )
+    path = str(tmp_path / "enc_gen")
+    v1 = E.encoder_model_build(d1, path, stop_top_n=1)  # stops aaa
+    probe = spark.createDataFrame([(9, "aaa zzz")], "doc_id long, text string")
+    frame = E.embed_with_model(probe, path)
+    # the next generation stops zzz too: under it the probe has no vector
+    AM.artifact_overwrite(
+        spark, path,
+        {
+            "stopterms": spark.createDataFrame(
+                [("aaa",), ("zzz",)], "term string"
+            ),
+            "synonyms": v1.table("synonyms"),
+        },
+        {**v1.params, "version": "next"},
+        v1,
+    )
+    got = frame.collect()
+    assert [r["vec_id"] for r in got] == [9]
+    assert list(got[0]["embedding"]) == _py_model_vec(
+        "aaa zzz", E.DEFAULT_SYNONYMS, {"aaa"}, S.EMBEDDING_DIM
+    )
+
+
 def test_encoder_version_tracks_trained_content(spark, tmp_path):
     """Review fix: the artifact version is a CONTENT hash of the
     trained tables — a rebuild from different data changes it (so the
     worker cache and index embedder pins go stale), an identical
     retrain keeps it (same tables = same vector space)."""
     import shutil
-
-    from haensel_ams_data_engineer_challenge_spark.operators.similarity import (
-        _read_index_params,
-    )
 
     d1 = spark.createDataFrame(
         [(1, "aaa aaa bbb ccc")], "doc_id long, text string"
@@ -212,10 +249,10 @@ def test_encoder_version_tracks_trained_content(spark, tmp_path):
     )
     path = str(tmp_path / "enc")
     E.encoder_model_build(d1, path, stop_top_n=1)
-    v1 = _read_index_params(spark, path)["version"]
+    v1 = AM.artifact_open(spark, path).params["version"]
     shutil.rmtree(path)
     E.encoder_model_build(d2, path, stop_top_n=1)  # stop list: zzz not aaa
-    v2 = _read_index_params(spark, path)["version"]
+    v2 = AM.artifact_open(spark, path).params["version"]
     assert v1 != v2
     # the rebuilt model is actually SERVED (not a stale worker cache):
     # 'zzz' is now stopped, so a zzz-only doc has no vector
@@ -223,7 +260,7 @@ def test_encoder_version_tracks_trained_content(spark, tmp_path):
     assert E.embed_with_model(probe, path).count() == 0
     shutil.rmtree(path)
     E.encoder_model_build(d1, path, stop_top_n=1)  # identical retrain
-    assert _read_index_params(spark, path)["version"] == v1
+    assert AM.artifact_open(spark, path).params["version"] == v1
 
 
 # ---------------------------------------------------------------------------
@@ -345,7 +382,7 @@ def test_wordvec_import_real_float_table(spark, tmp_path):
     )
     path = str(tmp_path / "wv_import")
     E.wordvec_model_import(table, path)
-    params = S._read_index_params(spark, path)
+    params = AM.artifact_open(spark, path).params
     assert params["kind"] == "encoder"
     assert params["encoder"] == E.WORDVEC_KIND
     assert int(params["dim"]) == 4
@@ -385,7 +422,7 @@ def test_wordvec_import_real_float_table(spark, tmp_path):
 
     # ensure() serves a committed wordvec artifact as-is (no rebuild)
     E.encoder_model_ensure(docs, path)
-    assert S._read_index_params(spark, path)["encoder"] == E.WORDVEC_KIND
+    assert AM.artifact_open(spark, path).params["encoder"] == E.WORDVEC_KIND
 
 
 def test_wordvec_import_rejects_ragged_dims(spark, tmp_path):
@@ -409,8 +446,8 @@ def test_wordvec_version_and_index_pin_distinguish_kinds(spark, tmp_path):
     sp_path = str(tmp_path / "sp")
     E.wordvec_model_build(docs, wv_path, stop_top_n=0)
     E.encoder_model_build(docs, sp_path, stop_top_n=0)
-    wv = S._read_index_params(spark, wv_path)
-    sp = S._read_index_params(spark, sp_path)
+    wv = AM.artifact_open(spark, wv_path).params
+    sp = AM.artifact_open(spark, sp_path).params
     pin_wv = f"{wv['encoder']}@v{wv['version']}"
     pin_sp = f"{sp['encoder']}@v{sp['version']}"
     assert pin_wv != pin_sp
@@ -419,13 +456,13 @@ def test_wordvec_version_and_index_pin_distinguish_kinds(spark, tmp_path):
     # identical retrain -> same version; different corpus -> different
     wv_path2 = str(tmp_path / "wv2")
     E.wordvec_model_build(docs, wv_path2, stop_top_n=0)
-    assert S._read_index_params(spark, wv_path2)["version"] == wv["version"]
+    assert AM.artifact_open(spark, wv_path2).params["version"] == wv["version"]
     docs2 = spark.createDataFrame(
         [(1, "completely different vocabulary now")], "doc_id long, text string"
     )
     wv_path3 = str(tmp_path / "wv3")
     E.wordvec_model_build(docs2, wv_path3, stop_top_n=0)
-    assert S._read_index_params(spark, wv_path3)["version"] != wv["version"]
+    assert AM.artifact_open(spark, wv_path3).params["version"] != wv["version"]
 
     # an LSH index pinned to the wordvec embedder refuses a synproj probe
     vecs = E.embed_with_model(docs, wv_path)
@@ -491,12 +528,12 @@ def test_wordvec_sif_pooling_matches_python_reference(spark, tmp_path):
 
     # marker carries the pooling + sif params; version differs from
     # the mean-pooled build of the same corpus (layout is identity)
-    params = S._read_index_params(spark, path)
+    params = AM.artifact_open(spark, path).params
     assert params["pooling"] == "sif"
     path_mean = str(tmp_path / "wv_mean")
     E.wordvec_model_build(docs, path_mean, dim=dim, stop_top_n=0)
     assert (
-        S._read_index_params(spark, path_mean)["version"]
+        AM.artifact_open(spark, path_mean).params["version"]
         != params["version"]
     )
 
@@ -548,7 +585,7 @@ def test_vec_file_roundtrips_to_servable_artifact(spark, tmp_path):
     assert stats["quarantined"] == 0
     assert stats["dim"] == 4
     assert stats["has_header"] and stats["declared_terms"] == 3
-    params = S._read_index_params(spark, path)
+    params = AM.artifact_open(spark, path).params
     assert params["encoder"] == E.WORDVEC_KIND and int(params["dim"]) == 4
 
     # bit-equal to the parquet import of the same table
@@ -648,5 +685,5 @@ def test_cli_import_wordvec_vec_file(spark, tmp_path, capsys):
     assert "imported terms=2" in out
     assert "quarantined=0" in out
     assert "truncated export?" in out  # 9 declared, 2 held
-    params = S._read_index_params(spark, model_dir)
+    params = AM.artifact_open(spark, model_dir).params
     assert params["encoder"] == E.WORDVEC_KIND

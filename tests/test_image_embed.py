@@ -17,6 +17,7 @@ import pytest
 from haensel_ams_data_engineer_challenge_spark.checkpoint import materialize
 from haensel_ams_data_engineer_challenge_spark.multimodal import imgembed as IE
 from haensel_ams_data_engineer_challenge_spark.multimodal import phash as PH
+from haensel_ams_data_engineer_challenge_spark.operators import artifact_manifest as AM
 from haensel_ams_data_engineer_challenge_spark.operators import embed as E
 from haensel_ams_data_engineer_challenge_spark.operators import similarity as S
 
@@ -83,7 +84,7 @@ def image_model(spark, tmp_path_factory):
 
 
 def test_artifact_contract(spark, image_model, tmp_path):
-    params = S._read_index_params(spark, image_model)
+    params = AM.artifact_open(spark, image_model).params
     assert params["kind"] == "encoder"
     assert params["encoder"] == E.IMAGE_KIND
     assert int(params["dim"]) == S.EMBEDDING_DIM
@@ -94,7 +95,7 @@ def test_artifact_contract(spark, image_model, tmp_path):
     # a committed image artifact serves through ensure() unchanged
     docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     E.encoder_model_ensure(docs, image_model)
-    assert S._read_index_params(spark, image_model)["encoder"] == E.IMAGE_KIND
+    assert AM.artifact_open(spark, image_model).params["encoder"] == E.IMAGE_KIND
 
 
 def test_crop_pair_phash_misses_embed_catches(spark, image_model):
@@ -490,7 +491,8 @@ def test_projection_import_refuses_nulls_and_torn_serves_loudly(
     path = str(tmp_path / "proj")
     IE.image_encoder_import(spark, good, path)
     with pytest.raises(Exception, match="rows|torn"):
-        IE._load_prepared_image(path, 8, 64)  # claims 64, table has 4
+        weights = AM.artifact_open(spark, path).files("weights")
+        IE._load_prepared_image(path, weights, 8, 64)  # claims 64, has 4
 
 
 def test_cli_dedup_images_refuses_foreign_encoder(spark, tmp_path, capsys):

@@ -279,6 +279,7 @@ def test_image_v1_old_ladder_artifact_refuses(spark, tmp_path):
         spark, path, {},
         {"kind": "encoder", "encoder": "image-v1", "dim": 64, "grid": 8,
          "version": "deadbeef0000"},
+        None,
     )
     df = spark.createDataFrame(
         [(1, bytearray(b"x"))], "doc_id long, payload binary"

@@ -215,8 +215,8 @@ def test_lm_artifact_guards(spark, tmp_path):
     empty = spark.createDataFrame([(1, "???")], "doc_id long, text string")
     with pytest.raises(ValueError, match="empty vocabulary"):
         lm_model_build(empty, str(tmp_path / "lm2"))
-    from haensel_ams_data_engineer_challenge_spark.operators import (
-        similarity as _S,
+    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
+        artifact_open,
     )
 
-    assert _S._read_index_params(spark, str(tmp_path / "lm2")) == {}
+    assert artifact_open(spark, str(tmp_path / "lm2")) is None

@@ -60,10 +60,6 @@ def _parquet_files(path: str) -> list[str]:
 
 
 def test_persisted_state_tables_stay_one_file(spark, tmp_path):
-    from haensel_ams_data_engineer_challenge_spark.operators.similarity import (
-        _read_index_params,
-        _write_index_params,
-    )
     from haensel_ams_data_engineer_challenge_spark.streaming.ingest import (
         _load_bloom_words,
         _write_bloom_state,
@@ -75,14 +71,6 @@ def test_persisted_state_tables_stay_one_file(spark, tmp_path):
     assert len(_parquet_files(f"{state}/bitmap")) == 1
     assert len(_parquet_files(f"{state}/params")) == 1
     assert _load_bloom_words(spark, state, 4096, 3) == words
-
-    index = str(tmp_path / "index")
-    params = {"kind": "ivf", "k": 10, "dim": 64, "seed": 7}
-    _write_index_params(spark, index, params)
-    assert len(_parquet_files(f"{index}/params")) == 1
-    assert _read_index_params(spark, index) == {
-        k: str(v) for k, v in params.items()
-    }
 
 
 #: a frame built from a driver list or an RDD: Spark plans a PythonRDD

@@ -348,16 +348,11 @@ def test_artifact_compact_retention_floor(spark, tmp_path):
     )
 
     path = str(tmp_path / "art")
-    AM.artifact_overwrite(
-        spark, path, {"bands": _df(spark, [1, 2])}, {"kind": "test"}
+    v1 = AM.artifact_overwrite(
+        spark, path, {"bands": _df(spark, [1, 2])}, {"kind": "test"}, None
     )
-    _v, man1 = AM.artifact_resolve(spark, path)
-    v1_files = {
-        f"bands/{n}" for n in man1["tables"]["bands"]["files"]
-    }
-    AM.artifact_append(
-        spark, path, {"bands": _df(spark, [3])}, {"kind": "test"}
-    )
+    v1_files = {f"bands/{n}" for n in v1.files("bands")}
+    AM.artifact_append(v1, {"bands": _df(spark, [3])}, {"kind": "test"})
     AM.artifact_compact(spark, path, 1, min_retention_minutes=60.0)
     AM.artifact_compact(spark, path, 1, min_retention_minutes=60.0)
     on_disk = {

@@ -27,9 +27,8 @@ def _wav(samples):
 
 
 def _clip(src: int, gain: int = 1) -> list[int]:
-    """Distinct-envelope clip per src (md5-weighted bumps — the
-    audio_scale_bench corpus): cross-src cosine ~0, gain copies scale
-    features exactly."""
+    """Distinct-envelope clip per src (md5-weighted bumps): cross-src
+    cosine ~0, gain copies scale features exactly."""
     n = 1200 + (src * 37) % 300
     d = hashlib.md5(b"t|%d" % src).digest()
     ws = [1 + d[b] % 7 for b in range(12)]

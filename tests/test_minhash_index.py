@@ -13,6 +13,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from haensel_ams_data_engineer_challenge_spark.operators import artifact_manifest as AM
 from haensel_ams_data_engineer_challenge_spark.operators import minhash_index as MI
 from haensel_ams_data_engineer_challenge_spark.operators.dedup import (
     dedup_minhash_lsh,
@@ -289,15 +290,11 @@ def test_cli_ingest_near_dup(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "admitted_total=1" in out and "compacted_bands=" in out
     # post-compact store is committed (manifest params resolvable)
-    from haensel_ams_data_engineer_challenge_spark.operators import (
-        similarity as S,
-    )
-
-    assert S._read_index_params(spark, f"{work}/minhash_index")
+    assert AM.artifact_open(spark, f"{work}/minhash_index").params
     got = {r["doc_id"] for r in spark.read.parquet(f"{work}/admitted").collect()}
     assert got == {402}
     # both state artifacts exist
-    assert S._index_table(spark, f"{work}/minhash_index", "bands").count() > 0
+    assert AM.artifact_open(spark, f"{work}/minhash_index").table("bands").count() > 0
     assert spark.read.parquet(f"{work}/bloom_state/bitmap").count() > 0
 
     # replay with a fresh checkpoint: nothing more admitted
@@ -316,10 +313,6 @@ def test_compact_preserves_rows_and_probe(spark, tmp_path):
     that resolved the PREVIOUS manifest keeps a complete band set
     through the compaction (the swap protocol's reader gap, closed by
     the round-12 manifest port)."""
-    from haensel_ams_data_engineer_challenge_spark.operators import (
-        artifact_manifest as AM,
-    )
-
     corpus = _docs(spark, CORPUS_ROWS)
     path = str(tmp_path / "mhidx")
     MI.minhash_index_build(corpus, path)
@@ -333,8 +326,7 @@ def test_compact_preserves_rows_and_probe(spark, tmp_path):
         )
     bands_df = MI.minhash_index_build(corpus.limit(1), path)  # served read
     before = sorted(map(tuple, bands_df.collect()))
-    v_pre, man_pre = AM.artifact_resolve(spark, path)
-    assert len(man_pre["tables"]["bands"]["files"]) >= 4  # build + 3
+    assert len(AM.artifact_open(spark, path).files("bands")) >= 4  # build + 3
 
     # a reader holding the pre-compaction generation...
     reader = bands_df
@@ -345,8 +337,7 @@ def test_compact_preserves_rows_and_probe(spark, tmp_path):
         map(tuple, MI.minhash_index_build(corpus.limit(1), path).collect())
     )
     assert after == before
-    _, man_post = AM.artifact_resolve(spark, path)
-    assert len(man_post["tables"]["bands"]["files"]) == 1
+    assert len(AM.artifact_open(spark, path).files("bands")) == 1
     # ...still collects a complete row set mid-/post-compaction: its
     # files survive one further generation
     assert sorted(map(tuple, reader.collect())) == before

@@ -262,11 +262,11 @@ def test_encoder_model_tier_catches_paraphrase_hash_tier_admits(
             for r in spark.read.parquet(model_sink).collect()} == {201}
 
     # the index marker pins the encoder identity...
-    from haensel_ams_data_engineer_challenge_spark.operators.similarity import (
-        _read_index_params,
+    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
+        artifact_open,
     )
 
-    got = _read_index_params(spark, model_idx)
+    got = artifact_open(spark, model_idx).params
     assert got.get("embedder", "").startswith("synproj-v1@v")
 
     # ...so running the tier under a DIFFERENT embedder against the
@@ -504,3 +504,68 @@ def test_cli_ingest_manifest_empty_drain_counts_legacy(spark, tmp_path, capsys):
     ])
     assert rc == 0
     assert "admitted_total=1" in capsys.readouterr().out
+
+
+def test_semantic_index_without_embedder_pin_is_backfilled(spark, tmp_path):
+    """A semantic index committed before the embedder pin (hash_embed
+    buckets, no ``embedder`` param) receives the pin through the
+    artifact commit protocol — in the legacy params-table layout and in
+    the manifest layout alike — and the drain then serves it."""
+    import pytest
+
+    from haensel_ams_data_engineer_challenge_spark.operators import (
+        artifact_manifest as AM,
+    )
+    from haensel_ams_data_engineer_challenge_spark.operators.similarity import (
+        banded_bucket_rows,
+        hash_embed,
+    )
+    from haensel_ams_data_engineer_challenge_spark.streaming.ingest import (
+        run_streaming_ingest,
+    )
+    from haensel_ams_data_engineer_challenge_spark.streaming.vectors import (
+        VECTOR_DEDUP_BANDS,
+        VECTOR_DEDUP_PLANES,
+    )
+
+    corpus_path = _write_corpus(spark, tmp_path)
+    buckets = banded_bucket_rows(
+        hash_embed(spark.read.parquet(corpus_path)), "vec_id", "embedding",
+        VECTOR_DEDUP_BANDS, VECTOR_DEDUP_PLANES,
+    )
+    params = {
+        "kind": "lsh", "tables": VECTOR_DEDUP_BANDS,
+        "planes_per_table": VECTOR_DEDUP_PLANES,
+        "id_col": "vec_id", "vec_col": "embedding", "version": 1,
+    }
+    feed = str(tmp_path / "feed")
+    _drop(spark, tmp_path, feed, [
+        (200, _scramble(BASE)), (201, NOVEL),
+    ], "a.parquet")
+    for layout in ("legacy", "manifest"):
+        idx = str(tmp_path / f"semidx_{layout}")
+        if layout == "legacy":
+            buckets.write.parquet(f"{idx}/buckets")
+            spark.createDataFrame(
+                [(k, str(v)) for k, v in sorted(params.items())],
+                "key string, value string",
+            ).coalesce(1).write.parquet(f"{idx}/params")
+        else:
+            AM.artifact_overwrite(spark, idx, {"buckets": buckets}, params, None)
+        sink = str(tmp_path / f"admitted_{layout}")
+        run_streaming_ingest(
+            spark, corpus_path, feed, sink, str(tmp_path / f"ckpt_{layout}"),
+            semantic_index_dir=idx,
+        )
+        got = {r["doc_id"] for r in spark.read.parquet(sink).collect()}
+        assert got == {201}, layout
+        snap = AM.artifact_open(spark, idx)
+        assert snap.params["embedder"] == "hash_embed", layout
+        assert not _glob.glob(f"{idx}/params/*"), layout
+        assert snap.table("buckets").select("vec_id").distinct().count() == 3
+    with pytest.raises(Exception, match="built with"):
+        run_streaming_ingest(
+            spark, corpus_path, feed, str(tmp_path / "admitted_enc"),
+            str(tmp_path / "ckpt_enc"), semantic_index_dir=idx,
+            encoder_model_dir=str(tmp_path / "encoder"),
+        )

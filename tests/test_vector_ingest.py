@@ -311,11 +311,11 @@ def test_lsh_family_handles_non_default_dim(spark, tmp_path):
         vecs, idx, tables=8, planes_per_table=3, dim=DIM
     )
     assert buckets.select("bucket").distinct().count() > 4
-    from haensel_ams_data_engineer_challenge_spark.operators.similarity import (
-        _read_index_params,
+    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
+        artifact_open,
     )
 
-    assert _read_index_params(spark, idx)["dim"] == str(DIM)
+    assert artifact_open(spark, idx).params["dim"] == str(DIM)
     # appending at the default dim refuses (would poison every probe)
     more = spark.createDataFrame(
         [(1000, _nd(7, DIM))], "vec_id long, embedding array<double>"
@@ -411,8 +411,8 @@ def test_streaming_vector_ingest_empty_corpus_bootstrap(spark, tmp_path):
     )
     # within-batch near-dup collapsed; index pinned at the BATCH dim
     assert {r["vec_id"] for r in spark.read.parquet(sink).collect()} == {100}
-    from haensel_ams_data_engineer_challenge_spark.operators.similarity import (
-        _read_index_params,
+    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
+        artifact_open,
     )
 
-    assert _read_index_params(spark, idx)["dim"] == str(DIM)
+    assert artifact_open(spark, idx).params["dim"] == str(DIM)

@@ -151,6 +151,7 @@ def test_seam_e2e_and_ladder_refusal(spark, tmp_path):
         spark, old, {},
         {"kind": "encoder", "encoder": "video-v1", "dim": 64, "grid": 8,
          "frames": 4, "version": "cafe00000000"},
+        None,
     )
     with pytest.raises(ValueError, match="ladder"):
         embed_with_model(df, old).collect()
