@@ -85,7 +85,7 @@ def _parser() -> argparse.ArgumentParser:
         help="route users whose session+conversion timeline exceeds N "
         "rows through the as-of join's chunked hot-key path "
         "(bot-traffic straggler mitigation — see BASELINE.md's "
-        "measured cliff).  Default since round 11: 100000 (the knob "
+        "measured cliff).  Default 100000 (the knob "
         "sweep's flat part) — the pipeline is skew-safe out of the "
         "box; pass 0 to opt out and keep the plain single-window plan",
     )
@@ -255,7 +255,7 @@ def _parser() -> argparse.ArgumentParser:
     se.add_argument("--sf-dir", required=False, default=None)
     se.add_argument(
         "--media-parquet", default=None, metavar="PARQUET",
-        help="search MEDIA instead of the sf-dir documents (round 12): "
+        help="search MEDIA instead of the sf-dir documents : "
         "corpus (doc_id, payload binary) and queries (query_id, "
         "payload binary) embed through --encoder-model (a committed "
         "image-v1/audio-v1/video-v1 artifact — query-by-example over "
@@ -311,7 +311,7 @@ def _parser() -> argparse.ArgumentParser:
         "sample of ~N vectors instead of the full corpus (the FAISS "
         "train-on-sample discipline; assignment still covers every "
         "vector) — pinned in the index marker; size cells by "
-        "k~sqrt(corpus) (round 12)",
+        "k~sqrt(corpus)",
     )
     se.add_argument(
         "--retrain-if-drift", type=float, default=None, metavar="X",
@@ -321,7 +321,7 @@ def _parser() -> argparse.ArgumentParser:
         "k resized by the sqrt-N rule, committed as one atomic "
         "manifest swap (a reader mid-query keeps the complete old "
         "generation — no delete-then-rebuild gap); ~2.0 is the "
-        "documented operating point (round 12)",
+        "documented operating point",
     )
     se.add_argument(
         "--index-stats", action="store_true",
@@ -329,7 +329,7 @@ def _parser() -> argparse.ArgumentParser:
         "version, cell occupancy profile from training, and "
         "drift_stat (max cell-share growth vs training; ~1.0 under "
         "uniform appends, rising when appends skew — retrain past "
-        "~2x; round 12)",
+        "~2x)",
     )
 
     di = sub.add_parser(
@@ -337,7 +337,7 @@ def _parser() -> argparse.ArgumentParser:
         help="perceptual-hash near-dup over an image-payload parquet "
         "(doc_id, payload binary): real PNG pixel decode -> dHash "
         "banding -> hamming verify -> connected components -> one "
-        "survivor per duplicate cluster (round 11)",
+        "survivor per duplicate cluster",
     )
     di.add_argument("--images-parquet", required=True, metavar="PARQUET")
     di.add_argument("--work-dir", required=True)
@@ -354,7 +354,7 @@ def _parser() -> argparse.ArgumentParser:
         "semdedup = the SemDeDup rule on the same features (keep the "
         "example FARTHEST from its k-means cluster centroid per "
         "duplicate group — diversity-preserving pruning, the paper's "
-        "native image use) (round 12)",
+        "native image use)",
     )
     di.add_argument(
         "--cosine-threshold", type=float, default=0.9, metavar="C",
@@ -384,7 +384,7 @@ def _parser() -> argparse.ArgumentParser:
     )
     di.add_argument(
         "--bands", type=int, choices=(4, 8), default=4,
-        help="dHash banding layout (round 13): 4 = 16-bit bands "
+        help="dHash banding layout: 4 = 16-bit bands "
         "(fine buckets, guarantee at hamming<=3); 8 = 8-bit bands "
         "(hamming<=7 pigeonhole-GUARANTEED — covers most of the "
         "default threshold with a hard floor, at 2x band-stream rows "
@@ -398,7 +398,7 @@ def _parser() -> argparse.ArgumentParser:
         "head over the box features) as a committed PROJECTED image-v1 "
         "encoder artifact; output dim = row count, and every consumer "
         "(dedup-images --encoder-model, ingest-media, search "
-        "--media-parquet) sizes itself from the artifact (round 12)",
+        "--media-parquet) sizes itself from the artifact",
     )
     ii.add_argument("--weights-parquet", required=True, metavar="PARQUET")
     ii.add_argument("--model-dir", required=True)
@@ -412,7 +412,7 @@ def _parser() -> argparse.ArgumentParser:
         "head over the envelope features) as a committed PROJECTED "
         "audio-v1 encoder artifact; output dim = row count, and every "
         "consumer (dedup-audio --encoder-model, ingest-media) sizes "
-        "itself from the artifact (round 13 — import-imageenc parity, "
+        "itself from the artifact (import-imageenc parity, "
         "so bring-your-own-weights covers every modality the seam "
         "serves)",
     )
@@ -428,7 +428,7 @@ def _parser() -> argparse.ArgumentParser:
         "multi-channel mixdown) -> gain-invariant energy-envelope "
         "features (audio-v1 encoder artifact) -> banded sign-LSH + "
         "exact-cosine verify -> connected components -> one survivor "
-        "per duplicate cluster (round 12)",
+        "per duplicate cluster",
     )
     da.add_argument("--audio-parquet", required=True, metavar="PARQUET")
     da.add_argument("--work-dir", required=True)
@@ -444,7 +444,7 @@ def _parser() -> argparse.ArgumentParser:
         "bar admits); both = union of drops (a clip survives only if "
         "BOTH tiers keep it; component ids come from the envelope "
         "tier's clustering) — ONE decode/embed pass feeds every tier "
-        "(round 13, dedup-images --method parity)",
+        "(dedup-images --method parity)",
     )
     da.add_argument(
         "--semdedup-threshold", type=float, default=None, metavar="C",
@@ -472,7 +472,7 @@ def _parser() -> argparse.ArgumentParser:
         "dedup-video",
         help="video near-dup over a video-payload parquet (doc_id, "
         "payload binary): MJPEG/AVI demux + sampled real JPEG frame "
-        "decode -> pooled video-v1 clip features (round 13) -> banded "
+        "decode -> pooled video-v1 clip features -> banded "
         "sign-LSH + exact-cosine verify -> connected components -> "
         "one survivor per duplicate cluster; non-MJPEG containers "
         "dedup byte-exact via the fake rung",
@@ -517,7 +517,7 @@ def _parser() -> argparse.ArgumentParser:
         "line, then 'term v1..vd' rows; GloVe's headerless rows work "
         "too) — parsed distributed (spark.read.text + split/cast, no "
         "driver loop); malformed lines are quarantined verbatim under "
-        "MODEL_DIR/vec_quarantine, never silently dropped (round 12)",
+        "MODEL_DIR/vec_quarantine, never silently dropped",
     )
     wv.add_argument("--model-dir", required=True, metavar="DIR")
     wv.add_argument(
@@ -697,7 +697,7 @@ def _parser() -> argparse.ArgumentParser:
                     "batch probe + sliver verify instead of a full "
                     "URL anti-join; requires --url-dedup-col)")
     ig.add_argument("--url-dedup-col", default=None, metavar="COL",
-                    help="URL tier (round 14): reject re-crawls of "
+                    help="URL tier: reject re-crawls of "
                     "already-admitted URLs on canonical_url(COL) "
                     "BEFORE any quality gate or content tier "
                     "(utm/gclid tags, case, default ports and "
@@ -726,7 +726,7 @@ def _parser() -> argparse.ArgumentParser:
 
     im = sub.add_parser(
         "ingest-media",
-        help="streaming MEDIA feed drain (round 12): (id, payload) "
+        help="streaming MEDIA feed drain: (id, payload) "
         "parquet batches embed through a committed encoder artifact "
         "(image-v1 / audio-v1 — the dedup-images/dedup-audio feature "
         "space), near-dup dedup (exact cosine >= threshold) vs corpus "
@@ -743,7 +743,7 @@ def _parser() -> argparse.ArgumentParser:
         "--modality", choices=("image", "audio", "video"), default=None,
         help="builds the stateless feature-space artifact under the "
         "work dir; required unless --encoder-model points at a "
-        "committed encoder (video = the round-13 MJPEG/AVI sample "
+        "committed encoder (video = the MJPEG/AVI sample "
         "tier: sampled frames -> JPEG decode -> pooled box features)",
     )
     im.add_argument(
@@ -977,7 +977,7 @@ def main(argv: list[str] | None = None) -> int:
                 from .sources.jsonl import read_documents_jsonl
 
                 if args.docs_jsonl.endswith(".zst"):
-                    # round 15: .jsonl.zst dumps route through the
+                    # .jsonl.zst dumps route through the
                     # zstd rung (stdlib/zstandard ladder, loud refusal
                     # when neither is installed)
                     import os as _os
@@ -1195,7 +1195,7 @@ def main(argv: list[str] | None = None) -> int:
                         "dialect": "byte-level",
                         "merges": [list(m) for m in merges],
                     }
-                    # round 15: also ship the PUBLISHED file pair
+                    # also ship the PUBLISHED file pair
                     # (vocab.json + merges.txt) so standard tokenizer
                     # loaders consume the artifact without engine code
                     export_gpt2_tokenizer(
@@ -1223,7 +1223,7 @@ def main(argv: list[str] | None = None) -> int:
                     back.select("doc_id", "text"),
                     args.save_near_dup_index,
                     force=True,
-                ).count()
+                ).table("bands").count()
                 print(
                     f"near_dup_index_rows={n_idx} "
                     f"-> {args.save_near_dup_index}"
@@ -1289,7 +1289,7 @@ def main(argv: list[str] | None = None) -> int:
                     # the model seam: one encoder for docs AND queries
                     # (a query embedded in a different space than the
                     # index finds noise); the index dir is keyed by the
-                    # encoder's CONTENT version (review fix) so an
+                    # encoder's CONTENT version so an
                     # index built under encoder A can never be probed
                     # or --refresh-index-appended with B-space vectors
                     # — a different/rebuilt encoder simply builds its
@@ -1336,9 +1336,8 @@ def main(argv: list[str] | None = None) -> int:
                     # full corpus appends exactly the new docs — AT THE
                     # COMMITTED SHAPE: a retrained index pins a resized
                     # k, and appending with the session default would
-                    # refuse (review fix: the old blanket ValueError
-                    # swallow turned that refusal into silently never
-                    # indexing new documents again)
+                    # refuse (swallowing that refusal would silently
+                    # stop indexing new documents)
                     ivf_index_append(
                         dvecs, index_path,
                         k=int(committed["k"]),
@@ -1474,7 +1473,7 @@ def main(argv: list[str] | None = None) -> int:
                 if enc_got.get("encoder") != IMAGE_KIND:
                     # an audio/text encoder over image payloads would
                     # silently fall to the fake rung (byte-exact-only
-                    # matching) — refuse instead (review fix)
+                    # matching) — refuse instead
                     print(
                         f"--encoder-model at {args.encoder_model} is "
                         f"{enc_got.get('encoder') or 'missing'}, not an "
@@ -1521,7 +1520,7 @@ def main(argv: list[str] | None = None) -> int:
                 # scan quadratic).  sqrt-N cells (the IVF sizing rule)
                 # floored so tiny corpora stay in one cell — a fixed
                 # cap of 10 put 100k images in 10 cells and made the
-                # in-cell scan O(n^2/10) (review fix).
+                # in-cell scan O(n^2/10).
                 from .operators.similarity import ivf_suggest_cells
 
                 kept = semdedup_keep(

@@ -137,7 +137,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
     prelude = "WITH " + DOC_SHINGLES_CTE.strip()
 
     # ---- dedup -----------------------------------------------------------
-    # Round 6 tags in the INCREMENTAL ingestion arm: a synthetic "new
+    # The INCREMENTAL ingestion arm: a synthetic "new
     # batch" derived from the corpus (ids +10000; even source ids keep
     # their text — true duplicates the bloom must catch — odd ids get
     # a ' v2' suffix — genuinely new) is deduped against the existing
@@ -154,12 +154,11 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             .otherwise(F.concat(F.col("text"), F.lit(" v2")))
             .alias("text"),
         )
-        # round 16: the r15 thread-pool overlap of these two builders
-        # was REVERTED after a pairwise A/B (3 alternating warm reps,
-        # one session) measured overlap 1.92/serial 1.93 s best — the
-        # groups arm is lazy, so there was nothing for the pool to
-        # overlap with the incremental arm's one bounded materialize
-        # (r15 verdict item 5: prove the win or revert).
+        # built serially: a pairwise A/B (3 alternating warm reps, one
+        # session) measured a thread-pool overlap at 1.92 s against
+        # 1.93 s serial — the groups arm is lazy, so there is nothing
+        # to overlap with the incremental arm's one bounded
+        # materialize.
         groups = D.dedup_exact(docs)
         new = D.incremental_new_docs(batch, docs)
         nb = F.lit(None).cast("long")
@@ -201,7 +200,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
 
     def _minhash_full_and_index(spark: SparkSession, sf: str) -> DataFrame:
         """full = the in-frame LSH candidate pairs (the original arm);
-        index = round 9's PRODUCTION incremental path — build the
+        index = the PRODUCTION incremental path — build the
         PERSISTED MinHash band index artifact over 90% of the corpus
         (operators/minhash_index.py, manifest protocol, probed
         rows read from disk), probe it with the remaining 10% as the
@@ -218,15 +217,17 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
         )
 
         def _probe_arm() -> DataFrame:
-            bands = MI.minhash_index_build(idx_part, idx_path)
-            return MI.near_dup_probe(batch_part, bands, idx_part).select(
+            index = MI.minhash_index_build(idx_part, idx_path)
+            return MI.near_dup_probe(
+                batch_part, index.table("bands"), idx_part
+            ).select(
                 F.lit("index").alias("method"),
                 F.col("doc_id").alias("id_a"),
                 F.col("dup_of").alias("id_b"),
                 "jaccard",
             )
 
-        # round 15 (optimization, guide §2.6): the in-frame LSH arm and
+        # The in-frame LSH arm and
         # the persisted-index probe arm are independent; each runs
         # eager work at build time (the signature materialize / the
         # index build-or-read + candidate verify materialize), so a
@@ -300,7 +301,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
     # engines; the contaminated flag mirrors the vocab-prune ->
     # flood-cap -> overlap-fraction stages CTE-for-stage.
     CAP_PER_LANG = 40  # sf0.01 has ~100 docs/lang, so the cap bites
-    # tokens/lang via bpe_ish_count (round-5 verdict #3: training
+    # tokens/lang via bpe_ish_count (training
     # budgets are tokens, not chars); per-lang survivor totals are
     # ~3.5-11.8k tokens at sf0.01 and 38-112k at sf0.1, so 2,200 bites
     # for every lang at both SFs
@@ -367,7 +368,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
         kept = materialize(kept.repartition(respread_width(spark)))
         surv = kept.filter("is_survivor")
 
-        # round 15 (optimization, guide §2.6): the three survivor-flag
+        # The three survivor-flag
         # builders below (doc cap, token cap, contamination) all
         # consume the SAME materialized `kept` stream and are mutually
         # independent, but each runs eager work at construction time
@@ -408,13 +409,13 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             .withColumn("kept_after_cap", F.coalesce(F.col("__cap"), F.lit(False)))
             .drop("__cap")
         )
-        # TOKEN-budgeted counterpart (round 5): training mixtures are
+        # TOKEN-budgeted counterpart: training mixtures are
         # budgeted in tokens, not doc counts — the real token_budget_cap
         # (distributed prefix sum, sampling.py) flags the maximal
         # hash-order prefix of survivors within the per-lang TOKEN
-        # budget (bpe_ish_count, the engine's tokenizer proxy — round-5
-        # verdict #3; the column is lazy, so the regex runs only on the
-        # survivor branch feeding this cap)
+        # budget (bpe_ish_count, the engine's tokenizer proxy; the
+        # column is lazy, so the regex runs only on the survivor branch
+        # feeding this cap)
         capped = (
             capped.join(F.broadcast(tok_ids), "doc_id", "left")
             .withColumn(
@@ -533,14 +534,14 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
 
     e["corpus_survivors_split"] = (_survivors_split, _survivors_split_sql())
 
-    # ---- benchmark decontamination (round-3 rotation) --------------------
+    # ---- benchmark decontamination ----------------------------------------
     # documents with doc_id % 25 == 0 play the eval/benchmark set; the
     # word-trigram shingles are exactly the shared doc_shingles CTE, so
     # the oracle mirrors the operator's vocab-prune -> flood-cap ->
     # overlap-fraction pipeline CTE-for-stage (flood control as a
     # grouped document-frequency + anti-join, matching the engine's
     # groupBy + broadcast anti-join form).
-    # round 6 tags in the 'bm25' arm: ranked-retrieval decontamination
+    # The 'bm25' arm: ranked-retrieval decontamination
     # (operators/retrieval.py) — for each probe doc, the top-k training
     # docs by Okapi BM25 over a 16-token query snippet; the modern
     # complement to the overlap-threshold form (a near-verbatim leak
@@ -570,7 +571,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
                 " ", F.slice(search_tokens("text"), 1, BM25_QUERY_TOKENS)
             ).alias("text"),
         )
-        # round 15 (optimization, guide §2.6): the two method arms each
+        # The two method arms each
         # materialize an intermediate at build time (ngram's pruned
         # hits, bm25's pruned postings) and are independent — overlap
         # their build-time jobs.  Same DataFrames, same rows.
@@ -688,7 +689,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
     )
 
     # ---- similarity search ----------------------------------------------
-    # round 10 adds the 'int8' arm: the same two-stage exact top-k over
+    # The 'int8' arm: the same two-stage exact top-k over
     # SCALAR-QUANTIZED vectors (similarity.quantize_embedding — floor
     # grid, per-vector scale cancels in cosine) — the 8x index-memory
     # cut, recall measured essentially free (49-50/50 @5; BASELINE.md)
@@ -735,7 +736,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             WHERE rank <= {ANN_K}""",
     )
 
-    # multi-table sign-LSH (round-5 verdict #7: single-bucket recall
+    # multi-table sign-LSH (single-bucket recall
     # was ~0 on the near-isotropic testdata; 32 tables x 6 planes
     # measure recall@3 ~0.8 vs brute force — pinned by pytest)
     cos_qn_lsh = S.cosine_sql("q.embedding", "n.embedding")
@@ -769,8 +770,8 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             WHERE rank <= {ANN_LSH_K}""",
     )
 
-    # IVF with a REAL k-means coarse quantizer + multi-probe (round-5
-    # verdict #7: the testdata's label column is geometrically
+    # IVF with a REAL k-means coarse quantizer + multi-probe (the
+    # testdata's label column is geometrically
     # meaningless, so label-cell IVF had recall ~0.1; k=10 cells /
     # 3 Lloyd rounds / 3 probes measure recall@3 0.90-1.00 — pinned by
     # pytest).  The whole trained structure — seeds, assignments,
@@ -850,7 +851,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
     # banded-LSH candidates + exact cosine verify — the 100 TB shape
     # (similarity.embedding_dup_pairs_lsh docstring has the recall
     # math; the all-pairs form stays as the pytest recall cross-check).
-    # Round 8 adds the 'hashed' arm: the same near-dup machinery over
+    # The 'hashed' arm: the same near-dup machinery over
     # vectors DERIVED FROM RAW TEXT by the feature-hashing embedder
     # (similarity.hash_embed — signed integer counts, exact, no
     # external model), so the embedding tier runs end-to-end from the
@@ -860,7 +861,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
     # hash-embedded text vectors are CORRELATED (shared common-token
     # directions), so the default 8-bucket bands flood (measured: one
     # bucket held 68% of sf0.1's vectors; 11.9M candidate pairs).
-    # Round-9 fix per the sizing rule planes >= log2(n / occupancy):
+    # Sized by the rule planes >= log2(n / occupancy):
     # 10 planes/band (1024 buckets) + the MAX_VECTOR_BUCKET backstop.
     HASHED_DUP_PLANES = 10
 
@@ -879,7 +880,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             planes_per_band=HASHED_DUP_PLANES,
             max_bucket=S.MAX_VECTOR_BUCKET,
         ).withColumn("method", F.lit("hashed"))
-        # round 9: SemDeDup arm — cluster-scoped semantic near-dup
+        # SemDeDup arm — cluster-scoped semantic near-dup
         # (k-means cell self-join instead of LSH banding); shares the
         # session-cached IVF quantizer with ann_topk_ivf (same
         # index_cache_key -> same trained index, zero re-training)
@@ -892,7 +893,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             .drop("cell")
             .withColumn("method", F.lit("semdedup"))
         )
-        # round 10: 'model' arm — the SAME near-dup machinery over
+        # 'model' arm — the SAME near-dup machinery over
         # vectors produced by the batched model-inference seam
         # (operators/embed.embed_with_model: executor-cached encoder
         # artifact, mapInPandas).  The synproj-v1 reference encoder
@@ -912,7 +913,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             planes_per_band=HASHED_DUP_PLANES,
             max_bucket=S.MAX_VECTOR_BUCKET,
         ).withColumn("method", F.lit("model"))
-        # round 11: 'wordvec' arm — the FLOAT-WEIGHT encoder kind
+        # 'wordvec' arm — the FLOAT-WEIGHT encoder kind
         # through the same seam (embed.wordvec_model_build: dense
         # (term -> vector) table on the integer grid so the twin
         # recomputes it bit-for-bit).  Same artifact marker protocol,
@@ -932,8 +933,8 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             planes_per_band=HASHED_DUP_PLANES,
             max_bucket=S.MAX_VECTOR_BUCKET,
         ).withColumn("method", F.lit("wordvec"))
-        # round 12: 'image' arm — SEMANTIC IMAGE dedup through the
-        # same seam (multimodal/imgembed.py, r11 verdict task 2): real
+        # 'image' arm — SEMANTIC IMAGE dedup through the
+        # same seam (multimodal/imgembed.py): real
         # synthesized PNGs (one per doc_id + a brightness-shifted twin
         # for every 5th — the planted recolored duplicates, exact
         # feature equality so they score cosine 1.0 in both engines)
@@ -1063,9 +1064,9 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
     # ---- text analysis ---------------------------------------------------
     # token stats + quality scoring + intra-doc repetition + language
     # ID fused into one projection (one registry slot, one driver row,
-    # same JVM-built-in column tree); repetition_ratio tagged round 3,
-    # Gopher columns round 4, langid (the former text_langid entry)
-    # round 5 — freeing a 50-cap slot for dedup_substring_anchors.
+    # same JVM-built-in column tree), with the repetition ratio, the
+    # Gopher columns and langid (the former text_langid entry, which
+    # freed a 50-cap slot for dedup_substring_anchors).
     lang_scores_sql = ",\n".join(
         f"len(list_intersect(list_distinct(toks), "
         f"[{', '.join(repr(w) for w in words)}])) AS s_{lang}"
@@ -1079,11 +1080,11 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
         + " ELSE 'und' END"
     )
     stop_list = ", ".join(f"'{w}'" for w in T.EN_STOPWORDS)
-    # the gopher_pass flag uses Gopher's PUBLISHED 8-word list (round-4
-    # advice), distinct from the langid EN_STOPWORDS backing
+    # the gopher_pass flag uses Gopher's PUBLISHED 8-word list,
+    # distinct from the langid EN_STOPWORDS backing
     # stopword_ratio above
     gopher_stop_list = ", ".join(f"'{w}'" for w in T.GOPHER_STOPWORDS)
-    # round 6 tags in TEMPERATURE sampling (p ∝ n^alpha multilingual
+    # TEMPERATURE sampling (p ∝ n^alpha multilingual
     # rule, alpha=0.5): per-lang integer thresholds derived from
     # corpus counts (operators/sampling.temperature_thresholds —
     # alpha=0.5 so the sqrt-based derivation is bit-identical in the
@@ -1093,7 +1094,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
         from ..operators.sampling import temperature_thresholds
 
         docs = _docs(spark, sf)
-        # round 15 (optimization, guide §2.6): the three eager
+        # The three eager
         # prerequisites — the per-lang count collect (temperature
         # thresholds), the shared word-token materialize, and the
         # char-trigram materialize (langid NB features) — are
@@ -1140,7 +1141,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             ),
             16, 10,
         ).cast("long")
-        # round 6: CCNet-style unigram LM quality signal — model
+        # CCNet-style unigram LM quality signal — model
         # trained on the corpus itself (operators/lm.py), scores
         # left-joined so zero-token docs keep NULLs; lm_bucket is the
         # CCNet head/middle/tail split — exact NTILE(3) by (xent,
@@ -1150,13 +1151,13 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
         from ..operators.lm import bigram_doc_scores, unigram_doc_scores
         from ..operators.rank import ntile_exact
 
-        # ... and the inter-document duplication share (round 6,
-        # operators/dedup.dup_shingle_fraction): the one corpus-level
+        # ... and the inter-document duplication share
+        # (operators/dedup.dup_shingle_fraction): the one corpus-level
         # signal intra-doc stats can't see (boilerplate headers/
         # footers/templates), left-joined so <n-token docs keep NULL
         from ..operators.dedup import dup_shingle_fraction
 
-        # round 8: ONE materialized tokenize (`toked`, built above)
+        # ONE materialized tokenize (`toked`, built above)
         # feeds the three token-keyed operators (unigram, bigram, NB) —
         # each used to re-run the regex tokenize 2x (model + scoring
         # passes), ~6 corpus tokenizations per query.  The materialized
@@ -1169,7 +1170,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             ), 3,
             ["lm_xent", "doc_id"], out_col="lm_bucket",
         )
-        # round 8: SOFT quality sampling (the DCLM-style alternative
+        # SOFT quality sampling (the DCLM-style alternative
         # to a hard threshold — keep probability proportional to the
         # quality score): deterministic md5 bucket vs floor(score *
         # 2^32), entirely row-local.  floor of a product of identical
@@ -1197,7 +1198,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
                 ).alias("soft_quality_keep"),
             )
             .join(scores, "doc_id", "left")
-            # round 8 (r6 verdict task 4): bigram arm — count key
+            # bigram arm — count key
             # (prev, term), validating lm.py's claim that the unigram
             # shape generalizes to higher-order models unchanged
             .join(
@@ -1206,7 +1207,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
                 ),
                 "doc_id", "left",
             )
-            # round 8: classifier-filter tier (operators/classify.py)
+            # classifier-filter tier (operators/classify.py)
             # — multinomial NB self-trained with lang supervision, the
             # distributed core of fasttext-style quality/domain
             # filtering; pred + score hash-gated
@@ -1219,7 +1220,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
                 ),
                 "doc_id", "left",
             )
-            # round 9 (r8 verdict task 4): REAL langid — the same NB
+            # REAL langid — the same NB
             # stack over lowercase char TRIGRAMS (Cavnar-Trenkle
             # features), lang-supervised; pred_lang_nb lands beside
             # the stopword heuristic's pred_lang so the gate carries
@@ -1264,9 +1265,9 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
                 )
             ).alias("quality_score"),
             T.repetition_ratio("text", 3).alias("repetition_ratio"),
-            # Gopher document-quality rules (Rae et al. 2021 §A1.1)
-            # tagged in round 4: two new signal columns + the composite
-            # published-thresholds filter flag
+            # Gopher document-quality rules (Rae et al. 2021 §A1.1):
+            # two signal columns + the composite published-thresholds
+            # filter flag
             T.mean_word_len("text").alias("mean_word_len"),
             T.alpha_word_frac("text").alias("alpha_word_frac"),
             T.gopher_quality_pass("text").alias("gopher_pass"),
@@ -1309,7 +1310,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
                        {lang_scores_sql}
                 FROM base),
             scored AS (SELECT *, {best_sql} AS best FROM enriched),
-            -- temperature sampling (round 6): thresholds recomputed
+            -- temperature sampling: thresholds recomputed
             -- from SQL-side counts; alpha=0.5 makes the derivation
             -- (exact-rounded division -> correctly-rounded sqrt ->
             -- exact *2^32 -> floor) bit-identical to the Python side
@@ -1402,9 +1403,9 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
     # ---- exact-substring near-dup (Lee et al. 2021 style) ---------------
     # content-defined anchor sampling over char 32-grams; windowless
     # anchor flood cap; pairs share >= one sampled verbatim run and
-    # carry the matched span per side (round-5 verdict #4): first-
+    # carry the matched span per side: first-
     # occurrence offsets, span = [min off, max off + gram - 1].
-    # Round 6 adds the REMOVE action as a second method-tagged arm:
+    # The REMOVE action as a second method-tagged arm:
     # the id_b side of every pair (keep-first policy) has its matched
     # spans merged into disjoint islands and EXCISED (D.cut_spans —
     # Lee et al. delete the duplicated spans, not the documents); the
@@ -1442,7 +1443,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             "n_islands", "chars_removed",
             F.md5("text_cut").alias("cut_hash"),
         )
-        # round 8: LINE-level boilerplate removal arm (operators/
+        # LINE-level boilerplate removal arm (operators/
         # dedup.remove_duplicate_lines — the CCNet/RefinedWeb step
         # span dedup can't cover).  The flat synthetic texts carry no
         # newlines, so the arm synthesizes multi-line docs from corpus
@@ -1621,12 +1622,12 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             FROM lcut""",
     )
 
-    # round 6 tags in TRAINING-SEQUENCE chunking (operators/pack.
+    # TRAINING-SEQUENCE chunking (operators/pack.
     # chunk_sequences): each doc's BPE-ish token stream sliced into
     # seq_len=64-token windows with 8 tokens of overlap — the corpus ->
     # trainer hand-off; rows are (chunk_idx, n_tokens, md5(chunk_text))
     # per chunk, method-tagged alongside the fingerprint rows.
-    # round 6 also tags in the tokenizer-training statistics
+    # The tokenizer-training statistics
     # (operators/vocab.py): 'vocab' = top-50 BPE-ish terms by corpus
     # occurrence count, 'pair' = top-50 adjacent token pairs (the BPE
     # first-merge candidates).  Corpus-level rows reuse the shared
@@ -1649,7 +1650,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
         ("o", "r"), ("a", "r"),
     ]
 
-    # round 15 (r14 verdict #1): the BYTE-LEVEL dialect (GPT-2 regex
+    # The BYTE-LEVEL dialect (GPT-2 regex
     # pre-tokenization, 256-byte alphabet, no </w>/OOV — operators/
     # bpe_bytes.py) rides the same key as the 'bpe_bytes' arm.  This
     # list is bpe_train_bytes_local(docs, 16) on the sf0.01 corpus,
@@ -1664,8 +1665,8 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
         ("a", "r"), ("p", "ar"), ("Ġ", "f"), ("Ġ", "a"),
     ]
 
-    # round 7 tags in CROSS-DOCUMENT sequence packing (operators/pack.
-    # pack_sequences — verdict #2, the trainer hand-off step): every
+    # CROSS-DOCUMENT sequence packing (operators/pack.
+    # pack_sequences — the trainer hand-off step): every
     # doc's tokens + one separator concatenated in doc_id order and
     # sliced into seq_len=64 sequences.  Corpus-level rows (doc_id
     # NULL, the vocab-arm convention): fingerprint = md5(seq_text),
@@ -1689,7 +1690,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
         ch = chunk_sequences(docs, seq_len=64, overlap=8)
         nb = F.lit(None).cast("long")
 
-        # round 15 (optimization, guide §2.6): the three arm builders
+        # The three arm builders
         # that run EAGER work at construction time (the vocab/pair
         # count materialize, pack's prefix-sum materialize, the
         # shuffle arm's rank materialize) are independent — build them
@@ -1737,9 +1738,9 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             # the ARROW segmentation path under the same merges (its
             # oracle rows are the same segmentation, so the hash gate
             # proves Arrow == expression == oracle every round) PLUS
-            # the round-15 byte-level (GPT-2 dialect) arm — hex-space
+            # the byte-level (GPT-2 dialect) arm — hex-space
             # fingerprints so the oracle stays pure ASCII — riding ONE
-            # fused Arrow stage (round-14 chain-fusion discipline;
+            # fused Arrow stage (the chain-fusion discipline;
             # pytest pins fused == separate row-for-row, so the
             # oracle twins are untouched)
             fused_bpe_arms(
@@ -1756,7 +1757,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
                 "n_tokens",
             )
         ).unionByName(
-            # round 9: deterministic global training-order shuffle —
+            # deterministic global training-order shuffle —
             # the hash gate pins the ENTIRE seeded permutation
             # (doc -> shard, position-within-shard)
             shuffled.select(
@@ -1833,14 +1834,14 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
     )
 
     # ---- multimodal (binary-column plumbing) ----------------------------
-    # round 5: the former multimodal_binary_metadata entry (n_bytes +
+    # the former multimodal_binary_metadata entry (n_bytes +
     # content_hash) is tagged INTO the decode stub — content_hash is a
-    # column of decode_image_meta now — freeing a 50-cap slot.
-    # round 6: the entry widens from decode-only to the FULL pipeline
+    # column of decode_image_meta — freeing a 50-cap slot.
+    # The entry covers the FULL pipeline, not decode only
     # (decode ⋈ resize ⋈ frame-sample ⋈ feature-extract), promoting
     # the three formerly pytest-only Arrow contracts into the
     # hash-checked gate.
-    # round 9: the entry gains the real header-decode arm (synthesized
+    # The entry has the real header-decode arm (synthesized
     # valid PNG/JPEG/GIF payloads through the same decode operator,
     # decoder='header') next to the stub-pipeline arm — "decode" in
     # the gate now certifies actual image-byte parsing.
@@ -1855,21 +1856,21 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
     )
 
     # ---- chunk packing (P2) ---------------------------------------------
-    # round 5: both packing forms (closed-form cumsum + exact greedy)
+    # both packing forms (closed-form cumsum + exact greedy)
     # union into one method-tagged entry, freeing a 50-cap slot; each
     # arm still hash-checks against its own oracle branch.
     from ..operators.pack import PACK_BOTH_SQL, pack_groups_both
 
     e["pack_groups"] = (pack_groups_both, PACK_BOTH_SQL)
 
-    # ---- PII redaction (round-4 verdict #2) -----------------------------
+    # ---- PII redaction -----------------------------
     # The synthetic corpus carries no PII, so the entry derives
     # deterministic PII-bearing text from corpus columns (doc_id-seeded
     # email/phone/IP prepended to `text`), redacts it, and returns the
     # redacted text plus per-type counts — genuine nonzero matches,
     # bit-exact DuckDB twin, no fixture. Counts are SEQUENTIAL (each
     # pattern counted on the preceding patterns' output), exactly what
-    # redact_pii replaces (round-4 advice).
+    # redact_pii replaces.
     def _pii_synth() -> "F.Column":
         # built lazily: Column construction needs an active SparkContext,
         # and registry() must stay importable/callable without one
@@ -1884,7 +1885,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
             F.col("text"),
         )
 
-    # round 8: the entry is the content-policy surface — alongside PII
+    # the entry is the content-policy surface — alongside PII
     # redaction it carries the domain-blocklist flag (operators/
     # blocklist.py, UT1-style label-boundary suffix matching).  Hosts
     # are synthesized deterministically from corpus columns (the same
@@ -1952,8 +1953,7 @@ def extension_entries() -> dict[str, tuple[QueryFn, str | None]]:
 
     e["pii_redaction"] = (_pii_redaction, _pii_redaction_sql())
 
-    # ---- skew-resistant aggregation + join (r4 verdict #5 rotation; the
-    # join arms are round 6) -------------------------------------------
+    # ---- skew-resistant aggregation + join ------------------------------
     # scale.salted_sum was pytest-only; the driver row proves the
     # two-phase salted aggregate equals the plain GROUP BY sum exactly
     # (decimal-routed partials make the regrouping bit-stable).  Round

@@ -82,8 +82,8 @@ def minhash_bands(
     )
     # one parsed expr per hash instead of ~6 Column calls each: the k
     # min-aggregates were the engine's single largest construction-
-    # chatter site (r16 py4j counter: 528 round-trips per warm
-    # dedup_minhash_lsh build; guide §5) — same expression tree
+    # chatter site (528 py4j round-trips per warm dedup_minhash_lsh
+    # build) — same expression tree
     sigs = sh.groupBy(id_col).agg(
         *[
             F.expr(f"min(md5(concat('{i}|', s))) AS h{i}")
@@ -116,6 +116,19 @@ def minhash_bands(
     return sigs.select(F.col(id_col), F.posexplode(bands).alias("band", "band_key"))
 
 
+def drop_flooded_buckets(bands: DataFrame, max_bucket_size: int) -> DataFrame:
+    """``bands`` without the (band, band_key) buckets holding more than
+    ``max_bucket_size`` rows (see MAX_BAND_BUCKET and
+    :func:`dedup_minhash_lsh` on why a groupBy, not a window)."""
+    flooded = (
+        bands.groupBy("band", "band_key")
+        .agg(F.count(F.lit(1)).alias("__bsz"))
+        .filter(F.col("__bsz") > max_bucket_size)
+        .select("band", "band_key")
+    )
+    return bands.join(F.broadcast(flooded), ["band", "band_key"], "left_anti")
+
+
 def dedup_minhash_lsh(
     df: DataFrame,
     text_col: str = "text",
@@ -142,13 +155,7 @@ def dedup_minhash_lsh(
     """
     bands = minhash_bands(df, text_col, id_col, k, band_size, shingle_n)
     if max_bucket_size is not None:
-        flooded = (
-            bands.groupBy("band", "band_key")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") > max_bucket_size)
-            .select("band", "band_key")
-        )
-        bands = bands.join(F.broadcast(flooded), ["band", "band_key"], "left_anti")
+        bands = drop_flooded_buckets(bands, max_bucket_size)
         # the capped stream feeds both self-join sides; materialize it
         # once so the band derivation + flood cap run a single time
         # (the stream is (id, band, band_key) — n_bands rows/doc of
@@ -327,7 +334,7 @@ def substring_dup_pairs(
     broadcast anti-join — DESIGN.md's named shape) before pairing, so
     a ubiquitous license header cannot go quadratic.
 
-    SPAN columns (round-5 verdict #4): each anchor carries its FIRST
+    SPAN columns: each anchor carries its FIRST
     occurrence offset in the doc (1-based char position, min over
     occurrences — ``locate`` semantics), and the pair aggregate emits
     the matched region per side: ``a_span_start``/``a_span_end`` =
@@ -343,8 +350,7 @@ def substring_dup_pairs(
     full-doc position array; transient per-row state is one chunk copy
     plus a <=chunk-length int sequence filtered to ~1/16 anchor
     positions before the gram strings are built.  A multi-MB document
-    costs ~chunk bytes of working state per row, not 32x its size
-    (round-5 advice).
+    costs ~chunk bytes of working state per row, not 32x its size.
 
     Output: (id_a, id_b, n_shared, a_span_start, a_span_end,
     b_span_start, b_span_end), id_a < id_b.  Scale: the anchor stream
@@ -357,8 +363,8 @@ def substring_dup_pairs(
     """
     # chunk starts 1, 1+chunk, ... <= n_grams; docs shorter than one
     # gram produce no chunk rows at all.  Both explodes parse as ONE
-    # expr string each (round 16, guide §5 — same trees the Column
-    # lambdas built, ~100 fewer py4j round-trips per build).
+    # expr string each (same trees the Column lambdas built, ~100
+    # fewer py4j round-trips per build).
     n_grams = f"greatest(length({text_col}) - {gram - 1}, 0)"
     chunks = df.select(
         F.col(id_col),
@@ -536,7 +542,7 @@ def incremental_new_keys(
     verify_short_circuit: bool = False,
 ) -> DataFrame:
     """The Bloom-prefiltered incremental anti-join GENERALIZED to an
-    arbitrary key column (round 14) — :func:`incremental_new_docs`
+    arbitrary key column — :func:`incremental_new_docs`
     delegates here keyed on the normalized-text hash, and the ingest
     URL tier uses it keyed on ``canonical_url`` (the documented scale
     path: the per-batch O(corpus) URL anti-join becomes a broadcast
@@ -640,7 +646,7 @@ def remove_duplicate_lines(
     return (
         marked.groupBy("__did", "__olen")
         .agg(
-            # batched expr strings (round 16, guide §5) — same trees
+            # batched expr strings — same trees
             F.expr("CAST(count(1) AS BIGINT) AS n_lines"),
             F.expr(
                 "CAST(sum(CASE WHEN __rm THEN 1 ELSE 0 END) AS BIGINT)"
@@ -765,8 +771,8 @@ def cut_spans(
     # span with s >= pos opens a new island (emits the gap before it);
     # one with s < pos overlaps or is contained (gap length clamps to
     # 0, pos only ever advances).
-    # The clamp + fold parse as ONE expr string (round 16, guide §5 —
-    # identical tree to the Column-lambda form it replaces).
+    # The clamp + fold parse as ONE expr string (an identical tree to
+    # the Column-lambda form).
     ivs = (
         "filter(transform(__ivs, iv -> named_struct("
         "'s', greatest(CAST(iv.s AS BIGINT), CAST(1 AS BIGINT)), "

@@ -1,6 +1,5 @@
 """Batched model-inference seam: documents -> embeddings through a
-PERSISTED ENCODER ARTIFACT loaded once per executor (round 10, r9
-verdict task 1).
+PERSISTED ENCODER ARTIFACT loaded once per executor.
 
 The whole semantic tier (SemDeDup, ANN, semantic ingest) previously ran
 on :func:`~.similarity.hash_embed` — exact signed bag-of-words, which by
@@ -62,9 +61,9 @@ from .similarity import EMBEDDING_DIM
 
 ENCODER_KIND = "synproj-v1"
 
-#: round-11 second encoder kind: a dense (term -> float vector) table
-#: with mean pooling — the artifact SHAPE of a real word2vec/fastText
-#: export, proving the seam is encoder-agnostic (r10 verdict task 1).
+#: second encoder kind: a dense (term -> float vector) table with mean
+#: pooling — the artifact SHAPE of a real word2vec/fastText export,
+#: proving the seam is encoder-agnostic.
 WORDVEC_KIND = "wordvec-v1"
 
 #: the wordvec grid denominator: stored components are INTEGER-VALUED
@@ -73,19 +72,19 @@ WORDVEC_KIND = "wordvec-v1"
 #: fixed-point float discipline), and the scale divides out of cosine.
 WORDVEC_SCALE = 1024
 
-#: round-12 third encoder kind: image payloads -> deterministic
-#: integer pixel features through the same seam (multimodal/
-#: imgembed.py — semantic image dedup, r11 verdict task 2).
+#: third encoder kind: image payloads -> deterministic integer pixel
+#: features through the same seam (multimodal/imgembed.py — semantic
+#: image dedup).
 IMAGE_KIND = "image-v1"
 
-#: round-12 fourth encoder kind: audio payloads -> gain-invariant
+#: fourth encoder kind: audio payloads -> gain-invariant
 #: energy-envelope features through the same seam (multimodal/
 #: audioembed.py — audio near-dup, the sample tier above the
 #: header-only audio modality).
 AUDIO_KIND = "audio-v1"
 
-#: round-13 fifth encoder kind: video payloads -> sampled MJPEG frame
-#: decode (the round-13 JPEG codec) -> pooled image-v1 box features
+#: fifth encoder kind: video payloads -> sampled MJPEG frame
+#: decode (multimodal/jpeg.py) -> pooled image-v1 box features
 #: through the same seam (multimodal/videoembed.py — the video sample
 #: tier above the header-only video modality).
 VIDEO_KIND = "video-v1"
@@ -171,6 +170,27 @@ def encoder_model_build(
     + stop_top_n rows); a real encoder's weight blobs would ride the
     same commit as further tables.
     """
+    return _encoder_build(
+        train_docs, path, artifact_open(train_docs.sparkSession, path),
+        dim=dim, stop_top_n=stop_top_n, synonyms=synonyms,
+        text_col=text_col, tokens_col=tokens_col,
+    )
+
+
+def _encoder_build(
+    train_docs: DataFrame,
+    path: str,
+    base: ArtifactSnapshot | None,
+    dim: int = EMBEDDING_DIM,
+    stop_top_n: int = ENCODER_STOP_TOP_N,
+    synonyms: dict[str, str] | None = None,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    tokens_col: str | None = None,
+) -> ArtifactSnapshot:
+    """:func:`encoder_model_build` over ``base``, the generation the
+    caller opened at ``path`` (None: nothing committed); the keywords
+    are :func:`encoder_model_build`'s."""
     spark = train_docs.sparkSession
     syn = DEFAULT_SYNONYMS if synonyms is None else synonyms
     params = {
@@ -180,9 +200,8 @@ def encoder_model_build(
         "stop_top_n": stop_top_n,
         "n_synonyms": len(syn),
     }
-    snap = artifact_open(spark, path)
-    if artifact_check(snap, params):
-        return snap
+    if artifact_check(base, params):
+        return base
     src = (
         F.col(tokens_col) if tokens_col is not None else search_tokens(text_col)
     )
@@ -208,8 +227,8 @@ def encoder_model_build(
     syn_df = local_frame(
         spark, sorted(syn.items()), "term string, canon string"
     ).coalesce(1)
-    # version = CONTENT hash of the trained tables (review fix: a
-    # constant version made every stale-guard keyed on it a no-op —
+    # version = CONTENT hash of the trained tables (a constant
+    # version would make every stale-guard keyed on it a no-op —
     # the per-worker cache and the index markers' embedder pin both
     # need rebuild-from-different-data to CHANGE the version, and an
     # identical retrain to keep it: same tables = same model = same
@@ -228,7 +247,7 @@ def encoder_model_build(
         spark, path,
         {"stopterms": stop, "synonyms": syn_df},
         {**params, "version": version},
-        snap,
+        base,
     )
 
 
@@ -246,12 +265,13 @@ def encoder_model_ensure(
     (``encoder_model_build`` pins exact hyperparameters; that is the
     right check for a caller asserting a specific configuration, the
     wrong one for "use the model at this path").  A committed artifact
-    of a DIFFERENT kind still raises.  Returns the served generation."""
+    of a DIFFERENT kind still raises.  Returns the served generation;
+    the path is opened once either way."""
     snap = artifact_open(train_docs.sparkSession, path)
     if snap is not None and snap.params:
         _check_encoder(snap)
         return snap
-    return encoder_model_build(train_docs, path, **build_kwargs)
+    return _encoder_build(train_docs, path, snap, **build_kwargs)
 
 
 def _check_encoder(snap: ArtifactSnapshot) -> dict:
@@ -596,7 +616,7 @@ def embed_model_sql(
 
 
 # --------------------------------------------------------------------------
-# wordvec-v1: the float-weight encoder kind (round 11).  The artifact
+# wordvec-v1: the float-weight encoder kind.  The artifact
 # is exactly what a real user exports from word2vec/fastText — a dense
 # (term, vector) table — plus the same commit marker every other
 # artifact rides.  Scoring is pure lookup + mean pooling: NO synonym
@@ -643,7 +663,7 @@ def wordvec_model_build(
     ``path`` (no-op when a matching committed artifact exists).
 
     ``pooling``: ``"mean"`` (default) or ``"sif"`` — SIF-weighted
-    pooling (round 11): the vectors table additionally stores each
+    pooling: the vectors table additionally stores each
     kept surface term's corpus occurrence count, and scoring weights
     every contribution by the integer-quantized SIF weight
     ``floor(SIF_SCALE * N / (N + SIF_A_DENOM * c))`` (see the module
@@ -754,10 +774,10 @@ def validate_projection_matrix(
     weights_df: DataFrame, inner: int, max_dim: int, label: str
 ):
     """Shared bring-your-own-weights validation for linear-projection
-    encoder imports (round 13: factored from image_encoder_import so
-    the audio import reuses it verbatim): ``weights_df`` must be
-    ``(row long, vec array<double>)`` — a D x ``inner`` matrix with
-    consistent inner dim, no NULL components, dense 0..D-1 row ids,
+    encoder imports (the image and audio imports share it):
+    ``weights_df`` must be ``(row long, vec array<double>)`` — a D x
+    ``inner`` matrix with consistent inner dim, no NULL components,
+    dense 0..D-1 row ids,
     and D in 1..``max_dim``.  A torn export must fail the IMPORT, not
     the first worker batch.  Returns (rows_df, collected_rows, D)."""
     rows = weights_df.select(
@@ -895,9 +915,9 @@ def _read_first_line(path: str) -> str:
 def wordvec_read_vec_text(
     spark, vec_path: str
 ) -> tuple[DataFrame, DataFrame, dict]:
-    """Parse a standard word2vec/fastText TEXT export (round 12, r11
-    verdict task 6 — the missing first metre of bring-your-own-weights:
-    the file a user actually has is ``model.vec``, not parquet).
+    """Parse a standard word2vec/fastText TEXT export (the first metre
+    of bring-your-own-weights: the file a user actually has is
+    ``model.vec``, not parquet).
 
     Format: optional header line ``"<n_terms> <dim>"``, then one row
     per term: ``term v1 v2 ... vdim`` (whitespace-separated).  GloVe

@@ -236,7 +236,7 @@ def quantize_to_storage(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, qvec array<tinyint>, scale double): the 1-byte/component
-    STORAGE layout for persisted ANN artifacts (round 11) — the same
+    STORAGE layout for persisted ANN artifacts — the same
     symmetric floor grid as :func:`quantize_embedding`, actually cast
     to tinyint, plus the per-vector scale (max|v| / 127) a reader
     would need to RECONSTRUCT approximate float components
@@ -302,7 +302,7 @@ def ann_topk_brute_int8(
     )
 
 
-#: multi-table ANN LSH layout (round-5 verdict #7): single-bucket LSH
+#: multi-table ANN LSH layout: single-bucket LSH
 #: on near-isotropic embeddings has recall ~0 (measured 0.03 at
 #: sf0.01) — the standard fix is L independent tables whose candidate
 #: union is scored exactly. 32 tables x 6 planes measure recall@3
@@ -444,7 +444,7 @@ def ivf_centroids(
     )
 
 
-#: IVF quantizer layout (round-5 verdict #7): the testdata's `label`
+#: IVF quantizer layout: the testdata's `label`
 #: column is geometrically meaningless (8% of a query's exact top-5
 #: share its label — measured), so label-cell IVF had recall ~0.1.
 #: The quantizer is now a real deterministic k-means over the vectors
@@ -860,54 +860,87 @@ def lsh_index_persistent(
     dim: int = EMBEDDING_DIM,
 ) -> DataFrame:
     """Load the banded (id, band, bucket) LSH index artifact at
-    ``path``, building and saving it first if absent (see
-    :func:`ivf_index_persistent` for the commit protocol).
-
-    ``extra_params``: extra identity keys pinned in the marker and
-    checked on reuse — the semantic-ingest tier pins the EMBEDDER
-    identity here, because bucket rows from two different encoders in
-    one artifact would silently poison every probe (a vector-space
-    change is as hard a mismatch as a layout change).
+    ``path``, building and saving it first if absent — the ``buckets``
+    table of :func:`lsh_index_ensure`'s generation.
 
     The artifact holds bucket rows only: every caller verifies its
     candidates against the caller's own full-precision vectors."""
-    spark = vectors.sparkSession
-    params = {
+    return lsh_index_ensure(
+        vectors, path, artifact_open(vectors.sparkSession, path),
+        tables, planes_per_table, id_col, vec_col, extra_params, dim,
+    ).table("buckets")
+
+
+def _lsh_params(
+    tables: int,
+    planes_per_table: int,
+    id_col: str,
+    vec_col: str,
+    extra_params: dict | None,
+) -> dict:
+    return {
         "kind": "lsh", "tables": tables,
         "planes_per_table": planes_per_table,
         "id_col": id_col, "vec_col": vec_col,
         **(extra_params or {}),
     }
+
+
+def _check_lsh_dim(snap: ArtifactSnapshot, dim: int) -> None:
+    """The subset param check is one-directional (a default-dim caller
+    omits the key): refuse an index hashed with another plane family —
+    probes would collapse to bucket 0, appended rows would poison every
+    later probe."""
+    got = snap.params.get("dim", str(EMBEDDING_DIM))
+    if got != str(dim):
+        raise ValueError(
+            f"LSH index at {snap.path} was built at dim={got}; caller "
+            f"expects dim={dim}"
+        )
+
+
+def lsh_index_ensure(
+    vectors: DataFrame,
+    path: str,
+    base: ArtifactSnapshot | None,
+    tables: int = ANN_LSH_TABLES,
+    planes_per_table: int = ANN_LSH_PLANES_PER_TABLE,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    extra_params: dict | None = None,
+    dim: int = EMBEDDING_DIM,
+) -> ArtifactSnapshot:
+    """The committed LSH index generation at ``path`` matching these
+    hyperparameters: ``base`` (the generation the caller opened there,
+    None when nothing is committed) when it matches, else one built
+    from ``vectors`` and committed over it (see
+    :func:`ivf_index_persistent` for the commit protocol).  A caller
+    that probes and then appends passes this one snapshot to
+    :func:`lsh_index_append`, so the operation opens the artifact once.
+
+    ``extra_params``: extra identity keys pinned in the params and
+    checked on reuse — the semantic-ingest tier pins the EMBEDDER
+    identity here, because bucket rows from two different encoders in
+    one artifact would silently poison every probe (a vector-space
+    change is as hard a mismatch as a layout change).  A non-default
+    ``dim`` is pinned too; the default stays unpinned, so every
+    artifact built before the pin reads as 64-dim."""
+    params = _lsh_params(tables, planes_per_table, id_col, vec_col, extra_params)
     if dim != EMBEDDING_DIM:
-        # pin non-default hyperplane dims: an artifact's
-        # bucket rows are a function of its plane family, and mixing
-        # two dims in one index silently degrades every probe.  The
-        # default dim stays UNPINNED for legacy-marker compatibility
-        # (every artifact built before the pin is implicitly 64).
         params["dim"] = dim
-    snap = artifact_open(spark, path)
-    if not artifact_check(snap, params):
-        snap = artifact_overwrite(
-            spark, path,
+    if not artifact_check(base, params):
+        base = artifact_overwrite(
+            vectors.sparkSession, path,
             {
                 "buckets": banded_bucket_rows(
                     vectors, id_col, vec_col, tables, planes_per_table, dim
                 )
             },
             {**params, "version": 1},
-            snap,
+            base,
         )
-    got = snap.params
-    if got.get("dim", str(EMBEDDING_DIM)) != str(dim):
-        # the subset param check is one-directional (a default-dim
-        # caller omits the key): refuse serving a dim-pinned index to
-        # a caller hashing probes with another plane family — the
-        # queries would collapse to bucket 0
-        raise ValueError(
-            f"LSH index at {path} was built at dim="
-            f"{got.get('dim', EMBEDDING_DIM)}; caller expects dim={dim}"
-        )
-    return snap.table("buckets")
+    _check_lsh_dim(base, dim)
+    return base
 
 
 def ivf_index_append(
@@ -929,13 +962,19 @@ def ivf_index_append(
     it — silently re-running k-means here would invalidate every cached
     cell layout.
 
-    Replay-idempotent: each table gets exactly the ids of
-    ``new_vectors`` it does not hold yet, so a crashed-and-replayed
-    append adds the missing remainder, and an artifact whose tables
-    diverged (a legacy two-write commit) heals.  A legacy artifact
-    without stored vectors grows its assignments only.  The params
-    marker's ``version`` is bumped.  Raises if ``path`` holds no
-    committed index or one built with different hyperparameters.
+    Bounded by the batch, not by what the caller hands over: the ids
+    of ``new_vectors`` that the committed assignments already hold are
+    anti-joined away BEFORE anything is materialized (Catalyst pushes
+    the anti-join below ``hash_embed``'s aggregates), and both staged
+    tables come from that one fresh set — so handing over the whole
+    corpus (``search --refresh-index``) costs the tokenize scan plus
+    O(new rows).  Replay-idempotent for the same reason: a
+    crashed-and-replayed append adds the missing remainder.  Both
+    tables commit in one manifest rename, so they cannot diverge.  A
+    legacy artifact without stored vectors grows its assignments only.
+    The params marker's ``version`` is bumped.  Raises if ``path``
+    holds no committed index or one built with different
+    hyperparameters.
 
     Drift accounting (the "WHEN to retrain" signal frozen-centroid
     appends lack): after the append, the marker's ``drift_stat`` is
@@ -964,23 +1003,21 @@ def ivf_index_append(
         )
     got = dict(snap.params)
     stores_vectors = got.get("quantized") == "true"
+    fresh = new_vectors.join(
+        snap.table("assignments").select(id_col), id_col, "left_anti"
+    )
     if stores_vectors:
-        # both staged tables consume new_vectors (a 2-consumer diamond
-        # whose lineage may carry a Python encode): compute it once
-        new_vectors = materialize(new_vectors)
-    existing = snap.table("assignments").select(id_col).distinct()
-    fresh = new_vectors.join(existing, id_col, "left_anti")
+        # both staged tables consume the fresh rows (a 2-consumer
+        # diamond whose lineage may carry a Python encode): compute
+        # them once
+        fresh = materialize(fresh)
     cents = snap.table("centroids")
     # the new assignments feed the staged append AND the drift union
     new_assign = materialize(_assign_cells(fresh, cents, id_col, vec_col))
     tables_to_append = {"assignments": new_assign}
     if stores_vectors:
-        # its own anti-join, so a table that lacks rows the other holds
-        # gets them back
-        vec_existing = snap.table("vectors").select(id_col).distinct()
         tables_to_append["vectors"] = quantize_to_storage(
-            new_vectors.join(vec_existing, id_col, "left_anti"),
-            id_col, vec_col,
+            fresh, id_col, vec_col
         )
     raw_profile = got.get("cell_profile")
     if raw_profile:
@@ -1090,50 +1127,40 @@ def ivf_index_retrain(
 
 def lsh_index_append(
     new_vectors: DataFrame,
-    path: str,
+    index: ArtifactSnapshot | None,
     tables: int = ANN_LSH_TABLES,
     planes_per_table: int = ANN_LSH_PLANES_PER_TABLE,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     extra_params: dict | None = None,
     dim: int = EMBEDDING_DIM,
-) -> None:
-    """Grow a committed LSH index: rehash the new vectors into bucket
-    rows with the SAME deterministic hyperplanes (a pure function of
-    (tables, planes) — no trained state), anti-join already-indexed
-    ids, append.  Unlike IVF there is no frozen-vs-retrained gap: the
-    grown artifact is bit-identical to a from-scratch rebuild over the
-    union (pytest-pinned).  Version bump after the data append;
-    replay-idempotent like :func:`ivf_index_append`.
-    ``extra_params``: see :func:`lsh_index_persistent` — appending
-    under a different embedder identity than the artifact's raises.
+) -> ArtifactSnapshot:
+    """Grow the committed LSH index generation ``index``: rehash the new
+    vectors into bucket rows with the SAME deterministic hyperplanes (a
+    pure function of (tables, planes) — no trained state), anti-join
+    already-indexed ids, append; returns the new generation.  Unlike
+    IVF there is no frozen-vs-retrained gap: the grown artifact is
+    bit-identical to a from-scratch rebuild over the union
+    (pytest-pinned).  Version bump after the data append;
+    replay-idempotent like :func:`ivf_index_append`.  Raises when
+    ``index`` is None, was built with other hyperparameters (appending
+    under a different ``extra_params`` embedder identity included) or
+    at another dim, and (ConcurrentWriterError) when another
+    generation committed since ``index`` was opened.
     """
-    spark = new_vectors.sparkSession
-    params = {
-        "kind": "lsh", "tables": tables,
-        "planes_per_table": planes_per_table,
-        "id_col": id_col, "vec_col": vec_col,
-        **(extra_params or {}),
-    }
-    snap = artifact_open(spark, path)
-    if not artifact_check(snap, params):
+    params = _lsh_params(tables, planes_per_table, id_col, vec_col, extra_params)
+    if not artifact_check(index, params):
         raise ValueError(
-            f"no committed LSH index at {path}; build it first "
+            "no committed LSH index to append to; build it first "
             "(lsh_index_persistent)"
         )
-    got = dict(snap.params)
-    if got.get("dim", str(EMBEDDING_DIM)) != str(dim):
-        # the marker's plane dim is the artifact's identity: appending
-        # rows hashed at another dim would silently poison every probe
-        raise ValueError(
-            f"LSH index at {path} was built at dim="
-            f"{got.get('dim', EMBEDDING_DIM)}; caller appends dim={dim}"
-        )
-    existing = snap.table("buckets").select(id_col).distinct()
+    _check_lsh_dim(index, dim)
+    got = dict(index.params)
+    existing = index.table("buckets").select(id_col).distinct()
     fresh = new_vectors.join(existing, id_col, "left_anti")
     got["version"] = str(int(got.get("version", "1")) + 1)
-    artifact_append(
-        snap,
+    return artifact_append(
+        index,
         {
             "buckets": banded_bucket_rows(
                 fresh, id_col, vec_col, tables, planes_per_table, dim
@@ -1159,7 +1186,7 @@ def banded_bucket_rows(
     ``planes_per_band`` dedicated hyperplanes (plane rows b*r ..
     (b+1)*r-1 of the shared deterministic family).
 
-    ``dim`` MUST match the vectors' length (round 12): hyperplanes are
+    ``dim`` MUST match the vectors' length: hyperplanes are
     a driver-side literal matrix, and ``zip_with`` against a plane of
     the WRONG length yields null products — every sign reads false and
     every vector collapses into bucket 0, silently turning the banded
@@ -1170,7 +1197,7 @@ def banded_bucket_rows(
     the artifact's ``dim``; the default covers every built-in 64-dim
     space.
 
-    Expression shape matters here (round 6): the per-band
+    Expression shape matters here: the per-band
     ``bucket_expr`` form builds bands x planes_per_band SEPARATE
     higher-order aggregate expressions — at the ANN layout (32x6 = 192
     folds) the generated code blows past whole-stage-codegen limits
@@ -1262,7 +1289,7 @@ def embedding_dup_pairs_lsh(
     oracle mirrors the banded semantics exactly, so parity is
     bit-exact regardless.
 
-    ``max_bucket`` (round 9): flood cap — drop (band, bucket) cells
+    ``max_bucket``: flood cap — drop (band, bucket) cells
     holding more vectors than this before the self-join (groupBy +
     broadcast anti-join, the pinned flood-cap shape).  CORRELATED
     vector sets (e.g. hash-embedded text, where every document shares
@@ -1348,7 +1375,7 @@ def vector_dup_probe(
 ) -> DataFrame:
     """Batch vectors near-duplicate (exact cosine >= threshold) of an
     already-indexed vector — the EMBEDDING twin of
-    minhash_index.near_dup_probe (round 9): probe the persisted
+    minhash_index.near_dup_probe: probe the persisted
     ``lsh_index_persistent`` bucket artifact with the batch's bucket
     rows, then exact-verify candidates against the corpus vectors.
     ``bands``/``planes_per_band`` MUST match the index's layout (the
@@ -1421,7 +1448,7 @@ def semantic_dup_probe(
     set: exact (Bloom), lexical (MinHash bands), semantic (this).
     Output: (id_col, dup_of, cosine).
 
-    ``embed_fn`` (round 10): docs -> (vec_id, embedding) — the encoder
+    ``embed_fn``: docs -> (vec_id, embedding) — the encoder
     behind the tier.  Default is :func:`hash_embed`; pass a
     :func:`~.embed.embed_with_model` partial to run the probe on the
     model seam.  MUST be the same encoder the index was built with
@@ -1737,7 +1764,7 @@ def semdedup_keep(
         vectors, k, iters, id_col, vec_col, cache_key=index_cache_key
     )
     # ONE materialized tagged relation feeds the pair scan and the
-    # centroid-similarity branch (review fix: the csim branch used to
+    # centroid-similarity branch (otherwise the csim branch would
     # recompute the corpus-scale assignment join a second time)
     tagged = _semdedup_tagged(vectors, assign, id_col, vec_col)
     pairs = _semdedup_pairs_from(tagged, threshold, id_col, vec_col)
@@ -1761,7 +1788,7 @@ def semdedup_keep(
 
 
 # ---------------------------------------------------------------------------
-# feature-hashing text embedder (round 8): documents -> vectors without
+# feature-hashing text embedder: documents -> vectors without
 # an external model, so the WHOLE embedding tier (banded near-dup, ANN,
 # persistent indexes) runs end-to-end from raw text.  The hashing trick
 # (Weinberger et al. 2009): each token instance adds ±1 to the bucket

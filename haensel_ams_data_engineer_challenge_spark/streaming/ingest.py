@@ -23,8 +23,16 @@ a fresh checkpoint — cannot re-admit a duplicate.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.artifact_manifest import (
+    ArtifactSnapshot,
+    artifact_append,
+    artifact_open,
+    artifact_overwrite,
+)
 from ..operators.dedup import (
     BLOOM_K,
     BLOOM_M_BITS,
@@ -34,7 +42,7 @@ from ..operators.dedup import (
     normalize_text,
 )
 from ..operators.manifest_sink import manifest_insert_if_absent, read_manifest_sink
-from ..session import local_frame, try_read_parquet
+from ..session import local_frame
 
 
 def dedup_batch_within(batch: DataFrame) -> DataFrame:
@@ -44,68 +52,81 @@ def dedup_batch_within(batch: DataFrame) -> DataFrame:
     return batch.join(keep, "doc_id", "left_semi")
 
 
-def _bloom_checksum(words: dict[int, int]) -> int:
-    """Deterministic (unsalted) 64-bit content mix — python's builtin
-    hash() is process-salted and useless across restarts."""
-    acc = 0
-    for idx, bits in words.items():
-        acc ^= ((idx * 1099511628211) ^ bits) & 0xFFFFFFFFFFFFFFFF
-    return acc
+class _BloomState:
+    """A persisted Bloom bitmap (the text tier's or the URL tier's),
+    cached as a driver dict of bitmap words for the life of one query.
 
+    On disk the state is ONE params-only manifest generation
+    (artifact_manifest.py): ``m_bits``, ``k`` and the words commit
+    together in one atomic rename, so loading reads one manifest and a
+    commit starts no Spark job.  The words dict is broadcast-budget
+    class by construction (<= m_bits/64 entries — size m_bits to the
+    corpus AND the driver/broadcast budget together; past that,
+    partition the keyspace)."""
 
-def _load_bloom_words(
-    ss: SparkSession, state_dir: str, m_bits: int, k: int
-) -> dict[int, int] | None:
-    """Committed persisted bitmap as a driver dict, or None when the
-    state is absent or TORN (params missing, or its content checksum
-    does not match the bitmap — a crash mid-overwrite must reseed,
-    because serving a partial bitmap yields false negatives).  An
-    m_bits/k mismatch is a hard error instead — that is caller
-    misconfiguration, and reseeding would silently change the fpr.
-    The words dict is broadcast-budget class by construction
-    (<= m_bits/64 entries — size m_bits to the corpus AND the
-    driver/broadcast budget together; past that, partition the
-    keyspace)."""
-    params = try_read_parquet(ss, f"{state_dir}/params")
-    if params is None:
-        return None
-    got = {r["key"]: r["value"] for r in params.collect()}
-    exp = {"m_bits": str(m_bits), "k": str(k)}
-    if {k2: got.get(k2) for k2 in exp} != exp:
-        raise ValueError(
-            f"bloom state at {state_dir} was built with {got}; caller "
-            f"expects {exp} — use a different state dir or delete it"
+    def __init__(self, state_dir: str, m_bits: int, k: int) -> None:
+        self.state_dir, self.m_bits, self.k = state_dir, m_bits, k
+        self.snap: ArtifactSnapshot | None = None
+        self.words: dict[int, int] | None = None
+
+    def load(self, ss: SparkSession) -> None:
+        """Read the committed words, leaving ``words`` None when nothing
+        is committed: an absent dir, a torn commit (a staged manifest
+        tmp file and no generation) or the older two-parquet-table
+        layout.  The caller then reseeds from corpus+sink, which is safe
+        because the state is derived data.  An m_bits/k mismatch is a
+        hard error instead — that is caller misconfiguration, and
+        reseeding would silently change the fpr."""
+        self.snap = artifact_open(ss, self.state_dir)
+        if self.snap is None or self.snap.version == 0:
+            return
+        exp = {"m_bits": str(self.m_bits), "k": str(self.k)}
+        got = {key: self.snap.params.get(key) for key in exp}
+        if got != exp:
+            raise ValueError(
+                f"bloom state at {self.state_dir} was built with {got}; "
+                f"caller expects {exp} — use a different state dir or "
+                "delete it"
+            )
+        self.words = {
+            int(i): int(b) for i, b in json.loads(self.snap.params["words"])
+        }
+
+    def merge(self, keys: DataFrame, key_col: str) -> None:
+        """OR the bits of ``keys`` into the cached words (bit_or is
+        associative and idempotent: a replayed batch re-ORs as a
+        no-op)."""
+        for r in bloom_bitmap(keys, key_col, self.m_bits, self.k).collect():
+            self.words[r["word_idx"]] = (
+                self.words.get(r["word_idx"], 0) | r["bits"]
+            )
+
+    def bitmap(
+        self, ss: SparkSession, target: DataFrame, key_col: str
+    ) -> DataFrame:
+        """The cached words as a (word_idx, bits) frame: loaded on first
+        use, seeded from the keys of ``target`` (the full dedup target)
+        when nothing is committed."""
+        if self.words is None:
+            self.load(ss)
+        if self.words is None:
+            self.words = {}
+            self.merge(target, key_col)
+        return local_frame(
+            ss, sorted(self.words.items()), "word_idx long, bits long"
         )
-    bm = try_read_parquet(ss, f"{state_dir}/bitmap")
-    if bm is None:
-        return None
-    words = {r["word_idx"]: r["bits"] for r in bm.collect()}
-    if got.get("checksum") != str(_bloom_checksum(words)):
-        return None  # torn write — reseed from corpus+sink
-    return words
 
-
-def _write_bloom_state(
-    ss: SparkSession, state_dir: str, words: dict[int, int],
-    m_bits: int, k: int,
-) -> None:
-    """Bitmap first, then params carrying the bitmap's checksum: a
-    crash between the two (or mid-bitmap) leaves params disagreeing
-    with the bitmap content, which `_load_bloom_words` treats as torn
-    and reseeds — never a silent partial bitmap.  Each table is one
-    file."""
-    local_frame(
-        ss, sorted(words.items()), "word_idx long, bits long"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{state_dir}/bitmap")
-    local_frame(
-        ss,
-        [
-            ("m_bits", str(m_bits)),
-            ("k", str(k)),
-            ("checksum", str(_bloom_checksum(words))),
-        ],
-        "key string, value string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{state_dir}/params")
+    def commit(self, ss: SparkSession) -> None:
+        """Commit the cached words as the next generation."""
+        self.snap = artifact_overwrite(
+            ss, self.state_dir, {},
+            {
+                "m_bits": self.m_bits,
+                "k": self.k,
+                "words": json.dumps(sorted(self.words.items())),
+            },
+            self.snap,
+        )
 
 
 def run_streaming_ingest(
@@ -152,31 +173,37 @@ def run_streaming_ingest(
     at real scale the rebuild is a full corpus aggregation per batch,
     the one O(corpus)-per-batch step in this pipeline (the exact
     verify stays, but touches only the maybe-dup sliver and the
-    column-pruned hash).  Crash-ordering: the updated bitmap is
-    written BEFORE the sink insert — a crash between the two leaves
-    orphan bits, which are only false positives (caught by the exact
-    verify); the reverse order could leave admitted docs without bits,
-    i.e. false negatives that re-admit duplicates.  First batch (or a
-    torn state with no committed manifest) rebuilds from corpus+sink.
-    SINGLE WRITER assumed — one streaming query owns a state dir (the
-    checkpoint dir already enforces that for the stream itself);
-    concurrent writers would race the overwrite like any
-    non-transactional parquet state.
+    column-pruned hash).  The state is ONE params-only manifest
+    generation (``m_bits``, ``k`` and the bitmap words, committed in
+    one atomic rename through operators/artifact_manifest.py): a load
+    reads one manifest and a commit starts no Spark job.
+    Crash-ordering: the updated bitmap commits BEFORE the sink insert
+    — a crash between the two leaves orphan bits, which are only false
+    positives (caught by the exact verify); the reverse order could
+    leave admitted docs without bits, i.e. false negatives that
+    re-admit duplicates.  The first batch — or a dir with no committed
+    generation (absent, a torn commit, or the older two-parquet-table
+    layout) — seeds from corpus+sink; that is safe because the state
+    is derived data.  An ``m_bits``/``k`` mismatch refuses.  A
+    concurrent writer makes the commit refuse (the artifact writer
+    lease + stale-generation check) instead of racing it.
 
     ``near_dup_index_dir``: add the NEAR-dup tier beside the exact
     one.  A persisted MinHash band index (operators/minhash_index.py,
     manifest protocol) is built from corpus+sink on first use; each
-    batch's exact-tier survivors are (a) near-dup-collapsed WITHIN
-    the batch (verify_candidates pairs -> dedup_survivors, min-id
-    keep — the batch operators, reused),
-    (b) probed against the index + exact-verified (near_dup_probe), and
-    (c) the admitted remainder's band rows are APPENDED to the index.
-    Crash ordering mirrors the Bloom tier: index append runs BEFORE
-    the sink insert, because orphan band rows are only false-positive
-    candidates (killed at the probe's verify join — the corpus has no
-    text for them), while the reverse order could leave admitted docs
-    unindexed, i.e. near-dups that slip in forever after.  The append
-    itself is replay-idempotent (anti-join on already-indexed ids).
+    batch's exact-tier survivors go through ONE pass
+    (minhash_index.near_dup_pass): signatures computed once, the
+    within-batch and batch x index band candidates exact-verified
+    together, the min-id survivor of each within-batch component kept
+    and every survivor with a verified index near-dup dropped; the
+    survivors' band rows are then APPENDED onto the index generation
+    the batch opened.  Crash ordering mirrors the Bloom tier: index
+    append runs BEFORE the sink insert, because orphan band rows are
+    only false-positive candidates (killed at the verify join — the
+    corpus has no text for them), while the reverse order could leave
+    admitted docs unindexed, i.e. near-dups that slip in forever
+    after.  The append itself is replay-idempotent (anti-join on
+    already-indexed ids).
     ``near_dup_threshold``: exact-Jaccard acceptance (default
     minhash_index.NEAR_DUP_THRESHOLD).
 
@@ -258,23 +285,19 @@ def run_streaming_ingest(
     persisted Bloom bitmap over the canonical URLs of the dedup
     target, maintained exactly like the text tier's
     (``bloom_state_dir``): seeded from corpus+sink on first batch,
-    OR-merged with each batch's ADMITTED urls and flushed BEFORE the
+    OR-merged with each batch's ADMITTED urls and committed BEFORE the
     sink insert (orphan bits are only false positives, killed at the
     exact verify over the maybe-dup sliver — the
     ``incremental_new_keys`` contract).  The per-batch O(corpus) URL
     anti-join becomes a broadcast bitmap probe + a sliver-sized
-    verify.  Requires ``url_dedup_col``.  MEASURED guidance
-    (BASELINE.md, URL tier at scale): the bitmap form
-    carries a flat ~2.5 s/batch of state-write + probe floors on
-    local[32], while the anti form's per-batch corpus projection scan
-    is <0.5 s even at a 320k-URL target — leave the bitmap OFF until
-    the target's URL projection costs more than that per batch
-    (hundreds of millions of URLs); admissions are identical either
-    way (asserted in-bench at every size).
+    verify; the state commit itself starts no Spark job.  Requires
+    ``url_dedup_col``.  The bitmap pays off once the target's
+    canonical-URL projection scan costs more per batch than the probe
+    and the sliver verify; admissions are identical either way
+    (tests/test_url_dedup.py).
     """
-    # round-11 review fix: the lm gate's two halves were validated only
-    # in the CLI — API callers passing one without the other got a bare
-    # TypeError (float(None)) MID-BATCH instead of an upfront error.
+    # validated up front: one half without the other would fail
+    # mid-batch with a bare TypeError
     if (lm_model_dir is None) != (max_xent is None):
         raise ValueError(
             "lm_model_dir and max_xent go together: the perplexity gate "
@@ -297,15 +320,19 @@ def run_streaming_ingest(
 
     # driver-cached bitmap words for the life of THIS query: loaded
     # from disk (or seeded) once, OR-merged in python per batch, and
-    # flushed to disk per batch — a restart reloads the last committed
-    # flush.  Caching avoids re-reading the state per micro-batch; the
-    # python merge replaces a union+groupBy job (the whole dict is
-    # broadcast-budget class, see _load_bloom_words).
-    bloom_words: dict[int, int] | None = None
-    url_bloom_words: dict[int, int] | None = None
+    # committed per batch — a restart reloads the last committed
+    # generation.  Caching avoids re-reading the state per micro-batch;
+    # the python merge replaces a union+groupBy job.
+    bloom = (
+        _BloomState(bloom_state_dir, m_bits, k)
+        if bloom_state_dir is not None else None
+    )
+    url_bloom = (
+        _BloomState(url_bloom_state_dir, m_bits, k)
+        if url_bloom_state_dir is not None else None
+    )
 
     def admit_batch(batch: DataFrame, batch_id: int) -> None:
-        nonlocal bloom_words, url_bloom_words
         ss = batch.sparkSession
         existing = corpus
         # committed rows only (files a killed batch moved in but never
@@ -317,7 +344,7 @@ def run_streaming_ingest(
         if url_dedup_col is not None:
             from ..functions.url import canonical_url
 
-            # URL tier (round 14): a re-crawl of an already-admitted
+            # URL tier: a re-crawl of an already-admitted
             # URL is rejected before ANY content work (quality gates,
             # hashing, decode) — utm/gclid-tagged and case / port /
             # trailing-slash variant re-crawls of the same resource
@@ -336,26 +363,12 @@ def run_streaming_ingest(
             target_urls = existing.select(
                 canonical_url(url_dedup_col).alias("__cu")
             ).filter(F.col("__cu").isNotNull())
-            if url_bloom_state_dir is not None:
+            if url_bloom is not None:
                 from ..operators.dedup import incremental_new_keys
 
                 # the scale path (docstring): persisted bitmap probe +
                 # exact verify over the maybe-dup sliver only
-                if url_bloom_words is None:
-                    url_bloom_words = _load_bloom_words(
-                        ss, url_bloom_state_dir, m_bits, k
-                    )
-                if url_bloom_words is None:
-                    url_bloom_words = {
-                        r["word_idx"]: r["bits"]
-                        for r in bloom_bitmap(
-                            target_urls, "__cu", m_bits, k
-                        ).collect()
-                    }
-                url_bitmap = local_frame(
-                    ss, sorted(url_bloom_words.items()),
-                    "word_idx long, bits long",
-                )
+                url_bitmap = url_bloom.bitmap(ss, target_urls, "__cu")
                 new_url_ids = incremental_new_keys(
                     survivors.select("doc_id", "__cu"), target_urls,
                     "__cu", m_bits=m_bits, k=k, bitmap=url_bitmap,
@@ -394,7 +407,6 @@ def run_streaming_ingest(
 
             batch = batch.filter(gopher_quality_pass("text"))
         if lm_model_dir is not None:
-            from ..operators.artifact_manifest import artifact_open
             from ..operators.lm import lm_score_model
 
             lm = artifact_open(ss, lm_model_dir)
@@ -411,7 +423,6 @@ def run_streaming_ingest(
             )
             batch = batch.join(keep_lm, "doc_id", "left_semi")
         if quality_model_dir is not None:
-            from ..operators.artifact_manifest import artifact_open
             from ..operators.classify import nb_classify_model
 
             nb = artifact_open(ss, quality_model_dir)
@@ -440,25 +451,15 @@ def run_streaming_ingest(
             batch = batch.join(keep_ids, "doc_id", "left_semi")
         once = dedup_batch_within(batch)
         bitmap = None
-        if bloom_state_dir is not None:
-            if bloom_words is None:
-                bloom_words = _load_bloom_words(
-                    ss, bloom_state_dir, m_bits, k
-                )
-            if bloom_words is None:
-                # first batch ever / torn state: seed from the full
-                # dedup target once; later batches OR-merge deltas
-                bloom_words = {
-                    r["word_idx"]: r["bits"]
-                    for r in bloom_bitmap(
-                        existing.select(
-                            F.md5(normalize_text("text")).alias("text_hash")
-                        ),
-                        "text_hash", m_bits, k,
-                    ).collect()
-                }
-            bitmap = local_frame(
-                ss, sorted(bloom_words.items()), "word_idx long, bits long"
+        if bloom is not None:
+            # first batch ever / nothing committed: seeded from the full
+            # dedup target once; later batches OR-merge deltas
+            bitmap = bloom.bitmap(
+                ss,
+                existing.select(
+                    F.md5(normalize_text("text")).alias("text_hash")
+                ),
+                "text_hash",
             )
         new_ids = incremental_new_docs(
             once, existing, m_bits=m_bits, k=k, bitmap=bitmap
@@ -466,50 +467,31 @@ def run_streaming_ingest(
         admitted = once.join(new_ids, "doc_id", "left_semi")
         if near_dup_index_dir is not None:
             from ..checkpoint import materialize
-            from ..operators.components import dedup_survivors
-            from ..operators.dedup import verify_candidates
             from ..operators.minhash_index import (
                 NEAR_DUP_THRESHOLD,
                 minhash_index_append,
                 minhash_index_build,
-                near_dup_probe,
+                near_dup_pass,
             )
 
-            thr = (
-                near_dup_threshold
-                if near_dup_threshold is not None
-                else NEAR_DUP_THRESHOLD
-            )
             # build-if-absent from the full current dedup target; every
-            # later batch just reads the committed artifact
-            index_bands = minhash_index_build(existing, near_dup_index_dir)
-            # the exact-tier survivors feed the within-batch pair
-            # search, the survivor filter, the probe AND the append —
-            # materialize the batch-bounded set once
-            admitted = materialize(admitted)
-            # (a) within-batch near-dup collapse: the exact tier only
-            # collapses byte-identical text; this reuses the batch
-            # operators (one codepath — the journeys.py discipline)
-            pairs = verify_candidates(admitted, threshold=thr)
-            keep = (
-                dedup_survivors(admitted.select("doc_id"), pairs)
-                .filter("is_survivor")
-                .select("doc_id")
+            # later batch serves the committed generation, and the
+            # append below commits onto this same snapshot
+            index = minhash_index_build(existing, near_dup_index_dir)
+            # one pass: signatures once, within-batch + index candidates
+            # verified together, min-id survivors minus index hits
+            admitted, bands = near_dup_pass(
+                materialize(admitted), index, existing,
+                threshold=(
+                    near_dup_threshold
+                    if near_dup_threshold is not None
+                    else NEAR_DUP_THRESHOLD
+                ),
             )
-            admitted = admitted.join(keep, "doc_id", "left_semi")
-            # (b) cross-corpus probe: persisted buckets + exact verify
-            dups = near_dup_probe(
-                admitted, index_bands, existing, threshold=thr
-            )
-            admitted = materialize(
-                admitted.join(
-                    dups.select("doc_id").distinct(), "doc_id", "left_anti"
-                )
-            )
-            # (c) index append BEFORE the sink insert (crash ordering:
+            # index append BEFORE the sink insert (crash ordering:
             # orphan band rows are only false-positive candidates;
             # unindexed admitted docs would be permanent blind spots)
-            minhash_index_append(admitted, near_dup_index_dir)
+            minhash_index_append(bands, index)
         if semantic_index_dir is not None:
             from ..checkpoint import materialize
             from ..operators.components import dedup_survivors
@@ -518,7 +500,7 @@ def run_streaming_ingest(
                 embedding_dup_pairs_lsh,
                 hash_embed,
                 lsh_index_append,
-                lsh_index_persistent,
+                lsh_index_ensure,
                 semantic_dup_probe,
             )
             from .vectors import VECTOR_DEDUP_BANDS, VECTOR_DEDUP_PLANES
@@ -547,8 +529,8 @@ def run_streaming_ingest(
                 # the artifact's dim sizes the hyperplane family: a
                 # non-64-dim imported encoder under the 64-dim default
                 # collapses every bucket to 0 and the banded joins go
-                # quadratic (round-12 fix; the exact-cosine verify
-                # hides it from correctness checks)
+                # quadratic (the exact-cosine verify hides that from
+                # correctness checks)
                 enc_dim = int(enc.get("dim", 64))
             else:
                 embedder = {"embedder": "hash_embed"}
@@ -560,23 +542,21 @@ def run_streaming_ingest(
             # backfills the key (adopting a legacy dir) instead of
             # failing every older drain.  Such an index under a MODEL
             # run still mismatches after the backfill (correct: it
-            # holds hash-space buckets).
-            from ..operators.artifact_manifest import (
-                artifact_append,
-                artifact_open,
-            )
-
+            # holds hash-space buckets).  The batch opens the index
+            # once: the backfill, the build check, the probe and the
+            # append all use this generation.
             sem = artifact_open(ss, semantic_index_dir)
             if sem is not None and sem.params and "embedder" not in sem.params:
-                artifact_append(
+                sem = artifact_append(
                     sem, {}, {**sem.params, "embedder": "hash_embed"}
                 )
             # build-if-absent over the current dedup target (one-time
             # O(corpus) embed); later batches read the committed
             # artifact and append batch-bounded bucket rows
-            sbuckets = lsh_index_persistent(
+            sem = lsh_index_ensure(
                 embed(existing),
                 semantic_index_dir,
+                sem,
                 tables=VECTOR_DEDUP_BANDS,
                 planes_per_table=VECTOR_DEDUP_PLANES,
                 extra_params=embedder,
@@ -613,7 +593,7 @@ def run_streaming_ingest(
             # (b) cross-corpus probe: persisted buckets + exact cosine
             # over candidate-only corpus embeddings
             sdups = semantic_dup_probe(
-                admitted, sbuckets, existing, semantic_threshold,
+                admitted, sem.table("buckets"), existing, semantic_threshold,
                 VECTOR_DEDUP_BANDS, VECTOR_DEDUP_PLANES,
                 embed_fn=embed,
                 dim=enc_dim,
@@ -626,62 +606,43 @@ def run_streaming_ingest(
             # (c) index append BEFORE the sink insert (same crash
             # ordering; the probe's text-store semi-join kills orphans)
             lsh_index_append(
-                embed(admitted), semantic_index_dir,
+                embed(admitted), sem,
                 tables=VECTOR_DEDUP_BANDS,
                 planes_per_table=VECTOR_DEDUP_PLANES,
                 extra_params=embedder,
                 dim=enc_dim,
             )
-        if bloom_state_dir is not None:
+        if bloom is not None or url_bloom is not None:
             from ..checkpoint import materialize
 
-            # two consumers (the delta bitmap action + the sink
-            # insert) — materialize the batch-bounded admit set once
-            # instead of re-running the dedup subtree per action.
-            # Skip when a dedup tier already truncated it: a second
-            # localCheckpoint of a checkpointed frame is a pure extra
-            # caching pass
+            # the bitmap merges and the sink insert each consume the
+            # admit set — materialize it once instead of re-running the
+            # dedup subtree per action, unless a dedup tier already
+            # did (a second localCheckpoint is a pure extra pass)
             if near_dup_index_dir is None and semantic_index_dir is None:
                 admitted = materialize(admitted)
-            # bitmap flush BEFORE the sink insert (docstring crash-
-            # ordering argument): orphan bits are only false positives
-            for r in bloom_bitmap(
+        # bitmap commits BEFORE the sink insert (docstring crash-
+        # ordering argument): orphan bits are only false positives
+        if bloom is not None:
+            bloom.merge(
                 admitted.select(
                     F.md5(normalize_text("text")).alias("text_hash")
                 ),
-                "text_hash", m_bits, k,
-            ).collect():
-                bloom_words[r["word_idx"]] = (
-                    bloom_words.get(r["word_idx"], 0) | r["bits"]
-                )
-            _write_bloom_state(ss, bloom_state_dir, bloom_words, m_bits, k)
-        if url_bloom_state_dir is not None and url_bloom_words is not None:
-            from ..checkpoint import materialize
+                "text_hash",
+            )
+            bloom.commit(ss)
+        if url_bloom is not None:
             from ..functions.url import canonical_url
 
-            # the flush action below re-executes the admit subtree
-            # otherwise (the text tier's materialize argument)
-            if (
-                bloom_state_dir is None
-                and near_dup_index_dir is None
-                and semantic_index_dir is None
-            ):
-                admitted = materialize(admitted)
-            # same crash ordering as the text bitmap: flush BEFORE the
-            # sink insert; orphan URL bits are only false positives
-            # (the sliver verify anti-joins the REAL target urls)
-            for r in bloom_bitmap(
+            # the sliver verify anti-joins the REAL target urls, so
+            # orphan URL bits are only false positives too
+            url_bloom.merge(
                 admitted.select(
                     canonical_url(url_dedup_col).alias("__cu")
                 ).filter(F.col("__cu").isNotNull()),
-                "__cu", m_bits, k,
-            ).collect():
-                url_bloom_words[r["word_idx"]] = (
-                    url_bloom_words.get(r["word_idx"], 0) | r["bits"]
-                )
-            _write_bloom_state(
-                ss, url_bloom_state_dir, url_bloom_words, m_bits, k
+                "__cu",
             )
+            url_bloom.commit(ss)
         manifest_insert_if_absent(ss, admitted, sink_path, ["doc_id"])
 
     (

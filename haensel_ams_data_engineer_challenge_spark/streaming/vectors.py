@@ -1,5 +1,5 @@
 """Streaming EMBEDDING ingestion with incremental near-dup dedup —
-the vector-modality twin of streaming/ingest.py's text tier (round 9).
+the vector-modality twin of streaming/ingest.py's text tier.
 
 New embedding batches land in a feed directory; each micro-batch is
 near-dup-collapsed (a) WITHIN itself (embedding_dup_pairs_lsh +
@@ -35,11 +35,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..checkpoint import materialize
+from ..operators.artifact_manifest import artifact_open
 from ..operators.components import dedup_survivors
 from ..operators.similarity import (
     embedding_dup_pairs_lsh,
     lsh_index_append,
-    lsh_index_persistent,
+    lsh_index_ensure,
     vector_dup_probe,
 )
 from ..operators.manifest_sink import manifest_insert_if_absent, read_manifest_sink
@@ -68,8 +69,7 @@ def dedup_and_index_batch(
     dim: int | None = None,
 ) -> DataFrame:
     """The vector family's shared dedup core — ONE home for the
-    crash-ordering invariant (review fix: the media flow had grown its
-    own copy of these four steps):
+    crash-ordering invariant, shared by the vector and media flows:
 
     (a) within-batch near-dup collapse (min-id survivor),
     (b) probe the persisted LSH index (built-if-absent over
@@ -88,13 +88,14 @@ def dedup_and_index_batch(
     identity (e.g. the embedder) on both the build and the append.
     ``dim`` sizes the hyperplane family (None = the 64-dim default) —
     a wrong dim collapses every bucket to 0 and the banded joins go
-    quadratic (round-12 fix; see banded_bucket_rows)."""
+    quadratic (see banded_bucket_rows)."""
     from ..operators.similarity import EMBEDDING_DIM
 
     if dim is None:
         dim = EMBEDDING_DIM
-    buckets = lsh_index_persistent(
+    index = lsh_index_ensure(
         existing_vecs, index_dir,
+        artifact_open(existing_vecs.sparkSession, index_dir),
         tables=bands, planes_per_table=planes_per_band,
         id_col=id_col, vec_col=vec_col, extra_params=extra_params,
         dim=dim,
@@ -110,7 +111,7 @@ def dedup_and_index_batch(
     )
     admitted = batch_vecs.join(keep, id_col, "left_semi")
     dups = vector_dup_probe(
-        admitted, buckets, existing_vecs, threshold,
+        admitted, index.table("buckets"), existing_vecs, threshold,
         bands, planes_per_band, id_col, vec_col,
         dim=dim,
     )
@@ -118,7 +119,7 @@ def dedup_and_index_batch(
         admitted.join(dups.select(id_col).distinct(), id_col, "left_anti")
     )
     lsh_index_append(
-        admitted, index_dir,
+        admitted, index,
         tables=bands, planes_per_table=planes_per_band,
         id_col=id_col, vec_col=vec_col, extra_params=extra_params,
         dim=dim,
@@ -151,13 +152,13 @@ def run_streaming_vector_ingest(
     concurrent reader never observes a partial append; a legacy
     plain-parquet store is adopted in place by the first batch."""
     corpus = spark.read.parquet(corpus_path)
-    # one driver-side probe of the corpus vector dim (round 12): raw
+    # one driver-side probe of the corpus vector dim: raw
     # embedding feeds carry no artifact to read it from, and a
     # non-64-dim corpus under the default plane family would bucket
     # everything to 0 (quadratic candidates, silently).  NULL rows are
     # skipped and an EMPTY corpus defers the probe to the first batch
-    # (review fix: falling back to 64 here would rebuild the very bug,
-    # and pin a poisoned unpinned index a later corpus run refuses).
+    # (falling back to 64 here would rebuild the very bug, and pin a
+    # poisoned unpinned index a later corpus run refuses).
     from pyspark.sql import functions as _F
 
     first = (

@@ -153,7 +153,7 @@ def test_lsh_append_equals_rebuild_bit_exact(spark, sf_dir, tmp_path):
     grown_path = str(tmp_path / "lsh_grown")
     S.lsh_index_persistent(old, grown_path, tables=8)
     assert _params_version(spark, grown_path) == "1"
-    S.lsh_index_append(new, grown_path, tables=8)
+    S.lsh_index_append(new, AM.artifact_open(spark, grown_path), tables=8)
     assert _params_version(spark, grown_path) == "2"
 
     scratch_path = str(tmp_path / "lsh_scratch")
@@ -170,7 +170,7 @@ def test_lsh_append_equals_rebuild_bit_exact(spark, sf_dir, tmp_path):
 
     # replay: a second append of the same batch is a no-op
     before = _rows(spark.read.parquet(f"{grown_path}/buckets"))
-    S.lsh_index_append(new, grown_path, tables=8)
+    S.lsh_index_append(new, AM.artifact_open(spark, grown_path), tables=8)
     assert _rows(spark.read.parquet(f"{grown_path}/buckets")) == before
 
 
@@ -213,12 +213,42 @@ def test_ivf_append_assigns_to_frozen_centroids(spark, sf_dir, tmp_path):
     assert _rows(spark.read.parquet(f"{path}/assignments")) == before
 
 
+def test_ivf_append_of_the_corpus_checkpoints_only_new_rows(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Handed the whole corpus (as ``search --refresh-index`` and the
+    ingest benchmark do), an append onto an index holding all but k of
+    its ids checkpoints exactly the k new rows — the anti-join runs
+    before anything is materialized — and both tables gain exactly
+    those."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    base = docs.filter("doc_id % 10 != 0")
+    path = str(tmp_path / "ivf")
+    S.ivf_index_persistent(S.hash_embed(base), path, k=5)
+    n_all = S.hash_embed(docs).count()
+    k_new = n_all - S.hash_embed(base).count()
+    assert 0 < k_new < n_all
+    sizes = []
+    real = S.materialize
+
+    def counted(df, *a, **kw):
+        sizes.append(df.count())
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(S, "materialize", counted)
+    S.ivf_index_append(S.hash_embed(docs), path, k=5)
+    assert sizes == [k_new, k_new]
+    snap = AM.artifact_open(spark, path)
+    assert snap.table("assignments").count() == n_all
+    assert snap.table("vectors").count() == n_all
+
+
 def test_append_requires_committed_matching_index(spark, sf_dir, tmp_path):
     vecs = load_table(spark, sf_dir, "embeddings")
     with pytest.raises(ValueError, match="no committed"):
         S.ivf_index_append(vecs, str(tmp_path / "nope"))
     with pytest.raises(ValueError, match="no committed"):
-        S.lsh_index_append(vecs, str(tmp_path / "nope2"))
+        S.lsh_index_append(vecs, AM.artifact_open(spark, str(tmp_path / "nope2")))
     path = str(tmp_path / "ivf")
     S.ivf_index_persistent(vecs, path, k=5)
     with pytest.raises(ValueError, match="built with"):

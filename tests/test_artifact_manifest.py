@@ -82,7 +82,9 @@ def test_legacy_lsh_artifact_readable_and_upgraded_by_append(
     assert served.count() == n_legacy
 
     # the append ADOPTS: manifest appears, params carried, marker gone
-    S.lsh_index_append(new, path, tables=8, planes_per_table=6)
+    S.lsh_index_append(
+        new, AM.artifact_open(spark, path), tables=8, planes_per_table=6
+    )
     snap = AM.artifact_open(spark, path)
     assert snap.version == 1
     assert snap.params["kind"] == "lsh"
@@ -198,7 +200,8 @@ def test_vacuum_retains_one_generation(spark, sf_dir, tmp_path):
 
     # the next mutation ages gen1 out
     S.lsh_index_append(
-        vecs.filter("vec_id % 3 = 1"), path, tables=4, planes_per_table=6
+        vecs.filter("vec_id % 3 = 1"), AM.artifact_open(spark, path),
+        tables=4, planes_per_table=6,
     )
     with hold_writer_lease(spark, path):
         AM.artifact_vacuum(spark, path)
@@ -247,6 +250,24 @@ def _count_root_reads(monkeypatch, path):
     monkeypatch.setattr(AM, "_list_names", list_names)
     monkeypatch.setattr(AM, "_read_manifest", read_manifest)
     return listed, read
+
+
+def _count_root_opens(monkeypatch, path):
+    """A callable returning how often the artifact at ``path`` was
+    OPENED so far: its root listings minus the one re-listing each
+    mutation makes under the writer lease (``_relist``) to refuse a
+    stale snapshot."""
+    listed, _read = _count_root_reads(monkeypatch, path)
+    relisted = []
+    real_relist = AM._relist
+
+    def relist(ss, p, base):
+        if p == path:
+            relisted.append(p)
+        return real_relist(ss, p, base)
+
+    monkeypatch.setattr(AM, "_relist", relist)
+    return lambda: len(listed) - len(relisted)
 
 
 def test_ivf_request_resolves_the_artifact_once(

@@ -157,6 +157,19 @@ def test_encoder_artifact_guards(spark, tmp_path):
         E.encoder_model_ensure(docs, other)
 
 
+def test_first_ensure_opens_the_path_once(spark, tmp_path, monkeypatch):
+    """A first ``encoder_model_ensure`` on an empty path builds the
+    encoder from the one snapshot it opened (None there)."""
+    from test_artifact_manifest import _count_root_opens
+
+    docs = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
+    path = str(tmp_path / "enc")
+    opens = _count_root_opens(monkeypatch, path)
+    snap = E.encoder_model_ensure(docs, path)
+    assert snap.params["kind"] == "encoder" and snap.version == 1
+    assert opens() == 1
+
+
 PARAPHRASE_A = "the quick brown fox jumps over the lazy dog"
 PARAPHRASE_B = "the rapid brown fox hops over the sluggish dog"
 

@@ -1,12 +1,13 @@
 """session.local_frame: driver-built frames plan a LocalTableScan and
-start no Python worker; the persisted state tables it writes stay one
-file each; and no other package code builds a frame from a driver list
-or an RDD."""
+start no Python worker; the persisted Bloom state, whose words it
+serves, stays one file; and no other package code builds a frame from
+a driver list or an RDD."""
 
 from __future__ import annotations
 
 import ast
 import glob
+import os
 import re
 from pathlib import Path
 
@@ -55,22 +56,24 @@ def test_local_frame_round_trips(spark, schema, rows):
     assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
 
 
-def _parquet_files(path: str) -> list[str]:
-    return glob.glob(f"{path}/*.parquet")
-
-
 def test_persisted_state_tables_stay_one_file(spark, tmp_path):
+    """The driver-built Bloom state persists as one file: the committed
+    manifest carries m_bits, k and the words; no parquet table."""
     from haensel_ams_data_engineer_challenge_spark.streaming.ingest import (
-        _load_bloom_words,
-        _write_bloom_state,
+        _BloomState,
     )
 
     words = {i: (i * 0x9E3779B97F4A7C15) & 0x7FFFFFFFFFFFFFFF for i in range(64)}
-    state = str(tmp_path / "bloom")
-    _write_bloom_state(spark, state, words, 4096, 3)
-    assert len(_parquet_files(f"{state}/bitmap")) == 1
-    assert len(_parquet_files(f"{state}/params")) == 1
-    assert _load_bloom_words(spark, state, 4096, 3) == words
+    path = str(tmp_path / "bloom")
+    state = _BloomState(path, 4096, 3)
+    state.words = dict(words)
+    state.commit(spark)
+    # (the local filesystem client adds a hidden .crc beside it)
+    (only,) = [n for n in os.listdir(path) if not n.startswith(".")]
+    assert only.startswith("_manifest_v") and only.endswith(".json")
+    loaded = _BloomState(path, 4096, 3)
+    loaded.load(spark)
+    assert loaded.words == words
 
 
 #: a frame built from a driver list or an RDD: Spark plans a PythonRDD

@@ -7,6 +7,7 @@ append replay-idempotence, and the streaming ingest wiring.
 from __future__ import annotations
 
 import glob as _glob
+import json
 import os
 import shutil
 
@@ -17,6 +18,7 @@ from haensel_ams_data_engineer_challenge_spark.operators import artifact_manifes
 from haensel_ams_data_engineer_challenge_spark.operators import minhash_index as MI
 from haensel_ams_data_engineer_challenge_spark.operators.dedup import (
     dedup_minhash_lsh,
+    minhash_bands,
     verify_candidates,
 )
 
@@ -78,7 +80,7 @@ def test_probe_matches_from_scratch(spark, tmp_path):
     corpus = _docs(spark, CORPUS_ROWS)
     batch = _docs(spark, BATCH_ROWS)
     path = str(tmp_path / "mhidx")
-    bands = MI.minhash_index_build(corpus, path)
+    bands = MI.minhash_index_build(corpus, path).table("bands")
     got = {
         (r["doc_id"], r["dup_of"], round(r["jaccard"], 9))
         for r in MI.near_dup_probe(batch, bands, corpus).collect()
@@ -89,6 +91,134 @@ def test_probe_matches_from_scratch(spark, tmp_path):
     # both found, the novel doc is not
     assert {g[0] for g in got} == {101, 102}
     assert (102, 3, 1.0) in got
+
+
+#: ~30-word boilerplate whose copies flood every band bucket they hash
+#: to (more than MAX_BAND_BUCKET docs per bucket)
+BOILER = (
+    "accept all cookies to continue reading this page our partners use "
+    "cookies and similar technologies to personalise content and ads "
+    "provide social media features and analyse our traffic today"
+)
+CHAIN = (
+    "a fresh chain of edits starts from this sentence about river "
+    "barges moving grain past old mills while the lock keepers record "
+    "every passage in heavy ledgers kept dry in the stone houses"
+)
+
+#: novel text sent 34 times in one batch: its buckets flood the batch side
+FLOOD = (
+    "the same syndicated wire story copied by many sites about a harbor "
+    "festival with tall ships brass bands and fireworks over the water "
+    "drawing crowds from every town along the northern coast"
+)
+
+
+def test_near_dup_pass_matches_from_scratch(spark, tmp_path):
+    """The fused per-batch pass (one signature pass, one candidate set,
+    one verify) keeps exactly the survivors of the from-scratch ground
+    truth: verify_candidates over corpus + batch, union-find over the
+    within-batch pairs (min id survives), then every survivor with a
+    verified corpus pair dropped.  Fixtures: an index-side and a
+    batch-side flooded bucket, an exact dup, a near-dup, an in-batch
+    near-dup chain, and an orphan index row (its doc is absent from the
+    corpus) that is a near-dup of a novel batch doc and must drop
+    nothing."""
+    corpus_rows = CORPUS_ROWS + [(1000 + i, BOILER) for i in range(40)]
+    orphan = (999, BATCH_ROWS[2][1] + " again")
+    batch_rows = (
+        BATCH_ROWS
+        + [(104, BOILER + " now")]
+        + [(105, CHAIN), (106, CHAIN + " twice"), (107, CHAIN + " twice more")]
+        + [(200 + i, FLOOD) for i in range(34)]
+    )
+    index = MI.minhash_index_build(
+        _docs(spark, corpus_rows + [orphan]), str(tmp_path / "mhidx")
+    )
+    batch = _docs(spark, batch_rows)
+    survivors, bands = MI.near_dup_pass(batch, index, _docs(spark, corpus_rows))
+    got = {r["doc_id"] for r in survivors.collect()}
+
+    batch_ids = {i for i, _ in batch_rows}
+    comp = {i: i for i in batch_ids}
+
+    def find(i):
+        while comp[i] != i:
+            i = comp[i]
+        return i
+
+    hit = set()
+    for r in verify_candidates(_docs(spark, corpus_rows + batch_rows)).collect():
+        a, b = r["id_a"], r["id_b"]
+        if a in batch_ids and b in batch_ids:
+            ra, rb = find(a), find(b)
+            comp[max(ra, rb)] = min(ra, rb)
+        elif a in batch_ids or b in batch_ids:
+            hit.add(a if a in batch_ids else b)
+    exp = {i for i in batch_ids if find(i) == i} - hit
+    assert got == exp
+    assert batch_ids - got == batch_ids - exp
+    # not vacuous: the near-dup and the exact dup of the corpus drop,
+    # the chain keeps its min id, the orphan drops nothing, flooded
+    # buckets pair nothing
+    assert {101, 102, 106, 107}.isdisjoint(got)
+    assert {103, 104, 105} | {200 + i for i in range(34)} <= got
+    # the band rows to append are the survivors' rows of the same pass
+    assert sorted(map(tuple, bands.collect())) == sorted(
+        map(
+            tuple,
+            minhash_bands(batch).join(survivors.select("doc_id"), "doc_id", "left_semi")
+            .collect(),
+        )
+    )
+
+
+def test_near_dup_batch_bands_once_and_opens_the_index_once(
+    spark, tmp_path, monkeypatch
+):
+    """One near-dup micro-batch computes the batch's MinHash signatures
+    in one `minhash_bands` call and opens the committed index once: the
+    build check, the probe and the append share one snapshot."""
+    from test_artifact_manifest import _count_root_opens
+
+    from haensel_ams_data_engineer_challenge_spark.operators import dedup as D
+    from haensel_ams_data_engineer_challenge_spark.streaming.ingest import (
+        run_streaming_ingest,
+    )
+
+    schema = "doc_id long, text string, lang string, source string, n_chars int"
+    corpus_path = str(tmp_path / "corpus")
+    spark.createDataFrame(
+        [(i, t, "en", "s", len(t)) for i, t in CORPUS_ROWS], schema
+    ).write.parquet(corpus_path)
+    feed = str(tmp_path / "feed")
+    stage = str(tmp_path / "__stage")
+    spark.createDataFrame(
+        [(i, t, "en", "s", len(t)) for i, t in BATCH_ROWS], schema
+    ).repartition(1).write.parquet(stage)
+    os.makedirs(feed)
+    shutil.copy(_glob.glob(f"{stage}/part-*.parquet")[0], f"{feed}/a.parquet")
+    idx = str(tmp_path / "mhidx")
+    MI.minhash_index_build(spark.read.parquet(corpus_path), idx)
+
+    calls = []
+    real_bands = D.minhash_bands
+
+    def bands(df, *a, **kw):
+        calls.append(df)
+        return real_bands(df, *a, **kw)
+
+    monkeypatch.setattr(D, "minhash_bands", bands)
+    monkeypatch.setattr(MI, "minhash_bands", bands)
+    opens = _count_root_opens(monkeypatch, idx)
+    sink = str(tmp_path / "admitted")
+    run_streaming_ingest(
+        spark, corpus_path, feed, sink, str(tmp_path / "ckpt"),
+        near_dup_index_dir=idx,
+    )
+    assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {103}
+    assert len(calls) == 1
+    assert opens() == 1
 
 
 def _tear_manifests(path):
@@ -104,18 +234,26 @@ def _tear_manifests(path):
 def test_commit_marker_protocol(spark, tmp_path):
     corpus = _docs(spark, CORPUS_ROWS)
     path = str(tmp_path / "mhidx")
-    b1 = sorted(map(tuple, MI.minhash_index_build(corpus, path).collect()))
+    b1 = sorted(
+        map(tuple, MI.minhash_index_build(corpus, path).table("bands").collect())
+    )
     # params mismatch is a hard error, not a silent rebuild
     with pytest.raises(ValueError, match="built with"):
         MI.minhash_index_build(corpus, path, band_size=4)
     # torn build (no committed manifest) -> rebuilt from the given docs
     _tear_manifests(path)
-    b2 = sorted(map(tuple, MI.minhash_index_build(corpus, path).collect()))
+    b2 = sorted(
+        map(tuple, MI.minhash_index_build(corpus, path).table("bands").collect())
+    )
     assert b1 == b2
     # committed index is served as-is (build from a different frame is
     # a no-op read)
     b3 = sorted(
-        map(tuple, MI.minhash_index_build(corpus.limit(1), path).collect())
+        map(
+            tuple,
+            MI.minhash_index_build(corpus.limit(1), path)
+            .table("bands").collect(),
+        )
     )
     assert b3 == b1
 
@@ -125,14 +263,19 @@ def test_append_replay_idempotent(spark, tmp_path):
     batch = _docs(spark, BATCH_ROWS)
     path = str(tmp_path / "mhidx")
     with pytest.raises(ValueError, match="no committed"):
-        MI.minhash_index_append(batch, path)
-    MI.minhash_index_build(corpus, path)
-    MI.minhash_index_append(batch, path)
+        MI.minhash_index_append(
+            minhash_bands(batch), AM.artifact_open(spark, path)
+        )
+    MI.minhash_index_append(
+        minhash_bands(batch), MI.minhash_index_build(corpus, path)
+    )
     once = sorted(
         map(tuple, spark.read.parquet(f"{path}/bands").collect())
     )
     # replay: the anti-join makes the second append a no-op
-    MI.minhash_index_append(batch, path)
+    MI.minhash_index_append(
+        minhash_bands(batch), AM.artifact_open(spark, path)
+    )
     again = sorted(
         map(tuple, spark.read.parquet(f"{path}/bands").collect())
     )
@@ -158,7 +301,7 @@ def test_index_probe_equals_full_lsh_on_testdata(spark, sf_dir, tmp_path):
     idx_part = docs.filter("doc_id % 10 != 0")
     batch_part = docs.filter("doc_id % 10 = 0")
     path = str(tmp_path / "mhidx")
-    bands = MI.minhash_index_build(idx_part, path)
+    bands = MI.minhash_index_build(idx_part, path).table("bands")
     got = {
         (r["doc_id"], r["dup_of"])
         for r in MI.near_dup_probe(
@@ -293,9 +436,11 @@ def test_cli_ingest_near_dup(spark, tmp_path, capsys):
     assert AM.artifact_open(spark, f"{work}/minhash_index").params
     got = {r["doc_id"] for r in spark.read.parquet(f"{work}/admitted").collect()}
     assert got == {402}
-    # both state artifacts exist
+    # both state artifacts exist; the Bloom state is one committed
+    # params-only generation holding the bitmap words
     assert AM.artifact_open(spark, f"{work}/minhash_index").table("bands").count() > 0
-    assert spark.read.parquet(f"{work}/bloom_state/bitmap").count() > 0
+    bloom = AM.artifact_open(spark, f"{work}/bloom_state")
+    assert bloom.tables == {} and json.loads(bloom.params["words"])
 
     # replay with a fresh checkpoint: nothing more admitted
     shutil.rmtree(f"{work}/checkpoint")
@@ -319,12 +464,15 @@ def test_compact_preserves_rows_and_probe(spark, tmp_path):
     # fragment the store: three appends of disjoint batches
     for i in range(3):
         MI.minhash_index_append(
-            _docs(spark, [(500 + 10 * i + j, f"fragment batch {i} doc {j} "
-                           + " ".join(f"w{i}{j}{k}" for k in range(12)))
-                          for j in range(3)]),
-            path,
+            minhash_bands(
+                _docs(spark, [(500 + 10 * i + j, f"fragment batch {i} doc {j} "
+                               + " ".join(f"w{i}{j}{k}" for k in range(12)))
+                              for j in range(3)])
+            ),
+            AM.artifact_open(spark, path),
         )
-    bands_df = MI.minhash_index_build(corpus.limit(1), path)  # served read
+    # served read
+    bands_df = MI.minhash_index_build(corpus.limit(1), path).table("bands")
     before = sorted(map(tuple, bands_df.collect()))
     assert len(AM.artifact_open(spark, path).files("bands")) >= 4  # build + 3
 
@@ -334,7 +482,11 @@ def test_compact_preserves_rows_and_probe(spark, tmp_path):
     n = MI.minhash_index_compact(spark, path, target_partitions=1)
     assert n == len(before)
     after = sorted(
-        map(tuple, MI.minhash_index_build(corpus.limit(1), path).collect())
+        map(
+            tuple,
+            MI.minhash_index_build(corpus.limit(1), path)
+            .table("bands").collect(),
+        )
     )
     assert after == before
     assert len(AM.artifact_open(spark, path).files("bands")) == 1
@@ -346,7 +498,8 @@ def test_compact_preserves_rows_and_probe(spark, tmp_path):
         (r["doc_id"], r["dup_of"])
         for r in MI.near_dup_probe(
             _docs(spark, BATCH_ROWS),
-            MI.minhash_index_build(corpus.limit(1), path), corpus,
+            MI.minhash_index_build(corpus.limit(1), path).table("bands"),
+            corpus,
         ).collect()
     }
     assert {(101, 1), (102, 3)} <= got
@@ -355,7 +508,7 @@ def test_compact_preserves_rows_and_probe(spark, tmp_path):
     # rebuild instead of serving
     _tear_manifests(path)
     rebuilt = MI.minhash_index_build(corpus, path)
-    assert rebuilt.count() > 0
+    assert rebuilt.table("bands").count() > 0
     with pytest.raises(ValueError, match="no committed"):
         MI.minhash_index_compact(spark, str(tmp_path / "absent"))
 

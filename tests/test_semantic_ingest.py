@@ -155,6 +155,43 @@ def test_streaming_ingest_semantic_tier(spark, tmp_path):
     ) == before
 
 
+def test_semantic_batch_opens_the_index_once(spark, tmp_path, monkeypatch):
+    """One semantic micro-batch opens the committed semantic index
+    once: the embedder-pin check, the build check, the probe and the
+    append share one snapshot."""
+    from test_artifact_manifest import _count_root_opens
+
+    from haensel_ams_data_engineer_challenge_spark.operators.similarity import (
+        hash_embed,
+        lsh_index_persistent,
+    )
+    from haensel_ams_data_engineer_challenge_spark.streaming.ingest import (
+        run_streaming_ingest,
+    )
+    from haensel_ams_data_engineer_challenge_spark.streaming.vectors import (
+        VECTOR_DEDUP_BANDS,
+        VECTOR_DEDUP_PLANES,
+    )
+
+    corpus_path = _write_corpus(spark, tmp_path)
+    feed = str(tmp_path / "feed")
+    _drop(spark, tmp_path, feed, [(200, _scramble(BASE)), (201, NOVEL)], "a.parquet")
+    idx = str(tmp_path / "semidx")
+    lsh_index_persistent(
+        hash_embed(spark.read.parquet(corpus_path)), idx,
+        tables=VECTOR_DEDUP_BANDS, planes_per_table=VECTOR_DEDUP_PLANES,
+        extra_params={"embedder": "hash_embed"},
+    )
+    opens = _count_root_opens(monkeypatch, idx)
+    sink = str(tmp_path / "admitted")
+    run_streaming_ingest(
+        spark, corpus_path, feed, sink, str(tmp_path / "ckpt"),
+        semantic_index_dir=idx,
+    )
+    assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {201}
+    assert opens() == 1
+
+
 def test_semantic_tier_catches_what_lexical_misses(spark, tmp_path):
     """Contrast run: the SAME feed through the lexical (minhash) tier
     alone admits the scrambled dup — proving the semantic tier is a

@@ -454,17 +454,51 @@ def test_streaming_ingest_quality_gate(spark, tmp_path):
     assert got == {1}
 
 
+def test_bloom_state_commit_runs_no_spark_job(spark, tmp_path):
+    """Committing the Bloom state writes one manifest through the
+    driver's filesystem client: no Spark job runs (counted per job
+    group with the status tracker), and a reload returns the words."""
+    from haensel_ams_data_engineer_challenge_spark.streaming.ingest import (
+        _BloomState,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    state = _BloomState(str(tmp_path / "bloom"), 4096, 3)
+    state.words = {i: (i * 0x9E3779B97F4A7C15) & 0x7FFFFFFFFFFFFFFF for i in range(64)}
+    try:
+        sc.setJobGroup("bloom-commit", "bloom state commit")
+        state.commit(spark)
+        state.words[64] = 1
+        state.commit(spark)
+        sc.setJobGroup("bloom-control", "a counted job")
+        spark.range(3).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup("bloom-commit") == []
+    assert tracker.getJobIdsForGroup("bloom-control")
+    reloaded = _BloomState(str(tmp_path / "bloom"), 4096, 3)
+    reloaded.load(spark)
+    assert reloaded.words == state.words and reloaded.snap.version == 2
+
+
 def test_streaming_ingest_persisted_bloom_state(spark, sf_dir, tmp_path):
     """bloom_state_dir persists + OR-merges the bitmap across batches
-    (no per-batch corpus-wide rebuild): identical admitted set to the
-    rebuild path, replays stay no-ops, and a params mismatch refuses
-    loudly (a wrong-layout bitmap would yield false negatives)."""
+    (no per-batch corpus-wide rebuild) as one committed manifest
+    generation: identical admitted set to the rebuild path, replays
+    stay no-ops, a params mismatch refuses loudly (a wrong-layout
+    bitmap would yield false negatives), and a dir with no committed
+    generation (a torn commit, or the older parquet layout) reseeds."""
     import glob as _glob
+    import json
     import os
     import shutil
 
     import pytest as _pytest
 
+    from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
+        artifact_open,
+    )
     from haensel_ams_data_engineer_challenge_spark.streaming.ingest import (
         run_streaming_ingest,
     )
@@ -507,14 +541,14 @@ def test_streaming_ingest_persisted_bloom_state(spark, sf_dir, tmp_path):
     got_ids = {r["doc_id"] for r in read_manifest_sink(spark, sink).collect()}
     assert got_ids == exp_ids
 
-    # the persisted state exists and is committed (bitmap + params)
-    bm = spark.read.parquet(f"{bloom_dir}/bitmap")
-    assert bm.count() > 0 and set(bm.columns) == {"word_idx", "bits"}
-    params = {
-        r["key"]: r["value"]
-        for r in spark.read.parquet(f"{bloom_dir}/params").collect()
-    }
-    assert set(params) == {"m_bits", "k", "checksum"}
+    # the persisted state is one committed params-only generation per
+    # batch: m_bits, k and the bitmap words, no data files
+    state = artifact_open(spark, bloom_dir)
+    assert state.version == 2 and state.tables == {}
+    assert set(state.params) == {"m_bits", "k", "words"}
+    words = dict(map(tuple, json.loads(state.params["words"])))
+    assert words and all(0 <= i < (1 << 17) // 64 for i in words)
+    assert not _glob.glob(f"{bloom_dir}/**/*.parquet", recursive=True)
 
     # replay with a fresh checkpoint: OR-merge is idempotent, the
     # idempotent sink admits nothing new
@@ -535,13 +569,15 @@ def test_streaming_ingest_persisted_bloom_state(spark, sf_dir, tmp_path):
             m_bits=1 << 16,
         )
 
-    # torn BITMAP (params intact but checksum disagrees — a crash mid
-    # bitmap overwrite) must reseed, not serve the partial bitmap
-    # whose missing bits would be false negatives
-    bm_rows = spark.read.parquet(f"{bloom_dir}/bitmap").limit(3)
-    partial = bm_rows.collect()
-    spark.createDataFrame(partial, "word_idx long, bits long") \
-        .write.mode("overwrite").parquet(f"{bloom_dir}/bitmap")
+    # torn state (a commit killed after staging its manifest tmp file,
+    # with no committed generation) reseeds from corpus+sink, and the
+    # drain admits nothing new
+    staged = artifact_open(spark, bloom_dir).params["words"]
+    for f in _glob.glob(f"{bloom_dir}/_manifest_v*.json"):
+        os.remove(f)
+    with open(f"{bloom_dir}/.manifest_tmp_torn", "w") as fh:
+        fh.write(staged[: len(staged) // 2])
+    assert artifact_open(spark, bloom_dir) is None
     run_streaming_ingest(
         spark, corpus_path, feed, sink, str(tmp_path / "ckpt4"),
         max_files_per_trigger=1, bloom_state_dir=bloom_dir,
@@ -549,14 +585,23 @@ def test_streaming_ingest_persisted_bloom_state(spark, sf_dir, tmp_path):
     assert {
         r["doc_id"] for r in read_manifest_sink(spark, sink).collect()
     } == exp_ids
+    assert artifact_open(spark, bloom_dir).params["words"]
 
-    # torn state (no params marker) reseeds from corpus+sink instead
-    # of serving the orphan bitmap
-    shutil.rmtree(f"{bloom_dir}/params")
+    # the older two-parquet-table layout holds no committed generation
+    # either: reseeded, then committed as a manifest
+    old_dir = str(tmp_path / "bloom_parquet_layout")
+    spark.createDataFrame([(0, 1)], "word_idx long, bits long") \
+        .write.parquet(f"{old_dir}/bitmap")
+    spark.createDataFrame(
+        [("m_bits", str(1 << 17)), ("k", "4"), ("checksum", "0")],
+        "key string, value string",
+    ).write.parquet(f"{old_dir}/params")
+    fresh_sink = str(tmp_path / "admitted_reseeded")
     run_streaming_ingest(
-        spark, corpus_path, feed, sink, str(tmp_path / "ckpt5"),
-        max_files_per_trigger=1, bloom_state_dir=bloom_dir,
+        spark, corpus_path, feed, fresh_sink, str(tmp_path / "ckpt5"),
+        max_files_per_trigger=1, bloom_state_dir=old_dir,
     )
     assert {
-        r["doc_id"] for r in read_manifest_sink(spark, sink).collect()
+        r["doc_id"] for r in read_manifest_sink(spark, fresh_sink).collect()
     } == exp_ids
+    assert artifact_open(spark, old_dir).version >= 1

@@ -10,6 +10,9 @@ import shutil
 from pyspark.sql import functions as F
 
 from haensel_ams_data_engineer_challenge_spark.functions.url import canonical_url
+from haensel_ams_data_engineer_challenge_spark.operators.artifact_manifest import (
+    artifact_open,
+)
 
 
 def _canon(spark, urls: list[str | None]) -> list[str | None]:
@@ -241,7 +244,7 @@ def test_cli_ingest_url_dedup(spark, tmp_path, capsys):
         for r in spark.read.parquet(f"{work}/admitted").collect()
     }
     assert got == {11}
-    assert spark.read.parquet(f"{work}/url_bloom_state/bitmap").count() > 0
+    assert artifact_open(spark, f"{work}/url_bloom_state").params["words"] != "[]"
     # --url-bloom without the tier is a config error
     assert main([
         "ingest", "--corpus-parquet", corpus_path, "--feed-dir", feed,
@@ -300,8 +303,9 @@ def test_url_bloom_state_scale_path(spark, tmp_path):
     )
     got = {r["doc_id"] for r in spark.read.parquet(sink).collect()}
     assert got == {100, 201}
-    # the state dir committed something
-    assert spark.read.parquet(f"{bloom_dir}/bitmap").count() > 0
+    # the state dir committed one generation per batch
+    state = artifact_open(spark, bloom_dir)
+    assert state.version == 2 and state.params["words"] != "[]"
 
     # fresh-checkpoint replay: the persisted bitmap + sink make it a
     # no-op (and the reloaded state is exercised by a fresh session

@@ -321,8 +321,13 @@ def test_lsh_family_handles_non_default_dim(spark, tmp_path):
         [(1000, _nd(7, DIM))], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ValueError, match="dim"):
-        lsh_index_append(more, idx, tables=8, planes_per_table=3)
-    lsh_index_append(more, idx, tables=8, planes_per_table=3, dim=DIM)
+        lsh_index_append(
+            more, artifact_open(spark, idx), tables=8, planes_per_table=3
+        )
+    lsh_index_append(
+        more, artifact_open(spark, idx), tables=8, planes_per_table=3,
+        dim=DIM,
+    )
     # and a 64-dim index refuses a non-default-dim append
     idx64 = str(tmp_path / "vidx64")
     v64 = spark.createDataFrame(
@@ -330,7 +335,10 @@ def test_lsh_family_handles_non_default_dim(spark, tmp_path):
     )
     lsh_index_persistent(v64, idx64, tables=8, planes_per_table=3)
     with pytest.raises(ValueError, match="dim"):
-        lsh_index_append(v64, idx64, tables=8, planes_per_table=3, dim=100)
+        lsh_index_append(
+            v64, artifact_open(spark, idx64), tables=8, planes_per_table=3,
+            dim=100,
+        )
     # the SERVE path refuses too (second review pass: the subset param
     # check is one-directional — a default-dim caller omits the key
     # and would hash its probes with the wrong plane family)
